@@ -1,6 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+import org.json4s.{JDouble, JLong, JObject, JString, JValue}
+
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 
 /** Benchmark main: runs the headline query set on SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line (also written to /tmp/graft_bench.json so the result
@@ -12,10 +17,14 @@ import java.nio.file.{Files, Paths}
   * LSH pair materialization) are reported in a separate `builds` map so
   * the query series stays a pure serving-time comparison. Each key also
   * records its last run's data-side denominators (`data`: streaming
-  * batches/rows + lance commits, via [[BenchProbe]]), and every key whose
-  * noise band exceeds 0.5 gets an end-of-run `__spaced` re-median.
-  * Order is fixed, and a failing query records an "errors" entry instead
-  * of a fake time.
+  * batches/rows from the [[Harness.Capture]], lance commits from
+  * [[BenchProbe]]), and every key whose noise band exceeds 0.5 gets an
+  * end-of-run `__spaced` re-median. Order is fixed, and a failing query
+  * records an "errors" entry instead of a fake time.
+  *
+  * Two diagnostic modes run the same per-key body ([[keyBody]]):
+  * `Bench plan OUTDIR TAG key...` (formatted explains + plan stability)
+  * and `Bench profile key...` (per-job/stage wall attribution).
   */
 object Bench {
   /** Fixed benchmark order: analytics headliners first (round-over-round
@@ -103,7 +112,7 @@ object Bench {
     * object as `...$$Lambda$N/0xADDR@HASH`, all three components of which
     * are fresh per JVM — they flipped mm_frame_sample's and
     * q_stream_sessions' fingerprints on unchanged code until normalized
-    * (PlanProbe.scala reproduces; the §8 item-7 rule is extend-the-
+    * (`Bench plan` reproduces; the §8 item-7 rule is extend-the-
     * normalizer, never trust such a flip as a plan change). */
   private[graft] def normalizePlan(raw: String): String = raw
     .replaceAll("#\\d+", "#")
@@ -136,241 +145,268 @@ object Bench {
 
   private val FragmentsRe = "fragments=(\\d+)/(\\d+)".r
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil => bench()
+    case "plan" :: outDir :: tag :: keys if keys.nonEmpty => plan(outDir, tag, keys)
+    case "profile" :: keys if keys.nonEmpty => profile(keys)
+    case _ => throw new IllegalArgumentException(
+      "usage: Bench | Bench plan OUTDIR TAG key... | Bench profile key...")
+  }
+
+  /** The body every mode runs for `name`: performs the key's one-time build
+    * now (its wall recorded in `builds`) and returns the serving part, which
+    * executes the key and returns the executed frame. Five keys charge a
+    * build outside the query: IVF/PQ/SQ index builds and the session-memoized
+    * LSH pair set and trained SemDeDup index, which repeat consumers never
+    * pay again. */
+  private def keyBody(spark: SparkSession, sfDir: String, name: String,
+                      fn: (SparkSession, String) => DataFrame,
+                      builds: mutable.Map[String, Double]): () => DataFrame = {
+    import operators.VectorIndex
+    def build[T](label: String)(f: => T): T = {
+      val t0 = System.nanoTime(); val r = f
+      builds(label) = (System.nanoTime() - t0) / 1e9
+      r
+    }
+    def cached(df: DataFrame): DataFrame = { val c = df.cache(); c.count(); c }
+    lazy val qv = VectorIndex.embeddingOf(spark, sfDir, VectorIndex.QueryVecId)
+    val query: () => DataFrame = name match {
+      case "ivf_flat_search" =>
+        val (root, centroids) = build("ivf_flat_build")(VectorIndex.buildIvfFlat(spark, sfDir))
+        () => VectorIndex.ivfSearch(spark, root, centroids, qv, nprobes = VectorIndex.Cells,
+          k = VectorIndex.K, excludeVecId = VectorIndex.QueryVecId)
+      case "dedup_semantic_trained" =>
+        build("semdedup_idx_build")(operators.Dedup.trainedSemIndex(spark, sfDir))
+        () => fn(spark, sfDir)
+      case "dedup_minhash_lsh" =>
+        build("lsh_pairs_build")(operators.Dedup.lshPairs(spark, sfDir).count())
+        () => fn(spark, sfDir)
+      case "ivf_pq_search" =>
+        // codebook training + encode is the build; the ADC query is timed
+        val (codes, flat, subDim) = build("ivf_pq_build") {
+          val (encoded, flat, subDim) = VectorIndex.buildPq(spark, sfDir)
+          (cached(encoded), flat, subDim)
+        }
+        val lut = VectorIndex.pqLut(qv, flat, subDim)
+        () => VectorIndex.pqAdcTopK(codes, lut, k = 10, excludeVecId = VectorIndex.QueryVecId)
+      case "ivf_sq_search" =>
+        // stats pass + encode is the build; the ADC + refine query is timed
+        val (codes, mins, scales) = build("ivf_sq_build") {
+          val (encoded, mins, scales) = VectorIndex.buildSq(spark, sfDir)
+          (cached(encoded), mins, scales)
+        }
+        () => VectorIndex.sqTopKRefined(spark, codes, mins, scales, qv, k = VectorIndex.K,
+          refineFactor = 4, excludeVecId = VectorIndex.QueryVecId)
+      case _ => () => fn(spark, sfDir)
+    }
+    () => { val df = query(); df.count(); df }
+  }
+
+  /** Short hash of the normalized static (pre-AQE) physical plan plus its
+    * line count. Equal fingerprints across rounds mean a wall-time swing is
+    * host or data, not plans. Streaming keys fingerprint their sink-read
+    * frame. */
+  private def planFingerprint(df: DataFrame): String = {
+    val norm = normalizePlan(df.queryExecution.executedPlan.toString)
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(norm.getBytes("UTF-8"))
+    digest.take(6).map(b => f"$b%02x").mkString + ":" + norm.linesIterator.size
+  }
+
+  /** The headline benchmark: one JSON line on stdout, also written to
+    * /tmp/graft_bench.json and (full runs) ./BENCH.json, because a
+    * captured stdout tail may be truncated. */
+  private def bench(): Unit = {
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    val capture = Harness.Capture.attach(spark)
 
     val qs = SparkEntry.queries
     // optional comma-separated key filter for targeted local iteration
     // (SPARK_GRAFT_BENCH_KEYS=dedup_ngram_jaccard sbt "runMain graft.Bench")
     val only = sys.env.get("SPARK_GRAFT_BENCH_KEYS").map(_.split(",").toSet)
     val keys = headliners.filter(qs.contains).filter(k => only.forall(_.contains(k)))
-    val times = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // one-time index/pair builds live OUTSIDE the query series: summing
-    // them into `total` made the cross-round total a mixed build+serve
-    // metric (r16 advice) — `builds` is reported separately and excluded
-    val builds = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-key data-side denominators (streaming batches/rows, lance
-    // commits) from the LAST measured run — see BenchProbe
-    val data = scala.collection.mutable.LinkedHashMap[String, Map[String, Long]]()
-    // per-key PLAN FINGERPRINT (r17): a short hash of the key's physical
-    // plan with ids/paths normalized away, captured from the warmup run's
-    // DataFrame. Equal fingerprints across rounds mean a wall-time swing
-    // is host/data, not plans; a changed fingerprint points the
-    // adjudication straight at a plan change. Static (pre-AQE) shape —
-    // runtime join flips don't show, which is fine: those are the data's
-    // decision, not the code's.
-    val plans = scala.collection.mutable.LinkedHashMap[String, String]()
-    def planFingerprint(df: org.apache.spark.sql.DataFrame): String = {
-      val norm = Bench.normalizePlan(df.queryExecution.executedPlan.toString)
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(norm.getBytes("UTF-8"))
-      digest.take(6).map(b => f"$b%02x").mkString + ":" + norm.linesIterator.size
-    }
+    val times = mutable.LinkedHashMap[String, Double]()
+    val errors = mutable.LinkedHashMap[String, String]()
+    // one-time builds, reported apart from and excluded from `total`
+    val builds = mutable.LinkedHashMap[String, Double]()
+    // per-key streaming denominators + lance commits of the LAST measured run
+    val data = mutable.LinkedHashMap[String, Seq[(String, Long)]]()
+    // per-key plan fingerprint, from the warmup run's frame
+    val plans = mutable.LinkedHashMap[String, String]()
 
     // Host-noise guard: medians start from `runs` samples and keep
     // sampling (up to MaxRuns) while the relative spread (max−min)/median
-    // exceeds SpreadBound — a noisy neighbor or GC burst can no longer
-    // swing a key's recorded time by the 1.6× r14 saw on unchanged code
-    // without the artifact showing it. The residual spread is RECORDED
-    // per key ("noise" in the JSON): a cross-round comparison should
-    // trust a delta only when it clears both keys' noise bands.
+    // exceeds SpreadBound. The residual spread is RECORDED per key
+    // ("noise"): a cross-round delta counts only when it clears both
+    // rounds' noise bands.
     val SpreadBound = 0.30
     val MaxRuns = 6
-    val noise = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val noise = mutable.LinkedHashMap[String, Double]()
     def spreadOf(ts: Seq[Double]): Double = {
       val m = ts.sorted.apply(ts.length / 2)
       if (m <= 0) 0.0 else (ts.max - ts.min) / m
     }
-    def medianMeasured(runs: Int)(body: () => Unit): (Double, Double) = {
-      var ts = List.fill(runs) {
-        val t0 = System.nanoTime(); body(); (System.nanoTime() - t0) / 1e9
-      }
-      while (spreadOf(ts) > SpreadBound && ts.length < MaxRuns) {
-        val t0 = System.nanoTime(); body()
-        ts = ((System.nanoTime() - t0) / 1e9) :: ts
-      }
+    def medianMeasured(runs: Int)(sample: () => Double): (Double, Double) = {
+      var ts = List.fill(runs)(sample())
+      while (spreadOf(ts) > SpreadBound && ts.length < MaxRuns) ts = sample() :: ts
       (ts.sorted.apply(ts.length / 2), spreadOf(ts))
     }
-    def medianOf(runs: Int)(body: () => Unit): Double = medianMeasured(runs)(body)._1
 
     // bodies are kept so the end-of-run spaced recheck can re-measure ANY
     // noisy key without re-paying its one-time build
-    val bodies = scala.collection.mutable.LinkedHashMap[String, () => Unit]()
+    val bodies = mutable.LinkedHashMap[String, () => Unit]()
     keys.foreach { name =>
-      val fn = qs(name)
       try {
-        val body: () => Unit = name match {
-          case "ivf_flat_search" =>
-            // index build is a one-time cost: report it once, separately
-            val tb = System.nanoTime()
-            val (root, centroids) = operators.VectorIndex.buildIvfFlat(spark, sfDir)
-            builds("ivf_flat_build") = (System.nanoTime() - tb) / 1e9
-            val qv = operators.VectorIndex.embeddingOf(spark, sfDir, operators.VectorIndex.QueryVecId)
-            () => {
-              val df = operators.VectorIndex.ivfSearch(spark, root, centroids, qv,
-                nprobes = operators.VectorIndex.Cells, k = operators.VectorIndex.K,
-                excludeVecId = operators.VectorIndex.QueryVecId)
-              df.count()
-              if (!plans.contains(name)) plans(name) = planFingerprint(df)
-              ()
-            }
-          case "dedup_semantic_trained" =>
-            // the persisted IVF build is one-time and session-memoized
-            // (Dedup.trainedSemIndex); charge it to builds so the query
-            // time reflects assignment + pairs + closure + anti-join
-            val tb = System.nanoTime()
-            operators.Dedup.trainedSemIndex(spark, sfDir)
-            builds("semdedup_idx_build") = (System.nanoTime() - tb) / 1e9
-            () => {
-              val df = fn(spark, sfDir)
-              df.count()
-              if (!plans.contains(name)) plans(name) = planFingerprint(df)
-              ()
-            }
-          case "dedup_minhash_lsh" =>
-            // the verified pair set is computed ONCE per session and shared
-            // by clusters/canonical/split/pipeline (Dedup.lshPairs memo) —
-            // report that one-time cost separately, like ivf_flat_build,
-            // so the per-query time reflects what repeat consumers pay
-            val tb = System.nanoTime()
-            operators.Dedup.lshPairs(spark, sfDir).count()
-            builds("lsh_pairs_build") = (System.nanoTime() - tb) / 1e9
-            () => {
-              val df = fn(spark, sfDir)
-              df.count()
-              if (!plans.contains(name)) plans(name) = planFingerprint(df)
-              ()
-            }
-          case "ivf_pq_search" =>
-            // codebook training + encode is the build; time the ADC query
-            val tb = System.nanoTime()
-            val (encoded, flat, subDim) = operators.VectorIndex.buildPq(spark, sfDir)
-            val cached = encoded.cache()
-            cached.count() // materialize codes — the persisted index artifact
-            builds("ivf_pq_build") = (System.nanoTime() - tb) / 1e9
-            val qv = operators.VectorIndex.embeddingOf(spark, sfDir, operators.VectorIndex.QueryVecId)
-            val lut = operators.VectorIndex.pqLut(qv, flat, subDim)
-            () => {
-              val df = operators.VectorIndex.pqAdcTopK(cached, lut, k = 10,
-                excludeVecId = operators.VectorIndex.QueryVecId)
-              df.count()
-              if (!plans.contains(name)) plans(name) = planFingerprint(df)
-              ()
-            }
-          case "ivf_sq_search" =>
-            // stats pass + encode is the build; time the ADC+refine query
-            val tb = System.nanoTime()
-            val (encoded, mins, scales) = operators.VectorIndex.buildSq(spark, sfDir)
-            val cached = encoded.cache()
-            cached.count() // materialize codes — the persisted index artifact
-            builds("ivf_sq_build") = (System.nanoTime() - tb) / 1e9
-            val qv = operators.VectorIndex.embeddingOf(spark, sfDir, operators.VectorIndex.QueryVecId)
-            () => {
-              val df = operators.VectorIndex.sqTopKRefined(spark, cached, mins, scales,
-                qv, k = operators.VectorIndex.K, refineFactor = 4,
-                excludeVecId = operators.VectorIndex.QueryVecId)
-              df.count()
-              if (!plans.contains(name)) plans(name) = planFingerprint(df)
-              ()
-            }
-          case _ =>
-            () => {
-              val df = fn(spark, sfDir)
-              df.count()
-              // once, from the warmup run (streaming fns execute their
-              // pipeline while building the df — don't re-run for this)
-              if (!plans.contains(name)) plans(name) = planFingerprint(df)
-              ()
-            }
+        val run = keyBody(spark, sfDir, name, qs(name), builds)
+        val body: () => Unit = () => {
+          val df = run()
+          if (!plans.contains(name)) plans(name) = planFingerprint(df)
         }
         bodies(name) = body
         body() // warmup: JIT + codegen cache + FS cache
-        // probe wrap: reset/snapshot around each run so `data` records the
-        // LAST run's batches/input/sink rows + lance commits — the
-        // data-side denominator the r16 verdict asked for on streaming keys
-        val probed: () => Unit = () => {
-          BenchProbe.reset(); body()
-          val snap = BenchProbe.snapshot()
-          if (snap.nonEmpty) data(name) = snap
+        // the capture is cleared and read OUTSIDE the timed region
+        val (med, spread) = medianMeasured(3) { () =>
+          capture.clear(); BenchProbe.lanceCommits.set(0)
+          val dt = Harness.secs(body())
+          val d = capture.streamCounts ++
+            Seq("commits" -> BenchProbe.lanceCommits.get).filter(_._2 != 0L)
+          if (d.nonEmpty) data(name) = d
+          dt
         }
-        val (med, spread) = medianMeasured(3)(probed)
         times(name) = med
         noise(name) = math.rint(spread * 1000) / 1000
       } catch {
         case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\n\r\t]", " ").take(200)
+          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           times(name) = -1.0
       }
     }
-    // SPACED recheck: re-measure map-only keys at the END of the run, far
-    // from their first slot — if the two medians disagree the first was
-    // bench-order/GC noise, not a plan change (r14's text_quality 3.2×
-    // question). Recorded as "<key>__spaced" so the primary series stays
-    // comparable.
-    // r17: the spaced recheck extends to EVERY key whose recorded noise
-    // band exceeds NoisyBand — the r16 verdict had to hand-adjudicate
-    // streaming keys whose single-slot medians swung 2.6× between clean
-    // runs; a spaced second median inside the same artifact settles
-    // "bench-order/host noise" vs "plan change" without a judge re-run.
+    // SPACED recheck: re-measure at the END of the run, far from the first
+    // slot, every key whose noise band exceeds NoisyBand plus the map-only
+    // canaries. A first-slot/spaced disagreement is bench-order or host
+    // noise, not a plan change. Recorded as "<key>__spaced" and excluded
+    // from `total`.
     val NoisyBand = 0.5
-    // r20: pipeline_clean / corpus_stats / knn_negatives joined the set —
-    // three consecutive rounds of sub-second same-plan wall swings
-    // (host-tide territory per the r19 adjudication); their spaced
-    // re-medians make the noise-band verdict mechanical
     val spacedKeys = (Seq("text_quality", "text_langid",
       "pipeline_clean", "corpus_stats", "knn_negatives") ++
       keys.filter(k => noise.getOrElse(k, 0.0) > NoisyBand)).distinct
     spacedKeys.foreach { name =>
       if (times.contains(name) && times(name) >= 0 && bodies.contains(name))
-        times(s"${name}__spaced") = medianOf(3)(bodies(name))
+        times(s"${name}__spaced") = medianMeasured(3)(() => Harness.secs(bodies(name)()))._1
     }
-    val qJson = times.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val eJson = errors.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    val nJson = noise.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val bJson = builds.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val dJson = data.map { case (k, m) =>
-      s""""$k":${m.map { case (f, v) => s""""$f":$v""" }.mkString("{", ",", "}")}"""
-    }.mkString("{", ",", "}")
-    val pJson = plans.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    // __spaced rechecks are diagnostics, not workload — keep the total
-    // series comparable across rounds by excluding them
     val total = times.collect { case (k, v) if v >= 0 && !k.endsWith("__spaced") => v }.sum
-    // comparability flags travel IN the artifact (not just SURVEY) so a
-    // cross-round diff of the bench JSON alone can't misread a split metric
-    val notes =
-      """{"dedup_minhash_lsh":"since r13 the one-time minhash+verify build is charged to lsh_pairs_build; per-query time here is the memoized-pair consumer cost and is not comparable to r12 and earlier",""" +
-      """"dedup_ngram_jaccard":"PLAN CHANGED r15: candidate signature moved from 126-hash MinHash to one-permutation hashing (1 hash/gram + densification); output identical (exact verify decides), expect large speedup vs r14's 6.7 s",""" +
-      """"contamination_semantic":"PLAN CHANGED r17 (two-phase screen) and AGAIN r18 (dimension-gated auto mode: rows under 256 dims short-circuit past the hamming eval, so the 64-dim fixture now runs the exact semantics with the sketch columns still present); output identical at every step, the screen's win is at production dims",""" +
-      """"__spaced":"keys suffixed __spaced are the same query re-measured at the end of the run (since r17: every key whose noise band exceeds 0.5, plus the two map-only canaries); a first-slot/spaced disagreement marks bench-order noise, not a plan change",""" +
-      """"builds":"since r17 one-time build entries (ivf_flat_build, lsh_pairs_build, ivf_pq_build, ivf_sq_build) live in the builds map, excluded from queries and total; r16-and-earlier totals include them",""" +
-      """"host_tide":"wall times are single-host measurements: compare rounds through tools/bench_compare.py (noise bands, spaced re-medians, per-batch streaming denominators) and treat a broad same-direction shift on unchanged plan fingerprints as host speed, not code — the late-r18 close measured untouched map-only canaries at 1.5-2x their same-day morning walls on identical code/plans (shared-host slowdown, load 1.7 with zero local processes)",""" +
-      """"data":"per-key data-side record of the LAST measured run: streaming batches/inputRows/sinkRows (StreamingQueryProgress) and lance manifest commits; the denominators for adjudicating streaming wall-time swings",""" +
-      """"plans":"since r17: per-key sha-prefix:line-count fingerprint of the normalized static physical plan (ids/paths stripped, pre-AQE); equal across rounds = wall swing is host/data, changed = a real plan change — streaming keys fingerprint their sink-read side only. NORMALIZER v2 since r18 (JVM lambda identities in typed-API nodes stripped — they flipped fingerprints on unchanged code); v3 since r19 (LanceScan manifest version / fragment counts stripped — run-shape data, flipped q_stream_image_dedup on identical code); v4 since r20 (the v3 strips anchored to LanceScan description lines, and fragment counts bucketed to pruned-vs-full instead of deleted so a lost-pruning regression flips the tripwire again), so fingerprints compare only within the same normalizer version"}"""
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qJson,"errors":$eJson,"noise":$nJson,"builds":$bJson,"data":$dJson,"plans":$pJson,"notes":$notes,"sf":"$sfDir"}"""
+    val line = benchLine(total, times.toSeq, errors.toSeq, noise.toSeq, builds.toSeq,
+      data.toSeq, plans.toSeq, sfDir)
     Files.writeString(Paths.get("/tmp/graft_bench.json"), line)
-    // also persist into the repo itself (sbt runs from the project root):
-    // the driver's BENCH_r{N} capture is a truncated stdout tail — r15's
-    // artifact lost the first ~25 keys and parsed as null — so the full
-    // per-key record must live in a file the driver can snapshot whole.
-    // FULL runs only: a key-filtered local iteration must not clobber the
-    // repo's full snapshot with a partial one (/tmp still carries it)
+    // a key-filtered local iteration must not clobber the full snapshot
     if (only.isEmpty)
       try Files.writeString(Paths.get("BENCH.json"), line)
       catch { case scala.util.control.NonFatal(_) => () } // read-only cwd: stdout+tmp still carry it
     println(line)
+    spark.stop()
+  }
+
+  /** Comparability flags that travel IN the artifact, so a cross-round diff
+    * of the bench JSON alone cannot misread a split metric. */
+  private val notes: Seq[(String, String)] = Seq(
+    "dedup_minhash_lsh" -> "since r13 the one-time minhash+verify build is charged to lsh_pairs_build; per-query time here is the memoized-pair consumer cost and is not comparable to r12 and earlier",
+    "dedup_ngram_jaccard" -> "PLAN CHANGED r15: candidate signature moved from 126-hash MinHash to one-permutation hashing (1 hash/gram + densification); output identical (exact verify decides), expect large speedup vs r14's 6.7 s",
+    "contamination_semantic" -> "PLAN CHANGED r17 (two-phase screen) and AGAIN r18 (dimension-gated auto mode: rows under 256 dims short-circuit past the hamming eval, so the 64-dim fixture now runs the exact semantics with the sketch columns still present); output identical at every step, the screen's win is at production dims",
+    "__spaced" -> "keys suffixed __spaced are the same query re-measured at the end of the run (since r17: every key whose noise band exceeds 0.5, plus the two map-only canaries); a first-slot/spaced disagreement marks bench-order noise, not a plan change",
+    "builds" -> "since r17 one-time build entries (ivf_flat_build, lsh_pairs_build, ivf_pq_build, ivf_sq_build) live in the builds map, excluded from queries and total; r16-and-earlier totals include them",
+    "host_tide" -> "wall times are single-host measurements: compare rounds through tools/bench_compare.py (noise bands, spaced re-medians, per-batch streaming denominators) and treat a broad same-direction shift on unchanged plan fingerprints as host speed, not code — the late-r18 close measured untouched map-only canaries at 1.5-2x their same-day morning walls on identical code/plans (shared-host slowdown, load 1.7 with zero local processes)",
+    "data" -> "per-key data-side record of the LAST measured run: streaming batches/inputRows/sinkRows (StreamingQueryProgress) and lance manifest commits; the denominators for adjudicating streaming wall-time swings",
+    "plans" -> "since r17: per-key sha-prefix:line-count fingerprint of the normalized static physical plan (ids/paths stripped, pre-AQE); equal across rounds = wall swing is host/data, changed = a real plan change — streaming keys fingerprint their sink-read side only. NORMALIZER v2 since r18 (JVM lambda identities in typed-API nodes stripped — they flipped fingerprints on unchanged code); v3 since r19 (LanceScan manifest version / fragment counts stripped — run-shape data, flipped q_stream_image_dedup on identical code); v4 since r20 (the v3 strips anchored to LanceScan description lines, and fragment counts bucketed to pruned-vs-full instead of deleted so a lost-pruning regression flips the tripwire again), so fingerprints compare only within the same normalizer version")
+
+  /** The bench artifact: ONE compact line with the fixed field order
+    * metric,value,unit,queries,errors,noise,builds,data,plans,notes,sf —
+    * `tools/bench_compare.py` salvages truncated tails by that order and
+    * by the `"name":{` form. */
+  private[graft] def benchLine(total: Double, queries: Seq[(String, Double)],
+      errors: Seq[(String, String)], noise: Seq[(String, Double)],
+      builds: Seq[(String, Double)], data: Seq[(String, Seq[(String, Long)])],
+      plans: Seq[(String, String)], sfDir: String): String = {
+    def obj[V](kvs: Seq[(String, V)])(f: V => JValue) =
+      JObject(kvs.map { case (k, v) => k -> f(v) }: _*)
+    Harness.json(JObject(
+      "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
+      "queries" -> obj(queries)(JDouble(_)), "errors" -> obj(errors)(JString(_)),
+      "noise" -> obj(noise)(JDouble(_)), "builds" -> obj(builds)(JDouble(_)),
+      "data" -> obj(data)(obj(_)(JLong(_))), "plans" -> obj(plans)(JString(_)),
+      "notes" -> obj(notes)(JString(_)), "sf" -> JString(sfDir)))
+  }
+
+  /** `Bench plan OUTDIR TAG key...`: per key, writes the formatted explain
+    * of Bench's own body to OUTDIR/<key>_<TAG>.txt and runs the body a
+    * second time to check that the normalized plan is identical across
+    * reps: an unstable fingerprint must be fixed in [[normalizePlan]], never
+    * trusted as a plan change. Exits non-zero when a plan is unstable. */
+  private def plan(outDir: String, tag: String, keys: Seq[String]): Unit = {
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    val qs = SparkEntry.queries
+    Files.createDirectories(Paths.get(outDir))
+    val unstable = keys.filter { k =>
+      val run = keyBody(spark, sfDir, k, qs(k), mutable.Map.empty)
+      val reps = Seq.fill(2)(run())
+      val formatted = reps.head.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val out = s"$outDir/${k}_$tag.txt"
+      Files.writeString(Paths.get(out), formatted)
+      val Seq(n1, n2) = reps.map(df => normalizePlan(df.queryExecution.executedPlan.toString))
+      println(s"[plan] wrote $out (${formatted.linesIterator.size} lines); normalized plan " +
+        (if (n1 == n2) "identical across 2 reps" else s"DIFFERS across reps:\n$n1\n----\n$n2"))
+      n1 != n2
+    }
+    spark.stop()
+    if (unstable.nonEmpty) sys.exit(1)
+  }
+
+  /** `Bench profile key...`: per key, the wall of the warmup run and of
+    * three measured runs of Bench's own body (with each run's job count and
+    * wall outside any job), then the last run's job table and its top
+    * stages by task time. */
+  private def profile(keys: Seq[String]): Unit = {
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    val capture = Harness.Capture.attach(spark)
+    val qs = SparkEntry.queries
+    keys.foreach { k =>
+      val builds = mutable.LinkedHashMap[String, Double]()
+      val run = keyBody(spark, sfDir, k, qs(k), builds)
+      builds.foreach { case (b, s) => println(f"[profile] $k build $b $s%.3fs") }
+      println(f"[profile] $k warmup ${Harness.secs(run())}%.3fs")
+      val last = (1 to 3).map { i =>
+        capture.clear()
+        val wallMs = Harness.secs(run()) * 1e3
+        val js = capture.jobs
+        // wall covered by the union of job spans; the rest is driver time
+        var covered, lastEnd = 0L
+        js.foreach { j =>
+          if (j.end > lastEnd) {
+            covered += j.end - math.max(j.start, lastEnd); lastEnd = j.end
+          }
+        }
+        println(f"[profile] $k run$i ${wallMs / 1e3}%.3fs jobs=${js.size} " +
+          f"outsideJobs=${(wallMs - covered).toLong}ms")
+        (wallMs, js)
+      }.last
+      val (wallMs, js) = last
+      val stages = capture.stages
+      println(s"===== $k: wall ${wallMs.toLong} ms, ${js.size} jobs =====")
+      val base = js.headOption.fold(0L)(_.start)
+      var lastEnd = 0L
+      js.foreach { j =>
+        val taskMs = stages.filter(s => j.stageIds.contains(s.id)).map(_.runMs).sum
+        val dur = if (j.end > 0) j.end - j.start else -1
+        val gap = math.max(0L, j.start - math.max(base, lastEnd))
+        lastEnd = math.max(lastEnd, j.end)
+        println(f"job ${j.id}%4d +${j.start - base}%6dms wall=$dur%5dms task=$taskMs%6dms gap=$gap%5dms  ${j.desc.take(110)}")
+      }
+      stages.sortBy(-_.runMs).take(12).foreach { s =>
+        println(f"stage ${s.id}%4d task=${s.runMs}%6dms  ${s.name.take(90)}")
+      }
+    }
     spark.stop()
   }
 }

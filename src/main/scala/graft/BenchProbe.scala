@@ -2,37 +2,12 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-/** Process-wide data-side counters for the bench instrument (SURVEY §4:
-  * the r16 verdict showed streaming wall times at sf0.1 measure micro-batch
-  * scheduler latency as much as data work — a cross-round comparison needs
-  * the data-side denominators recorded NEXT TO the wall time).
-  *
-  * Two reporters feed it:
-  *  - [[graft.operators.StreamingOps.drain]] adds each drained query's
-  *    StreamingQueryProgress aggregates (batches, input rows, sink rows);
-  *  - [[graft.sources.lance.ManifestIO.commit]] counts every successful
-  *    lance manifest commit.
-  *
-  * Always-on and contention-free (a handful of atomic adds per QUERY, not
-  * per row); Bench resets before each measured run and snapshots after, so
-  * BENCH.json carries per-run batches/rows/commits for every key that did
-  * streaming or commit work. Zero when idle — batch-only keys record
-  * nothing.
+/** Process-wide count of successful lance manifest commits
+  * ([[graft.sources.lance.ManifestIO.commit]] increments it). Bench resets
+  * it before each measured run and records it in the key's `data` map next
+  * to the streaming denominators the [[Harness.Capture]] reads. One atomic
+  * add per commit, always on.
   */
 object BenchProbe {
-  val streamBatches = new AtomicLong
-  val streamInputRows = new AtomicLong
-  val streamSinkRows = new AtomicLong
   val lanceCommits = new AtomicLong
-
-  def reset(): Unit = {
-    streamBatches.set(0); streamInputRows.set(0)
-    streamSinkRows.set(0); lanceCommits.set(0)
-  }
-
-  /** Non-zero counters only — an empty map means a pure batch key. */
-  def snapshot(): Map[String, Long] =
-    Seq("batches" -> streamBatches.get, "inputRows" -> streamInputRows.get,
-        "sinkRows" -> streamSinkRows.get, "commits" -> lanceCommits.get)
-      .filter(_._2 != 0L).toMap
 }

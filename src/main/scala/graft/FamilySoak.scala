@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** >1 GB ON-DISK soak for the r18 selection / monitoring / retrieval
@@ -47,62 +46,27 @@ import org.apache.spark.sql.functions._
   * documented gate-scale contract.
   *
   * Not part of the driver contract. Run:
-  *   SPARK_DRIVER_MEM=24g sbt "runMain graft.FamilySoak [docMult] [embMult]"
+  *   SPARK_DRIVER_MEM=24g sbt "runMain graft.FamilySoak [docMult [embMult]] [family ...]"
+  * (no family names = all of [[families]]).
   */
 object FamilySoak {
-  def main(args: Array[String]): Unit = {
-    val docMult = args.headOption.map(_.toInt).getOrElse(2000)
-    val embMult = args.drop(1).headOption.map(_.toInt).getOrElse(2000)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val out = "/tmp/graft-famsoak"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+  val families = Seq("dsir", "drift", "maxsim", "sweep", "mmr", "hybrid", "refresh", "pruned")
 
-    // ---- per-stage instrumentation: wall + max task peak memory ----------
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    // per-STAGE attribution so a growing peak names its stage: stageId ->
-    // (max task peak, task count)
-    val stagePeaks = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null) {
-          peakMem.accumulateAndGet(t.taskMetrics.peakExecutionMemory, math.max)
-          stagePeaks.merge(t.stageId, (t.taskMetrics.peakExecutionMemory, 1),
-            (a, b) => (math.max(a._1, b._1), a._2 + b._2))
-        }
-        maxTaskMs.accumulateAndGet(t.taskInfo.duration, math.max)
-      }
-    })
+  def main(args: Array[String]): Unit = {
+    val (mults, wanted) = Harness.soakArgs(args, families)
+    val docMult = mults.headOption.getOrElse(2000)
+    val embMult = mults.drop(1).headOption.getOrElse(2000)
+    val sfDir = Harness.sfDir
+    val out = "/tmp/graft-famsoak"
+    val spark = Harness.session(32, Some(64))
+    import spark.implicits._
+    val cap = Harness.Capture.attach(spark)
     val walls = scala.collection.mutable.LinkedHashMap[String, Double]()
     def timed[T](name: String)(f: => T): T = {
-      peakMem.set(0); maxTaskMs.set(0); stagePeaks.clear()
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (r, dt) = Harness.timed("famsoak", name, cap)(f)
       walls(name) = dt
-      println(f"[famsoak] $name%-42s ${dt}%8.2f s  " +
-        f"peakTaskMem=${peakMem.get / 1e6}%7.1f MB  maxTask=${maxTaskMs.get / 1e3}%6.1f s")
-      if (sys.env.contains("SPARK_GRAFT_FAMSOAK_STAGES")) {
-        import scala.jdk.CollectionConverters._
-        val top = stagePeaks.asScala.toSeq.sortBy(-_._2._1).take(3)
-        top.foreach { case (sid, (pk, n)) =>
-          println(f"[famsoak]     stage $sid%5d: peak ${pk / 1e6}%7.1f MB over $n%4d tasks")
-        }
-      }
       r
     }
-    // SPARK_GRAFT_FAMSOAK_ONLY=dsir|drift|maxsim|sweep|mmr|hybrid|refresh|pruned
-    val only = sys.env.get("SPARK_GRAFT_FAMSOAK_ONLY")
-    def wanted(fam: String): Boolean = only.forall(_ == fam)
     def ratio(stage: String): Unit =
       for (h <- walls.get(s"$stage half"); fl <- walls.get(s"$stage full"))
         println(f"[famsoak] $stage%-42s full/half wall ratio = ${fl / h}%.2f (data 2.0x)")

@@ -228,7 +228,7 @@ object TextAnalysis extends QueryModule {
     docs.withColumn("sh", graft.functions.shingle_hashes(col("text"), 3))
       .filter(size(col("sh")) > 0)
 
-  private[operators] def contaminationBench(docs: DataFrame): DataFrame =
+  private[graft] def contaminationBench(docs: DataFrame): DataFrame =
     shingled(docs).filter(col("doc_id") % 20 === 0)
       .select(col("doc_id").as("bid"),
         size(col("sh")).cast("long").as("b_size"), explode(col("sh")).as("s"))
@@ -240,7 +240,7 @@ object TextAnalysis extends QueryModule {
   /** The batch text_contamination body over any corpus slice: per-document
     * output is complete whenever the slice holds whole documents, so the
     * streaming twin can screen micro-batches independently. */
-  private[operators] def contaminationScreen(docs: DataFrame, bench: DataFrame): DataFrame =
+  private[graft] def contaminationScreen(docs: DataFrame, bench: DataFrame): DataFrame =
     contaminationCorpus(docs).join(broadcast(bench.drop("b_size")), "s")
       .groupBy("doc_id", "bid").count() // shingle sets are distinct → overlap size
       .filter(col("count") >= ContaminationTau)

@@ -692,7 +692,7 @@ object VectorSearch extends QueryModule {
     * the streaming twin's shared body (per-vector output is complete
     * whenever the slice holds whole rows, so micro-batches screen
     * independently). */
-  private[operators] def semanticScreen(corpus: DataFrame, bench: DataFrame): DataFrame =
+  private[graft] def semanticScreen(corpus: DataFrame, bench: DataFrame): DataFrame =
     semanticMatches(corpus.filter(col("vec_id") % 20 =!= 0)
         .select("vec_id", "label", "embedding"),
         bench.select("vb"), "embedding", SemTau)
@@ -700,7 +700,7 @@ object VectorSearch extends QueryModule {
       .agg(round(max(col("cos")), 6).as("max_cos"),
         count(lit(1)).as("n_matched"))
 
-  private[operators] def semanticBench(e: DataFrame): DataFrame =
+  private[graft] def semanticBench(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id").as("bid"), col("embedding").as("vb"))
 

@@ -51,6 +51,11 @@ object Shim {
       case _ =>
     }
 
+  /** Block until every listener has seen every event posted so far (the
+    * bus is asynchronous; `private[spark]`). */
+  def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Session Hadoop conf with per-scan options merged in. */
   def hadoopConf(spark: SparkSession, options: Map[String, String]): Configuration =
     spark.sessionState.newHadoopConfWithOptions(options)

@@ -158,4 +158,13 @@ class StreamJoinSpec extends SparkSpec {
     assert(streamed === batch)
     assert(streamed.nonEmpty)
   }
+  test("q_stream_join: a side with no rows after the filter joins to nothing") {
+    // views but no purchases: partitionBy writes no purchase leaf dir
+    val dir = Files.createTempDirectory("graft-sjoin-empty-")
+    events(Seq((1L, 1L, "view", at(0)), (2L, 2L, "view", at(5)), (3L, 1L, "click", at(7))))
+      .write.parquet(s"$dir/events.parquet")
+    val out = SparkEntry.queries("q_stream_join")(spark, dir.toString)
+    assert(out.columns.toSeq === Seq("user_id", "view_id", "purchase_id", "lag_us"))
+    assert(out.count() === 0L)
+  }
 }

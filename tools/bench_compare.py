@@ -233,7 +233,7 @@ def main(argv):
           f"({common1 / common0:.2f}x over {len(both)} keys); "
           f"{regressions} regression(s)")
     # streaming SERVING-COST report (r18, the r17 instrument's last mile):
-    # for every key carrying BenchProbe batch counters on both sides,
+    # for every key carrying streaming batch counters on both sides,
     # normalize the settled wall by micro-batches and by input rows —
     # scheduler latency scales with batches and data with rows, so these
     # two columns ARE the cross-round comparison for streaming keys; the
@@ -243,7 +243,7 @@ def main(argv):
               and new.get("data", {}).get(k, {}).get("batches")]
     if stream:
         print("\nstreaming serving cost (settled wall normalized by "
-              "BenchProbe counters):")
+              "data counters):")
         print(f"{'key':34} {'s/batch':>15} {'x':>6} {'us/row':>17} {'x':>6}")
         for k in stream:
             t0, t1 = settled(old, k), settled(new, k)
