@@ -4,7 +4,6 @@ import graft.{QueryModule, Tables}
 import graft.sources.lance.LanceCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 import java.nio.file.Files
@@ -254,8 +253,10 @@ object LanceOps extends QueryModule {
          |FROM graft_lance.db.$tbl""".stripMargin)
   }
 
-  /** UPDATE through the catalog: copy-on-write row-level rewrite, verified
-    * against the oracle's CASE-expression equivalent on the source. */
+  /** UPDATE through the catalog: the delta row-level path (delete vectors
+    * on the matched rows' fragments + insert fragments for their new
+    * versions), verified against the oracle's CASE-expression equivalent
+    * on the source. */
   private def updateOp(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
@@ -966,15 +967,13 @@ object LanceOps extends QueryModule {
     orders.filter(col("o_orderstatus") === "F")
       .write.format("lance").mode("append").option("maxRowsPerFile", "2000").save(root)
     val outRoot = tmp("cdc-out")
-    val q = s.readStream.format("lance").option("read.change-feed", "true")
-      .load(root)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("_change_type"))
-      .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(outRoot)
-    StreamingOps.drain(q)
+    StreamingOps.drain(s, ckpt, Some(outRoot), StreamingOps.SessionParts) {
+      s.readStream.format("lance").option("read.change-feed", "true")
+        .load(root)
+        .select(col("o_orderkey"), col("o_orderstatus"), col("_change_type"))
+        .writeStream.format("lance")
+        .outputMode("append")
+    }
     // read back the collected feed and aggregate per change type
     s.read.format("lance").load(outRoot)
       .groupBy("_change_type")
@@ -1077,16 +1076,14 @@ object LanceOps extends QueryModule {
     val srcDir = tmp("streaming-src")
     val ckpt = tmp("streaming-ckpt")
     s.range(1000).toDF("i").write.mode("overwrite").parquet(srcDir)
-    val q = s.readStream
-      .schema("i BIGINT")
-      .parquet(srcDir)
-      .writeStream
-      .format("lance")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(root)
-    StreamingOps.drain(q)
+    StreamingOps.drain(s, ckpt, Some(root), StreamingOps.SessionParts) {
+      s.readStream
+        .schema("i BIGINT")
+        .parquet(srcDir)
+        .writeStream
+        .format("lance")
+        .outputMode("append")
+    }
     read(s, root).agg(count(lit(1)).as("n"), sum(col("i")).as("s"))
   }
 

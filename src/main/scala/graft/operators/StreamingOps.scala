@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -36,72 +36,90 @@ object StreamingOps extends QueryModule {
   private def fileNames(s: SparkSession, dir: String): Seq[String] =
     graft.sources.lance.ManifestIO.listFileNames(dir, s.sparkContext.hadoopConfiguration)
 
-  /** Drain an AvailableNow query, failing LOUDLY on timeout:
-    * awaitTermination's boolean is easy to drop, and falling through to
-    * read the sink while the query is still writing turns a slow machine
-    * into a confusing partial-snapshot failure instead of this error. */
-  private[operators] def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
-                               ms: Long = 120000L): Unit = {
-    if (!q.awaitTermination(ms)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"streaming query ${q.id} did not drain within ${ms}ms")
+  /** How a [[drain]] partitions its shuffles and state stores. */
+  private[operators] sealed trait DrainParts
+
+  /** Partitions sized from the staged source dirs (r21, guide §2: derive
+    * partitioning from input size instead of a constant): stateful
+    * micro-batch plans cannot be AQE-coalesced, so every batch otherwise
+    * plans the session's static `spark.sql.shuffle.partitions`, and the
+    * per-batch fixed cost (task scheduling + one state-store/exchange
+    * commit per partition per stateful operator) grows with that constant
+    * while the data per batch does not. The count is staged bytes / 32 MB,
+    * clamped to [1, session value]: a production-sized staging dir clamps
+    * to the session value, a kilobyte stream stops paying cores × stores
+    * of fixed cost per batch. When the count shrank, AQE is off too: the
+    * static count already right-sized the exchanges, and what AQE adds is
+    * per-query-stage job orchestration, measured at ~2× the jobs per
+    * micro-batch body (each job a driver round trip that dominates a small
+    * batch). Production-sized inputs never shrink, so the session's AQE
+    * posture is untouched exactly when it matters. */
+  private[operators] final case class SizedFrom(dirs: String*) extends DrainParts
+
+  /** The session's partition count; the conf is never touched. Each site
+    * that keeps it, with the reason (r21; "measured" = the sized drain was
+    * benched there and reverted):
+    *  - q_stream_sessions: the per-user session fold is the batch's real
+    *    compute; 1 state partition serialized it (measured 2.2 → 2.5 s).
+    *  - the embedding family (q_stream_embedding_dedup, q_stream_semantic,
+    *    q_stream_semantic_trained): the cosine verify and MV closure/upsert
+    *    need the session's parallelism (measured 1.27× slower).
+    *  - q_stream_dsir: the per-batch score + top-K (measured 1.1-1.2×).
+    *  - q_stream_drift: the per-batch featurize + bounded merge (1.3×).
+    *  - q_stream_index, q_stream_index_once, q_stream_index_pq, the
+    *    vector side of q_stream_hybrid*, q_stream_maxsim_pruned* and
+    *    q_stream_mmr_pruned*: these drains build a cell-clustered serving
+    *    store whose fragment layout follows the partition count (probe
+    *    pruning + serve parallelism, guide §6); collapsing it read the
+    *    hybrid _pruned arms 1.9-2× slower per row.
+    *  - q_stream_maxsim, q_stream_mmr: the store's fragment count is the
+    *    serve side's scan parallelism (measured 1.2× slower).
+    *  - q_stream_cdc, lance_streaming_sink: shuffle- and state-free plans
+    *    that never read the count. */
+  private[operators] case object SessionParts extends DrainParts
+
+  /** The one AvailableNow drain: starts the stream `writer` builds on the
+    * caller's session (so listeners on its `spark.streams` see the
+    * progress) with checkpoint `ckpt`, into `sink` (None for foreachBatch),
+    * and waits for it. A timeout stops the query and throws: falling
+    * through to read the sink while the query is still writing turns a
+    * slow machine into a confusing partial-snapshot failure. Under
+    * [[SizedFrom]] the conf covers both start() (Spark freezes it into the
+    * stateful plan and the checkpoint, so resumes stay consistent) and the
+    * drain (foreachBatch bodies plan their jobs against the live session),
+    * and is restored after, on failure too. */
+  private[operators] def drain(s: SparkSession, ckpt: String, sink: Option[String],
+                               parts: DrainParts)(writer: => DataStreamWriter[_]): Unit = {
+    def run(): Unit = {
+      val w = writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+      val q = sink match { case Some(p) => w.start(p); case None => w.start() }
+      if (!q.awaitTermination(120000L)) {
+        q.stop()
+        throw new IllegalStateException(s"streaming query ${q.id} did not drain within 120000ms")
+      }
     }
-  }
-
-  /** Scale-adaptive shuffle/state partition count for one streaming drain
-    * (r21, guide §2: derive partitioning from input size instead of a
-    * constant): stateful micro-batch plans CANNOT be AQE-coalesced (AQE
-    * is disabled for streaming), so every batch otherwise plans the
-    * session's static `spark.sql.shuffle.partitions` — and the per-batch
-    * fixed cost (task scheduling + one state-store/exchange commit PER
-    * partition per stateful operator) grows with that constant while the
-    * data per batch does not. Derived as staged-source bytes / 32 MB,
-    * clamped to [1, session value]: a production-sized staging dir
-    * clamps to the session value (behavior unchanged at scale), a
-    * kilobyte gate stream stops paying cores × stores of fixed cost per
-    * batch. The value is frozen into the query at start() (Spark clones
-    * the session) and recorded in the checkpoint, so resumes stay
-    * consistent. */
-  private[graft] def adaptiveStreamPartitions(s: SparkSession, srcDirs: Seq[String]): Int = {
-    val hconf = s.sparkContext.hadoopConfiguration
-    val bytes = srcDirs.map { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
-    val cur = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = 32L << 20
-    math.max(1, math.min(cur.toLong, (bytes + target - 1) / target).toInt)
-  }
-
-  /** Run `start` (build + start + drain a streaming query) with the
-    * session's shuffle partitions pinned to `parts`, restored after the
-    * drain. The conf must cover BOTH start() (the cloned session freezes
-    * it for the stateful plan) and the drain (foreachBatch bodies plan
-    * their own jobs against the live session).
-    *
-    * When the derived count actually SHRANK the session value, AQE is
-    * also turned off for the window: adaptive execution exists to
-    * right-size exchanges at runtime, which the byte-derived static count
-    * has already done — what remains is AQE's per-query-stage job
-    * orchestration, measured at ~2× the job count per micro-batch body
-    * (every collect/ckpt/write inside the batch became 2-6 stage-jobs;
-    * each job is a driver round trip that dominates a small batch).
-    * Production-sized inputs never shrink (parts == session value), so
-    * the session's AQE posture is untouched exactly when it matters. */
-  private def drainWith(s: SparkSession, parts: Int)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val aKey = "spark.sql.adaptive.enabled"
-    val prevP = s.conf.get(pKey)
-    val prevA = s.conf.get(aKey)
-    val shrank = parts < prevP.toInt
-    s.conf.set(pKey, parts.toString)
-    if (shrank) s.conf.set(aKey, "false")
-    try drain(start) finally {
-      s.conf.set(pKey, prevP)
-      if (shrank) s.conf.set(aKey, prevA)
+    parts match {
+      case SessionParts => run()
+      case SizedFrom(dirs @ _*) =>
+        val pKey = "spark.sql.shuffle.partitions"
+        val aKey = "spark.sql.adaptive.enabled"
+        val prevP = s.conf.get(pKey)
+        val prevA = s.conf.get(aKey)
+        val hconf = s.sparkContext.hadoopConfiguration
+        val bytes = dirs.map { d =>
+          val p = new org.apache.hadoop.fs.Path(d)
+          val fs = p.getFileSystem(hconf)
+          if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+        }.sum
+        val target = 32L << 20
+        val n = math.max(1L, math.min(prevP.toLong, (bytes + target - 1) / target))
+        val shrank = n < prevP.toLong
+        s.conf.set(pKey, n.toString)
+        if (shrank) s.conf.set(aKey, "false")
+        try run() finally {
+          s.conf.set(pKey, prevP)
+          if (shrank) s.conf.set(aKey, prevA)
+        }
     }
   }
 
@@ -164,15 +182,12 @@ object StreamingOps extends QueryModule {
   private def streamPipeline(s: SparkSession, dir: String): DataFrame = {
     val src = tmp("spipe-src"); val dst = tmp("spipe-dst"); val ckpt = tmp("spipe-ckpt")
     t(s, dir, "orders").write.format("lance").option("maxRowsPerFile", "5000").save(src)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(src))) {
+    drain(s, ckpt, Some(dst), SizedFrom(src)) {
       s.readStream.format("lance").load(src)
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .select("o_orderkey", "o_custkey", "o_orderpriority")
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(dst)
     }
     s.read.format("lance").load(dst)
       .agg(count(lit(1)).as("n"), sum("o_orderkey").cast("long").as("sum_key"))
@@ -200,17 +215,14 @@ object StreamingOps extends QueryModule {
     Seq(Tuple2(new java.sql.Timestamp(maxTs.getTime + 86400L * 1000), 0.0))
       .toDF("ts", "value")
       .coalesce(1).write.mode("append").parquet(srcDir)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, Some(dst), SizedFrom(srcDir)) {
       s.readStream.schema(ev.schema).parquet(srcDir)
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("n"))
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(dst)
     }
     s.read.format("lance").load(dst)
       .filter(col("w_start") <= lit(maxTs)) // drop the sentinel's window if emitted
@@ -322,21 +334,16 @@ object StreamingOps extends QueryModule {
     Seq((-1L, new Timestamp(maxTs.getTime + 86400L * 1000)))
       .toDF("user_id", "ts")
       .coalesce(1).write.mode("append").parquet(srcDir)
-    // NOT drainWith (r21 measured): the per-user session fold is the
-    // batch's real compute — collapsing its state partitions serialized
-    // it (2.2 → 2.5 s) where the state-commit saving is pennies here
-    val q = s.readStream.schema(ev.schema).parquet(srcDir)
+    drain(s, ckpt, Some(dst), SessionParts) {
+      s.readStream.schema(ev.schema).parquet(srcDir)
       .withWatermark("ts", "0 seconds")
       .as[(Long, Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[SessionAcc, SessionOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(sessionFn)
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(dst)
-    drain(q)
+    }
     s.read.format("lance").load(dst)
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "session_start")
@@ -396,13 +403,12 @@ object StreamingOps extends QueryModule {
     // data, turning the replay into a second ingest.
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       docs.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .groupBy(sha2(col("text"), 256).as("h"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .writeStream
-      .option("checkpointLocation", ckpt)
       .outputMode("update")
       .foreachBatch { (changed: DataFrame, bid: Long) =>
        freeingBatchCheckpoints {
@@ -428,8 +434,6 @@ object StreamingOps extends QueryModule {
         ()
        }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
     }
     // merge-on-read: the latest generation of each touched hash group is
     // current. The window shuffles on h — the same uniform key the state
@@ -744,18 +748,16 @@ object StreamingOps extends QueryModule {
     // it would read as new data (see streamDedupAt)
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       d.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch(nearDedupBatch(s, dst, keysT, setsT, stateBuckets,
         Dedup.BucketCap,
         bandAndState = b => (CheckpointTracker.ckpt(Dedup.bandKeys(b)),
           CheckpointTracker.ckpt(Dedup.shingleSets(b))),
         verify = (cand, allSets) => Dedup.verifyJaccard(cand, allSets),
         compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _)
-      .trigger(Trigger.AvailableNow())
-      .start()
     }
     // batch-vs-batch finds each same-batch pair from both sides' band
     // keys; cross-batch pairs are found once (later member's batch)
@@ -855,10 +857,10 @@ object StreamingOps extends QueryModule {
       .toDF("doc_id", "video")
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       payloads.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(payloads.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch(nearDedupBatch(s, dst, keysT, framesT, stateBuckets,
         Multimodal.ImgBucketCap,
         bandAndState = b => {
@@ -875,8 +877,6 @@ object StreamingOps extends QueryModule {
         verify = (cand, allFrames) =>
           Multimodal.videoVerifyPairs(cand, CheckpointTracker.ckpt(allFrames)),
         compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _)
-      .trigger(Trigger.AvailableNow())
-      .start()
     }
     s.read.format("lance").load(dst)
       .select("a_id", "b_id", "n_matched", "match_ratio")
@@ -944,12 +944,10 @@ object StreamingOps extends QueryModule {
     seed(src, dst)
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       src.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    // NOT drainWith (r21 measured): the embedding family's per-batch
-    // compute (cosine verify + MV closure/upsert) needs the session's
-    // parallelism — the derived 1-partition drain read 1.27× slower
-    val q = s.readStream.schema(src.schema)
+    drain(s, ckpt, None, SessionParts) {
+      s.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch(nearDedupBatch(s, dst, keysT, vecsT, stateBuckets,
         bucketCap,
         bandAndState = b => {
@@ -963,9 +961,7 @@ object StreamingOps extends QueryModule {
         verify = cosineVerify,
         compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact,
         writeDst = writeDst) _)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    drain(q)
+    }
     finalRead(dst)
   }
 
@@ -1285,10 +1281,10 @@ object StreamingOps extends QueryModule {
     val stateBuckets = defaultStateBuckets(s)
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       payloads.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(payloads.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch(nearDedupBatch(s, dst, keysT, sigsT, stateBuckets,
         Multimodal.ImgBucketCap,
         bandAndState = b => {
@@ -1301,8 +1297,6 @@ object StreamingOps extends QueryModule {
         },
         verify = sigHammingVerify,
         compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _)
-      .trigger(Trigger.AvailableNow())
-      .start()
     }
     s.read.format("lance").load(dst)
       .select("a_id", "b_id", "hamming").distinct().orderBy("a_id", "b_id")
@@ -1345,13 +1339,10 @@ object StreamingOps extends QueryModule {
     // several source files + maxFilesPerTrigger=1 => build-then-append is
     // really exercised across MULTIPLE micro-batches
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    // NOT drainWith (r21): this drain BUILDS a cell-clustered serving
-    // store — its shuffle-partition count is load-bearing for the store's
-    // fragment layout (probe pruning + serve parallelism, guide §6), so
-    // the session value stands
-    val q = s.readStream.schema(e.schema)
+    drain(s, ckpt, None, SessionParts) {
+      s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!IndexBuild.exists(s, root))
           IndexBuild.build(s, batch, root, Map(
@@ -1360,9 +1351,7 @@ object StreamingOps extends QueryModule {
         else IndexBuild.append(s, batch, IndexBuild.load(s, root))
         ()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    drain(q)
+    }
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
     IndexBuild.search(s, IndexBuild.load(s, root), qv,
       Map("vector.nprobes" -> VectorIndex.Cells.toString,
@@ -1393,18 +1382,15 @@ object StreamingOps extends QueryModule {
     rest.repartition(3).write.mode("overwrite").parquet(srcDir)
     val flat = idx.centroids.flatMap(_.toArray)
     val dim = flat.length / idx.centroids.length
-    // NOT drainWith (r21): cell-clustered store — layout is load-bearing
-    val q = s.readStream.schema(rest.schema)
+    drain(s, ckpt, Some(root), SessionParts) {
+      s.readStream.schema(rest.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withColumn("cell", graft.functions.nearest_cell(
         col("embedding"), flat, idx.centroids.length, dim))
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .option("write.cluster-by", "cell")
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(root)
-    drain(q)
+    }
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
     IndexBuild.search(s, IndexBuild.load(s, root), qv,
       Map("vector.nprobes" -> VectorIndex.Cells.toString,
@@ -1439,20 +1425,17 @@ object StreamingOps extends QueryModule {
     val flat = idx.centroids.flatMap(_.toArray)
     val dim = flat.length / idx.centroids.length
     val p = idx.pq.get
-    // NOT drainWith (r21): cell-clustered store — layout is load-bearing
-    val q = s.readStream.schema(rest.schema)
+    drain(s, ckpt, Some(root), SessionParts) {
+      s.readStream.schema(rest.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withColumn("cell", graft.functions.nearest_cell(
         col("embedding"), flat, idx.centroids.length, dim))
       .withColumn("codes", graft.functions.pq_encode(
         col("embedding"), p.flat, p.m, p.codes, p.subDim))
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .option("write.cluster-by", "cell")
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(root)
-    drain(q)
+    }
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
     IndexBuild.search(s, IndexBuild.load(s, root), qv,
       Map("vector.nprobes" -> VectorIndex.Cells.toString,
@@ -1557,7 +1540,7 @@ object StreamingOps extends QueryModule {
           col("user_id").as(s"${prefix}_user"), col("ts").as(s"${prefix}_ts"))
         .withWatermark(s"${prefix}_ts", delay)
     }
-    drainWith(s, adaptiveStreamPartitions(s, Seq(vDir, pDir))) {
+    drain(s, ckpt, Some(dst), SizedFrom(vDir, pDir)) {
       side("v", vDir).join(side("p", pDir),
         expr("v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"),
         joinType)
@@ -1565,10 +1548,7 @@ object StreamingOps extends QueryModule {
         col("p_id").as("purchase_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("lag_us"))
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(dst)
     }
     s.read.format("lance").load(dst).orderBy("user_id", "view_id", "purchase_id")
   }
@@ -1607,15 +1587,12 @@ object StreamingOps extends QueryModule {
     val rd = s.readStream.schema(schema)
     val rd2 = if (filesPerTrigger > 0)
       rd.option("maxFilesPerTrigger", filesPerTrigger.toString) else rd
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, Some(dst), SizedFrom(srcDir)) {
       rd2.parquet(srcDir)
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("event_id")
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(dst)
     }
     s.read.format("lance").load(dst)
   }
@@ -1658,14 +1635,13 @@ object StreamingOps extends QueryModule {
       Seq.empty[(String, Long, Long, Long)]
         .toDF("o_orderpriority", "n", "sum_cents", "bid")
         .write.format("lance").save(mvTable)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(root))) {
+    drain(s, ckpt, None, SizedFrom(root)) {
       s.readStream.format("lance").option("read.change-feed", "true")
       .load(root)
       .select(col("o_orderpriority"),
         when(col("_change_type") === "insert", 1L).otherwise(-1L).as("sgn"),
         cents.as("c"))
       .writeStream
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val cur = s.read.format("lance").load(mvTable)
         val lastBid = lastBidOf(s, mvTable)
@@ -1684,8 +1660,6 @@ object StreamingOps extends QueryModule {
         }
         ()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
     }
     mvTable
   }
@@ -1740,7 +1714,7 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Timestamp, String, Long, Long, String, Long)]
         .toDF("w_start", "event_type", "n", "sum_id", "k", "bid")
         .write.format("lance").save(mvTable)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withWatermark("ts", delay)
@@ -1748,7 +1722,6 @@ object StreamingOps extends QueryModule {
       .agg(count(lit(1)).as("n"), sum("event_id").cast("long").as("sum_id"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("sum_id"))
       .writeStream
-      .option("checkpointLocation", ckpt)
       .outputMode("update")
       .foreachBatch { (touched: DataFrame, bid: Long) =>
        freeingBatchCheckpoints {
@@ -1781,8 +1754,6 @@ object StreamingOps extends QueryModule {
         ()
        }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
     }
     mvTable
   }
@@ -1841,10 +1812,10 @@ object StreamingOps extends QueryModule {
     if (!tableExists(s, modelTable))
       Seq.empty[(Int, Int, Long, Long)].toDF("label", "b", "n", "bid")
         .write.format("lance").save(modelTable)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val lastBid = lastBidOf(s, modelTable)
         if (bid > lastBid) { // replayed micro-batch = no-op
@@ -1860,7 +1831,6 @@ object StreamingOps extends QueryModule {
         }
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
     }
   }
 
@@ -1898,10 +1868,10 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Long, Long, Long, Long)]
         .toDF("doc_id", "max_overlap", "n_matched", "bid")
         .write.format("lance").save(outTable)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         if (bid > lastBidOf(s, outTable)) {
           TextAnalysis.contaminationScreen(batch, bench)
@@ -1910,7 +1880,6 @@ object StreamingOps extends QueryModule {
         }
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
     }
     s.read.format("lance").load(outTable)
       .select("doc_id", "max_overlap", "n_matched")
@@ -1939,10 +1908,10 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Long, Int, Double, Long, Long)]
         .toDF("vec_id", "label", "max_cos", "n_matched", "bid")
         .write.format("lance").save(outTable)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         if (bid > lastBidOf(s, outTable)) {
           VectorSearch.semanticScreen(batch, bench)
@@ -1951,7 +1920,6 @@ object StreamingOps extends QueryModule {
         }
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
     }
     s.read.format("lance").load(outTable)
       .select("vec_id", "label", "max_cos", "n_matched")
@@ -1972,15 +1940,14 @@ object StreamingOps extends QueryModule {
     val srcDir = tmp("stidx-src"); val root = tmp("stidx-idx"); val ckpt = tmp("stidx-ckpt")
     val raw = t(s, dir, "documents").select("doc_id", "text")
     raw.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         TextIndex.appendDelta(s, batch, root, bid)
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
     }
     TextIndex.search(s, root,
       TextAnalysis.Bm25Queries.toDF("query_id", "term"), TextAnalysis.Bm25TopK)
@@ -2033,15 +2000,14 @@ object StreamingOps extends QueryModule {
     val idxRoot = tmp("shyb-tidx")
     val docs = t(s, dir, "documents").select("doc_id", "text")
     docs.repartition(4).write.mode("overwrite").parquet(tSrc)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(tSrc))) {
+    drain(s, tCkpt, None, SizedFrom(tSrc)) {
       s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(tSrc)
-      .writeStream.option("checkpointLocation", tCkpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         TextIndex.appendDelta(s, batch, idxRoot, bid)
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
     }
     // vector side: seed-train, then exactly-once cell-clustered appends
     val vSrc = tmp("shyb-vsrc"); val vCkpt = tmp("shyb-vck")
@@ -2054,19 +2020,15 @@ object StreamingOps extends QueryModule {
     rest.repartition(3).write.mode("overwrite").parquet(vSrc)
     val flat = idx.centroids.flatMap(_.toArray)
     val dim = flat.length / idx.centroids.length
-    // NOT drainWith (r21): cell-clustered store — layout is load-bearing
-    // (collapsing it read the _pruned serving arms 1.9-2× slower per row)
-    val vq = s.readStream.schema(rest.schema)
+    drain(s, vCkpt, Some(vecT), SessionParts) {
+      s.readStream.schema(rest.schema)
       .option("maxFilesPerTrigger", "1").parquet(vSrc)
       .withColumn("cell", graft.functions.nearest_cell(
         col("embedding"), flat, idx.centroids.length, dim))
       .writeStream.format("lance")
-      .option("checkpointLocation", vCkpt)
       .option("write.cluster-by", "cell")
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(vecT)
-    drain(vq)
+    }
     // serve: index-served lexical arm + streamed-table vector arm → fuse
     val lex = TextIndex.search(s, idxRoot,
       TextAnalysis.Bm25Queries.toDF("query_id", "term"), TextAnalysis.Bm25TopK)
@@ -2103,17 +2065,13 @@ object StreamingOps extends QueryModule {
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val n = e.count()
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    // NOT drainWith (r21): the token store's fragment count is the serve
-    // side's scan parallelism — collapsing it read maxsim 1.2× slower
-    val q = s.readStream.schema(e.schema)
+    drain(s, ckpt, Some(tokT), SessionParts) {
+      s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .transform(b => VectorSearch.maxSimDocTokens(b, n))
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(tokT)
-    drain(q)
+    }
     VectorSearch.maxSimRank(
       s.read.format("lance").load(tokT).select("doc_id", "embedding"),
       VectorSearch.maxSimQueryVecs(s, e))
@@ -2148,19 +2106,16 @@ object StreamingOps extends QueryModule {
     val flat = cents.flatten
     val dim = cents.head.length
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    // NOT drainWith (r21): cell-clustered store — layout is load-bearing
-    val q = s.readStream.schema(e.schema)
+    drain(s, ckpt, Some(tokT), SessionParts) {
+      s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .transform(b => VectorSearch.maxSimDocTokens(b, n))
       .withColumn("cell", graft.functions.nearest_cell(
         col("embedding"), flat, cents.length, dim))
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .option("write.cluster-by", "cell")
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(tokT)
-    drain(q)
+    }
     VectorSearch.maxSimRankPruned(s,
       s.read.format("lance").load(tokT).select("doc_id", "embedding", "cell"),
       VectorSearch.maxSimQueryToks(e), cents,
@@ -2185,16 +2140,12 @@ object StreamingOps extends QueryModule {
     val vecT = tmp("smmr-vec") + "/t"
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    // NOT drainWith (r21): the store's fragment count is the serve side's
-    // scan/pair-sims parallelism — collapsing it read mmr 1.2× slower
-    val q = s.readStream.schema(e.schema)
+    drain(s, ckpt, Some(vecT), SessionParts) {
+      s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(vecT)
-    drain(q)
+    }
     VectorSearch.mmrServe(
       VectorSearch.mmrCandidatesFrom(s, s.read.format("lance").load(vecT))
         .localCheckpoint())
@@ -2223,18 +2174,15 @@ object StreamingOps extends QueryModule {
     val flat = cents.flatten
     val dim = cents.head.length
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    // NOT drainWith (r21): cell-clustered store — layout is load-bearing
-    val q = s.readStream.schema(e.schema)
+    drain(s, ckpt, Some(vecT), SessionParts) {
+      s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withColumn("cell", graft.functions.nearest_cell(
         col("embedding"), flat, cents.length, dim))
       .writeStream.format("lance")
-      .option("checkpointLocation", ckpt)
       .option("write.cluster-by", "cell")
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(vecT)
-    drain(q)
+    }
     VectorSearch.mmrServe(
       VectorSearch.mmrCandidatesPruned(s,
         s.read.format("lance").load(vecT).select("vec_id", "embedding", "cell"),
@@ -2267,11 +2215,10 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Long, String, Long, Long, Long)]
         .toDF("doc_id", "source", "n_grams", "dsir_micro", "bid")
         .write.format("lance").save(mv)
-    // NOT drainWith (r21 measured): the per-batch score+top-K is the real
-    // compute; 1-partition plans read 1.1-1.2× slower here
-    val q = s.readStream.schema(d.schema)
+    drain(s, ckpt, None, SessionParts) {
+      s.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val lastBid = lastBidOf(s, mv)
         if (bid > lastBid) { // replayed micro-batch = no-op
@@ -2287,9 +2234,7 @@ object StreamingOps extends QueryModule {
         }
         ()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    drain(q)
+    }
     s.read.format("lance").load(mv)
       .select("doc_id", "source", "n_grams", "dsir_micro")
       .orderBy("doc_id")
@@ -2314,11 +2259,10 @@ object StreamingOps extends QueryModule {
     if (!tableExists(s, cntT))
       Seq.empty[(String, Int, Long, Long)].toDF("source", "h", "c", "bid")
         .write.format("lance").save(cntT)
-    // NOT drainWith (r21 measured): the per-batch featurize + bounded
-    // merge is the real compute; 1-partition plans read 1.3× slower
-    val q = s.readStream.schema(d.schema)
+    drain(s, ckpt, None, SessionParts) {
+      s.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val lastBid = lastBidOf(s, cntT)
         if (bid > lastBid) { // replayed micro-batch = no-op
@@ -2333,9 +2277,7 @@ object StreamingOps extends QueryModule {
         }
         ()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    drain(q)
+    }
     TextAnalysis.driftReport(
       s.read.format("lance").load(cntT).select("source", "h", "c"))
   }
@@ -2357,10 +2299,10 @@ object StreamingOps extends QueryModule {
     raw.repartition(4).write.mode("overwrite").parquet(srcDir)
     Seq.empty[(java.sql.Date, Array[Byte], Long)].toDF("d", "sk", "bid")
       .write.format("lance").save(sketchTable)
-    drainWith(s, adaptiveStreamPartitions(s, Seq(srcDir))) {
+    drain(s, ckpt, None, SizedFrom(srcDir)) {
       s.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.option("checkpointLocation", ckpt)
+      .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val lastBid = lastBidOf(s, sketchTable)
         if (bid > lastBid) { // replayed micro-batch = no-op
@@ -2373,7 +2315,6 @@ object StreamingOps extends QueryModule {
         }
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
     }
     // serve DAU/WAU from the streamed sketch store: merge generations per
     // day, then the trailing-7-day window by a second register-wise merge

@@ -8,9 +8,9 @@ import org.apache.hadoop.fs.Path
   * A fragment's delete vector is an immutable sidecar file under
   * `_deletes/` holding the sorted physical row positions deleted from that
   * fragment. DELETE/UPDATE/MERGE write only a new sidecar (plus insert
-  * fragments) instead of rewriting whole fragments (copy-on-write); the
-  * read path filters the listed positions out. Manifests reference DV
-  * files by path, so time travel sees each version's exact delete state;
+  * fragments) instead of rewriting whole fragments; the read path
+  * filters the listed positions out. Manifests reference DV files by
+  * path, so time travel sees each version's exact delete state;
   * merging deletes writes a NEW file (never mutates), and compaction folds
   * DVs back into clean fragments. This mirrors Lance's deletion-file
   * mechanism the reference gets natively from the Lance format

@@ -237,7 +237,7 @@ class LanceTable(val root: String, extraOptions: Map[String, String],
     LanceDelete.deleteWhere(spark, root, filters, extraOptions)
 
   // `_file`/`_pos`/`_change_type` metadata columns: fragment/row identity
-  // for users and for row-level runtime group filtering (names already
+  // for users and for the delta row-level path's row id (names already
   // declared in the schema — e.g. _change_type under read.change-feed —
   // are excluded to avoid a duplicate-column conflict)
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
@@ -245,27 +245,13 @@ class LanceTable(val root: String, extraOptions: Map[String, String],
     LanceMetadata.columns.filterNot(c => declared(c.name()))
   }
 
-  // UPDATE / MERGE (and subquery DELETEs): delta (merge-on-read, positional
-  // delete vectors — LanceDeltaRowLevelOperation) by default; copy-on-write
-  // fragment rewrites (LanceRowLevelOperation) when mode = "cow". Mode
-  // resolves table option > session conf, read per command so tests and
-  // sessions can switch without re-resolving the table.
+  // UPDATE / MERGE (and subquery DELETEs): merge-on-read through positional
+  // delete vectors. tableOptions (manifest props included) so the delta
+  // writer sees the declared bucket layout and keeps tagging re-inserted rows
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo):
       org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => {
-      val mode = LanceOptions.any(tableOptions, "rowLevelMode", "write.row-level-mode")
-        .orElse(spark.conf.getOption("spark.graft.lance.row-level-mode"))
-        .getOrElse("delta")
-      mode match {
-        case "cow" => new LanceRowLevelOperation(root, tableOptions, info.command())
-        // tableOptions (manifest props included) so the delta writer sees
-        // the declared bucket layout and keeps tagging re-inserted rows
-        case "delta" => new LanceDeltaRowLevelOperation(root, tableOptions, info.command())
-        case other => throw new IllegalArgumentException(
-          s"lance: unknown row-level mode '$other' (expected 'delta' or 'cow')")
-      }
-    }
+    () => new LanceDeltaRowLevelOperation(root, tableOptions, info.command())
 }
 
 object LanceTable {

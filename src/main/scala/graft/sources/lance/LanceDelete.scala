@@ -254,28 +254,24 @@ object LanceDelete {
         val fullToRel = candidates.map(fr =>
           new Path(root, fr.path).toString -> fr.path).toMap
         val oldDv = candidates.map(fr => fr.path -> fr.deletes.map(_.path)).toMap
-        val dvStats = LanceOptions.any(options, "write.dv-stats", "dvStats")
-          .forall(_.toBoolean)
         // stats of the rows being removed are captured in the same pass the
         // positions come from (the scan already reads these fragments), so
         // the read path can keep answering aggregates from live stats —
         // track every statted numeric/date/ts/decimal column
-        val statFields: Seq[StructField] = if (!dvStats) Nil
-          else m.schema.fields.toSeq
-            .filter(f => RemovedStats.trackable(f.dataType))
-            .filter(f => candidates.exists(_.stats.contains(f.name)))
+        val statFields: Seq[StructField] = m.schema.fields.toSeq
+          .filter(f => RemovedStats.trackable(f.dataType))
+          .filter(f => candidates.exists(_.stats.contains(f.name)))
         // ... and the SURVIVING rows of each DV'd fragment re-feed its
         // HLL/bloom sketch sidecar (same pass, no extra IO beyond the
         // sketched columns), so approximate COUNT(DISTINCT) and bloom
         // equality pruning track live rows instead of over-approximating
         // until the next compaction
-        val sketchFields: Seq[StructField] = if (!dvStats) Nil
-          else m.schema.fields.toSeq.filter { f =>
-            candidates.exists(_.sketches.isDefined) && (f.dataType match {
-              case StringType | ByteType | ShortType | IntegerType | LongType => true
-              case _ => false
-            })
-          }
+        val sketchFields: Seq[StructField] = m.schema.fields.toSeq.filter { f =>
+          candidates.exists(_.sketches.isDefined) && (f.dataType match {
+            case StringType | ByteType | ShortType | IntegerType | LongType => true
+            case _ => false
+          })
+        }
         val bloomMaxKeys = LanceOptions.any(options, "write.bloom-max-keys")
           .map(_.toInt).getOrElse(Bloom.DefaultMaxKeys.toInt)
         val extraCols = (statFields ++ sketchFields).map(_.name).distinct

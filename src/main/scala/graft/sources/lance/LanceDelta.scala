@@ -14,11 +14,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** Delta (merge-on-read) row-level operations — the default path for
+/** Delta (merge-on-read) row-level operations — the one path for
   * UPDATE / MERGE / subquery-DELETE. Instead of rewriting every affected
-  * fragment (copy-on-write, [[LanceRowLevelOperation]]), the write emits
-  * only the CHANGED rows: deletes become positions appended to per-fragment
-  * delete-vector sidecars ([[DeleteVectors]]), updates are represented as
+  * fragment, the write emits only the CHANGED rows: deletes become
+  * positions appended to per-fragment delete-vector sidecars
+  * ([[DeleteVectors]]), updates are represented as
   * delete + insert, inserts land as ordinary new fragments. A 1-row UPDATE
   * therefore writes one tiny DV file and a 1-row fragment — every original
   * fragment file stays in place. The read path filters deleted positions;
@@ -70,11 +70,17 @@ class LanceDeltaRowLevelOperation(root: String, extraOptions: Map[String, String
   override def description(): String = s"LanceDelta($cmd, $root)"
 }
 
-/** Same pruning contract as the COW builder: Spark pushes (conjuncts of)
-  * the raw UPDATE/DELETE condition, so `provablyEmpty` is the only safe
-  * fragment prune; MERGE pushes join-derived filters and never prunes.
-  * Filters are never forwarded to the parquet reader — `_pos` fidelity
-  * requires reading every physical row of a planned fragment. */
+/** Pruning rule (critical): a fragment may be EXCLUDED from the scan only
+  * if the operation provably leaves it untouched. For UPDATE and the
+  * rewritten DELETE, Spark pushes (a conjunct-subset of) the command's raw
+  * CONDITION, so the only safe prune is `provablyEmpty`: no row of the
+  * fragment can match the pushed conjuncts ⇒ no row matches the full
+  * condition ⇒ untouched. (`provablyAllMatch` is valid only in the
+  * `SupportsDelete` metadata path, where the filters ARE the complete
+  * delete condition.) MERGE pushes join-derived filters that admit no such
+  * inference, so MERGE never prunes. Filters are never forwarded to the
+  * parquet reader — `_pos` fidelity requires reading every physical row
+  * of a planned fragment. */
 class LanceDeltaScanBuilder(spark: SparkSession, root: String,
                             manifest: LanceManifest, options: Map[String, String],
                             op: LanceDeltaRowLevelOperation) extends ScanBuilder
@@ -181,7 +187,9 @@ class LanceDeltaWriteBuilder(spark: SparkSession, root: String,
                   case None => Some(fr)
                 }
               } ++ stamped
-              Some(LanceCommit(cur.schema, frags, cur.txns, LanceRowLevelOps.opName(op.command())))
+              // manifest op name (change-feed metadata): delete/update/merge
+              Some(LanceCommit(cur.schema, frags, cur.txns,
+                op.command().name.toLowerCase(java.util.Locale.ROOT)))
             }
           }
           if (committed.isEmpty) {

@@ -873,8 +873,8 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
     with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
-  /** Narrowable by subclasses (runtime group filtering in the COW scan). */
-  @volatile protected var fragments: Seq[FragmentMeta] = initialFragments
+  /** Narrowed by runtime filtering (below). */
+  @volatile private var fragments: Seq[FragmentMeta] = initialFragments
 
   // ---- runtime filtering (the dynamic-partition-pruning analog) --------
   // Join-key predicates arriving at execution time (Spark's PartitionPruning
@@ -887,8 +887,7 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
 
   /** Every projected top-level data column is fair game: all have min/max
     * stats, low-cardinality strings have dictionaries, keyed columns have
-    * bloom sidecars. (The COW scan overrides this to `_file` only — its
-    * group filtering must also sync the rewrite's touched-fragment set.) */
+    * bloom sidecars. */
   override def filterAttributes():
       Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     manifest.schema.fields.collect {
@@ -1297,8 +1296,8 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
 }
 
 /** Metadata columns the connector exposes (SupportsMetadataColumns):
-  * `_file` = the fragment file's full path — the Iceberg-style identity
-  * column row-level operations use for runtime group filtering. */
+  * `_file` = the fragment file's full path and `_pos` = the physical row
+  * position — together the row identity delta row-level operations use. */
 object LanceMetadata {
   val FileCol = "_file"
   val PosCol = "_pos"

@@ -683,7 +683,7 @@ class LanceSpec extends SparkSpec {
     assert(ManifestIO.loadLatest(root, conf).get.version === v)
   }
 
-  test("UPDATE / MERGE / subquery DELETE via copy-on-write row-level ops") {
+  test("UPDATE / MERGE / subquery DELETE via delta row-level ops") {
     spark.conf.set("spark.sql.catalog.lance_rlo",
       classOf[graft.sources.lance.LanceCatalog].getName)
     spark.conf.set("spark.sql.catalog.lance_rlo.warehouse", tmp())
@@ -949,7 +949,7 @@ class LanceSpec extends SparkSpec {
     assert(remaining.toSeq === Seq(1L, 3L, 5L))
   }
 
-  test("_file metadata column; runtime group filtering narrows subquery-DML rewrites") {
+  test("_file metadata column; subquery UPDATE writes one DV and rewrites no fragment") {
     spark.conf.set("spark.sql.catalog.lance_rgf",
       classOf[graft.sources.lance.LanceCatalog].getName)
     val wh = tmp()
@@ -969,20 +969,19 @@ class LanceSpec extends SparkSpec {
     assert(files.size === before.fragments.size)
     assert(files.forall(_.contains("data/")), files)
 
-    // subquery UPDATE under COPY-ON-WRITE mode (this test asserts rewrite
-    // narrowing; the delta default writes a DV instead of rewriting):
-    // no static pushdown — runtime group filtering must keep every
-    // fragment that contains no matching row
-    spark.conf.set("spark.graft.lance.row-level-mode", "cow")
-    try {
-      spark.sql("UPDATE lance_rgf.db.o SET o_custkey = -5 " +
-        "WHERE o_orderkey IN (SELECT min(o_orderkey) FROM lance_rgf.db.o)")
-    } finally spark.conf.unset("spark.graft.lance.row-level-mode")
+    // subquery UPDATE (no static pushdown): the matched row's fragment
+    // gains a 1-position delete vector, its new version lands in an insert
+    // fragment, and no original fragment is rewritten
+    spark.sql("UPDATE lance_rgf.db.o SET o_custkey = -5 " +
+      "WHERE o_orderkey IN (SELECT min(o_orderkey) FROM lance_rgf.db.o)")
     val after = ManifestIO.loadLatest(root, conf).get
-    val survivors = before.fragments.map(_.path).toSet
-      .intersect(after.fragments.map(_.path).toSet)
-    assert(survivors.size === before.fragments.size - 1,
-      s"expected exactly one fragment rewritten; before=${before.fragments.size} surviving=${survivors.size}")
+    val afterBy = after.fragments.map(f => f.path -> f).toMap
+    assert(before.fragments.forall(f => afterBy.contains(f.path)),
+      s"a pre-update fragment was dropped: ${after.fragments.map(_.path)}")
+    val gained = before.fragments.filter(f => afterBy(f.path).deletes != f.deletes)
+    assert(gained.size === 1, s"expected one fragment to gain a DV: $gained")
+    assert(gained.head.deletes.isEmpty && afterBy(gained.head.path).deletes.map(_.count)
+      .contains(1L), afterBy(gained.head.path).deletes)
     assert(spark.sql("SELECT count(*) FROM lance_rgf.db.o WHERE o_custkey = -5")
       .first().getLong(0) === 1)
     assert(spark.sql("SELECT count(*) FROM lance_rgf.db.o").first().getLong(0)
@@ -1644,28 +1643,6 @@ class LanceSpec extends SparkSpec {
       spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-
-    // the copy-on-write path rewrites whole fragments — its replacement
-    // rows must demux the same way
-    spark.sql("CREATE TABLE lance_ub.db.c (id BIGINT, v BIGINT) " +
-      "TBLPROPERTIES('write.bucket-by'='id','write.bucket-count'='4'," +
-      "'write.row-level-mode'='cow')")
-    spark.sql("INSERT INTO lance_ub.db.c SELECT * FROM ub_src")
-    spark.sql("UPDATE lance_ub.db.c SET v = v + 1 WHERE id % 7 = 0")
-    val mc = ManifestIO.loadLatest(s"$wh/db/c", conf).get
-    assert(mc.fragments.forall(_.bucket.isDefined),
-      mc.fragments.map(f => f.path -> f.bucket).mkString(", "))
-    val perFileC = spark.sql(
-      "SELECT _file, pmod(hash(id), 4) AS b FROM lance_ub.db.c")
-      .groupBy("_file").agg(countDistinct(col("b")).as("nb"), first(col("b")).as("b"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(perFileC.forall(_._2 === 1L), s"mixed-bucket COW fragment: $perFileC")
-    for (fr <- mc.fragments) {
-      val actual = perFileC.find(_._1.endsWith(fr.path)).get._3
-      assert(fr.bucket.contains(actual), s"${fr.path}: tag=${fr.bucket} actual=$actual")
-    }
-    assert(spark.sql("SELECT sum(v) FROM lance_ub.db.c").first().getLong(0)
-      === (0L until 400L).map(i => 2 * i + (if (i % 7 == 0) 1 else 0)).sum)
   }
 
   test("runtime pruning may empty whole buckets when SPJ pushes partition values") {
