@@ -125,6 +125,18 @@ object Bench {
     // Integer.toHexString is UNPADDED: an identity hash below 0x100000
     // prints 1-5 digits, so the strip must accept any plausible width
     .replaceAll("@[0-9a-f]{1,16}\\b", "@<id>")
+    // NORMALIZER v5: Spark abbreviates each scan metadata value
+    // (DataFilters, PushedFilters, ...) to spark.sql.maxMetadataStringLength
+    // BEFORE the ids above are stripped, so the digit count of the ids moves
+    // the cut and flipped about a dozen keys on unchanged code. A cut value
+    // that holds an expression id keeps only its text up to the first id,
+    // the one prefix no id width can move (the Filter node above the scan
+    // prints the full condition). Scala-API lambda variables are named from
+    // a JVM-global counter (`lambda x_15#`); the counter is stripped too,
+    // as is the random 32-hex suffix of per-run catalog table names.
+    .replaceAll(TruncatedWithId, "$1$2...")
+    .replaceAll("lambda (\\w+?)_\\d+\\b", "lambda $1_")
+    .replaceAll("_[0-9a-f]{32}\\b", "_<uuid>")
     // NORMALIZER v3 (r19): LanceScan lines print the table's manifest
     // version and fragment counts — run-shape data (how many commits a
     // stream happened to make, compaction cadence hits), not plan
@@ -144,6 +156,14 @@ object Bench {
     }.mkString("\n")
 
   private val FragmentsRe = "fragments=(\\d+)/(\\d+)".r
+
+  /** `Key: value...` — a metadata value cut by Spark (it ends in `...`
+    * before the next `, Key: ` or the line end) whose text holds an `#id`;
+    * group 2 is the text up to and including the first `#`. */
+  private val TruncatedWithId: String = {
+    val inValue = "(?:(?!, [A-Z]\\w*: )[^\\n])"
+    s"(\\b[A-Z]\\w*: )((?:(?!, [A-Z]\\w*: )[^#\\n])*#)$inValue*?\\.\\.\\.(?=, [A-Z]\\w*: |\\n|$$)"
+  }
 
   def main(args: Array[String]): Unit = args.toList match {
     case Nil => bench()
@@ -317,7 +337,7 @@ object Bench {
     "builds" -> "since r17 one-time build entries (ivf_flat_build, lsh_pairs_build, ivf_pq_build, ivf_sq_build) live in the builds map, excluded from queries and total; r16-and-earlier totals include them",
     "host_tide" -> "wall times are single-host measurements: compare rounds through tools/bench_compare.py (noise bands, spaced re-medians, per-batch streaming denominators) and treat a broad same-direction shift on unchanged plan fingerprints as host speed, not code — the late-r18 close measured untouched map-only canaries at 1.5-2x their same-day morning walls on identical code/plans (shared-host slowdown, load 1.7 with zero local processes)",
     "data" -> "per-key data-side record of the LAST measured run: streaming batches/inputRows/sinkRows (StreamingQueryProgress) and lance manifest commits; the denominators for adjudicating streaming wall-time swings",
-    "plans" -> "since r17: per-key sha-prefix:line-count fingerprint of the normalized static physical plan (ids/paths stripped, pre-AQE); equal across rounds = wall swing is host/data, changed = a real plan change — streaming keys fingerprint their sink-read side only. NORMALIZER v2 since r18 (JVM lambda identities in typed-API nodes stripped — they flipped fingerprints on unchanged code); v3 since r19 (LanceScan manifest version / fragment counts stripped — run-shape data, flipped q_stream_image_dedup on identical code); v4 since r20 (the v3 strips anchored to LanceScan description lines, and fragment counts bucketed to pruned-vs-full instead of deleted so a lost-pruning regression flips the tripwire again), so fingerprints compare only within the same normalizer version")
+    "plans" -> "since r17: per-key sha-prefix:line-count fingerprint of the normalized static physical plan (ids/paths stripped, pre-AQE); equal across rounds = wall swing is host/data, changed = a real plan change — streaming keys fingerprint their sink-read side only. NORMALIZER v2 since r18 (JVM lambda identities in typed-API nodes stripped — they flipped fingerprints on unchanged code); v3 since r19 (LanceScan manifest version / fragment counts stripped — run-shape data, flipped q_stream_image_dedup on identical code); v4 since r20 (the v3 strips anchored to LanceScan description lines, and fragment counts bucketed to pruned-vs-full instead of deleted so a lost-pruning regression flips the tripwire again); v5 (scan metadata values that Spark cut mid-way keep only their text up to the first expression id, whose digit count moved the cut; Scala-API lambda variable counters and per-run table-name suffixes stripped), so fingerprints compare only within the same normalizer version")
 
   /** The bench artifact: ONE compact line with the fixed field order
     * metric,value,unit,queries,errors,noise,builds,data,plans,notes,sf —

@@ -97,12 +97,25 @@ object IndexBuild {
   /** Does `root` carry a persisted index? Checks the manifest's sidecar
     * pointer first (the atomic source of truth), then the legacy fixed
     * `_index/meta.json` path. */
-  def exists(s: SparkSession, root: String): Boolean = {
-    val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-    graft.sources.lance.ManifestIO.loadLatest(root, conf)
-      .exists(_.props.contains(MetaProp)) ||
-      metaPath(root).getFileSystem(conf).exists(metaPath(root))
-  }
+  def exists(s: SparkSession, root: String): Boolean =
+    metaFileAt(s, root, latestManifest(s, root)).isDefined
+
+  private def latestManifest(s: SparkSession, root: String) =
+    graft.sources.lance.ManifestIO.loadLatest(root,
+      org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty))
+
+  /** The sidecar file `m`, a manifest of `root`, points at, with its epoch:
+    * the `index.meta` pointer, else the legacy fixed path if present. */
+  private def metaFileAt(s: SparkSession, root: String,
+                         m: Option[graft.sources.lance.LanceManifest])
+      : Option[(org.apache.hadoop.fs.Path, Option[String])] =
+    m.flatMap(_.props.get(MetaProp)) match {
+      case Some(epoch) => Some((metaPath(root, epoch), Some(epoch)))
+      case None =>
+        val legacy = metaPath(root)
+        val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
+        if (legacy.getFileSystem(conf).exists(legacy)) Some((legacy, None)) else None
+    }
 
   private def buildWith(s: SparkSession, source: DataFrame, root: String,
                         io: VectorIndexOptions, overwrite: Boolean): BuiltIndex = {
@@ -252,19 +265,45 @@ object IndexBuild {
     * search filter (LanceVectorSearch.java:133,170-171 — the filter rides
     * the scan next to the nearest query): applied to candidate rows
     * BEFORE ranking, inside the probed-cell scan, so pushdown/pruning
-    * still narrow the read. */
+    * still narrow the read.
+    *
+    * The search is EAGER: it runs [[searchPlan]] as one Spark job with no
+    * shuffle and no broadcast, and returns the k (id, dist) rows as a
+    * local DataFrame. The driver merges at most tasks·k rows (tasks·k·r
+    * with a refine factor r on a quantized index) and re-ranks the
+    * refine candidates itself ([[VectorIndex.refineOnDriver]]). */
   def search(s: SparkSession, idx: BuiltIndex, queryVec: Array[Double],
              options: Map[String, String], excludeVecId: Long = -1L,
              idCol: String = "vec_id",
              pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val so = LanceVectorOptions.search(options)
+    val top = searchPlan(s, idx, queryVec, options, excludeVecId, idCol, pred)
+    if (refines(idx, so))
+      VectorIndex.refineOnDriver(s, top, queryVec, so.k, idCol, idx.opts.column)
+    else s.createDataFrame(java.util.Arrays.asList(VectorIndex.collectTop(top, "dist"): _*),
+      top.schema)
+  }
+
+  /** Only the quantized arms re-rank; a flat index's distances are exact. */
+  private def refines(idx: BuiltIndex, so: graft.sources.lance.VectorSearchOptions): Boolean =
+    so.refineFactor.isDefined && (idx.pq.isDefined || idx.sq.isDefined)
+
+  /** The one Spark plan [[search]] collects: the probed-cell scan ranked
+    * by its scorer with nulls last ([[VectorIndex.rankTop]]). The flat arm
+    * and the ADC-only arms keep k (id, dist) rows; a refine search keeps
+    * k·r (id, vector, adc_dist) candidates. */
+  private[graft] def searchPlan(s: SparkSession, idx: BuiltIndex, queryVec: Array[Double],
+                                options: Map[String, String], excludeVecId: Long = -1L,
+                                idCol: String = "vec_id",
+                                pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    val so = LanceVectorOptions.search(options)
     val probed = idx.graph match {
       case Some(g) => g.probe(queryVec, so.nprobes, so.ef)
       case None => VectorIndex.selectProbesExact(idx.centroids, queryVec, so.nprobes)
     }
-    // the quantized arms share one ADC-then-optional-refine tail; only the
-    // scorer differs (PQ LUT lookups vs SQ dequantized subtraction)
-    def adcSearch(adc: org.apache.spark.sql.Column): DataFrame = {
+    // the quantized arms share one ADC scan; only the scorer differs (PQ
+    // LUT lookups vs SQ dequantized subtraction)
+    def adcTop(adc: org.apache.spark.sql.Column): DataFrame = {
       // ADC reconstructs L2 — answering a cosine/dot query with L2-ascending
       // ranking would be silently wrong (knn_join's PQ path has the same
       // guard); use the flat index type for other metrics
@@ -273,31 +312,17 @@ object IndexBuild {
           s"metric '${so.metric}' needs an IVF_FLAT/IVF_HNSW index")
       val base0 = s.read.format("lance").options(options).load(idx.root)
         .filter(col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId)
-      // null ADC (malformed row) must be FILTERED: Spark ASC sorts nulls
-      // first, so an unfiltered null would evict true candidates
       val base = pred.map(base0.filter).getOrElse(base0)
-        .select(col(idCol), col(idx.opts.column), adc.as("adc_dist"))
-        .filter(col("adc_dist").isNotNull)
-      so.refineFactor match {
-        case None =>
-          base.select(col(idCol), round(col("adc_dist"), 6).as("dist"))
-            .orderBy(col("dist").asc, col(idCol).asc)
-            .limit(so.k)
-        case Some(r) =>
-          import s.implicits._
-          val qvDf = Seq(Tuple1(queryVec.map(_.toFloat))).toDF("qv")
-          base.orderBy(col("adc_dist").asc, col(idCol).asc)
-            .limit(so.k * r)
-            .crossJoin(broadcast(qvDf))
-            .select(col(idCol),
-              round(graft.functions.vec_l2(col(idx.opts.column), col("qv")), 6).as("dist"))
-            .orderBy(col("dist").asc, col(idCol).asc)
-            .limit(so.k)
-      }
+      if (refines(idx, so))
+        VectorIndex.rankTop(base.select(col(idCol), col(idx.opts.column), adc.as("adc_dist")),
+          "adc_dist", asc = true, so.k * so.refineFactor.get, idCol)
+      else
+        VectorIndex.rankTop(base.select(col(idCol), round(adc, 6).as("dist")),
+          "dist", asc = true, so.k, idCol)
     }
     (idx.pq, idx.sq) match {
       case (None, None) =>
-        VectorIndex.probedScan(s, idx.root, options, probed, queryVec,
+        VectorIndex.probedTop(s, idx.root, options, probed, queryVec,
           so.metric, so.k, excludeVecId, idCol, idx.opts.column, pred)
       case (Some(p), _) =>
         val lut = new Array[Double](p.m * p.codes)
@@ -309,10 +334,10 @@ object IndexBuild {
           }
           lut(mm * p.codes + c) = acc
         }
-        adcSearch(graft.functions.pq_adc(col("codes"), lut, p.m, p.codes))
+        adcTop(graft.functions.pq_adc(col("codes"), lut, p.m, p.codes))
       case (_, Some(q)) =>
         val qm = Array.tabulate(queryVec.length)(d => queryVec(d) - q.mins(d))
-        adcSearch(graft.functions.sq_adc(col("scodes"), qm, q.scales))
+        adcTop(graft.functions.sq_adc(col("scodes"), qm, q.scales))
     }
   }
 
@@ -355,14 +380,21 @@ object IndexBuild {
     finally out.close()
   }
 
-  def load(s: SparkSession, root: String): BuiltIndex = {
+  def load(s: SparkSession, root: String): BuiltIndex =
+    loadAt(s, root, latestManifest(s, root)).getOrElse(
+      throw new java.io.FileNotFoundException(s"no vector index at $root"))
+
+  /** The index handle `m`, a resolved manifest of `root`, points at (None
+    * when it carries no index). A caller that pins its reads to `m` gets
+    * the sidecar written in the same commit as the data it reads, so the
+    * handle's epoch always matches the pinned version. */
+  private[graft] def loadAt(s: SparkSession, root: String,
+                            m: Option[graft.sources.lance.LanceManifest]): Option[BuiltIndex] =
+    metaFileAt(s, root, m).map { case (p, epoch) => readMeta(s, root, p, epoch) }
+
+  private def readMeta(s: SparkSession, root: String, p: org.apache.hadoop.fs.Path,
+                       epoch: Option[String]): BuiltIndex = {
     val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-    // the manifest's sidecar pointer is the source of truth (stamped in the
-    // same commit as the data); the fixed meta.json path is the pre-pointer
-    // legacy fallback
-    val pointer = graft.sources.lance.ManifestIO.loadLatest(root, conf)
-      .flatMap(_.props.get(MetaProp))
-    val p = pointer.map(metaPath(root, _)).getOrElse(metaPath(root))
     val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen.toInt
     val bytes = new Array[Byte](len)
@@ -421,6 +453,6 @@ object IndexBuild {
       case JNothing | JNull => None
       case v => Some(num(v))
     }
-    BuiltIndex(root, io, centroids, pq, graph, residual, epoch = pointer, sq = sq)
+    BuiltIndex(root, io, centroids, pq, graph, residual, epoch = epoch, sq = sq)
   }
 }

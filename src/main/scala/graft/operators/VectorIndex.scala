@@ -4,7 +4,7 @@ import graft.{QueryModule, Tables}
 import graft.functions.vec_l2
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -186,32 +186,98 @@ object VectorIndex extends QueryModule {
       .sortBy { case (i, d) => (d, i) }
       .take(nprobes).map(_._1)
 
-  /** The probed-cell scan shared by every IVF variant: fragment pruning on
-    * the cell range, codegen'd distance, TakeOrderedAndProject top-k. */
-  private[operators] def probedScan(s: SparkSession, indexRoot: String,
+  /** The probed-cell scan shared by every IVF variant, ranked: fragment
+    * pruning on the cell range, the codegen'd distance against the query
+    * vector as a literal, top-k by [[rankTop]]. A literal array is a
+    * reference object in the generated code, so the code is the same for
+    * every query and no broadcast join is planned. [[probedScan]] drops
+    * null scores lazily; `IndexBuild.search` collects this plan instead. */
+  private[operators] def probedTop(s: SparkSession, indexRoot: String,
                          readOptions: Map[String, String], probed: Array[Int],
                          queryVec: Array[Double], metric: String, k: Int,
                          excludeVecId: Long, idCol: String = "vec_id",
                          vecCol: String = "embedding",
                          pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import s.implicits._
     val score = metric match {
       case "l2" => vec_l2 _
       case "cosine" => graft.functions.vec_cosine _
       case "dot" => graft.functions.vec_dot _
     }
-    val asc = metric == "l2"
-    val qvDf = Seq(Tuple1(queryVec.map(_.toFloat))).toDF("qv")
     val base0 = s.read.format("lance").options(readOptions).load(indexRoot)
       .filter(col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId)
     val scored = pred.map(base0.filter).getOrElse(base0)
-      .crossJoin(broadcast(qvDf))
-      .select(col(idCol), round(score(col(vecCol), col("qv")), 6).as("dist"))
-      // a malformed row scores null; ASC sorts nulls FIRST — filter, never rank
-      .filter(col("dist").isNotNull)
-    val ordered = if (asc) scored.orderBy(col("dist").asc, col(idCol).asc)
-                  else scored.orderBy(col("dist").desc, col(idCol).asc)
-    ordered.limit(k)
+      .select(col(idCol),
+        round(score(col(vecCol), typedLit(queryVec.map(_.toFloat))), 6).as("dist"))
+    rankTop(scored, "dist", asc = metric == "l2", k, idCol)
+  }
+
+  /** [[probedTop]] as a lazy frame: a malformed row scores null, and the
+    * nulls the limit let through are dropped here. */
+  private[operators] def probedScan(s: SparkSession, indexRoot: String,
+                         readOptions: Map[String, String], probed: Array[Int],
+                         queryVec: Array[Double], metric: String, k: Int,
+                         excludeVecId: Long, idCol: String = "vec_id",
+                         vecCol: String = "embedding",
+                         pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    probedTop(s, indexRoot, readOptions, probed, queryVec, metric, k, excludeVecId,
+      idCol, vecCol, pred).filter(col("dist").isNotNull)
+
+  /** Rank `scored` by (`by`, id) and keep `n` rows, nulls LAST. Null
+    * scores come from malformed rows (ragged dims, a null element). They
+    * are not filtered before the sort: Spark pushes an `IS NOT NULL` on
+    * the alias below the projection, which evaluates the distance kernel
+    * twice per row. A null can reach the `n` rows only when fewer than `n`
+    * rows score, so dropping nulls after the limit keeps the same scored
+    * rows ([[collectTop]], [[probedScan]]). */
+  private[operators] def rankTop(scored: DataFrame, by: String, asc: Boolean, n: Int,
+                                 idCol: String): DataFrame =
+    scored.orderBy(if (asc) col(by).asc_nulls_last else col(by).desc_nulls_last,
+      col(idCol).asc).limit(n)
+
+  /** Collect a [[rankTop]] plan in ONE Spark job: `TakeOrderedAndProject`
+    * at the plan root keeps a k-heap per partition and merges at most
+    * tasks·n rows on the driver, with no shuffle and no second stage.
+    * Rows with a null `by` score are dropped. */
+  private[operators] def collectTop(top: DataFrame, by: String): Array[Row] = {
+    val i = top.schema.fieldIndex(by)
+    top.collect().filterNot(_.isNullAt(i))
+  }
+
+  /** The exact re-rank behind every refine search (`IndexBuild.search`'s
+    * quantized arms, [[ivfPqRefine]], [[sqTopKRefined]]). `top` is a
+    * [[rankTop]] plan of (id, vector, `adc_dist`) limited to k·r
+    * candidates; it is collected in one job ([[collectTop]]). The
+    * candidates are then scored on the driver with the same
+    * `round(vec_l2(vector, query), 6)` Catalyst expression the distributed
+    * plan used. Interpreted eval runs the same double arithmetic as the
+    * generated code, so distances are bit-identical. The k rows are kept
+    * by (dist ASC NULLS FIRST, id ASC), Spark's default ordering. Driver
+    * work is O(tasks·k·r) rows; the result is a local DataFrame. */
+  private[operators] def refineOnDriver(s: SparkSession, top: DataFrame, qv: Array[Double],
+                                        k: Int, idCol: String, vecCol: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+      InterpretedOrdering, Literal, Round, SortOrder}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
+    val idF = top.schema(idCol)
+    val vecF = top.schema(vecCol)
+    val dist = Round(graft.functions.VectorDistance(
+      BoundReference(0, vecF.dataType, vecF.nullable),
+      Literal.create(qv.map(_.toFloat), ArrayType(FloatType, containsNull = false)), "l2"),
+      Literal(6))
+    val out = StructType(Seq(idF, StructField("dist", DoubleType, nullable = true)))
+    val toId = CatalystTypeConverters.createToCatalystConverter(idF.dataType)
+    val toVec = CatalystTypeConverters.createToCatalystConverter(vecF.dataType)
+    val (iId, iVec) = (top.schema.fieldIndex(idCol), top.schema.fieldIndex(vecCol))
+    val scored = collectTop(top, "adc_dist").map { r =>
+      InternalRow(toId(r.get(iId)), dist.eval(InternalRow(toVec(r.get(iVec)))))
+    }
+    val byDistThenId = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(1, DoubleType, nullable = true), Ascending),
+      SortOrder(BoundReference(0, idF.dataType, idF.nullable), Ascending)))
+    val toRow = CatalystTypeConverters.createToScalaConverter(out)
+    val rows = scored.sorted(byDistThenId).take(k).map(toRow(_).asInstanceOf[Row])
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out)
   }
 
   /** Probe the `nprobes` cells nearest to the query vector (L2). */
@@ -345,38 +411,18 @@ object VectorIndex extends QueryModule {
     pqAdcTopK(encoded, pqLut(qv, flat, subDim), k = 10, excludeVecId = QueryVecId)
   }
 
-  /** Shared candidate→exact-refine tail for the quantized searches: keep
-    * the k×refine best APPROXIMATE scores, re-rank them with the exact
-    * codegen'd L2, keep k. Null approximate scores (a malformed row —
-    * ragged dims or a null element nulls the encode, and the ADC of null
-    * codes) are FILTERED, not sorted: Spark ASC places NULLS FIRST, so an
-    * unfiltered null would evict true neighbors from the candidate set and
-    * surface in the answer. The exact re-rank runs over k×refine rows
-    * only — driver-bounded, never a data scan. */
-  private def refineExact(s: SparkSession, scored: DataFrame, qv: Array[Double],
-                          k: Int, refineFactor: Int): DataFrame = {
-    import s.implicits._
-    val qvDf = Seq(Tuple1(qv.map(_.toFloat))).toDF("qv")
-    scored.filter(col("adc_dist").isNotNull)
-      .orderBy(col("adc_dist").asc, col("vec_id").asc)
-      .limit(k * refineFactor)
-      .crossJoin(broadcast(qvDf))
-      .select(col("vec_id"), round(vec_l2(col("embedding"), col("qv")), 6).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(k)
-  }
-
   /** PQ search with refine: fetch k×refineFactor ADC candidates, re-rank
-    * them with the exact codegen'd L2, keep k (reference:
+    * them with the exact L2 on the driver ([[refineOnDriver]]), keep k (reference:
     * LanceVectorSearch.java:159-161 refine-factor). */
   def ivfPqRefine(s: SparkSession, dir: String, k: Int, refineFactor: Int): DataFrame = {
     val (encoded, flat, subDim) = buildPq(s, dir)
     val qv = embeddingOf(s, dir, QueryVecId)
     val lut = pqLut(qv, flat, subDim)
-    refineExact(s, encoded.filter(col("vec_id") =!= QueryVecId)
+    val scored = encoded.filter(col("vec_id") =!= QueryVecId)
       .select(col("vec_id"), col("embedding"),
-        graft.functions.pq_adc(col("codes"), lut, M, Codes).as("adc_dist")),
-      qv, k, refineFactor)
+        graft.functions.pq_adc(col("codes"), lut, M, Codes).as("adc_dist"))
+    refineOnDriver(s, rankTop(scored, "adc_dist", asc = true, k * refineFactor, "vec_id"),
+      qv, k, "vec_id", "embedding")
   }
 
   // ---- IVF_SQ8 (scalar quantization) --------------------------------------
@@ -416,7 +462,7 @@ object VectorIndex extends QueryModule {
     (encoded, mins, scales)
   }
 
-  /** SQ ADC candidates + exact re-rank via [[refineExact]]. At refine = 4
+  /** SQ ADC candidates + exact re-rank via [[refineOnDriver]]. At refine = 4
     * the 8-bit codes' per-coordinate error (≤ scale/2) keeps the true
     * top-k inside the candidate set, so the key reproduces exact KNN and
     * carries the FULL oracle. Like knn_join_pq's generous-refine gate this
@@ -428,10 +474,11 @@ object VectorIndex extends QueryModule {
                     scales: Array[Double], qv: Array[Double], k: Int,
                     refineFactor: Int, excludeVecId: Long): DataFrame = {
     val qm = Array.tabulate(qv.length)(d => qv(d) - mins(d))
-    refineExact(s, encoded.filter(col("vec_id") =!= excludeVecId)
+    val scored = encoded.filter(col("vec_id") =!= excludeVecId)
       .select(col("vec_id"), col("embedding"),
-        graft.functions.sq_adc(col("scodes"), qm, scales).as("adc_dist")),
-      qv, k, refineFactor)
+        graft.functions.sq_adc(col("scodes"), qm, scales).as("adc_dist"))
+    refineOnDriver(s, rankTop(scored, "adc_dist", asc = true, k * refineFactor, "vec_id"),
+      qv, k, "vec_id", "embedding")
   }
 
   private def ivfSqSearch(s: SparkSession, dir: String): DataFrame = {

@@ -85,11 +85,12 @@ class LanceDataSource extends TableProvider with DataSourceRegister
     Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("lance: 'path' option required"))
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val root = rootOf(options)
-    val conf = Shim.hadoopConf(SparkSession.active, options.asScala.toMap)
-    ManifestIO.loadLatest(root, conf).map(_.schema).getOrElse(new StructType())
-  }
+  /** The schema of the manifest the read resolves: a versionAsOf /
+    * timestampAsOf pin reads that version's schema (a pinned read lists no
+    * `_versions`), else the latest. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new LanceTable(rootOf(options), options.asScala.toMap).manifest
+      .map(_.schema).getOrElse(new StructType())
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {

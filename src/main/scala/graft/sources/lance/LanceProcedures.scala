@@ -160,11 +160,16 @@ object LanceProcedures {
     * }}}
     *
     * A table carrying a persisted index sidecar (`_index/meta.json`)
-    * searches through [[graft.operators.IndexBuild.search]] (probe-pruned
-    * fragment scan, ADC/refine for PQ); a plain table falls back to
-    * brute-force exact KNN (codegen'd distance + TakeOrderedAndProject —
+    * searches through [[graft.operators.IndexBuild.search]]: an eager,
+    * probe-pruned fragment scan run as one Spark job with no shuffle, whose
+    * driver merges O(tasks·k) rows, or O(tasks·k·r) refine candidates on a
+    * PQ/SQ index that it then re-ranks exactly. A plain table falls back
+    * to brute-force exact KNN (codegen'd distance + TakeOrderedAndProject —
     * a per-partition k-heap with a k-sized driver merge, never a global
     * sort). Both return k (id, dist) rows — driver-side result size is k.
+    * Each call resolves the table's manifest once: every read pins to that
+    * version and the index handle comes from that manifest's sidecar
+    * pointer.
     *
     * r20 serving modes: `mode => 'mmr'` re-ranks a `candidates => N`
     * pool with Maximal Marginal Relevance (returns (id, rk, cos,
@@ -208,15 +213,25 @@ object LanceProcedures {
         Some(in.getUTF8String(9).toString.trim).filter(_.nonEmpty)
           .map(org.apache.spark.sql.functions.expr)
       val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
-      val hasIndex = graft.operators.IndexBuild.exists(spark, root)
       import org.apache.spark.sql.functions._
       val mode = in.getUTF8String(11).toString.toLowerCase(java.util.Locale.ROOT)
-      // pin EVERY read of this call to one manifest version: the ranked
-      // search and the matched-row lookup below are two separate reads,
-      // and a concurrent commit between them would return columns from a
-      // different snapshot than the distances
-      val pinned: Map[String, String] = ManifestIO.loadLatest(root, conf)
-        .map(m => Map("versionAsOf" -> m.version.toString)).getOrElse(Map.empty)
+      // resolve the manifest ONCE and pin EVERY read of this call to it: the
+      // ranked search and the matched-row lookup below are two separate
+      // reads, and a concurrent commit between them would return columns
+      // from a different snapshot than the distances. The index handle is
+      // the sidecar that same manifest points at, so a rebuild committed
+      // mid-call cannot pair this version's codes with newer codebooks.
+      val latest = ManifestIO.loadLatest(root, conf)
+      val pinned: Map[String, String] =
+        latest.map(m => Map("versionAsOf" -> m.version.toString)).getOrElse(Map.empty)
+      val index = graft.operators.IndexBuild.loadAt(spark, root, latest)
+      val hasIndex = index.isDefined
+      lazy val idx = {
+        val i = index.get
+        require(i.opts.column == column,
+          s"lance knn: index at $root covers column ${i.opts.column}, not $column")
+        i
+      }
       // mode => 'mmr' | 'maxsim' (r19 verdict item 1): the r19 serving
       // machinery, SQL-reachable — same entry points as the gated keys
       // (mmrCandidatesForVecs -> probedSlice -> mmrServe;
@@ -237,13 +252,7 @@ object LanceProcedures {
           f.select(col(idCol).cast("long").as(dId), col(column).as("embedding"))
       }
       def probedCfg(): Option[(Array[Array[Double]], Int)] =
-        if (!hasIndex) None
-        else {
-          val idx = graft.operators.IndexBuild.load(spark, root)
-          require(idx.opts.column == column,
-            s"lance knn: index at $root covers column ${idx.opts.column}, not $column")
-          Some((idx.centroids.map(_.toArray), nprobes))
-        }
+        if (!hasIndex) None else Some((idx.centroids.map(_.toArray), nprobes))
       val df = mode match {
         case "mmr" =>
           require(metric == "cosine",
@@ -280,9 +289,6 @@ object LanceProcedures {
         case "topk" =>
         require(qv.nonEmpty, "lance knn: query => array(...) is required")
         if (hasIndex) {
-          val idx = graft.operators.IndexBuild.load(spark, root)
-          require(idx.opts.column == column,
-            s"lance knn: index at $root covers column ${idx.opts.column}, not $column")
           val opts = pinned ++
             Map("vector.k" -> k.toString, "vector.metric" -> metric,
               "vector.nprobes" -> nprobes.toString, "vector.ef" -> ef.toString) ++

@@ -154,6 +154,38 @@ class PropertySpec extends AnyFunSuite {
       "non-LanceScan version= must survive normalization")
   }
 
+  test("plan-fingerprint normalizer v5: scan metadata cut by Spark and lambda counters are stable") {
+    // Spark cuts each scan metadata value to 100 characters while the
+    // expression ids are still in it, so wider ids move the cut (the q6
+    // DataFilters line that flipped between two reps in one JVM)
+    def scan(first: String, id: Int => String): String = {
+      val full = s"[isnotnull($first${id(1)}), isnotnull(l_discount${id(2)}), " +
+        s"isnotnull(l_quantity${id(3)}), ($first${id(1)} >= 1996-01-01 00:00:00)]"
+      val cut = if (full.length > 100) full.take(97) + "..." else full
+      s"+- FileScan parquet [l_quantity${id(3)},$first${id(1)}] Batched: true, " +
+        s"DataFilters: $cut, Format: Parquet, PartitionFilters: [], PushedFilters: " +
+        "[IsNotNull(l_shipdate), IsNotNull(l_discount), IsNotNull(l_quantity), " +
+        "GreaterThanOrEqual(l_shipda..., ReadSchema: struct<l_quantity:double>"
+    }
+    val narrow = scan("l_shipdate", i => s"#$i")
+    val wide = scan("l_shipdate", i => s"#${i}0000")
+    assert(narrow.replaceAll("#\\d+", "#") !== wide.replaceAll("#\\d+", "#"),
+      "control: the id strip alone leaves the cut unstable")
+    assert(Bench.normalizePlan(narrow) === Bench.normalizePlan(wide))
+    // the id-free PushedFilters cut is stable already and survives as is
+    assert(Bench.normalizePlan(narrow).contains("GreaterThanOrEqual(l_shipda..., ReadSchema"))
+    // the kept prefix still names the first filtered column
+    assert(Bench.normalizePlan(scan("l_orderdate", i => s"#$i")) !== Bench.normalizePlan(narrow))
+    // Scala-API lambda variables are named from a JVM-global counter
+    val l1 = "filter(w#3, lambdafunction(lambda x_15#7 IN (the,a), lambda x_15#7, false))"
+    val l2 = "filter(w#9, lambdafunction(lambda x_30#8 IN (the,a), lambda x_30#8, false))"
+    assert(Bench.normalizePlan(l1) === Bench.normalizePlan(l2))
+    // per-run catalog table names carry a random suffix
+    val t1 = "BatchScan graft_lance.db.deco_3cf445a232704b8aa9ee773a4b4dd254[doc_id#1L]"
+    val t2 = "BatchScan graft_lance.db.deco_025d0f6b20ae4a1ca5abbe8cf01c3152[doc_id#9L]"
+    assert(Bench.normalizePlan(t1) === Bench.normalizePlan(t2))
+  }
+
   test("text kernels never throw on arbitrary UTF-16 (including lone surrogates)") {
     // a crawled corpus contains malformed encodings; the gram kernels
     // slice by CODE POINT (the r15 langid fix) and must survive any
