@@ -134,6 +134,11 @@ object Harness {
     def mark: Int = stages.lastOption.fold(-1)(_.id)
     def stagesAfter(mark: Int): Seq[Stage] = stages.filter(_.id > mark)
 
+    /** The highest job id seen so far; `jobsAfter(mark)` are the jobs
+      * started since (job ids only grow). */
+    def jobMark: Int = jobs.map(_.id).maxOption.getOrElse(-1)
+    def jobsAfter(mark: Int): Seq[Job] = jobs.filter(_.id > mark)
+
     /** Bench's streaming denominators: batches, input rows, sink rows
       * (sinks that report a count), zero entries dropped. */
     def streamCounts: Seq[(String, Long)] = {

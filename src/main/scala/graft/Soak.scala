@@ -137,11 +137,13 @@ object Soak {
         val before = mvSum
         val fragsBefore = spark.read.format("lance").load(mvT)
           .select(col("_file")).distinct().count()
+        val jobMark = cap.jobMark
         val tC = Harness.secs(sources.lance.LanceMaintenance.compact(spark, mvT,
           smallerThanRows = 100000, targetRows = 1 << 20))
+        val compactJobs = cap.jobsAfter(jobMark).size
         val fragsAfter = spark.read.format("lance").load(mvT)
           .select(col("_file")).distinct().count()
-        println(f"[soak]   mvw compact: $tC%.2f s, " +
+        println(f"[soak]   mvw compact: $tC%.2f s in $compactJobs Spark job(s), " +
           s"fragments $fragsBefore -> $fragsAfter, answer unchanged = ${mvSum == before}")
         require(mvSum == before, "compaction moved the windowed-MV answer")
       }

@@ -105,14 +105,7 @@ object StreamingOps extends QueryModule {
         val aKey = "spark.sql.adaptive.enabled"
         val prevP = s.conf.get(pKey)
         val prevA = s.conf.get(aKey)
-        val hconf = s.sparkContext.hadoopConfiguration
-        val bytes = dirs.map { d =>
-          val p = new org.apache.hadoop.fs.Path(d)
-          val fs = p.getFileSystem(hconf)
-          if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-        }.sum
-        val target = 32L << 20
-        val n = math.max(1L, math.min(prevP.toLong, (bytes + target - 1) / target))
+        val n = sizedPartitions(s.sparkContext.hadoopConfiguration, dirs, prevP.toInt)
         val shrank = n < prevP.toLong
         s.conf.set(pKey, n.toString)
         if (shrank) s.conf.set(aKey, "false")
@@ -121,6 +114,33 @@ object StreamingOps extends QueryModule {
           if (shrank) s.conf.set(aKey, prevA)
         }
     }
+  }
+
+  /** [[SizedFrom]]'s partition count: staged bytes under `dirs` / 32 MB,
+    * clamped to [1, `sessionParts`]. */
+  private[graft] def sizedPartitions(hconf: org.apache.hadoop.conf.Configuration,
+                                     dirs: Seq[String], sessionParts: Int): Int = {
+    val target = 32L << 20
+    val bytes = stagedBytes(hconf, dirs, sessionParts * target)
+    math.max(1L, math.min(sessionParts.toLong, (bytes + target - 1) / target)).toInt
+  }
+
+  /** The file bytes under `dirs`, listed until they reach `cap`: past the
+    * cap the clamp decides the count, so a drain over a large staging
+    * tree lists only as many files as the cap needs, not the whole tree. */
+  private[graft] def stagedBytes(hconf: org.apache.hadoop.conf.Configuration,
+                                 dirs: Seq[String], cap: Long): Long = {
+    var bytes = 0L
+    val it = dirs.iterator
+    while (bytes < cap && it.hasNext) {
+      val p = new org.apache.hadoop.fs.Path(it.next())
+      val fs = p.getFileSystem(hconf)
+      if (fs.exists(p)) {
+        val files = fs.listFiles(p, true)
+        while (bytes < cap && files.hasNext) bytes += files.next().getLen
+      }
+    }
+    bytes
   }
 
   /** The max batch id recorded in a lance state table under `col` —
@@ -705,7 +725,7 @@ object StreamingOps extends QueryModule {
       // ∝ stream history. Do NOT reach for it on shared tables; there
       // the graceful `CALL system.vacuum` posture applies.
       if (compactEvery > 0 && bid > 0 && bid % compactEvery == 0)
-        Seq(dst, keysT, stateT).foreach { t =>
+        labeled(s, "graft:ndd:compact")(Seq(dst, keysT, stateT).foreach { t =>
           if (tableExists(s, t)) {
             graft.sources.lance.LanceMaintenance.compact(
               s, t, CompactSmallerThan, CompactTarget)
@@ -719,7 +739,7 @@ object StreamingOps extends QueryModule {
                 s, t, retainVersions = 1, graceMs = 0L)
             }
           }
-        }
+        })
     }
     ()
   }

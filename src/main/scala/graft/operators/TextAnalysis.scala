@@ -898,16 +898,21 @@ object TextAnalysis extends QueryModule {
     // explode → broadcast-join → (doc_id)-shuffle pipeline it replaced
     // (LmScoreSpec pins the equivalence; the gate hash still matches the
     // unchanged SQL oracle), but with zero scoring shuffles.
-    val tbl = probs.collect()
-    val grams = tbl.map(_.getString(0))
-    val nanos = tbl.map(_.getLong(1))
-    d.select(col("doc_id"),
-        graft.functions.lm_doc_score(col("text"), grams, nanos).as("st"))
+    d.select(col("doc_id"), lmDocScore(col("text"), probs).as("st"))
       .select(col("doc_id"), col("st").getItem(0).as("n_bigrams"),
         round(col("st").getItem(1).cast("double") / col("st").getItem(0) / 1e9, 6)
           .as("fluency"))
       .filter(col("n_bigrams") > 0) // inner-join semantics: unscored docs drop
       .orderBy("doc_id")
+  }
+
+  /** `lm_doc_score(text)` over the collected (gram, p_nano) table `probs`,
+    * in gram order: the collect returns rows in arrival order, and a table
+    * in that order would make the expression (and the plan fingerprint)
+    * differ from run to run while scoring the same. */
+  private[graft] def lmDocScore(text: Column, probs: DataFrame): Column = {
+    val tbl = probs.collect().sortBy(_.getString(0))
+    graft.functions.lm_doc_score(text, tbl.map(_.getString(0)), tbl.map(_.getLong(1)))
   }
 
   // ---- corpus_stats ------------------------------------------------------

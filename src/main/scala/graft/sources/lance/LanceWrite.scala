@@ -3,6 +3,8 @@ package graft.sources.lance
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.spark.Partition
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -749,14 +751,25 @@ object LanceBatchSave {
                                     maxRowsPerFile: Option[String],
                                     clusterBy: Seq[String] = Nil,
                                     sortedBy: Seq[String] = Nil,
-                                    bucketed: Boolean = false): Seq[FragmentMeta] = {
-    val schema = df.schema
+                                    bucketed: Boolean = false): Seq[FragmentMeta] =
+    stagePartitions(spark, Shim.toRdd(df), df.schema, root, maxRowsPerFile, clusterBy,
+      sortedBy, bucketed).toSeq.flatten
+
+  /** [[stageFragments]] over rows of `schema` in one Spark job; element i
+    * holds the fragments partition i wrote (empty for an empty partition),
+    * so a caller can tag each partition's output. */
+  private[lance] def stagePartitions(spark: SparkSession, rows: RDD[InternalRow],
+                                     schema: StructType, root: String,
+                                     maxRowsPerFile: Option[String],
+                                     clusterBy: Seq[String] = Nil,
+                                     sortedBy: Seq[String] = Nil,
+                                     bucketed: Boolean = false): Array[Seq[FragmentMeta]] = {
     val clusterIdx = clusterBy.map(schema.fieldIndex).toArray
     val (factory, conf) = Shim.parquetWriterFactory(spark, schema, Map.empty)
     val maxRows = maxRowsPerFile.map(_.toLong).getOrElse(Long.MaxValue)
     ManifestIO.fs(root, conf.value).mkdirs(new Path(root, ManifestIO.DataDir))
-    Shim.toRdd(df).mapPartitionsWithIndex { (pid, rows) =>
-      if (rows.isEmpty) Iterator.empty
+    rows.mapPartitionsWithIndex { (pid, rows) =>
+      if (rows.isEmpty) Iterator.single(Seq.empty[FragmentMeta])
       else {
         val w = new LanceDataWriter(root, schema, factory, conf, maxRows, pid, pid.toLong,
           clusterIdx, bucketed = bucketed, sortedBy = sortedBy)
@@ -767,7 +780,58 @@ object LanceBatchSave {
           case t: Throwable => w.abort(); throw t
         } finally w.close()
       }
-    }.collect().toSeq.flatten
+    }.collect()
+  }
+}
+
+/** The no-shuffle regrouping behind one-job compaction: partition i of
+  * the coalesced scan reads the scan partitions `groups(i)` and belongs to
+  * bucket `buckets(i)`. Serializable and small (parent indices only): it
+  * rides in the task binary of the job that stages the compacted files. */
+private[lance] final class BucketCoalescer private (val buckets: Array[Option[Int]],
+                                                    groups: Array[Array[Int]])
+    extends PartitionCoalescer with Serializable {
+  def numPartitions: Int = groups.length
+  override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] =
+    groups.map { ids =>
+      val g = new PartitionGroup()
+      ids.foreach(i => g.partitions += parent.partitions(i))
+      g
+    }
+}
+
+private[lance] object BucketCoalescer {
+  /** Key each partition of a lance scan RDD by its fragments' bucket tag
+    * ([[LanceInputPartition.bucket]]; a key-grouped partition holds one
+    * bucket's fragments, any other one fragment range) and cut each key's
+    * partitions, in scan order, into `outParts(key)` contiguous runs (never
+    * more runs than partitions) — the positional split `coalesce(n)` makes
+    * over partitions without preferred locations. Keys keep their
+    * first-seen order. */
+  def apply(scan: Array[Partition], outParts: Option[Int] => Int): BucketCoalescer = {
+    val keyed = scan.map(p => bucketOf(p) -> p.index)
+    val planned = keyed.map(_._1).distinct.flatMap { b =>
+      val ids = keyed.collect { case (k, i) if k == b => i }
+      val n = math.max(1, math.min(outParts(b), ids.length))
+      (0 until n).map { j =>
+        b -> ids.slice((j.toLong * ids.length / n).toInt, ((j + 1L) * ids.length / n).toInt)
+      }
+    }
+    new BucketCoalescer(planned.map(_._1), planned.map(_._2))
+  }
+
+  private def bucketOf(p: Partition): Option[Int] = p match {
+    case d: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
+      d.inputPartitions.map {
+        case lp: LanceInputPartition => lp.bucket
+        case other => throw new IllegalStateException(s"not a lance input partition: $other")
+      }.distinct match {
+        case Seq(b) => b
+        case bs => throw new IllegalStateException(
+          s"lance scan partition ${p.index} spans buckets ${bs.mkString(", ")}")
+      }
+    case other => throw new IllegalStateException(
+      s"not a lance scan partition: ${other.getClass.getName}")
   }
 }
 
@@ -794,7 +858,17 @@ object LanceMaintenance {
   /** Rewrite fragments smaller than `smallerThanRows` — plus any fragment
     * carrying a delete vector (folding the DV into a clean file) — into
     * consolidated fragments of up to `targetRows` rows; commits one new
-    * version. Returns the new manifest (or the current one if no-op). */
+    * version. Returns the new manifest (or the current one if no-op).
+    *
+    * One scan and one Spark job per table, whatever the number of bucket
+    * groups: a single [[maskedRead]] over every rewritten fragment, its
+    * partitions regrouped by bucket without a shuffle ([[BucketCoalescer]];
+    * a group of L live rows gets ceil(L / targetRows) partitions), each
+    * partition re-sorted by the table's declared order with Spark's
+    * spilling sorter, and every group staged by one [[LanceBatchSave.stagePartitions]]
+    * job whose output fragments carry their group's bucket tag. Bucketed
+    * tables merge within buckets only, so the co-partitioned join layout
+    * survives. */
   def compact(spark: SparkSession, root: String,
               smallerThanRows: Long, targetRows: Long): LanceManifest = {
     val conf = Shim.hadoopConf(spark, Map.empty)
@@ -805,7 +879,7 @@ object LanceMaintenance {
     // bucketed tables compact WITHIN a bucket: merging across buckets would
     // forfeit the co-partitioned (shuffle-free) join layout. Unbucketed
     // fragments all land in the one None group — the original behavior.
-    val groups = candidates.groupBy(_.bucket).toSeq.filter { case (_, frs) =>
+    val groups = candidates.groupBy(_.bucket).filter { case (_, frs) =>
       frs.size > 1 || frs.exists(_.deletes.isDefined)
     }
     if (groups.isEmpty) return m
@@ -821,19 +895,18 @@ object LanceMaintenance {
         csv("write.sort-by", "sortBy")).distinct
         .filter(m.schema.fieldNames.contains)
     }
-    val (small, newFrags) = groups.map { case (b, frs) =>
-      // one scan partition per fragment comes back from the connector
-      // read — coalesce (no shuffle) down to the consolidated fragment
-      // count so the staged write actually merges files
-      val parts = math.max(1,
-        math.ceil(frs.map(_.liveRows).sum.toDouble / targetRows).toInt)
-      val merged = maskedRead(spark, root, m.version, m.schema, frs).coalesce(parts)
-      val df = if (orderCols.isEmpty) merged
-               else merged.sortWithinPartitions(
-                 orderCols.map(org.apache.spark.sql.functions.col): _*)
-      (frs, LanceBatchSave.stageFragments(spark, df, root,
-        Some(targetRows.toString), sortedBy = orderCols).map(_.copy(bucket = b)))
-    }.unzip match { case (s, n) => (s.flatten, n.flatten) }
+    val small = candidates.filter(fr => groups.contains(fr.bucket))
+    val read = maskedRead(spark, root, m.version, m.schema, small)
+    val scan = Shim.toRdd(read)
+    val coalescer = BucketCoalescer(scan.partitions, b =>
+      math.ceil(groups(b).map(_.liveRows).sum.toDouble / targetRows).toInt)
+    val merged = scan.coalesce(coalescer.numPartitions, shuffle = false, Some(coalescer))
+    val sorted = if (orderCols.isEmpty) merged
+                 else merged.mapPartitions(Shim.sortWithinPartition(read.schema, orderCols))
+    val newFrags = LanceBatchSave.stagePartitions(spark, sorted, read.schema, root,
+        Some(targetRows.toString), sortedBy = orderCols)
+      .zip(coalescer.buckets).toSeq
+      .flatMap { case (frs, b) => frs.map(_.copy(bucket = b)) }
     val smallBy = small.map(f => f.path -> f).toMap
     ManifestIO.commit(root, conf) { latest =>
       val cur = latest.getOrElse(

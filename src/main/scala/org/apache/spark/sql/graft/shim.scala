@@ -5,8 +5,10 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LocalTableScanExec, SortExec}
 import org.apache.spark.sql.execution.datasources.{OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
@@ -76,6 +78,26 @@ object Shim {
 
   def serializableConf(conf: Configuration): SerializableConfiguration =
     new SerializableConfiguration(conf)
+
+  /** The sorter `SortExec` runs (`UnsafeExternalRowSorter`: prefix/radix
+    * sort over task-managed memory pages, spilling to disk past the task's
+    * grant) as a per-partition transform of rows shaped like `schema`,
+    * ascending with nulls first on `cols` — the order
+    * `sortWithinPartitions` gives. Built on the driver; the returned
+    * function is serializable and runs in tasks. */
+  def sortWithinPartition(schema: StructType,
+                          cols: Seq[String]): Iterator[InternalRow] => Iterator[InternalRow] = {
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val sort = SortExec(cols.map(c => SortOrder(attrs(schema.fieldIndex(c)), Ascending)),
+      global = false, LocalTableScanExec(attrs, Nil, None))
+    rows => if (!rows.hasNext) rows else {
+      val toUnsafe = UnsafeProjection.create(schema)
+      sort.createSorter().sort(rows.map {
+        case u: UnsafeRow => u
+        case r => toUnsafe(r)
+      })
+    }
+  }
 
   /** Driver-side construction of Spark's battle-tested parquet reader
     * closure (vectorization, nested schema, row-group filter pushdown,

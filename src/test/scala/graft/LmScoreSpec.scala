@@ -39,6 +39,22 @@ class LmScoreSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), s"scoring must not shuffle:\n$plan")
   }
 
+  test("lm_doc_score's table is in gram order: builds from permuted input are one expression") {
+    import spark.implicits._
+    val probs = Seq(("ab", 3L), ("ba", 5L), ("aa", 7L), ("bb", 11L), ("b😀", 13L))
+      .toDF("g", "p_nano")
+    val t = col("t")
+    val asc = graft.operators.TextAnalysis.lmDocScore(t, probs.orderBy(col("g").asc))
+    val desc = graft.operators.TextAnalysis.lmDocScore(t, probs.orderBy(col("g").desc))
+    val (ea, ed) = (org.apache.spark.sql.graft.Shim.expression(asc),
+      org.apache.spark.sql.graft.Shim.expression(desc))
+    assert(ea === ed)
+    assert(ea.canonicalized === ed.canonicalized)
+    assert(ea.toString === ed.toString)
+    val docs = Seq("abba", "bab😀", "x").toDF("t")
+    assert(docs.select(asc).collect().toSeq === docs.select(desc).collect().toSeq)
+  }
+
   test("char_bigrams equals the transform+substr phrasing on the corpus") {
     val d = Tables.t(spark, sf, "documents").filter(length(col("text")) >= 2)
     val viaSubstr = d.select(col("doc_id"),

@@ -23,6 +23,36 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = TestSession.sf
+
+  /** (result, Spark jobs, shuffle bytes written) of the jobs `body` starts
+    * on this thread, told apart from other work by a fresh job group. */
+  protected def jobsOf[A](body: => A): (A, Int, Long) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffle = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && stages.contains(e.stageId))
+          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count", interruptOnCancel = false)
+    try {
+      val r = body
+      org.apache.spark.sql.graft.Shim.waitUntilEmpty(sc)
+      (r, jobs.get, shuffle.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 class EntrySpec extends SparkSpec {

@@ -68,6 +68,48 @@ class StreamDrainSpec extends SparkSpec {
     }
   }
 
+  /** `sizes` bytes as files under a fresh dir, nested one level, written
+    * sparse (the length is set, no blocks written). */
+  private def stagedDir(sizes: Seq[Long]): java.io.File = {
+    val dir = Files.createTempDirectory("graft-sdrain-bytes-").toFile
+    sizes.zipWithIndex.foreach { case (n, i) =>
+      val sub = new java.io.File(dir, s"part=$i")
+      sub.mkdirs()
+      val f = new java.io.RandomAccessFile(new java.io.File(sub, s"f$i.parquet"), "rw")
+      try f.setLength(n) finally f.close()
+    }
+    dir
+  }
+
+  private def contentSummaryBytes(dir: java.io.File): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir.toURI)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+  }
+
+  test("sized partitions, small dir: every byte counted, the count of a full listing") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val dir = stagedDir(Seq(1000L, 2500L, 40L))
+    val total = contentSummaryBytes(dir)
+    assert(total === 3540L)
+    assert(StreamingOps.stagedBytes(hconf, Seq(dir.toString), 4L * (32L << 20)) === total)
+    assert(StreamingOps.sizedPartitions(hconf, Seq(dir.toString), 4) === 1)
+    assert(StreamingOps.sizedPartitions(hconf, Seq(dir.toString, s"$dir-absent"), 4) === 1)
+  }
+
+  test("sized partitions, over-cap dir: the listing stops at the cap, the count is the session's") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val mb40 = 40L << 20
+    val dir = stagedDir(Seq(mb40, mb40, mb40))
+    val total = contentSummaryBytes(dir)
+    assert(total === 3 * mb40)
+    // 2 partitions x 32 MB = 64 MB: two 40 MB files reach it, the third is never listed
+    assert(StreamingOps.stagedBytes(hconf, Seq(dir.toString), 2L * (32L << 20)) === 2 * mb40)
+    assert(StreamingOps.sizedPartitions(hconf, Seq(dir.toString), 2) === 2)
+    // the uncapped count over the full tree clamps to the same value
+    assert(math.min(2L, (total + (32L << 20) - 1) / (32L << 20)) === 2L)
+    assert(StreamingOps.sizedPartitions(hconf, Seq(dir.toString), 8) === 4)
+  }
+
   test("visibility: listeners on the caller's spark.streams see sized and session drains") {
     val progress = new AtomicInteger()
     val listener = new StreamingQueryListener {

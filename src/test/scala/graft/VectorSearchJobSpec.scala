@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{IndexBuild, VectorIndex}
 import graft.sources.lance.ManifestIO
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -62,36 +61,6 @@ class VectorSearchJobSpec extends SparkSpec {
     }.toMap
 
   private lazy val qv = VectorIndex.embeddingOf(spark, sf, vecId = 7L)
-
-  /** (result, Spark jobs, shuffle bytes written) of the jobs `body` starts
-    * on this thread, told apart from other work by a fresh job group. */
-  private def jobsOf[A](body: => A): (A, Int, Long) = {
-    val sc = spark.sparkContext
-    val group = s"vsj-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val shuffle = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet()
-          e.stageIds.foreach(stages.add)
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null && stages.contains(e.stageId))
-          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "vector search", interruptOnCancel = false)
-    try {
-      val r = body
-      org.apache.spark.sql.graft.Shim.waitUntilEmpty(sc)
-      (r, jobs.get, shuffle.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** The former plan of `IndexBuild.search`: nulls filtered before ranking;
     * the flat arm cross-joins a broadcast one-row query frame; the refine
