@@ -220,15 +220,31 @@ object LanceOps extends QueryModule {
     w
   }
 
-  private def sqlCatalog(s: SparkSession, dir: String): DataFrame = {
+  /** Registers the `graft_lance` catalog on `s` (the same two values on
+    * every call, so the session-cached plugin stays valid), ensures its
+    * `db` namespace, and returns one fresh table name per prefix, all
+    * `<prefix>_<32 hex>` with one shared suffix. Each key keeps its own
+    * prefix: Bench's plan normalizer strips only the hex suffix. */
+  private def catalogTables(s: SparkSession, prefixes: String*): Seq[String] = {
     s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"t_${UUID.randomUUID().toString.replace("-", "")}"
-    val view = s"src_$tbl"
-    t(s, dir, "nation").createOrReplaceTempView(view)
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM $view") // CTAS → V2 write
-    s.sql(s"INSERT INTO graft_lance.db.$tbl SELECT * FROM $view") // append → V2 write
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
+    val sfx = UUID.randomUUID().toString.replace("-", "")
+    prefixes.map(p => s"${p}_$sfx")
+  }
+
+  /** Copies `df` into the new catalog table `graft_lance.db.<tbl>` with SQL
+    * `CREATE TABLE … AS SELECT` (the V2 CTAS write the SQL keys gate),
+    * reading the temp view `src_<tbl>`, which stays registered for reuse. */
+  private def ctas(tbl: String, df: DataFrame): Unit = {
+    df.createOrReplaceTempView(s"src_$tbl")
+    df.sparkSession.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM src_$tbl")
+  }
+
+  private def sqlCatalog(s: SparkSession, dir: String): DataFrame = {
+    val Seq(tbl) = catalogTables(s, "t")
+    ctas(tbl, t(s, dir, "nation"))
+    s.sql(s"INSERT INTO graft_lance.db.$tbl SELECT * FROM src_$tbl") // append → V2 write
     s.sql(
       s"""SELECT count(*) AS n, count(DISTINCT n_nationkey) AS n_keys,
          |  min(n_name) AS first_name, max(n_name) AS last_name
@@ -238,13 +254,8 @@ object LanceOps extends QueryModule {
   /** DELETE FROM through the catalog: row-level predicate delete, then the
     * survivors must equal the oracle's complement filter on the source. */
   private def deleteOp(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"t_${UUID.randomUUID().toString.replace("-", "")}"
-    val view = s"src_$tbl"
-    t(s, dir, "orders").createOrReplaceTempView(view)
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM $view")
+    val Seq(tbl) = catalogTables(s, "t")
+    ctas(tbl, t(s, dir, "orders"))
     s.sql(s"DELETE FROM graft_lance.db.$tbl " +
       "WHERE o_orderstatus = 'F' OR o_custkey < 100")
     s.sql(
@@ -258,13 +269,8 @@ object LanceOps extends QueryModule {
     * versions), verified against the oracle's CASE-expression equivalent
     * on the source. */
   private def updateOp(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"t_${UUID.randomUUID().toString.replace("-", "")}"
-    val view = s"src_$tbl"
-    t(s, dir, "orders").createOrReplaceTempView(view)
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM $view")
+    val Seq(tbl) = catalogTables(s, "t")
+    ctas(tbl, t(s, dir, "orders"))
     s.sql(s"UPDATE graft_lance.db.$tbl SET o_custkey = o_custkey + 1000000 " +
       "WHERE o_orderstatus = 'F'")
     s.sql(
@@ -277,17 +283,12 @@ object LanceOps extends QueryModule {
     * deletes the matching rows (DV sidecars / fragment drops) and appends
     * the replacement — verified against the oracle's complement + union. */
   private def replaceOp(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"t_${UUID.randomUUID().toString.replace("-", "")}"
-    val view = s"src_$tbl"
-    t(s, dir, "orders").createOrReplaceTempView(view)
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM $view")
+    val Seq(tbl) = catalogTables(s, "t")
+    ctas(tbl, t(s, dir, "orders"))
     // replace the 'F' segment with a recomputed summary slice of itself
     s.sql(s"INSERT INTO graft_lance.db.$tbl REPLACE WHERE o_orderstatus = 'F' " +
       s"SELECT o_orderkey, o_custkey + 5000000, o_orderstatus, o_totalprice, " +
-      s"o_orderdate, o_orderpriority FROM $view WHERE o_orderstatus = 'F'")
+      s"o_orderdate, o_orderpriority FROM src_$tbl WHERE o_orderstatus = 'F'")
     s.sql(
       s"""SELECT count(*) AS n, CAST(sum(o_custkey) AS BIGINT) AS sum_cust,
          |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
@@ -300,12 +301,9 @@ object LanceOps extends QueryModule {
     * the key, so the grouped aggregate answers from per-fragment stats
     * (LanceSpec asserts the LanceStatsScan plan; here the values gate). */
   private def clusteredWrite(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"t_${UUID.randomUUID().toString.replace("-", "")}"
+    val Seq(tbl) = catalogTables(s, "t")
     val view = s"src_$tbl"
     t(s, dir, "orders").createOrReplaceTempView(view)
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
     s.sql(s"CREATE TABLE graft_lance.db.$tbl " +
       "(o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING) " +
       "TBLPROPERTIES('write.cluster-by'='o_orderstatus', 'write.sort-by'='o_orderkey')")
@@ -323,12 +321,9 @@ object LanceOps extends QueryModule {
     * final table; the oracle reconstructs the same end state
     * declaratively. */
   private def mergeOp(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"m_${UUID.randomUUID().toString.replace("-", "")}"
+    val Seq(tbl) = catalogTables(s, "m")
     val view = s"src_$tbl"
     t(s, dir, "orders").createOrReplaceTempView(view)
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
     s.sql(s"CREATE TABLE graft_lance.db.$tbl AS " +
       s"SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice " +
       s"FROM $view WHERE o_orderkey % 3 <> 0")
@@ -370,13 +365,8 @@ object LanceOps extends QueryModule {
     * and the DuckDB oracle reproduces it symbol-for-symbol; the indexed
     * path is spec-covered against IndexBuild.search. */
   private def knnSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"knn_${UUID.randomUUID().toString.replace("-", "")}"
-    val view = s"src_$tbl"
-    t(s, dir, "embeddings").createOrReplaceTempView(view)
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM $view")
+    val Seq(tbl) = catalogTables(s, "knn")
+    ctas(tbl, t(s, dir, "embeddings"))
     // the query vector ships as an array literal — Double.toString
     // round-trips exactly, so the CALL sees bit-identical values
     val qv = t(s, dir, "embeddings").filter(col("vec_id") === 0L)
@@ -393,14 +383,10 @@ object LanceOps extends QueryModule {
     * ad-hoc cells and full probes make the join exact — the same DuckDB
     * exact-KNN oracle as the Scala-API knn_join key. */
   private def knnJoinSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tq, tc) = (s"kjq_$sfx", s"kjc_$sfx")
-    t(s, dir, "embeddings").createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
-    s.sql(s"CREATE TABLE graft_lance.db.$tq AS SELECT * FROM src_$tc WHERE vec_id < 20")
+    val Seq(tq, tc) = catalogTables(s, "kjq", "kjc")
+    val e = t(s, dir, "embeddings")
+    ctas(tc, e)
+    ctas(tq, e.filter(col("vec_id") < 20))
     s.sql(s"CALL graft_lance.system.knn_join(queries => 'db.$tq', " +
         s"corpus => 'db.$tc', k => 5, cells => 8, nprobes => 8, " +
         "exclude_self => true)")
@@ -414,17 +400,9 @@ object LanceOps extends QueryModule {
     * the oracle reproduces them with string shingles — the inverse of
     * text_contamination's flag set union'd with the ratio rule's. */
   private def decontaminateSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, tb, to) = (s"decc_$sfx", s"decb_$sfx", s"deco_$sfx")
-    t(s, dir, "documents").filter(col("doc_id") % 20 =!= 0)
-      .createOrReplaceTempView(s"src_$tc")
-    t(s, dir, "documents").filter(col("doc_id") % 20 === 0)
-      .createOrReplaceTempView(s"src_$tb")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
-    s.sql(s"CREATE TABLE graft_lance.db.$tb AS SELECT * FROM src_$tb")
+    val Seq(tc, tb, to) = catalogTables(s, "decc", "decb", "deco")
+    ctas(tc, t(s, dir, "documents").filter(col("doc_id") % 20 =!= 0))
+    ctas(tb, t(s, dir, "documents").filter(col("doc_id") % 20 === 0))
     s.sql(s"CALL graft_lance.system.decontaminate(corpus => 'db.$tc', " +
       s"bench => 'db.$tb', min_overlap => 3, min_containment => 0.5, " +
       s"output_table => 'db.$to')")
@@ -441,13 +419,8 @@ object LanceOps extends QueryModule {
     * closure → anti-join) — the same gate shape as
     * dedup_semantic_trained, entered through SQL. */
   private def semdedupSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, to) = (s"semc_$sfx", s"semo_$sfx")
-    t(s, dir, "embeddings").createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc, to) = catalogTables(s, "semc", "semo")
+    ctas(tc, t(s, dir, "embeddings"))
     graft.operators.OracleArming.arming("lance_semdedup") {
       s.sql(s"CALL graft_lance.system.semdedup(table => 'db.$tc', " +
         s"output_table => 'db.$to')")
@@ -468,13 +441,9 @@ object LanceOps extends QueryModule {
     * roundtrip); the gated key's self-exclusion rides the CALL's `filter`
     * parameter. */
   private def knnMmrSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"mmr_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "embeddings").createOrReplaceTempView(s"src_$tbl")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM src_$tbl")
+    val Seq(tbl) = catalogTables(s, "mmr")
     val e = t(s, dir, "embeddings")
+    ctas(tbl, e)
     val excl = VectorSearch.MmrQueries.map(_._2)
     VectorSearch.MmrQueries.map { case (q, vid) =>
       val qv = e.filter(col("vec_id") === vid)
@@ -495,13 +464,9 @@ object LanceOps extends QueryModule {
     * carries each query's token SET as query_toks => array(array(...)),
     * and knn_maxsim's DuckDB oracle gates the SQL route end to end. */
   private def knnMaxSimSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tbl = s"mxs_${UUID.randomUUID().toString.replace("-", "")}"
+    val Seq(tbl) = catalogTables(s, "mxs")
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    VectorSearch.maxSimDocTokens(e, e.count()).createOrReplaceTempView(s"src_$tbl")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tbl AS SELECT * FROM src_$tbl")
+    ctas(tbl, VectorSearch.maxSimDocTokens(e, e.count()))
     VectorSearch.MaxSimQueries.map { q =>
       val tokLits = (0 until 3).map { j =>
         val v = e.filter(col("vec_id") === 100 * q + j)
@@ -525,17 +490,10 @@ object LanceOps extends QueryModule {
     * text_search_indexed's own gate, so the fused rows must reproduce
     * the batch key's bit-for-bit. */
   private def hybridSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (td, tv) = (s"hyd_$sfx", s"hyv_$sfx")
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$td")
-    t(s, dir, "embeddings").createOrReplaceTempView(s"src_$tv")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$td AS SELECT * FROM src_$td")
-    s.sql(s"CREATE TABLE graft_lance.db.$tv AS SELECT * FROM src_$tv")
+    val Seq(td, tv) = catalogTables(s, "hyd", "hyv")
+    ctas(td, t(s, dir, "documents").select("doc_id", "text"))
     val e = t(s, dir, "embeddings")
+    ctas(tv, e)
     TextAnalysis.HybridQueryVecs.map { case (q, vid) =>
       val terms = TextAnalysis.Bm25Queries.filter(_._1 == q).map(_._2).mkString(" ")
       val qv = e.filter(col("vec_id") === vid)
@@ -556,13 +514,8 @@ object LanceOps extends QueryModule {
     * the survivor set declaratively in DuckDB — so the procedure's hash
     * groupBy, semi-join and distributed write are all value-gated. */
   private def dedupSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, to) = (s"ddc_$sfx", s"ddo_$sfx")
-    t(s, dir, "documents").createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc, to) = catalogTables(s, "ddc", "ddo")
+    ctas(tc, t(s, dir, "documents"))
     s.sql(s"CALL graft_lance.system.dedup(table => 'db.$tc', " +
       s"method => 'exact', output_table => 'db.$to')")
     s.table(s"graft_lance.db.$to")
@@ -577,13 +530,8 @@ object LanceOps extends QueryModule {
     * Shares dedup_minhash_lsh's all-pairs exact-Jaccard oracle verbatim —
     * the procedure must reproduce the gated key's pair set and values. */
   private def dedupPairsSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"ddp_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "ddp")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text"))
     s.sql(s"CALL graft_lance.system.dedup(table => 'db.$tc', method => 'pairs')")
       .orderBy("a_id", "b_id")
   }
@@ -593,13 +541,8 @@ object LanceOps extends QueryModule {
     * the gated key's label propagation, returned as the per-component
     * report. Shares dedup_clusters' recursive-CTE oracle verbatim. */
   private def dedupClustersSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"ddk_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "ddk")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text"))
     s.sql(s"CALL graft_lance.system.dedup(table => 'db.$tc', method => 'clusters')")
       .orderBy("keep_id")
   }
@@ -609,13 +552,8 @@ object LanceOps extends QueryModule {
     * (singletons are their own canonical) through the factored
     * canonicalOver; shares dedup_canonical's oracle verbatim. */
   private def dedupCanonicalSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"ddn_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "ddn")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text"))
     s.sql(s"CALL graft_lance.system.dedup(table => 'db.$tc', method => 'canonical')")
       .orderBy("cluster_id")
   }
@@ -628,13 +566,8 @@ object LanceOps extends QueryModule {
     * arithmetic and the hash-ordered prefix-sum selection are all
     * value-gated. */
   private def sampleMixtureSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"smx_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "source", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "smx")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "source", "text"))
     val shares = Sampling.MixturePct.map { case (k, v) => s"$k:$v" }.mkString(",")
     s.sql(s"CALL graft_lance.system.sample(table => 'db.$tc', " +
         s"method => 'mixture', shares => '$shares')")
@@ -645,13 +578,8 @@ object LanceOps extends QueryModule {
     * 'temperature') (r20) at the gated key's total budget; shares
     * sample_temperature's oracle verbatim. */
   private def sampleTemperatureSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"stp_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "source", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "stp")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "source", "text"))
     s.sql(s"CALL graft_lance.system.sample(table => 'db.$tc', " +
         s"method => 'temperature', budget => ${Sampling.TempBudget})")
       .orderBy("source", "cum_tokens", "doc_id")
@@ -661,13 +589,8 @@ object LanceOps extends QueryModule {
     * 'epochs') (r20) at the gated key's shares/total/cap; shares
     * sample_epochs' oracle verbatim. */
   private def sampleEpochsSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"sep_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "source", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "sep")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "source", "text"))
     val shares = Sampling.MixturePct.map { case (k, v) => s"$k:$v" }.mkString(",")
     s.sql(s"CALL graft_lance.system.sample(table => 'db.$tc', " +
         s"method => 'epochs', shares => '$shares', " +
@@ -679,13 +602,8 @@ object LanceOps extends QueryModule {
     * 'token_budget') (r20) at the gated key's per-source budget; shares
     * sample_token_budget's oracle verbatim. */
   private def sampleBudgetSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"stb_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "source", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "stb")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "source", "text"))
     s.sql(s"CALL graft_lance.system.sample(table => 'db.$tc', " +
         s"method => 'token_budget', budget => ${Sampling.TokenBudget})")
       .orderBy("source", "cum_tokens", "doc_id")
@@ -697,14 +615,8 @@ object LanceOps extends QueryModule {
     * oracle verbatim — parameter marshalling, the MINSTD arithmetic and
     * the labeled write are value-gated. */
   private def splitSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, to) = (s"spc_$sfx", s"spo_$sfx")
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc, to) = catalogTables(s, "spc", "spo")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text"))
     s.sql(s"CALL graft_lance.system.split(table => 'db.$tc', " +
       s"method => 'hash', train_pct => 90, val_pct => 5, " +
       s"output_table => 'db.$to')")
@@ -718,14 +630,8 @@ object LanceOps extends QueryModule {
     * own pair generation + label propagation + rep-hash labeling; shares
     * sample_split_leakfree's recursive-CTE oracle verbatim. */
   private def splitLeakfreeSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, to) = (s"slc_$sfx", s"slo_$sfx")
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc, to) = catalogTables(s, "slc", "slo")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text"))
     s.sql(s"CALL graft_lance.system.split(table => 'db.$tc', " +
       s"method => 'leakfree', train_pct => 90, val_pct => 5, " +
       s"output_table => 'db.$to')")
@@ -742,14 +648,8 @@ object LanceOps extends QueryModule {
     * fixture's construction. */
   private def scoreCallOn(s: SparkSession, dir: String, metrics: String,
                           label: String, project: Seq[String]): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, to) = (s"scc_$sfx", s"sco_$sfx")
-    t(s, dir, "documents").select("doc_id", "text", "lang")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc, to) = catalogTables(s, "scc", "sco")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text", "lang"))
     val labelArg = if (label.nonEmpty) s", label_column => '$label'" else ""
     s.sql(s"CALL graft_lance.system.score(table => 'db.$tc', " +
       s"metrics => '$metrics'$labelArg, output_table => 'db.$to')")
@@ -781,14 +681,8 @@ object LanceOps extends QueryModule {
     * chunk table back WITHOUT chunk_text (the counts projection) and
     * shares text_chunk's oracle verbatim. */
   private def chunkSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, to) = (s"chc_$sfx", s"cho_$sfx")
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc, to) = catalogTables(s, "chc", "cho")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text"))
     s.sql(s"CALL graft_lance.system.chunk(table => 'db.$tc', " +
       s"chunk_tokens => ${TextAnalysis.ChunkTokens}, " +
       s"stride => ${TextAnalysis.ChunkStride}, output_table => 'db.$to')")
@@ -801,13 +695,8 @@ object LanceOps extends QueryModule {
     * key's budget and pinned shard count; shares text_pack's oracle
     * verbatim. */
   private def packSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val tc = s"pkc_${UUID.randomUUID().toString.replace("-", "")}"
-    t(s, dir, "documents").select("doc_id", "text")
-      .createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc) = catalogTables(s, "pkc")
+    ctas(tc, t(s, dir, "documents").select("doc_id", "text"))
     s.sql(s"CALL graft_lance.system.pack(table => 'db.$tc', " +
         s"budget => ${TextAnalysis.PackBudget}, shards => ${TextAnalysis.PackShards})")
       .orderBy("shard", "pack_id")
@@ -841,16 +730,10 @@ object LanceOps extends QueryModule {
     * lance_drift), run the cross-table monitoring procedure, and gate its
     * row output on the SAME two-snapshot χ² oracle. */
   private def driftSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tOld, tNew) = (s"drfo_$sfx", s"drfn_$sfx")
+    val Seq(tOld, tNew) = catalogTables(s, "drfo", "drfn")
     val d = t(s, dir, "documents").select("doc_id", "source", "lang", "text")
-    d.createOrReplaceTempView(s"src_$tNew")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tNew AS SELECT * FROM src_$tNew")
-    s.sql(s"CREATE TABLE graft_lance.db.$tOld AS " +
-      s"SELECT * FROM src_$tNew WHERE doc_id % 3 != 0")
+    ctas(tNew, d)
+    ctas(tOld, d.filter(col("doc_id") % 3 =!= 0))
     s.sql(s"CALL graft_lance.system.drift(table => 'db.$tNew', " +
       s"reference_table => 'db.$tOld')")
       .orderBy("source")
@@ -863,13 +746,8 @@ object LanceOps extends QueryModule {
     * WHOLE-ROW form — the DuckDB twin re-derives featurization → scores →
     * top-k → row materialization from the procedure's recorded λ. */
   private def dsirSqlCall(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (tc, to) = (s"dsrc_$sfx", s"dsro_$sfx")
-    t(s, dir, "documents").createOrReplaceTempView(s"src_$tc")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
-    s.sql(s"CREATE TABLE graft_lance.db.$tc AS SELECT * FROM src_$tc")
+    val Seq(tc, to) = catalogTables(s, "dsrc", "dsro")
+    ctas(tc, t(s, dir, "documents"))
     graft.operators.OracleArming.arming("lance_dsir") {
       s.sql(s"CALL graft_lance.system.dsir(table => 'db.$tc', " +
         s"target_predicate => 'lang = ''en''', output_table => 'db.$to')")
@@ -903,14 +781,9 @@ object LanceOps extends QueryModule {
     * .outputPartitioning + the catalog's `bucket` function). At 100 TB a
     * fact-fact join's shuffle is the dominant cost — this deletes it. */
   private def bucketJoin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_lance", classOf[LanceCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lance.warehouse", warehouse)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    val sfx = UUID.randomUUID().toString.replace("-", "")
-    val (ta, tb) = (s"bjo_$sfx", s"bjl_$sfx")
+    val Seq(ta, tb) = catalogTables(s, "bjo", "bjl")
     t(s, dir, "orders").createOrReplaceTempView(s"src_$ta")
     t(s, dir, "lineitem").createOrReplaceTempView(s"src_$tb")
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_lance.db")
     s.sql(s"CREATE TABLE graft_lance.db.$ta (o_orderkey BIGINT, o_custkey BIGINT) " +
       "TBLPROPERTIES('write.bucket-by'='o_orderkey','write.bucket-count'='8')")
     s.sql(s"CREATE TABLE graft_lance.db.$tb (l_orderkey BIGINT, l_quantity DOUBLE) " +

@@ -454,8 +454,7 @@ object LanceDelete {
     }
     if (committed.isEmpty) {
       plan.foreach(_.abandon(root, conf))
-      val fs = ManifestIO.fs(root, conf)
-      newFrags.foreach(f => fs.delete(new Path(root, f.path), false))
+      LanceWriteUtil.abandonFragments(root, newFrags, conf)
       throw new IllegalStateException(
         s"lance REPLACE WHERE lost a conflict with a concurrent rewrite at $root; retry")
     }

@@ -193,22 +193,19 @@ class LanceDeltaWriteBuilder(spark: SparkSession, root: String,
             }
           }
           if (committed.isEmpty) {
+            LanceWriteUtil.abandonFragments(root, insertFrags, conf.value)
             val fs = ManifestIO.fs(root, conf.value)
-            insertFrags.foreach(f => fs.delete(new Path(root, f.path), false))
             newDv.values.foreach(d => fs.delete(new Path(root, d.path), false))
             throw new IllegalStateException(
               s"lance ${op.command()} lost a conflict with a concurrent rewrite at $root; retry")
           }
         }
 
-        override def abort(messages: Array[WriterCommitMessage]): Unit = {
-          val fs = ManifestIO.fs(root, conf.value)
-          messages.foreach {
-            case m: LanceDeltaCommitMessage =>
-              m.inserts.foreach(f => fs.delete(new Path(root, f.path), false))
-            case _ => ()
-          }
-        }
+        override def abort(messages: Array[WriterCommitMessage]): Unit =
+          LanceWriteUtil.abandonFragments(root, messages.toSeq.flatMap {
+            case m: LanceDeltaCommitMessage => m.inserts
+            case _ => Nil
+          }, conf.value)
       }
     }
   }

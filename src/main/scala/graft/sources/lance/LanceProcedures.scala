@@ -1,10 +1,11 @@
 package graft.sources.lance
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.Scan
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -74,6 +75,19 @@ object LanceProcedures {
     b.build()
   }
 
+  /** A one-row procedure result of non-null columns, each typed by its
+    * value: String, Long, Int, Double or Boolean. */
+  private def summaryRow(cols: (String, Any)*): (StructType, Seq[Array[Any]]) = {
+    val typed = cols.map {
+      case (n, v: String) => (StructField(n, StringType, nullable = false), UTF8String.fromString(v))
+      case (n, v: Long) => (StructField(n, LongType, nullable = false), v)
+      case (n, v: Int) => (StructField(n, IntegerType, nullable = false), v)
+      case (n, v: Double) => (StructField(n, DoubleType, nullable = false), v)
+      case (n, v: Boolean) => (StructField(n, BooleanType, nullable = false), v)
+    }
+    (StructType(typed.map(_._1)), Seq(typed.map(_._2).toArray[Any]))
+  }
+
   /** One-result-set bound procedure. `run(tableRoot, args)` returns
     * (schema, rows of internal values). */
   private def bound(procName: String, catalog: LanceCatalog,
@@ -108,15 +122,11 @@ object LanceProcedures {
       param("smaller_than_rows", LongType, Some("10000")),
       param("target_rows", LongType, Some("1000000")))) { (root, in) =>
       val spark = SparkSession.active
-      val before = ManifestIO.loadLatest(root,
-        org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty))
+      val before = ManifestIO.loadLatest(root, Shim.hadoopConf(spark, Map.empty))
         .map(_.fragments.size).getOrElse(0)
       val m = LanceMaintenance.compact(spark, root, in.getLong(1), in.getLong(2))
-      (StructType(Seq(
-        StructField("version", LongType, nullable = false),
-        StructField("fragments_before", IntegerType, nullable = false),
-        StructField("fragments_after", IntegerType, nullable = false))),
-        Seq(Array[Any](m.version, before, m.fragments.size)))
+      summaryRow("version" -> m.version, "fragments_before" -> before,
+        "fragments_after" -> m.fragments.size)
     }
 
   private def vacuum(catalog: LanceCatalog): UnboundProcedure =
@@ -126,12 +136,9 @@ object LanceProcedures {
       param("grace_ms", LongType, Some((10 * 60 * 1000L).toString)))) { (root, in) =>
       val spark = SparkSession.active
       LanceMaintenance.vacuum(spark, root, in.getInt(1), in.getLong(2))
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
-      val versions = ManifestIO.listVersions(root, conf)
-      (StructType(Seq(
-        StructField("retained_versions", IntegerType, nullable = false),
-        StructField("earliest_version", LongType, nullable = false))),
-        Seq(Array[Any](versions.size, versions.headOption.getOrElse(0L))))
+      val versions = ManifestIO.listVersions(root, Shim.hadoopConf(spark, Map.empty))
+      summaryRow("retained_versions" -> versions.size,
+        "earliest_version" -> versions.headOption.getOrElse(0L))
     }
 
   private def zorder(catalog: LanceCatalog): UnboundProcedure =
@@ -143,10 +150,7 @@ object LanceProcedures {
       val cols = in.getUTF8String(1).toString.split(',')
         .map(_.trim).filter(_.nonEmpty).toSeq
       val m = LanceMaintenance.zorder(spark, root, cols, in.getLong(2))
-      (StructType(Seq(
-        StructField("version", LongType, nullable = false),
-        StructField("n_fragments", IntegerType, nullable = false))),
-        Seq(Array[Any](m.version, m.fragments.size)))
+      summaryRow("version" -> m.version, "n_fragments" -> m.fragments.size)
     }
 
   /** SQL-callable vector search — reference parity with the Flink table
@@ -212,7 +216,7 @@ object LanceProcedures {
       val pred: Option[org.apache.spark.sql.Column] =
         Some(in.getUTF8String(9).toString.trim).filter(_.nonEmpty)
           .map(org.apache.spark.sql.functions.expr)
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
+      val conf = Shim.hadoopConf(spark, Map.empty)
       import org.apache.spark.sql.functions._
       val mode = in.getUTF8String(11).toString.toLowerCase(java.util.Locale.ROOT)
       // resolve the manifest ONCE and pin EVERY read of this call to it: the
@@ -433,7 +437,6 @@ object LanceProcedures {
       val refine = in.getInt(9)
       val excludeSelf = in.getBoolean(10)
       val outTable = in.getUTF8String(11).toString.trim
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
       val queries = spark.read.format("lance").load(qRoot)
       val hasIndex = graft.operators.IndexBuild.exists(spark, cRoot)
       val result =
@@ -459,36 +462,10 @@ object LanceProcedures {
       import org.apache.spark.sql.functions._
       val normalized = result.select(col("q_id").cast("long").as("q_id"),
         col("n_id").cast("long").as("n_id"), col("dist"), col("rk"))
-      if (outTable.nonEmpty) {
-        val outRoot = catalog.tableRootForCreate(outTable)
-        normalized.write.format("lance").mode("overwrite").save(outRoot)
-        val n = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-        (StructType(Seq(
-          StructField("output_table", StringType, nullable = false),
-          StructField("n_rows", LongType, nullable = false))),
-          Seq(Array[Any](UTF8String.fromString(outTable), n)))
-      } else {
-        // no output_table ⇒ the k·|queries| result comes back through the
-        // driver (a CALL's rows always do). Interactive k-sized use is the
-        // intent; a mining-sized query table must write distributed — fail
-        // fast with the fix rather than OOM the driver. take(cap+1) guards
-        // and fetches in ONE execution (a count() pre-pass would run the
-        // possibly-expensive query plan twice), and bounds driver memory at
-        // the cap either way.
-        val maxRows = 1000000
-        val fetched = normalized.take(maxRows + 1)
-        require(fetched.length <= maxRows,
-          s"lance knn_join: result exceeds the driver-return cap ($maxRows rows); " +
-            s"pass output_table => 'db.t' to write the join distributed")
-        val rows = fetched.map(r =>
-          Array[Any](r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-        (StructType(Seq(
-          StructField("q_id", LongType, nullable = false),
-          StructField("n_id", LongType, nullable = false),
-          StructField("dist", DoubleType, nullable = false),
-          StructField("rk", LongType, nullable = false))),
-          rows.toSeq)
-      }
+      // no output_table ⇒ the k·|queries| result comes back through the
+      // driver (a CALL's rows always do): interactive k-sized use is the
+      // intent, and a mining-sized query table fails fast at the cap
+      outputOrRows(catalog, outTable, normalized, "knn_join", notNull = true)
     }
 
   /** BM25 keyword retrieval over a STANDING inverted index — the text
@@ -520,7 +497,7 @@ object LanceProcedures {
                               idCol: String, textCol: String): String = {
     import org.apache.spark.sql.functions.col
     val idxRoot = graft.operators.TextIndex.indexRootFor(cRoot)
-    val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
+    val conf = Shim.hadoopConf(spark, Map.empty)
     val corpusVersion = ManifestIO.loadLatest(cRoot, conf).map(_.version).getOrElse(
       throw new IllegalArgumentException(s"lance search: corpus not found at $cRoot"))
     if (!graft.operators.TextIndex.exists(idxRoot, conf) ||
@@ -584,11 +561,9 @@ object LanceProcedures {
       val lex = graft.operators.TextIndex.search(spark, idxRoot,
           terms.map(t => (0L, t)).toDF("query_id", "term"), k)
         .select(col("query_id"), col("doc_id"), col("rk").as("r"))
-      val pinned: Map[String, String] = {
-        val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
-        ManifestIO.loadLatest(vRoot, conf)
+      val pinned: Map[String, String] =
+        ManifestIO.loadLatest(vRoot, Shim.hadoopConf(spark, Map.empty))
           .map(m => Map("versionAsOf" -> m.version.toString)).getOrElse(Map.empty)
-      }
       val queries = Seq((0L, qvec))
       val vec =
         if (graft.operators.IndexBuild.exists(spark, vRoot)) {
@@ -638,35 +613,9 @@ object LanceProcedures {
       val idxRoot = ensureTextIndex(spark, cRoot, idCol, textCol)
       val queries = spark.read.format("lance").load(qRoot)
         .select(col("query_id").cast("long").as("query_id"), col("term"))
+      // (query_id, doc_id, n_terms, score, rk), k·|queries|-shaped
       val result = graft.operators.TextIndex.search(spark, idxRoot, queries, k)
-      val schema = StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("doc_id", LongType, nullable = false),
-        StructField("n_terms", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false),
-        StructField("rk", LongType, nullable = false)))
-      if (outTable.nonEmpty) {
-        val outRoot = catalog.tableRootForCreate(outTable)
-        result.write.format("lance").mode("overwrite").save(outRoot)
-        val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
-        val n = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-        (StructType(Seq(
-          StructField("output_table", StringType, nullable = false),
-          StructField("n_rows", LongType, nullable = false))),
-          Seq(Array[Any](UTF8String.fromString(outTable), n)))
-      } else {
-        // driver-return path: k·|queries|-shaped — cap it the same way
-        // knn_join does so a mining-sized workload fails fast with the
-        // actionable fix (output_table) instead of OOMing the driver
-        val maxRows = 1000000
-        val fetched = result.take(maxRows + 1)
-        require(fetched.length <= maxRows,
-          s"lance search: result exceeds the driver-return cap ($maxRows rows); " +
-            "pass output_table to materialize to a lance table instead")
-        val rows = fetched.map(r => Array[Any](
-          r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4)))
-        (schema, rows.toSeq)
-      }
+      outputOrRows(catalog, outTable, result, "search", notNull = true)
     }
 
   /** Drift-aware index maintenance — composes the drift monitor with the
@@ -694,11 +643,7 @@ object LanceProcedures {
       val drift = graft.operators.IndexBuild.driftRatio(spark, idx)
       val rebuilt = drift > threshold
       if (rebuilt) graft.operators.IndexBuild.rebuild(spark, idx)
-      (StructType(Seq(
-        StructField("drift", DoubleType, nullable = false),
-        StructField("threshold", DoubleType, nullable = false),
-        StructField("rebuilt", BooleanType, nullable = false))),
-        Seq(Array[Any](drift, threshold, rebuilt)))
+      summaryRow("drift" -> drift, "threshold" -> threshold, "rebuilt" -> rebuilt)
     }
 
   /** SQL entry point for the n-gram DECONTAMINATION family — materializes
@@ -764,7 +709,7 @@ object LanceProcedures {
       val benchEmb = in.getUTF8String(7).toString.trim
       val benchEmbCol0 = in.getUTF8String(8).toString.trim
       val minCosine = in.getDouble(9)
-      val outTable = in.getUTF8String(10).toString.trim
+      val outTable = requiredOutput(in, 10, "decontaminate")
       val prescreen = in.getUTF8String(11).toString.trim.toLowerCase match {
         case "auto" => None
         case "on"   => Some(true)
@@ -772,8 +717,6 @@ object LanceProcedures {
         case other => throw new IllegalArgumentException(
           s"lance decontaminate: prescreen must be 'auto', 'on' or 'off', got '$other'")
       }
-      require(outTable.nonEmpty, "lance decontaminate: output_table is required " +
-        "(the survivor set is corpus-sized — it must write distributed)")
       require(embCol.isEmpty == benchEmb.isEmpty && (minCosine > 0) == embCol.nonEmpty,
         "lance decontaminate: the semantic arm needs all three of " +
           "embedding_column, bench_embeddings and min_cosine > 0 (or none)")
@@ -800,23 +743,17 @@ object LanceProcedures {
       val flags = allFlags.localCheckpoint()
       val nFlagged = flags.count()
       val survivors = corpus.join(flags, Seq(idCol), "left_anti")
-      val outRoot = catalog.tableRootForCreate(outTable)
-      survivors.write.format("lance").mode("overwrite").save(outRoot)
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
-      val nOut = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-      (StructType(Seq(
-        StructField("output_table", StringType, nullable = false),
-        StructField("n_flagged", LongType, nullable = false),
-        StructField("n_out", LongType, nullable = false))),
-        Seq(Array[Any](UTF8String.fromString(outTable), nFlagged, nOut)))
+      summaryRow("output_table" -> outTable, "n_flagged" -> nFlagged,
+        "n_out" -> writeOutput(catalog, outTable, survivors))
     }
 
   /** Collect a small result DataFrame into procedure rows — driver cap
     * enforced in ONE execution (take(cap+1) — a count() pre-pass would
     * run the possibly-expensive plan twice), Catalyst converters handle
-    * strings/decimals/arrays generically. */
-  private def collectRows(df: org.apache.spark.sql.DataFrame, cap: Int,
-                          what: String): (StructType, Seq[Array[Any]]) = {
+    * strings/decimals/arrays generically. `notNull` declares every
+    * column non-null, for results whose columns never hold a null. */
+  private def collectRows(df: DataFrame, cap: Int, what: String,
+                          notNull: Boolean = false): (StructType, Seq[Array[Any]]) = {
     val fetched = df.take(cap + 1)
     require(fetched.length <= cap,
       s"lance $what: result exceeds the driver-return cap ($cap rows); " +
@@ -825,8 +762,38 @@ object LanceProcedures {
     val conv = schema.fields.map(f =>
       org.apache.spark.sql.catalyst.CatalystTypeConverters
         .createToCatalystConverter(f.dataType))
-    (schema, fetched.toSeq.map(r =>
-      schema.fields.indices.map(i => conv(i)(r.get(i))).toArray[Any]))
+    (if (notNull) StructType(schema.map(_.copy(nullable = false))) else schema,
+      fetched.toSeq.map(r =>
+        schema.fields.indices.map(i => conv(i)(r.get(i))).toArray[Any]))
+  }
+
+  /** Writes a procedure's output table: one distributed lance overwrite of
+    * `df` into `outTable` (created on first write) under `catalog`.
+    * Returns the row count the committed manifest records, so the
+    * summary row costs no scan. */
+  private def writeOutput(catalog: LanceCatalog, outTable: String, df: DataFrame): Long = {
+    val outRoot = catalog.tableRootForCreate(outTable)
+    df.write.format("lance").mode("overwrite").save(outRoot)
+    ManifestIO.loadLatest(outRoot, Shim.hadoopConf(df.sparkSession, Map.empty))
+      .map(_.totalRows).getOrElse(0L)
+  }
+
+  /** A procedure's result `df` for a procedure where `output_table` is
+    * optional: with one, `df` is written there and one
+    * (output_table, n_rows) summary row returns; without, its rows do. */
+  private def outputOrRows(catalog: LanceCatalog, outTable: String, df: DataFrame,
+                           what: String, notNull: Boolean = false)
+      : (StructType, Seq[Array[Any]]) =
+    if (outTable.nonEmpty)
+      summaryRow("output_table" -> outTable, "n_rows" -> writeOutput(catalog, outTable, df))
+    else collectRows(df, 1000000, what, notNull)
+
+  /** The `output_table` argument at `i`, for a procedure that needs one. */
+  private def requiredOutput(in: InternalRow, i: Int, proc: String): String = {
+    val outTable = in.getUTF8String(i).toString.trim
+    require(outTable.nonEmpty, s"lance $proc: output_table is required " +
+      "(the result writes distributed to it)")
+    outTable
   }
 
   /** SQL entry point for the DEDUPLICATION family (r20) — the gated
@@ -873,24 +840,13 @@ object LanceProcedures {
       val idCol = in.getUTF8String(2).toString
       val textCol = in.getUTF8String(3).toString
       val outTable = in.getUTF8String(4).toString.trim
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
       val corpus = spark.read.format("lance").load(root)
       // the near-dup machinery's column contract (long ids)
       lazy val docs = corpus.select(col(idCol).cast("long").as("doc_id"),
         col(textCol).as("text"))
-      def materialize(df: org.apache.spark.sql.DataFrame): (StructType, Seq[Array[Any]]) = {
-        val outRoot = catalog.tableRootForCreate(outTable)
-        df.write.format("lance").mode("overwrite").save(outRoot)
-        val n = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-        (StructType(Seq(
-          StructField("output_table", StringType, nullable = false),
-          StructField("n_rows", LongType, nullable = false))),
-          Seq(Array[Any](UTF8String.fromString(outTable), n)))
-      }
       method match {
         case "exact" =>
-          require(outTable.nonEmpty, "lance dedup: method => 'exact' " +
-            "materializes the survivor corpus — output_table is required")
+          requiredOutput(in, 4, "dedup method => 'exact'")
           // min-id per content hash; survivors keep every corpus column.
           // The semi-join's build side is one row per DISTINCT text — at
           // a near-dup-free extreme that is corpus-sized, so it stays a
@@ -899,23 +855,16 @@ object LanceProcedures {
           val keeps = corpus.groupBy(sha2(col(textCol), 256))
             .agg(min(col(idCol)).as(idCol)).select(idCol)
           val survivors = corpus.join(keeps, Seq(idCol), "left_semi")
-          val outRoot = catalog.tableRootForCreate(outTable)
-          survivors.write.format("lance").mode("overwrite").save(outRoot)
-          val nOut = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
+          val nOut = writeOutput(catalog, outTable, survivors)
           // COUNT answers from fragment stats (delete-vector-aware) —
           // no second corpus scan for the summary
           val nIn = corpus.count()
-          (StructType(Seq(
-            StructField("output_table", StringType, nullable = false),
-            StructField("n_in", LongType, nullable = false),
-            StructField("n_dropped", LongType, nullable = false),
-            StructField("n_out", LongType, nullable = false))),
-            Seq(Array[Any](UTF8String.fromString(outTable), nIn, nIn - nOut, nOut)))
+          summaryRow("output_table" -> outTable, "n_in" -> nIn,
+            "n_dropped" -> (nIn - nOut), "n_out" -> nOut)
         case "pairs" =>
           val pairs = graft.operators.Dedup.minhashPairsFor(docs)
             .orderBy("a_id", "b_id")
-          if (outTable.nonEmpty) materialize(pairs)
-          else collectRows(pairs, 1000000, "dedup")
+          outputOrRows(catalog, outTable, pairs, "dedup")
         case "clusters" =>
           val pairs = graft.operators.Dedup.minhashPairsFor(docs)
             .select("a_id", "b_id")
@@ -924,17 +873,15 @@ object LanceProcedures {
             .groupBy(col("lbl").as("keep_id"))
             .agg(count(lit(1)).as("n_docs"), sum("node").cast("long").as("sum_ids"))
             .orderBy("keep_id")
-          if (outTable.nonEmpty) materialize(report)
-          else collectRows(report, 1000000, "dedup")
+          outputOrRows(catalog, outTable, report, "dedup")
         case "canonical" =>
           // best-QUALITY survivor per cluster (singletons are their own
           // canonical) — one row per kept doc, so the report is
           // corpus-sized minus dropped dups: same cap/escape posture
           val pairs = graft.operators.Dedup.minhashPairsFor(docs)
             .select("a_id", "b_id")
-          val report = graft.operators.Dedup.canonicalOver(docs, pairs)
-          if (outTable.nonEmpty) materialize(report)
-          else collectRows(report, 1000000, "dedup")
+          outputOrRows(catalog, outTable,
+            graft.operators.Dedup.canonicalOver(docs, pairs), "dedup")
         case other => throw new IllegalArgumentException(
           s"lance dedup: unknown method $other (expected exact / pairs / clusters / canonical)")
       }
@@ -994,7 +941,6 @@ object LanceProcedures {
       val srcCol = in.getUTF8String(6).toString
       val maxEpochs = in.getInt(7)
       val outTable = in.getUTF8String(8).toString.trim
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
       val docs = spark.read.format("lance").load(root)
         .select(col(idCol).cast("long").as("doc_id"),
           col(srcCol).as("source"), col(textCol).as("text"))
@@ -1033,15 +979,7 @@ object LanceProcedures {
           s"lance sample: unknown method $other (expected mixture / " +
             "temperature / token_budget / epochs)")
       }
-      if (outTable.nonEmpty) {
-        val outRoot = catalog.tableRootForCreate(outTable)
-        selected.write.format("lance").mode("overwrite").save(outRoot)
-        val n = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-        (StructType(Seq(
-          StructField("output_table", StringType, nullable = false),
-          StructField("n_rows", LongType, nullable = false))),
-          Seq(Array[Any](UTF8String.fromString(outTable), n)))
-      } else collectRows(selected, 1000000, "sample")
+      outputOrRows(catalog, outTable, selected, "sample")
     }
 
   /** SQL entry point for TRAIN/VALIDATION/TEST SPLITS (r20) — the split
@@ -1087,13 +1025,10 @@ object LanceProcedures {
       val valPct = in.getInt(3)
       val idCol = in.getUTF8String(4).toString
       val textCol = in.getUTF8String(5).toString
-      val outTable = in.getUTF8String(6).toString.trim
+      val outTable = requiredOutput(in, 6, "split")
       require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100,
         s"lance split: need train_pct > 0, val_pct >= 0, sum <= 100 " +
           s"(got $trainPct/$valPct)")
-      require(outTable.nonEmpty, "lance split: the labeled set is " +
-        "corpus-sized — output_table is required")
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
       val corpus = spark.read.format("lance").load(root)
       val labeled = method match {
         case "hash" =>
@@ -1117,21 +1052,14 @@ object LanceProcedures {
         case other => throw new IllegalArgumentException(
           s"lance split: unknown method $other (expected hash / leakfree)")
       }
-      val outRoot = catalog.tableRootForCreate(outTable)
-      labeled.write.format("lance").mode("overwrite").save(outRoot)
+      writeOutput(catalog, outTable, labeled)
       // per-split counts from the output's pruned (split) scan — cheap,
       // and they count what was actually committed
-      val counts = spark.read.format("lance").load(outRoot)
+      val counts = spark.read.format("lance").load(catalog.tableRootFor(outTable))
         .groupBy("split").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      (StructType(Seq(
-        StructField("output_table", StringType, nullable = false),
-        StructField("n_train", LongType, nullable = false),
-        StructField("n_validation", LongType, nullable = false),
-        StructField("n_test", LongType, nullable = false))),
-        Seq(Array[Any](UTF8String.fromString(outTable),
-          counts.getOrElse("train", 0L), counts.getOrElse("validation", 0L),
-          counts.getOrElse("test", 0L))))
+        .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+      summaryRow("output_table" -> outTable, "n_train" -> counts("train"),
+        "n_validation" -> counts("validation"), "n_test" -> counts("test"))
     }
 
   /** SQL entry point for TEXT SCORING (r20) — the per-document quality /
@@ -1167,16 +1095,13 @@ object LanceProcedures {
       val idCol = in.getUTF8String(2).toString
       val textCol = in.getUTF8String(3).toString
       val labelCol = in.getUTF8String(4).toString.trim
-      val outTable = in.getUTF8String(5).toString.trim
-      require(outTable.nonEmpty, "lance score: the scored set is " +
-        "corpus-sized — output_table is required")
+      val outTable = requiredOutput(in, 5, "score")
       val metrics = metricsStr.split(',').map(_.trim.toLowerCase(java.util.Locale.ROOT))
         .filter(_.nonEmpty).distinct.toSeq
       val known = Set("quality", "langid", "fingerprint")
       require(metrics.nonEmpty && metrics.forall(known),
         s"lance score: metrics must be a CSV of ${known.mkString(" / ")} " +
           s"(got '$metricsStr')")
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
       val corpus = spark.read.format("lance").load(root)
       val base = corpus
         .select(Seq(col(idCol).as("doc_id"), col(textCol).as("text")) ++
@@ -1196,13 +1121,8 @@ object LanceProcedures {
             (graft.functions.fingerprint(col("text")) % 1024).as("fp_bucket"))
       }
       val scored = base.select(Seq(col("doc_id")) ++ metricCols: _*)
-      val outRoot = catalog.tableRootForCreate(outTable)
-      scored.write.format("lance").mode("overwrite").save(outRoot)
-      val n = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-      (StructType(Seq(
-        StructField("output_table", StringType, nullable = false),
-        StructField("n_rows", LongType, nullable = false))),
-        Seq(Array[Any](UTF8String.fromString(outTable), n)))
+      summaryRow("output_table" -> outTable,
+        "n_rows" -> writeOutput(catalog, outTable, scored))
     }
 
   /** SQL entry point for RAG/EMBEDDING CHUNKING (r20) — overlapping
@@ -1236,24 +1156,16 @@ object LanceProcedures {
       val stride = in.getInt(2)
       val idCol = in.getUTF8String(3).toString
       val textCol = in.getUTF8String(4).toString
-      val outTable = in.getUTF8String(5).toString.trim
       require(chunkTokens > 0 && stride > 0,
         s"lance chunk: chunk_tokens and stride must be positive (got $chunkTokens/$stride)")
-      require(outTable.nonEmpty, "lance chunk: the chunk set is " +
-        "corpus-sized — output_table is required")
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
+      val outTable = requiredOutput(in, 5, "chunk")
       val docs = spark.read.format("lance").load(root)
         .select(col(idCol).as("doc_id"), col(textCol).as("text"))
         .withColumn("w", graft.operators.TextAnalysis.tokens)
       val chunks = graft.operators.TextAnalysis.chunkOver(
         docs, chunkTokens, stride, withText = true)
-      val outRoot = catalog.tableRootForCreate(outTable)
-      chunks.write.format("lance").mode("overwrite").save(outRoot)
-      val n = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-      (StructType(Seq(
-        StructField("output_table", StringType, nullable = false),
-        StructField("n_chunks", LongType, nullable = false))),
-        Seq(Array[Any](UTF8String.fromString(outTable), n)))
+      summaryRow("output_table" -> outTable,
+        "n_chunks" -> writeOutput(catalog, outTable, chunks))
     }
 
   /** SQL entry point for SEQUENCE PACKING (r20) — pack documents into
@@ -1286,21 +1198,12 @@ object LanceProcedures {
       val textCol = in.getUTF8String(4).toString
       val outTable = in.getUTF8String(5).toString.trim
       require(budget > 0, "lance pack: budget must be positive")
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
       val docs = spark.read.format("lance").load(root)
         .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
         .select(col("doc_id"),
           size(graft.operators.TextAnalysis.tokens).cast("long").as("n_tokens"))
-      val packed = graft.operators.TextAnalysis.pack(spark, docs, budget, shards)
-      if (outTable.nonEmpty) {
-        val outRoot = catalog.tableRootForCreate(outTable)
-        packed.write.format("lance").mode("overwrite").save(outRoot)
-        val n = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-        (StructType(Seq(
-          StructField("output_table", StringType, nullable = false),
-          StructField("n_rows", LongType, nullable = false))),
-          Seq(Array[Any](UTF8String.fromString(outTable), n)))
-      } else collectRows(packed, 1000000, "pack")
+      outputOrRows(catalog, outTable,
+        graft.operators.TextAnalysis.pack(spark, docs, budget, shards), "pack")
     }
 
   /** SQL entry point for SEMANTIC DEDUPLICATION (SemDeDup) — materializes
@@ -1337,9 +1240,7 @@ object LanceProcedures {
       val vecCol = in.getUTF8String(2).toString
       val tau = in.getDouble(3)
       val cells = in.getInt(4)
-      val outTable = in.getUTF8String(5).toString.trim
-      require(outTable.nonEmpty, "lance semdedup: output_table is required " +
-        "(survivors are corpus-sized — they must write distributed)")
+      val outTable = requiredOutput(in, 5, "semdedup")
       require(tau > 0.0 && tau <= 1.0, s"lance semdedup: min_cosine must be in (0, 1], got $tau")
       require(cells >= 1, s"lance semdedup: cells must be >= 1, got $cells")
       import org.apache.spark.sql.functions.col
@@ -1366,15 +1267,8 @@ object LanceProcedures {
       val nDropped = dropped.count()
       val survivors = corpus.join(
         dropped.select(col("vec_id").as(idCol)), Seq(idCol), "left_anti")
-      val outRoot = catalog.tableRootForCreate(outTable)
-      survivors.write.format("lance").mode("overwrite").save(outRoot)
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
-      val nOut = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
-      (StructType(Seq(
-        StructField("output_table", StringType, nullable = false),
-        StructField("n_dropped", LongType, nullable = false),
-        StructField("n_out", LongType, nullable = false))),
-        Seq(Array[Any](UTF8String.fromString(outTable), nDropped, nOut)))
+      summaryRow("output_table" -> outTable, "n_dropped" -> nDropped,
+        "n_out" -> writeOutput(catalog, outTable, survivors))
     }
 
   /** SQL entry point for DSIR data selection (Xie et al. 2023) —
@@ -1409,23 +1303,17 @@ object LanceProcedures {
       val textCol = in.getUTF8String(2).toString
       val pred = in.getUTF8String(3).toString.trim
       val k = in.getInt(4)
-      val outTable = in.getUTF8String(5).toString.trim
       require(pred.nonEmpty, "lance dsir: target_predicate is required " +
         "(the target slice defines the distribution to select toward)")
       require(k >= 1, s"lance dsir: k must be >= 1, got $k")
-      require(outTable.nonEmpty, "lance dsir: output_table is required " +
-        "(the selection materializes distributed)")
+      val outTable = requiredOutput(in, 5, "dsir")
       import org.apache.spark.sql.functions.{col, expr}
       val corpus = spark.read.format("lance").load(root)
       val (ct, cr) = graft.operators.Sampling
         .dsirTrainCounts(corpus, expr(pred), col(textCol))
       val (nSel, nOut) = dsirSelectWrite(spark, catalog, corpus, idCol,
         textCol, pred, k, outTable, ct, cr)
-      (StructType(Seq(
-        StructField("output_table", StringType, nullable = false),
-        StructField("n_selected", LongType, nullable = false),
-        StructField("n_out", LongType, nullable = false))),
-        Seq(Array[Any](UTF8String.fromString(outTable), nSel, nOut)))
+      summaryRow("output_table" -> outTable, "n_selected" -> nSel, "n_out" -> nOut)
     }
 
   /** λ from the counts → arm oracle (gated runs only) → score → top-k →
@@ -1456,16 +1344,12 @@ object LanceProcedures {
       .select(idCol)
       .localCheckpoint() // consumed twice (count + semi-join)
     val nSel = sel.count()
-    val selected = corpus.join(sel, Seq(idCol), "left_semi")
-    val outRoot = catalog.tableRootForCreate(outTable)
-    selected.write.format("lance").mode("overwrite").save(outRoot)
+    val nOut = writeOutput(catalog, outTable, corpus.join(sel, Seq(idCol), "left_semi"))
     // baseline AFTER the data commit: a crash between them leaves the new
     // selection with the previous baseline — the next refresh measures
     // against older counts and at worst retrains once too eagerly
     // (monitoring metadata, never correctness)
-    writeDsirState(spark, outRoot, ct, cr)
-    val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
-    val nOut = ManifestIO.loadLatest(outRoot, conf).map(_.totalRows).getOrElse(0L)
+    writeDsirState(spark, catalog.tableRootFor(outTable), ct, cr)
     (nSel, nOut)
   }
 
@@ -1479,7 +1363,7 @@ object LanceProcedures {
     val j = JObject(
       "ct" -> JArray(ct.toList.map(JLong(_))),
       "cr" -> JArray(cr.toList.map(JLong(_))))
-    val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
+    val conf = Shim.hadoopConf(s, Map.empty)
     val p = dsirStatePath(outRoot)
     val fs = p.getFileSystem(conf)
     val out = fs.create(p, true)
@@ -1492,7 +1376,7 @@ object LanceProcedures {
                             outRoot: String): Option[(Array[Long], Array[Long])] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
+    val conf = Shim.hadoopConf(s, Map.empty)
     val p = dsirStatePath(outRoot)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return None
@@ -1547,11 +1431,10 @@ object LanceProcedures {
       val textCol = in.getUTF8String(2).toString
       val pred = in.getUTF8String(3).toString.trim
       val k = in.getInt(4)
-      val outTable = in.getUTF8String(5).toString.trim
       val threshold = in.getDouble(6)
       require(pred.nonEmpty, "lance dsir_refresh: target_predicate is required")
       require(k >= 1, s"lance dsir_refresh: k must be >= 1, got $k")
-      require(outTable.nonEmpty, "lance dsir_refresh: output_table is required")
+      val outTable = requiredOutput(in, 5, "dsir_refresh")
       require(threshold >= 0.0,
         s"lance dsir_refresh: threshold must be >= 0, got $threshold")
       val outRoot = catalog.tableRootFor(outTable)
@@ -1568,12 +1451,8 @@ object LanceProcedures {
       val nSel = if (!refreshed) 0L else
         dsirSelectWrite(spark, catalog, corpus, idCol, textCol, pred, k,
           outTable, ctNew, crNew)._1
-      (StructType(Seq(
-        StructField("drift", DoubleType, nullable = false),
-        StructField("threshold", DoubleType, nullable = false),
-        StructField("refreshed", BooleanType, nullable = false),
-        StructField("n_selected", LongType, nullable = false))),
-        Seq(Array[Any](drift, threshold, refreshed, nSel)))
+      summaryRow("drift" -> drift, "threshold" -> threshold,
+        "refreshed" -> refreshed, "n_selected" -> nSel)
     }
 
   /** SQL entry point for cross-table DRIFT monitoring — the procedure face
@@ -1629,8 +1508,7 @@ object LanceProcedures {
     * nulls rather than guesses. O(fragments) sidecar reads, no data IO. */
   private def stats(catalog: LanceCatalog): UnboundProcedure =
     bound("stats", catalog, Array(param("table", StringType))) { (root, _) =>
-      val spark = SparkSession.active
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
+      val conf = Shim.hadoopConf(SparkSession.active, Map.empty)
       val m = ManifestIO.loadLatest(root, conf).getOrElse(
         throw new IllegalStateException(s"lance dataset not found: $root"))
       val frs = m.fragments
@@ -1701,8 +1579,7 @@ object LanceProcedures {
 
   private def history(catalog: LanceCatalog): UnboundProcedure =
     bound("history", catalog, Array(param("table", StringType))) { (root, _) =>
-      val spark = SparkSession.active
-      val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
+      val conf = Shim.hadoopConf(SparkSession.active, Map.empty)
       val fs = ManifestIO.fs(root, conf)
       val rows = ManifestIO.listVersions(root, conf).map { v =>
         val m = ManifestIO.load(root, v, conf)

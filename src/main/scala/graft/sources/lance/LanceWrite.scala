@@ -334,13 +334,19 @@ object LanceWriteUtil {
   }
 
   def deleteFragments(root: String, messages: Array[WriterCommitMessage],
-                      conf: SerializableConfiguration): Unit = {
-    val fs = ManifestIO.fs(root, conf.value)
-    messages.foreach {
-      case m: LanceFragmentsCommitMessage =>
-        m.fragments.foreach(fr => fs.delete(new Path(root, fr.path), false))
-      case _ => ()
-    }
+                      conf: SerializableConfiguration): Unit =
+    abandonFragments(root, messages.toSeq.flatMap {
+      case m: LanceFragmentsCommitMessage => m.fragments
+      case _ => Nil
+    }, conf.value)
+
+  /** The one abandon step for staged fragments that will never commit (a
+    * lost commit race, an aborted or replayed write): deletes each
+    * fragment's data file and its `_stats/` sketch sidecar. */
+  private[lance] def abandonFragments(root: String, frags: Seq[FragmentMeta],
+                                      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val fs = ManifestIO.fs(root, conf)
+    for (f <- frags; rel <- f.path +: f.sketches.toSeq) fs.delete(new Path(root, rel), false)
   }
 }
 
@@ -924,8 +930,7 @@ object LanceMaintenance {
         cur.fragments.filterNot(f => smallBy.contains(f.path)) ++ newFrags,
         cur.txns, "compact"))
     }.getOrElse {
-      val fs = ManifestIO.fs(root, conf)
-      newFrags.foreach(f => fs.delete(new Path(root, f.path), false))
+      LanceWriteUtil.abandonFragments(root, newFrags, conf)
       ManifestIO.loadLatest(root, conf).get
     }
   }
@@ -1068,8 +1073,7 @@ object LanceMaintenance {
         cur.fragments.filterNot(f => oldBy.contains(f.path)) ++ newFrags,
         cur.txns, "compact"))
     }.getOrElse {
-      val fs = ManifestIO.fs(root, conf)
-      newFrags.foreach(f => fs.delete(new Path(root, f.path), false))
+      LanceWriteUtil.abandonFragments(root, newFrags, conf)
       ManifestIO.loadLatest(root, conf).get
     }
   }

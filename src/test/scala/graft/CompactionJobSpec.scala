@@ -216,6 +216,9 @@ class CompactionJobSpec extends SparkSpec {
     val victim = m0.fragments.head.path
     val dataDir = new java.io.File(s"$local/t/${ManifestIO.DataDir}")
     val filesBefore = dataDir.list().toSet
+    val statsDir = new java.io.File(s"$local/t/${graft.sources.lance.Hll.Dir}")
+    val statsBefore = statsDir.list().toSet
+    assert(statsBefore.nonEmpty, "the appends wrote no sketch sidecars")
     val hconf = conf
     RaceFs.beforeFirstDataFile { () =>
       ManifestIO.commit(root, hconf) { latest =>
@@ -228,6 +231,7 @@ class CompactionJobSpec extends SparkSpec {
     assert(m.op === "delete")
     assert(m.fragments.map(_.path) === m0.fragments.map(_.path).filterNot(_ == victim))
     assert(dataDir.list().toSet === filesBefore, "staged fragment files left behind")
+    assert(statsDir.list().toSet === statsBefore, "staged sketch sidecars left behind")
     assert(spark.read.format("lance").load(root).count() === 150L)
   }
 }
