@@ -525,11 +525,15 @@ object VectorSearch extends QueryModule {
   // Johnson-Lindenstrauss sign random projection — the standard pre-ANN /
   // pre-clustering shrink for embedding corpora at 100 TB (64 → 16 dims =
   // 4× less vector IO for every downstream join): y_j = Σ_i s_ji·x_i / √k
-  // with a FROZEN deterministic ±1 matrix (splitmix64 of (j, i)). The
-  // matrix rides both plans as literals and each output coordinate is an
-  // explicit left-fold addition chain, so Spark and DuckDB sum the same
-  // doubles in the same order — bit-identical, full-oracle gate. Long-form
-  // output (vec_id, dim, value); pure map stage at any scale.
+  // with a FROZEN deterministic ±1 matrix (splitmix64 of (j, i)). Each
+  // output coordinate is the codegen'd `vec_dot` of the embedding with the
+  // matrix row as a literal ±1 vector: a double left-fold from 0.0, so it
+  // sums the same doubles in the same order as the oracle's explicit
+  // addition chain — bit-identical, full-oracle gate. Sixteen explicit
+  // 64-term chains in one projection would generate whole-stage code past
+  // the JVM's 64 KB method limit (Spark then silently evaluates it
+  // interpreted). Long-form output (vec_id, dim, value); pure map stage at
+  // any scale.
   private[operators] val ProjK = 16
   private[operators] val ProjD = 64
 
@@ -543,18 +547,11 @@ object VectorSearch extends QueryModule {
       if ((z & 1L) == 0L) 1 else -1
     }
 
-  /** The j-th projected coordinate as an explicit addition chain (Spark
-    * SQL, 0-based array indexing). */
-  private def projExprSpark(j: Int): String = {
-    val terms = (0 until ProjD).map { i =>
-      s"(CAST(embedding[$i] AS DOUBLE) * ${projSigns(j)(i)}.0D)"
-    }
-    s"round((${terms.mkString(" + ")}) / 4.0D, 6)"
-  }
-
   private def embProject(s: SparkSession, dir: String): DataFrame = {
     val dims = (0 until ProjK).map(j =>
-      struct(lit(j.toLong).as("dim"), expr(projExprSpark(j)).as("value")))
+      struct(lit(j.toLong).as("dim"),
+        round(vec_dot(col("embedding"), typedLit(projSigns(j).map(_.toDouble))) / 4.0, 6)
+          .as("value")))
     t(s, dir, "embeddings")
       .select(col("vec_id"), explode(array(dims: _*)).as("p"))
       .select(col("vec_id"), col("p.dim").as("dim"), col("p.value").as("value"))

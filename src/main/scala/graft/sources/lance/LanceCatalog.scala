@@ -169,7 +169,7 @@ class LanceCatalog extends TableCatalog with SupportsNamespaces
         require(n.isDefined && cols.length == 1,
           s"lance: bucket transform needs (numBuckets, one column), got $t — " +
             "Spark plans storage-partitioned joins for single-column buckets")
-        Map("write.bucket-by" -> cols.head, "write.bucket-count" -> n.get)
+        LanceLayout.bucketProps(cols.head, n.get)
       case other => throw new UnsupportedOperationException(
         s"lance tables support only PARTITIONED BY (bucket(n, col)); got ${other.mkString(", ")}")
     }
@@ -207,19 +207,10 @@ class LanceCatalog extends TableCatalog with SupportsNamespaces
       // would group stale tags under the new transform and a storage-
       // partitioned join would silently drop matches — reject instead.
       val hasBucketedFragments = latest.fragments.exists(_.bucket.isDefined)
-      def bucketKind(k: String): Option[String] =
-        k.toLowerCase(java.util.Locale.ROOT) match {
-          case "write.bucket-by" | "bucketby" => Some("by")
-          case "write.bucket-count" | "bucketcount" => Some("count")
-          case _ => None
-        }
-      def currentBucket(kind: String): Option[String] =
-        if (kind == "by") LanceOptions.any(props, "write.bucket-by", "bucketBy")
-        else LanceOptions.any(props, "write.bucket-count", "bucketCount")
       changes.foreach {
         case set: TableChange.SetProperty =>
-          bucketKind(set.property()).foreach { kind =>
-            if (hasBucketedFragments && !currentBucket(kind).contains(set.value()))
+          LanceLayout.bucketSetting(props, set.property()).foreach { current =>
+            if (hasBucketedFragments && !current.contains(set.value()))
               throw new UnsupportedOperationException(
                 s"lance: cannot change ${set.property()} on a table whose fragments " +
                   "are already bucket-tagged (stale tags would make storage-" +
@@ -227,7 +218,7 @@ class LanceCatalog extends TableCatalog with SupportsNamespaces
           }
           props += (set.property() -> set.value())
         case rm: TableChange.RemoveProperty =>
-          if (bucketKind(rm.property()).isDefined && hasBucketedFragments)
+          if (LanceLayout.bucketSetting(props, rm.property()).isDefined && hasBucketedFragments)
             throw new UnsupportedOperationException(
               s"lance: cannot remove ${rm.property()} on a table whose fragments " +
                 "are already bucket-tagged (a later re-bucketing under a different " +

@@ -13,6 +13,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util
 import scala.jdk.CollectionConverters._
 
+/** Option lookup that tolerates the key-lowercasing of
+  * `CaseInsensitiveStringMap` (V2 reader/writer options arrive lowercased). */
+object LanceOptions {
+  def get(m: Map[String, String], key: String): Option[String] =
+    m.get(key).orElse(m.get(key.toLowerCase(java.util.Locale.ROOT)))
+
+  /** First present key wins — for reference-name aliases. */
+  def any(m: Map[String, String], keys: String*): Option[String] =
+    keys.view.flatMap(get(m, _)).headOption
+}
+
 /** `format("lance")` entry point — a Spark-native dataset source with the
   * capabilities of the reference connector (fragment-parallel batch read
   * with projection/filter/limit/aggregate pushdown, append/overwrite
@@ -22,60 +33,12 @@ import scala.jdk.CollectionConverters._
   * splits), LanceSink.java (append/overwrite, max-rows-per-file),
   * LanceDynamicTableSource.java:61-63 (the four pushdown mix-ins).
   *
-  * Writes to a *new* path go through the V1 `CreatableRelationProvider`
-  * fallback (Spark only routes `df.write.save(path)` to a V2 table that
-  * already has a schema); existing datasets take the V2 BatchWrite path.
-  * Both end in the same manifest commit.
+  * Path saves go through the V1 `CreatableRelationProvider` fallback
+  * (bare-path tables claim no BATCH_WRITE, so Spark routes every
+  * `df.write.save(path)` here, appends included); catalog tables take the
+  * V2 BatchWrite path. Both shape rows by the same [[LanceLayout]] and end
+  * in the same staged-fragment commit ([[LanceWriteUtil.commitStaged]]).
   */
-/** Option lookup that tolerates the key-lowercasing of
-  * `CaseInsensitiveStringMap` (V2 reader/writer options arrive lowercased). */
-object LanceOptions {
-  def get(m: Map[String, String], key: String): Option[String] =
-    m.get(key).orElse(m.get(key.toLowerCase(java.util.Locale.ROOT)))
-
-  /** First present key wins — for reference-name aliases (the reference's
-    * write.max-rows-per-file ≡ this connector's original maxRowsPerFile). */
-  def any(m: Map[String, String], keys: String*): Option[String] =
-    keys.view.flatMap(get(m, _)).headOption
-
-  private def isBucketKey(k: String): Boolean = {
-    val n = k.toLowerCase(java.util.Locale.ROOT)
-    n == "write.bucket-by" || n == "bucketby" ||
-      n == "write.bucket-count" || n == "bucketcount"
-  }
-
-  /** The declared bucket layout as (key field index, key type, bucket
-    * count) against `schema` — what a row-level writer needs to demux
-    * re-inserted rows into correctly-tagged per-bucket fragments. The
-    * layout is SINGLE-column by construction (LanceWrite rejects
-    * multi-column write.bucket-by at write time — Spark's SPJ planner
-    * doesn't match multi-argument bucket transforms); a comma here means
-    * a manifest this writer never produced, so fail loudly rather than
-    * silently skipping the demux and stranding the SPJ layout on the
-    * first UPDATE/MERGE. */
-  def bucketSpecOf(opts: Map[String, String],
-                   schema: org.apache.spark.sql.types.StructType):
-      Option[(Int, org.apache.spark.sql.types.DataType, Int)] = for {
-    cs <- any(opts, "write.bucket-by", "bucketBy")
-    nS <- any(opts, "write.bucket-count", "bucketCount")
-    c = cs.trim
-    _ = require(!c.contains(','),
-      s"lance: write.bucket-by declares multiple columns ($c) — this layout " +
-        "is single-column only and such a manifest should not exist")
-    if schema.fieldNames.contains(c)
-  } yield (schema.fieldIndex(c), schema(c).dataType, nS.toInt)
-
-  /** Merge per-write/per-read overrides over table properties — EXCEPT the
-    * bucket layout: once the table declares write.bucket-by/-count, an
-    * override would tag new fragments under a different layout than the
-    * one scans report through KeyGroupedPartitioning, silently corrupting
-    * storage-partitioned joins. The persisted layout always wins. */
-  def mergeWriteOptions(props: Map[String, String],
-                        overrides: Map[String, String]): Map[String, String] =
-    if (any(props, "write.bucket-by", "bucketBy").isEmpty) props ++ overrides
-    else props ++ overrides.filterNot { case (k, _) => isBucketKey(k) }
-}
-
 class LanceDataSource extends TableProvider with DataSourceRegister
     with CreatableRelationProvider {
 
@@ -99,26 +62,23 @@ class LanceDataSource extends TableProvider with DataSourceRegister
   }
 
   /** V1 path-write fallback: handles dataset creation (plus append/
-    * overwrite) for `df.write.format("lance").save(path)`. Stages through
-    * Spark's native parquet writer, then commits fragments + manifest. */
+    * overwrite) for `df.write.format("lance").save(path)`. Stages the
+    * fragments, then commits them against the one manifest it loaded. */
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
                               parameters: Map[String, String],
                               data: Dataset[Row]): BaseRelation = {
     val root = parameters.getOrElse("path",
       throw new IllegalArgumentException("lance: 'path' required"))
     val spark = sqlContext.sparkSession
-    val conf = Shim.hadoopConf(spark, parameters)
-    val exists = ManifestIO.exists(root, conf)
-    mode match {
-      case SaveMode.ErrorIfExists if exists =>
+    val prev = ManifestIO.loadLatest(root, Shim.hadoopConf(spark, parameters))
+    val resultSchema = (mode, prev) match {
+      case (SaveMode.ErrorIfExists, Some(_)) =>
         throw new IllegalStateException(s"lance dataset already exists: $root")
-      case SaveMode.Ignore if exists => ()
-      case m =>
-        LanceBatchSave.write(spark, data.toDF(), root, parameters,
-          append = m == SaveMode.Append && exists)
+      case (SaveMode.Ignore, Some(m)) => m.schema
+      case (m, _) =>
+        LanceBatchSave.write(spark, data.toDF(), root, parameters, prev,
+          append = m == SaveMode.Append && prev.isDefined).schema
     }
-    val resultSchema = ManifestIO.loadLatest(root, conf).map(_.schema)
-      .getOrElse(data.schema)
     new BaseRelation {
       override def sqlContext: SQLContext = spark.sqlContext
       override def schema: StructType = resultSchema
@@ -166,26 +126,13 @@ class LanceTable(val root: String, extraOptions: Map[String, String],
   /** A bucketed layout reports its bucket(N, col) transform (DESCRIBE
     * shows it; writes still enforce it via RequiresDistributionAndOrdering
     * from the same persisted properties). */
-  override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] = {
-    val props = manifest.map(_.props).getOrElse(Map.empty)
-    (LanceOptions.any(props, "write.bucket-by", "bucketBy"),
-      LanceOptions.any(props, "write.bucket-count", "bucketCount")) match {
-      case (Some(c), Some(n)) =>
-        Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
-          n.toInt, c.split(',').map(_.trim).filter(_.nonEmpty): _*))
-      case _ => Array.empty
-    }
-  }
+  override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
+    LanceLayout(manifest.map(_.props).getOrElse(Map.empty)).bucketTransform.toArray
 
-  /** Table properties act as write defaults; explicit reader/writer options
-    * override them — EXCEPT the bucket layout: once the table declares
-    * write.bucket-by/-count, a per-write override would tag new fragments
-    * under a different layout than the one scans report through
-    * KeyGroupedPartitioning, silently corrupting storage-partitioned
-    * joins. The persisted layout always wins. */
+  /** Table properties act as write defaults; explicit reader/writer
+    * options override them, except the bucket layout ([[LanceLayout.merge]]). */
   private def tableOptions: Map[String, String] =
-    LanceOptions.mergeWriteOptions(
-      manifest.map(_.props).getOrElse(Map.empty), extraOptions)
+    LanceLayout.merge(manifest.map(_.props).getOrElse(Map.empty), extraOptions)
 
   /** read.change-feed=true surfaces `_change_type` as a declared column —
     * batch scans label every row "insert"; the streaming source emits

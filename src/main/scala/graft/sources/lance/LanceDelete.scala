@@ -418,18 +418,17 @@ object LanceDelete {
                    options: Map[String, String] = Map.empty): Unit = {
     val conf = Shim.hadoopConf(spark, options)
     val planning = ManifestIO.loadLatest(root, conf)
+    val layout = LanceLayout(LanceLayout.merge(planning.map(_.props).getOrElse(Map.empty), options))
     // staged fragments carry no bucket tags: on a bucketed table they
     // would silently break the partitionId-is-the-bucket invariant every
     // SPJ/read.buckets consumer relies on — that path must go through
     // the catalog REPLACE WHERE (whose V2 writer buckets the data)
-    planning.map(_.props).foreach(p =>
-      require(!p.keys.exists(_.startsWith("write.bucket")),
-        s"lance replaceWhere: $root is bucketed; use the catalog INSERT ... REPLACE WHERE path"))
+    require(layout.bucketBy.isEmpty,
+      s"lance replaceWhere: $root is bucketed; use the catalog INSERT ... REPLACE WHERE path")
     // fragments commit under the TABLE schema: a type clash on a shared
     // column would commit physical data the manifest schema misdescribes
     planning.map(_.schema).foreach(ts => requireTypeCompat(df.schema, ts, root))
-    val newFrags = LanceBatchSave.stageFragments(spark, df, root,
-      LanceOptions.any(options, "maxRowsPerFile"))
+    val newFrags = LanceBatchSave.stageFragments(spark, df, root, layout.maxRowsPerFile)
     val plan = planning.map(m =>
       planDelete(spark, root, m, filters, options, replaceWhere = true))
     val committed = ManifestIO.commit(root, conf) { prev =>

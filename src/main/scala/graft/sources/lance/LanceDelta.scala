@@ -128,20 +128,19 @@ class LanceDeltaWriteBuilder(spark: SparkSession, root: String,
     val fileIdx = rowIdSchema.fieldIndex(LanceMetadata.FileCol)
     val posIdx = rowIdSchema.fieldIndex(LanceMetadata.PosCol)
     val (factory, conf) = Shim.parquetWriterFactory(spark, rowSchema, opts)
-    val maxRows = LanceOptions.any(opts, "maxRowsPerFile", "write.max-rows-per-file")
-      .map(_.toLong).getOrElse(Long.MaxValue)
+    val layout = LanceLayout(opts)
     // A bucketed table KEEPS its storage-partitioned-join layout under
     // row-level DML: re-inserted rows demux executor-side into per-bucket
     // fragment writers tagged with the same pmod(murmur3(key), N) the
     // write shuffle would assign. Without this, one UPDATE would strand
     // an untagged fragment and silently turn off KGP (sound but a silent
     // loss of the shuffle-free join) until the next compaction.
-    val bucketSpec = LanceOptions.bucketSpecOf(opts, rowSchema)
+    val bucketSpec = layout.demux(rowSchema)
 
     new DeltaWrite {
       override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
         override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DeltaWriterFactory =
-          new LanceDeltaWriterFactory(root, rowSchema, factory, conf, maxRows,
+          new LanceDeltaWriterFactory(root, rowSchema, factory, conf, layout.maxRowsPerFile,
             fileIdx, posIdx, bucketSpec)
 
         override def commit(messages: Array[WriterCommitMessage]): Unit = {

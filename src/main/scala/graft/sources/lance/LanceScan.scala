@@ -513,9 +513,9 @@ class LanceScanBuilder(spark: SparkSession, root: String, manifest: LanceManifes
       require(manifest.fragments.isEmpty || manifest.fragments.exists(_.bucket.isDefined),
         "lance read.buckets: table has no bucketed fragments — write it with " +
           "write.bucket-by/write.bucket-count before restricted probes")
-      LanceOptions.any(manifest.props, "write.bucket-count", "bucketCount")
+      LanceLayout(manifest.props).bucketCount
         .foreach { n =>
-          val bad = ids.filter(_ >= n.toInt)
+          val bad = ids.filter(_ >= n)
           require(bad.isEmpty, s"lance read.buckets: ids " +
             s"${bad.toSeq.sorted.mkString(",")} out of range for the table's " +
             s"persisted write.bucket-count=$n")
@@ -932,13 +932,13 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
   // catalog's `bucket` function makes the two transforms comparable).
   // Anything irregular — a mixed append, a dropped bucket column — makes
   // this report UnknownPartitioning, which is always sound.
-  private val bucketSpec: Option[(Seq[String], Int)] = for {
-    cs <- LanceOptions.any(manifest.props, "write.bucket-by", "bucketBy")
-    n <- LanceOptions.any(manifest.props, "write.bucket-count", "bucketCount")
-    cols = cs.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    if cols.nonEmpty && cols.forall(manifest.schema.fieldNames.contains)
-    if initialFragments.nonEmpty && initialFragments.forall(_.bucket.isDefined)
-  } yield (cols, n.toInt)
+  private val bucketSpec: Option[(Seq[String], Int)] = {
+    val layout = LanceLayout(manifest.props)
+    val cols = layout.bucketBy
+    if (cols.isEmpty || !cols.forall(manifest.schema.fieldNames.contains) ||
+        initialFragments.isEmpty || initialFragments.exists(_.bucket.isEmpty)) None
+    else layout.bucketCount.map(n => (cols, n))
+  }
 
   // ---- persisted-sort report -------------------------------------------
   // Fragments written through a distribution+ordering-enforced path

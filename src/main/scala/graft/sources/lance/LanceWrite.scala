@@ -50,109 +50,45 @@ class LanceWriteBuilder(spark: SparkSession, root: String, info: LogicalWriteInf
     // extraOptions already hold the table's persisted properties; per-write
     // options may not override a declared bucket layout (stale tags would
     // corrupt storage-partitioned joins)
-    val opts = LanceOptions.mergeWriteOptions(extraOptions,
+    val opts = LanceLayout.merge(extraOptions,
       scala.jdk.CollectionConverters.MapHasAsScala(info.options).asScala.toMap)
     val schema = info.schema()
     // driver-side: Spark's parquet OutputWriterFactory + configured job conf
     val (factory, conf) = Shim.parquetWriterFactory(spark, schema, opts)
-    val maxRows = LanceOptions.any(opts, "maxRowsPerFile", "write.max-rows-per-file")
-      .map(_.toLong).getOrElse(Long.MaxValue)
-    new LanceWrite(root, schema, factory, conf, maxRows, truncateAll,
-      info.queryId(), overwriteFilters, opts)
+    new LanceWrite(root, schema, factory, conf, LanceLayout(opts).forWrite(schema),
+      truncateAll, info.queryId(), overwriteFilters, opts)
   }
 }
 
 case class LanceFragmentsCommitMessage(fragments: Seq[FragmentMeta]) extends WriterCommitMessage
 
+/** The catalog write (INSERT, CTAS, REPLACE WHERE, streaming appends) under
+  * the table's [[LanceLayout]], declared through
+  * RequiresDistributionAndOrdering so Catalyst plans the shuffle and sort:
+  *  - `write.cluster-by` asks for a GLOBAL sort on the listed columns
+  *    (OrderedDistribution): fragments come out key-clustered with tight
+  *    min/max ranges, so scan pruning and the single-valued GROUP BY stats
+  *    pushdown apply. AQE sizes the partitions unless
+  *    `write.cluster-partitions` fixes their count;
+  *  - `write.bucket-by` + `write.bucket-count` require a
+  *    ClusteredDistribution with an explicit partition count, so Spark
+  *    shuffles via HashPartitioning(col, N) and a task's partitionId IS
+  *    pmod(murmur3(col), N): each fragment it writes carries that bucket
+  *    tag. Tables bucketed the same way are co-partitioned on disk, their
+  *    scans report KeyGroupedPartitioning and equi-joins between them skip
+  *    the shuffle (storage-partitioned join). The explicit count also keeps
+  *    AQE from coalescing, which would break the id = bucket equality;
+  *  - every layout's within-partition order ([[LanceLayout.orderedCols]])
+  *    is stamped on each fragment, so scans report it back.
+  * Spark honors the distribution per micro-batch too (SPARK-34183), so
+  * streamed fragments join the same layout. */
 class LanceWrite(root: String, schema: StructType,
                  factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-                 conf: SerializableConfiguration, maxRowsPerFile: Long,
+                 conf: SerializableConfiguration, layout: LanceLayout,
                  truncateAll: Boolean, queryId: String,
                  overwriteFilters: Array[Filter] = Array.empty,
                  options: Map[String, String] = Map.empty) extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-
-  // ---- clustered writes --------------------------------------------------
-  // write.cluster-by asks Spark for a GLOBAL sort on the listed columns
-  // (OrderedDistribution): fragments come out key-clustered with tight
-  // min/max ranges, so scan pruning and the single-valued GROUP BY stats
-  // pushdown apply to SQL-written tables. write.sort-by adds (or, alone,
-  // only requests) a within-partition sort — cheap clustering for rollups.
-  // Declared via RequiresDistributionAndOrdering so Catalyst plans the
-  // shuffle/sort (AQE sizes the partitions; requiredNumPartitions=0).
-  private def csv(key: String): Seq[String] =
-    LanceOptions.any(options, key).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-  private val clusterBy: Seq[String] = csv("write.cluster-by") ++ csv("clusterBy")
-  private val sortBy: Seq[String] = csv("write.sort-by") ++ csv("sortBy")
-  require((clusterBy ++ sortBy).forall(schema.fieldNames.contains),
-    s"lance write.cluster-by/sort-by: unknown column in " +
-      s"${(clusterBy ++ sortBy).filterNot(schema.fieldNames.contains).mkString(", ")}")
-  require(clusterBy.forall { c =>
-    import org.apache.spark.sql.types._
-    schema(c).dataType match {
-      case _: ArrayType | _: MapType | _: StructType | BinaryType => false
-      case _ => true
-    }
-  }, s"lance write.cluster-by needs atomic-typed columns, got " +
-    schema.filter(f => clusterBy.contains(f.name)).map(_.dataType).mkString(", "))
-  private val clusterIdx: Array[Int] = clusterBy.map(schema.fieldIndex).toArray
-
-  // ---- bucketed writes ---------------------------------------------------
-  // write.bucket-by=<col> + write.bucket-count=N hash-cluster rows into N
-  // stable buckets: the required ClusteredDistribution with an explicit
-  // partition count makes Spark shuffle via HashPartitioning(col, N), so a
-  // task's partitionId IS pmod(murmur3(col), N) — each fragment a task
-  // writes carries that bucket tag. Two tables bucketed (col, N) the same
-  // way are co-partitioned on disk; the scan reports KeyGroupedPartitioning
-  // over bucket(N, col) and equi-joins between them skip the shuffle
-  // entirely (storage-partitioned join) — at 100 TB the single biggest
-  // shuffle eliminated. The explicit numPartitions also keeps AQE from
-  // coalescing (which would break the id=bucket equality).
-  private val bucketBy: Option[(Seq[String], Int)] = {
-    val cs = csv("write.bucket-by") ++ csv("bucketBy")
-    val n = LanceOptions.any(options, "write.bucket-count", "bucketCount")
-    (cs, n) match {
-      case (cols, Some(k)) if cols.nonEmpty =>
-        cols.foreach(c => require(schema.fieldNames.contains(c),
-          s"lance write.bucket-by: unknown column $c"))
-        // single-column only: Spark's storage-partitioned-join planner does
-        // not match multi-argument bucket transforms (verified empirically
-        // on 4.1 — both sides re-shuffle), so a multi-column layout would
-        // pay the write clustering without ever earning the join
-        require(cols.size == 1,
-          s"lance write.bucket-by takes ONE column (got ${cols.mkString(", ")}): " +
-            "Spark plans storage-partitioned joins for single-column buckets")
-        require(k.toInt > 0, s"lance write.bucket-count must be positive, got $k")
-        require(clusterBy.isEmpty, "lance: write.bucket-by and write.cluster-by are exclusive")
-        Some((cols, k.toInt))
-      case (Nil, None) => None
-      case _ => throw new IllegalArgumentException(
-        "lance: write.bucket-by and write.bucket-count must be set together")
-    }
-  }
-
-  // ---- atomic property stamps --------------------------------------------
-  // write options prefixed `commit.prop.` fold into the manifest's table
-  // properties IN THE SAME COMMIT as the data — the channel that lets a
-  // writer swap data and a metadata pointer (e.g. the vector-index sidecar
-  // `index.meta`) atomically: readers resolve one manifest and see either
-  // the old pair or the new pair, never a mix, whatever the crash point.
-  private val propStamps: Map[String, String] = options.collect {
-    case (k, v) if k.toLowerCase(java.util.Locale.ROOT).startsWith("commit.prop.") =>
-      k.substring("commit.prop.".length) -> v
-  }
-
-  // bucketed writes persist their (col, N) layout as table properties in
-  // the same commit: readers then validate `read.buckets` ids against the
-  // persisted count (a mismatched modulus would silently drop matching
-  // rows) and path-written tables gain the SPJ bucket report without a
-  // separate ALTER. Appends whose layout disagrees with the persisted one
-  // are rejected in the commit closure (their fragment tags would come
-  // from a different modulus than the standing fragments').
-  private val bucketStamps: Map[String, String] = bucketBy.map { case (cols, n) =>
-    Map("write.bucket-by" -> cols.head, "write.bucket-count" -> n.toString)
-  }.getOrElse(Map.empty)
 
   private def sortOrders(cols: Seq[String]) = cols.map(c =>
     org.apache.spark.sql.connector.expressions.Expressions.sort(
@@ -160,31 +96,32 @@ class LanceWrite(root: String, schema: StructType,
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
 
   override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-    if (bucketBy.isDefined)
-      org.apache.spark.sql.connector.distributions.Distributions.clustered(
-        bucketBy.get._1.map(c =>
-          org.apache.spark.sql.connector.expressions.Expressions.column(c)
-            : org.apache.spark.sql.connector.expressions.Expression).toArray)
-    else if (clusterBy.nonEmpty)
-      org.apache.spark.sql.connector.distributions.Distributions.ordered(sortOrders(clusterBy))
-    else org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-
-  /** The within-partition sort Spark enforces for this write — every
-    * produced fragment is stamped with it, so scans can report the order
-    * back (SupportsReportOrdering) and co-bucketed SMJs skip their sorts. */
-  private val orderedCols: Seq[String] =
-    (clusterBy ++ bucketBy.toSeq.flatMap(_._1) ++ sortBy).distinct
+    layout.bucket match {
+      case Some((c, _)) =>
+        org.apache.spark.sql.connector.distributions.Distributions.clustered(
+          Array(org.apache.spark.sql.connector.expressions.Expressions.column(c)))
+      case None if layout.clusterBy.nonEmpty =>
+        org.apache.spark.sql.connector.distributions.Distributions.ordered(
+          sortOrders(layout.clusterBy))
+      case None => org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+    }
 
   override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    sortOrders(orderedCols)
+    sortOrders(layout.orderedCols)
 
-  override def requiredNumPartitions(): Int = bucketBy.map(_._2).getOrElse(
-    LanceOptions.any(options, "write.cluster-partitions").map(_.toInt).getOrElse(0))
+  override def requiredNumPartitions(): Int =
+    layout.bucket.map(_._2).orElse(layout.clusterPartitions).getOrElse(0)
+
+  // clusterIdx rides along for batch and streaming writes alike: fragments
+  // roll at cluster-key boundaries, so each is single-valued in the key
+  // (grouped stats pushdown, tight range pruning)
+  private def writerFactory = new LanceDataWriterFactory(root, schema, factory, conf,
+    layout.maxRowsPerFile, layout.clusterBy.map(schema.fieldIndex).toArray,
+    bucketed = layout.bucket.isDefined, sortedBy = layout.orderedCols)
 
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new LanceDataWriterFactory(root, schema, factory, conf, maxRowsPerFile, clusterIdx,
-        bucketed = bucketBy.isDefined, sortedBy = orderedCols)
+      writerFactory
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val newFrags = messages.flatMap {
@@ -199,31 +136,11 @@ class LanceWrite(root: String, schema: StructType,
           LanceDelete.planDelete(spark, root, m, overwriteFilters, options,
             replaceWhere = true))
       }
-      // delta recomputed from the latest manifest on every retry, so a lost
-      // version race re-applies against the winner's fragment list instead
-      // of committing a stale merge (which would drop the winner's rows)
-      val committed = ManifestIO.commit(root, conf.value) { prev =>
-        // keep the DECLARED table schema, not the write query's schema — a
-        // query schema can be narrower (non-nullable literals) and would
-        // make columns "required" that old fragments don't even have
-        val tableSchema = prev.map(_.schema).getOrElse(schema)
-        val stamped = LanceWriteUtil.stampRacedDrops(newFrags, schema, tableSchema)
-        val frags = LanceWriteUtil.foldReplaceCommit(prev, truncateAll,
-          replacePlan, overwriteFilters.nonEmpty, stamped)
-        if (frags == null) None
-        else {
-          if (!truncateAll)
-            LanceWriteUtil.requireBucketCompat(
-              prev.map(_.props).getOrElse(Map.empty), bucketStamps)
-          val stamps = propStamps ++ bucketStamps
-          Some(LanceCommit(tableSchema, frags, prev.map(_.txns).getOrElse(Map.empty),
-            if (truncateAll) "overwrite"
-            else if (replacePlan.isDefined) "replace" else "append",
-            props = if (stamps.isEmpty) None
-                    else Some(prev.map(_.props).getOrElse(Map.empty) ++ stamps)))
-        }
-      }
-      if (committed.isEmpty) {
+      val mode =
+        if (truncateAll) LanceWriteUtil.Staged.Truncate(installSchema = false)
+        else if (overwriteFilters.nonEmpty) LanceWriteUtil.Staged.ReplaceWhere(replacePlan)
+        else LanceWriteUtil.Staged.Append
+      if (LanceWriteUtil.commitStaged(root, conf.value, newFrags, schema, layout, mode).isEmpty) {
         replacePlan.foreach(_.abandon(root, conf.value))
         LanceWriteUtil.deleteFragments(root, messages, conf)
         throw new IllegalStateException(
@@ -236,16 +153,8 @@ class LanceWrite(root: String, schema: StructType,
   }
 
   override def toStreaming: StreamingWrite = new StreamingWrite {
-    // Spark honors requiredDistribution/numPartitions per micro-batch
-    // (SPARK-34183), so the partitionId-is-the-bucket invariant holds for
-    // streaming appends too — streamed fragments join the SPJ layout
     override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-      // clusterIdx rides along: streamed fragments roll at cluster-key
-      // boundaries exactly like batch ones, so the single-valued-fragment
-      // property (grouped stats pushdown, tight range pruning) holds for
-      // streaming appends to a write.cluster-by table too
-      new LanceStreamingDataWriterFactory(root, schema, factory, conf, maxRowsPerFile,
-        clusterIdx, bucketed = bucketBy.isDefined, sortedBy = orderedCols)
+      writerFactory
 
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
       val newFrags = messages.flatMap {
@@ -277,45 +186,69 @@ class LanceWrite(root: String, schema: StructType,
 }
 
 object LanceWriteUtil {
-  /** A bucketed APPEND must agree with the table's persisted bucket layout:
-    * fragments tagged under a different (col, modulus) would poison every
-    * later `read.buckets` probe (ids computed with one N, tags written with
-    * another ⇒ silently dropped rows). Overwrites may install any layout —
-    * the old fragments are gone. No-op when the append is unbucketed or the
-    * table has no persisted layout yet (legacy tables gain the stamp on
-    * their next bucketed write). */
-  def requireBucketCompat(prevProps: Map[String, String],
-                          stamps: Map[String, String]): Unit =
-    if (stamps.nonEmpty) Seq("write.bucket-by", "write.bucket-count").foreach { k =>
-      prevProps.get(k).foreach(prev => require(prev == stamps(k),
-        s"lance bucketed append: $k=${stamps(k)} conflicts with the table's " +
-          s"persisted $k=$prev — rewrite the table (overwrite) to change its " +
-          "bucket layout"))
+  /** How a staged batch write folds into the table. */
+  sealed trait Staged
+  object Staged {
+    case object Append extends Staged
+    /** Replaces every fragment. A path overwrite installs the writer's
+      * schema; a catalog truncate keeps the declared one. */
+    final case class Truncate(installSchema: Boolean) extends Staged
+    /** Deletes what `plan` matches in the commit that appends; None when
+      * the table was absent at planning. */
+    final case class ReplaceWhere(plan: Option[LanceDelete.DeletePlan]) extends Staged
+  }
+
+  /** The one commit of a staged batch write, path save and catalog write
+    * alike, recomputed against the latest manifest on every retry: stamp
+    * columns a concurrent DROP raced away hidden, check a bucketed append
+    * against the persisted bucket layout, fold the fragments
+    * ([[foldStaged]]) and set the layout's property and bucket stamps in
+    * the same commit. Returns the committed manifest, or None when a
+    * REPLACE WHERE lost a conflict (the caller abandons what it staged).
+    * `loaded` is the latest manifest as the caller already read it. */
+  def commitStaged(root: String, conf: org.apache.hadoop.conf.Configuration,
+                   staged: Seq[FragmentMeta], writerSchema: StructType,
+                   layout: LanceLayout, mode: Staged,
+                   loaded: Option[Option[LanceManifest]] = None): Option[LanceManifest] =
+    ManifestIO.commit(root, conf, loaded) { prev =>
+      // keep the DECLARED table schema, not the write query's schema — a
+      // query schema can be narrower (non-nullable literals) and would
+      // make columns "required" that old fragments don't even have
+      val tableSchema = mode match {
+        case Staged.Truncate(true) => writerSchema
+        case _ => prev.map(_.schema).getOrElse(writerSchema)
+      }
+      val prevProps = prev.map(_.props).getOrElse(Map.empty)
+      foldStaged(prev, mode, stampRacedDrops(staged, writerSchema, tableSchema)).map { frags =>
+        val op = mode match {
+          case Staged.Append | Staged.ReplaceWhere(None) => "append"
+          case Staged.Truncate(_) => "overwrite"
+          case Staged.ReplaceWhere(Some(_)) => "replace"
+        }
+        if (op != "overwrite") layout.requireBucketCompat(prevProps)
+        LanceCommit(tableSchema, frags, prev.map(_.txns).getOrElse(Map.empty), op,
+          props = if (layout.stamps.isEmpty) None else Some(prevProps ++ layout.stamps))
+      }
     }
 
-  /** Commit-time fragment fold for the V2 writer, recomputed against the
-    * LATEST manifest on every retry. Returns null to signal abort (the
-    * caller cleans staged files and throws the retryable conflict error):
+  /** The fragment list a staged write commits against `prev`, or None to
+    * abort:
     *  - a planned REPLACE WHERE whose plan conflicts with the current
     *    manifest (unseen fragments not provably disjoint from the filter);
     *  - a REPLACE WHERE planned against an ABSENT table when a concurrent
-    *    CREATE won the race — the plain-append arm would keep the winner's
-    *    rows matching the filter beside the replacement data, silently
-    *    breaking the REPLACE WHERE invariant (mirrors
-    *    LanceDelete.replaceWhere's (Some(cur), None) arm). */
-  def foldReplaceCommit(prev: Option[LanceManifest], truncateAll: Boolean,
-                        replacePlan: Option[LanceDelete.DeletePlan],
-                        replaceWhere: Boolean,
-                        stamped: Seq[FragmentMeta]): Seq[FragmentMeta] = {
+    *    CREATE won the race — a plain append would keep the winner's rows
+    *    matching the filter beside the replacement data, silently breaking
+    *    the REPLACE WHERE invariant (mirrors LanceDelete.replaceWhere's
+    *    (Some(cur), None) arm). */
+  def foldStaged(prev: Option[LanceManifest], mode: Staged,
+                 stamped: Seq[FragmentMeta]): Option[Seq[FragmentMeta]] = {
     val base = prev.map(_.fragments).getOrElse(Seq.empty)
-    (truncateAll, replacePlan) match {
-      case (true, _) => stamped
-      case (false, Some(plan)) =>
-        if (prev.exists(plan.conflictsWith)) null // concurrent touch: abort
-        else plan(base) ++ stamped
-      case _ =>
-        if (replaceWhere && prev.isDefined) null // table appeared: abort
-        else base ++ stamped
+    mode match {
+      case Staged.Truncate(_) => Some(stamped)
+      case Staged.ReplaceWhere(Some(plan)) =>
+        if (prev.exists(plan.conflictsWith)) None else Some(plan(base) ++ stamped)
+      case Staged.ReplaceWhere(None) if prev.isDefined => None
+      case _ => Some(base ++ stamped)
     }
   }
 
@@ -350,28 +283,20 @@ object LanceWriteUtil {
   }
 }
 
+/** Creates the fragment writers of a batch or a streaming write. */
 class LanceDataWriterFactory(root: String, schema: StructType,
                              factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
                              conf: SerializableConfiguration, maxRowsPerFile: Long,
                              clusterIdx: Array[Int] = Array.empty,
                              bucketed: Boolean = false,
                              sortedBy: Seq[String] = Nil)
-    extends DataWriterFactory {
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new LanceDataWriter(root, schema, factory, conf, maxRowsPerFile, partitionId, taskId,
       clusterIdx, bucketed, sortedBy)
-}
 
-class LanceStreamingDataWriterFactory(root: String, schema: StructType,
-                                      factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-                                      conf: SerializableConfiguration, maxRowsPerFile: Long,
-                                      clusterIdx: Array[Int] = Array.empty,
-                                      bucketed: Boolean = false,
-                                      sortedBy: Seq[String] = Nil)
-    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new LanceDataWriter(root, schema, factory, conf, maxRowsPerFile, partitionId, taskId,
-      clusterIdx, bucketed, sortedBy)
+    createWriter(partitionId, taskId)
 }
 
 /** Executor-side fragment writer: rolls to a new parquet file every
@@ -665,88 +590,49 @@ class LanceDataWriter(root: String, schema: StructType,
   * footer loop (that serial pass was the r2 scale-killer: at 10^5-10^6
   * fragments it serialized the whole write on the driver). */
 object LanceBatchSave {
+  /** Save `df` at `root`, whose latest manifest is `prev`, and return the
+    * committed manifest. The rows are shaped by the same [[LanceLayout]] a
+    * catalog write requests through RequiresDistributionAndOrdering, from
+    * the options over the persisted table properties: bucketed rows hash-
+    * repartition by the bucket column into the bucket count, clustered ones
+    * range-repartition by the cluster columns, and every partition sorts by
+    * the layout's order. An append keeps the table's schema; an overwrite
+    * installs `df`'s. */
   def write(spark: SparkSession, df: DataFrame, root: String,
-            options: Map[String, String], append: Boolean): Unit = {
-    val conf = Shim.hadoopConf(spark, options)
-    val prev = ManifestIO.loadLatest(root, conf)
+            options: Map[String, String], prev: Option[LanceManifest],
+            append: Boolean): LanceManifest = {
     prev.foreach { m =>
       if (append) require(
         m.schema.fields.map(f => (f.name, f.dataType)).sameElements(
           df.schema.fields.map(f => (f.name, f.dataType))),
         s"lance append schema mismatch: table=${m.schema.simpleString} df=${df.schema.simpleString}")
     }
-    // V1-path parity with the V2 RequiresDistributionAndOrdering contract:
-    // cluster/sort/bucket options (explicit or persisted table props) shape
-    // the frame before staging. Like the V2 path, a persisted bucket
-    // layout always beats per-write overrides (stale tags would corrupt
-    // storage-partitioned joins).
-    val opts = LanceOptions.mergeWriteOptions(
-      prev.map(_.props).getOrElse(Map.empty), options)
-    def csv(key: String): Seq[String] = LanceOptions.any(opts, key).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val clusterBy = csv("write.cluster-by") ++ csv("clusterBy")
-    val bucketCols = csv("write.bucket-by") ++ csv("bucketBy")
-    val bucketN = LanceOptions.any(opts, "write.bucket-count", "bucketCount").map(_.toInt)
-    val bucketBy: Option[(String, Int)] = (bucketCols, bucketN) match {
-      case (Seq(c), Some(n)) =>
-        require(n > 0, s"lance write.bucket-count must be positive, got $n")
-        require(clusterBy.isEmpty, "lance: write.bucket-by and write.cluster-by are exclusive")
-        require(df.schema.fieldNames.contains(c), s"lance write.bucket-by: unknown column $c")
-        Some((c, n))
-      case (Nil, None) => None
-      case (cs, _) if cs.size > 1 => throw new IllegalArgumentException(
-        s"lance write.bucket-by takes ONE column (got ${cs.mkString(", ")})")
-      case _ => throw new IllegalArgumentException(
-        "lance: write.bucket-by and write.bucket-count must be set together")
-    }
-    val sortBy = (clusterBy ++ bucketCols ++ csv("write.sort-by") ++ csv("sortBy")).distinct
+    val layout = LanceLayout(LanceLayout.merge(prev.map(_.props).getOrElse(Map.empty), options))
+      .forWrite(df.schema)
     val shaped = {
       import org.apache.spark.sql.functions.col
-      val parts = LanceOptions.any(opts, "write.cluster-partitions").map(_.toInt)
-      val cl = bucketBy match {
+      val clusterCols = layout.clusterBy.map(col)
+      val cl = layout.bucket match {
         // repartition(n, col) = HashPartitioning: partitionId is
         // pmod(murmur3(col), n), the same bucket function the V2 path's
         // ClusteredDistribution + requiredNumPartitions yields
         case Some((c, n)) => df.repartition(n, col(c))
-        case None =>
-          if (clusterBy.isEmpty) df
-          else parts.map(n => df.repartitionByRange(n, clusterBy.map(col): _*))
-            .getOrElse(df.repartitionByRange(clusterBy.map(col): _*))
+        case None if clusterCols.isEmpty => df
+        case None => layout.clusterPartitions
+          .map(n => df.repartitionByRange(n, clusterCols: _*))
+          .getOrElse(df.repartitionByRange(clusterCols: _*))
       }
-      if (sortBy.isEmpty) cl else cl.sortWithinPartitions(sortBy.map(col): _*)
+      // range repartitioning alone does not order rows inside a partition
+      if (layout.orderedCols.isEmpty) cl
+      else cl.sortWithinPartitions(layout.orderedCols.map(col): _*)
     }
-    val newFrags = stageFragments(spark, shaped, root,
-      LanceOptions.any(opts, "maxRowsPerFile", "write.max-rows-per-file"), clusterBy,
-      // the V1 path only sorts within partitions by write.sort-by (range
-      // repartitioning alone does not order rows inside a partition)
-      sortedBy = sortBy, bucketed = bucketBy.isDefined)
-    // `commit.prop.` options fold into the manifest props IN this commit —
-    // the same atomic stamp channel as the V2 batch path (see LanceWrite)
-    val propStamps = options.collect {
-      case (k, v) if k.toLowerCase(java.util.Locale.ROOT).startsWith("commit.prop.") =>
-        k.substring("commit.prop.".length) -> v
-    }
-    // persist the bucket layout exactly as the V2 path does (stamp +
-    // append-compat check) so read.buckets validation covers V1 writes too
-    val bucketStamps = bucketBy.map { case (c, n) =>
-      Map("write.bucket-by" -> c, "write.bucket-count" -> n.toString)
-    }.getOrElse(Map.empty)
-    ManifestIO.commit(root, conf) { latest =>
-      // append keeps the winner's (possibly concurrently-evolved) schema;
-      // overwrite installs the new one
-      val tableSchema = if (append) latest.map(_.schema).getOrElse(df.schema) else df.schema
-      val stamped = LanceWriteUtil.stampRacedDrops(newFrags, df.schema, tableSchema)
-      val frags = if (append) latest.map(_.fragments).getOrElse(Seq.empty) ++ stamped
-                  else stamped
-      if (append)
-        LanceWriteUtil.requireBucketCompat(
-          latest.map(_.props).getOrElse(Map.empty), bucketStamps)
-      val stamps = propStamps ++ bucketStamps
-      Some(LanceCommit(tableSchema, frags, latest.map(_.txns).getOrElse(Map.empty),
-        if (append) "append" else "overwrite",
-        props = if (stamps.isEmpty) None
-                else Some(latest.map(_.props).getOrElse(Map.empty) ++ stamps)))
-    }
+    val newFrags = stageFragments(spark, shaped, root, layout.maxRowsPerFile,
+      layout.clusterBy, sortedBy = layout.orderedCols, bucketed = layout.bucket.isDefined)
+    LanceWriteUtil.commitStaged(root, Shim.hadoopConf(spark, options), newFrags, df.schema,
+      layout,
+      if (append) LanceWriteUtil.Staged.Append
+      else LanceWriteUtil.Staged.Truncate(installSchema = true),
+      loaded = Some(prev)).get
   }
 
   /** Write `df` as fragments under `data/` (executor-parallel, rolling by
@@ -754,7 +640,7 @@ object LanceBatchSave {
     * attempt aborts its own files; any leftovers from lost executors are
     * unreferenced and reclaimed by vacuum. */
   private[lance] def stageFragments(spark: SparkSession, df: DataFrame, root: String,
-                                    maxRowsPerFile: Option[String],
+                                    maxRowsPerFile: Long,
                                     clusterBy: Seq[String] = Nil,
                                     sortedBy: Seq[String] = Nil,
                                     bucketed: Boolean = false): Seq[FragmentMeta] =
@@ -766,18 +652,17 @@ object LanceBatchSave {
     * so a caller can tag each partition's output. */
   private[lance] def stagePartitions(spark: SparkSession, rows: RDD[InternalRow],
                                      schema: StructType, root: String,
-                                     maxRowsPerFile: Option[String],
+                                     maxRowsPerFile: Long,
                                      clusterBy: Seq[String] = Nil,
                                      sortedBy: Seq[String] = Nil,
                                      bucketed: Boolean = false): Array[Seq[FragmentMeta]] = {
     val clusterIdx = clusterBy.map(schema.fieldIndex).toArray
     val (factory, conf) = Shim.parquetWriterFactory(spark, schema, Map.empty)
-    val maxRows = maxRowsPerFile.map(_.toLong).getOrElse(Long.MaxValue)
     ManifestIO.fs(root, conf.value).mkdirs(new Path(root, ManifestIO.DataDir))
     rows.mapPartitionsWithIndex { (pid, rows) =>
       if (rows.isEmpty) Iterator.single(Seq.empty[FragmentMeta])
       else {
-        val w = new LanceDataWriter(root, schema, factory, conf, maxRows, pid, pid.toLong,
+        val w = new LanceDataWriter(root, schema, factory, conf, maxRowsPerFile, pid, pid.toLong,
           clusterIdx, bucketed = bucketed, sortedBy = sortedBy)
         try {
           rows.foreach(w.write)
@@ -893,14 +778,7 @@ object LanceMaintenance {
     // concatenating sorted inputs is not sorted, so re-sort the merged
     // partitions (cheap — they are compaction-sized) and stamp the result,
     // preserving the sort report that lets co-bucketed SMJs skip sorts
-    val orderCols: Seq[String] = {
-      def csv(ks: String*) = LanceOptions.any(m.props, ks: _*).toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      (csv("write.cluster-by", "clusterBy") ++
-        csv("write.bucket-by", "bucketBy") ++
-        csv("write.sort-by", "sortBy")).distinct
-        .filter(m.schema.fieldNames.contains)
-    }
+    val orderCols = LanceLayout(m.props).orderedCols.filter(m.schema.fieldNames.contains)
     val small = candidates.filter(fr => groups.contains(fr.bucket))
     val read = maskedRead(spark, root, m.version, m.schema, small)
     val scan = Shim.toRdd(read)
@@ -910,24 +788,32 @@ object LanceMaintenance {
     val sorted = if (orderCols.isEmpty) merged
                  else merged.mapPartitions(Shim.sortWithinPartition(read.schema, orderCols))
     val newFrags = LanceBatchSave.stagePartitions(spark, sorted, read.schema, root,
-        Some(targetRows.toString), sortedBy = orderCols)
+        targetRows, sortedBy = orderCols)
       .zip(coalescer.buckets).toSeq
       .flatMap { case (frs, b) => frs.map(_.copy(bucket = b)) }
-    val smallBy = small.map(f => f.path -> f).toMap
+    commitRewrite(spark, root, small, newFrags, "compact")
+  }
+
+  /** The one commit of a rewrite (compaction, Z-order): swap `rewritten`
+    * for `newFrags` in the latest manifest, first writer wins. A concurrent
+    * commit that removed a rewritten fragment (another compaction or
+    * overwrite) or layered a new delete vector on it would make this commit
+    * duplicate, resurrect or un-delete rows, so the rewrite abandons its
+    * staged fragments instead. Returns the latest manifest either way. */
+  private def commitRewrite(spark: SparkSession, root: String, rewritten: Seq[FragmentMeta],
+                            newFrags: Seq[FragmentMeta], what: String): LanceManifest = {
+    val conf = Shim.hadoopConf(spark, Map.empty)
+    val oldBy = rewritten.map(f => f.path -> f).toMap
     ManifestIO.commit(root, conf) { latest =>
       val cur = latest.getOrElse(
-        throw new IllegalStateException(s"lance dataset disappeared during compact: $root"))
-      // conflict check: a concurrent commit removed one of the fragments we
-      // rewrote (another compaction/overwrite) or layered a new DV on it —
-      // committing would duplicate, resurrect, or un-delete rows. Abandon
-      // instead (first writer wins).
+        throw new IllegalStateException(s"lance dataset disappeared during $what: $root"))
       val curBy = cur.fragments.map(f => f.path -> f).toMap
-      val ok = smallBy.forall { case (p, fr) =>
+      val ok = oldBy.forall { case (p, fr) =>
         curBy.get(p).exists(_.deletes.map(_.path) == fr.deletes.map(_.path))
       }
       if (!ok) None
       else Some(LanceCommit(cur.schema,
-        cur.fragments.filterNot(f => smallBy.contains(f.path)) ++ newFrags,
+        cur.fragments.filterNot(f => oldBy.contains(f.path)) ++ newFrags,
         cur.txns, "compact"))
     }.getOrElse {
       LanceWriteUtil.abandonFragments(root, newFrags, conf)
@@ -1056,26 +942,8 @@ object LanceMaintenance {
       .repartitionByRange(parts, col("__zkey"))
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
-    val newFrags = LanceBatchSave.stageFragments(spark, clustered, root,
-      Some(targetRows.toString))
-    val oldBy = m.fragments.map(f => f.path -> f).toMap
-    ManifestIO.commit(root, conf) { latest =>
-      val cur = latest.getOrElse(
-        throw new IllegalStateException(s"lance dataset disappeared during zorder: $root"))
-      // same first-writer-wins conflict rule as compact: any concurrent
-      // change to a rewritten fragment (drop, new DV) aborts this rewrite
-      val curBy = cur.fragments.map(f => f.path -> f).toMap
-      val ok = oldBy.forall { case (p, fr) =>
-        curBy.get(p).exists(_.deletes.map(_.path) == fr.deletes.map(_.path))
-      }
-      if (!ok) None
-      else Some(LanceCommit(cur.schema,
-        cur.fragments.filterNot(f => oldBy.contains(f.path)) ++ newFrags,
-        cur.txns, "compact"))
-    }.getOrElse {
-      LanceWriteUtil.abandonFragments(root, newFrags, conf)
-      ManifestIO.loadLatest(root, conf).get
-    }
+    val newFrags = LanceBatchSave.stageFragments(spark, clustered, root, targetRows)
+    commitRewrite(spark, root, m.fragments, newFrags, "zorder")
   }
 
   /** Keep only the last `retainVersions` manifests and delete data files no

@@ -184,6 +184,9 @@ object ManifestIO {
     * fragments + mine) instead of silently dropping the winner's fragments.
     * `make` returning None abandons the commit (e.g. a replayed streaming
     * epoch detected against the freshest manifest); the result is then None.
+    * `loaded` is the latest manifest as the caller already read it: the
+    * first attempt runs against it instead of reading it again (a stale one
+    * only loses the version race and retries against a fresh read).
     *
     * Exclusivity primitive: on local filesystems, write a temp file and
     * hard-link it to the version name — link(2) is atomic and fails if the
@@ -193,13 +196,14 @@ object ManifestIO {
     * atomic-exclusive. Object stores without atomic create-exclusive need
     * an external commit coordinator, as every manifest-based format does.
     */
-  def commit(root: String, conf: Configuration)
+  def commit(root: String, conf: Configuration,
+             loaded: Option[Option[LanceManifest]] = None)
             (make: Option[LanceManifest] => Option[LanceCommit]): Option[LanceManifest] = {
     val f = fs(root, conf)
     f.mkdirs(versionsPath(root))
     var attempt = 0
+    var latest = loaded.getOrElse(loadLatest(root, conf))
     while (attempt < 50) {
-      val latest = loadLatest(root, conf)
       make(latest) match {
         case None => return None
         case Some(c) =>
@@ -212,6 +216,7 @@ object ManifestIO {
           }
       }
       attempt += 1 // version raced; re-read the winner and re-apply the delta
+      latest = loadLatest(root, conf)
     }
     throw new IllegalStateException(s"lance commit: lost the version race 50 times at $root")
   }

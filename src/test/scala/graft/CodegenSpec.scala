@@ -47,6 +47,9 @@ class CodegenSpec extends SparkSpec {
     "sample_dsir", "sample_dsir_gumbel",
     // greedy MMR selection (MmrSelect)
     "knn_mmr",
+    // sign random projection: 16 VectorDistance dots against literal
+    // ±1 rows in one projection
+    "emb_project",
     // streaming bodies (r17 follow-through): foreachBatch plans build
     // outside the batch keys' lineage, so run one member of each
     // streaming family under the same strict confs — the micro-batch

@@ -1835,31 +1835,31 @@ class LanceSpec extends SparkSpec {
   }
 
   test("option-merge helpers: bucket overrides strip, bucket spec resolves aliases") {
-    import graft.sources.lance.LanceOptions
+    import graft.sources.lance.LanceLayout
     import org.apache.spark.sql.types._
     val props = Map("write.bucket-by" -> "id", "write.bucket-count" -> "8",
       "write.sort-by" -> "ts")
     // declared layout wins over every alias spelling of an override
-    val merged = LanceOptions.mergeWriteOptions(props,
+    val merged = LanceLayout.merge(props,
       Map("write.bucket-count" -> "16", "bucketBy" -> "v",
         "BUCKETCOUNT" -> "32", "maxRowsPerFile" -> "100"))
-    assert(LanceOptions.any(merged, "write.bucket-count", "bucketCount") === Some("8"))
-    assert(LanceOptions.any(merged, "write.bucket-by", "bucketBy") === Some("id"))
-    assert(merged("maxRowsPerFile") === "100") // non-layout overrides pass
+    assert(LanceLayout(merged).bucketCount === Some(8))
+    assert(LanceLayout(merged).bucketBy === Seq("id"))
+    assert(LanceLayout(merged).maxRowsPerFile === 100L) // non-layout overrides pass
     // no declared layout → overrides flow through
-    val free = LanceOptions.mergeWriteOptions(Map.empty,
+    val free = LanceLayout.merge(Map.empty,
       Map("write.bucket-by" -> "k", "write.bucket-count" -> "4"))
-    assert(LanceOptions.any(free, "write.bucket-by", "bucketBy") === Some("k"))
-    // bucketSpecOf: field index + type + count; unknown column declines
+    assert(LanceLayout(free).bucketBy === Seq("k"))
+    // demux: field index + type + count; unknown column declines
     val schema = StructType(Seq(
       StructField("a", LongType), StructField("id", IntegerType)))
-    assert(LanceOptions.bucketSpecOf(props, schema) === Some((1, IntegerType, 8)))
-    assert(LanceOptions.bucketSpecOf(
-      Map("bucketBy" -> "id", "bucketCount" -> "4"), schema) ===
+    assert(LanceLayout(props).demux(schema) === Some((1, IntegerType, 8)))
+    assert(LanceLayout(
+      Map("bucketBy" -> "id", "bucketCount" -> "4")).demux(schema) ===
       Some((1, IntegerType, 4)))
-    assert(LanceOptions.bucketSpecOf(
-      Map("write.bucket-by" -> "gone", "write.bucket-count" -> "4"), schema).isEmpty)
-    assert(LanceOptions.bucketSpecOf(Map("write.bucket-by" -> "id"), schema).isEmpty)
+    assert(LanceLayout(
+      Map("write.bucket-by" -> "gone", "write.bucket-count" -> "4")).demux(schema).isEmpty)
+    assert(LanceLayout(Map("write.bucket-by" -> "id")).demux(schema).isEmpty)
   }
 
   test("bucket layout is immutable once fragments carry tags") {
@@ -2383,24 +2383,22 @@ class LanceSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType)))
     val winner = LanceManifest(1L, schema, Seq(fm("data/w.parquet")))
     val staged = Seq(fm("data/new.parquet"))
+    import LanceWriteUtil.Staged
     // plain append onto an existing table: base ++ staged
-    assert(LanceWriteUtil.foldReplaceCommit(Some(winner), truncateAll = false,
-      None, replaceWhere = false, staged) === winner.fragments ++ staged)
+    assert(LanceWriteUtil.foldStaged(Some(winner), Staged.Append, staged) ===
+      Some(winner.fragments ++ staged))
     // plain first write: staged only
-    assert(LanceWriteUtil.foldReplaceCommit(None, truncateAll = false,
-      None, replaceWhere = false, staged) === staged)
+    assert(LanceWriteUtil.foldStaged(None, Staged.Append, staged) === Some(staged))
     // truncating overwrite replaces everything
-    assert(LanceWriteUtil.foldReplaceCommit(Some(winner), truncateAll = true,
-      None, replaceWhere = true, staged) === staged)
+    assert(LanceWriteUtil.foldStaged(Some(winner), Staged.Truncate(installSchema = false),
+      staged) === Some(staged))
     // REPLACE WHERE planned against an ABSENT table, still absent at commit:
     // degenerates to the plain first write
-    assert(LanceWriteUtil.foldReplaceCommit(None, truncateAll = false,
-      None, replaceWhere = true, staged) === staged)
+    assert(LanceWriteUtil.foldStaged(None, Staged.ReplaceWhere(None), staged) === Some(staged))
     // ...but if a concurrent CREATE won the race, the fold must ABORT — a
     // plain append would keep the winner's filter-matching rows beside the
     // replacement data (the LanceDelete.replaceWhere race, catalog path)
-    assert(LanceWriteUtil.foldReplaceCommit(Some(winner), truncateAll = false,
-      None, replaceWhere = true, staged) == null,
+    assert(LanceWriteUtil.foldStaged(Some(winner), Staged.ReplaceWhere(None), staged).isEmpty,
       "catalog REPLACE WHERE plain-appended over a concurrently created table")
   }
 }
