@@ -69,11 +69,13 @@ object Dedup extends QueryModule {
     * guarantees) and the native [[graft.functions.LshBands]] generator;
     * the exact-Jaccard verify still decides, so the pair set is
     * unchanged. Pure projection; callers pick partitioning. */
-  private[graft] def bandKeys(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text"))
-      .withColumn("sh", graft.functions.shingle_hashes(col("text"), 3))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), one_perm_minhash(col("sh"), MinhashHashes, 42L).as("sig"))
+  private[graft] def bandKeys(docs: DataFrame): DataFrame = shingleBandKeys(shingleSets(docs))
+
+  /** [[bandKeys]] of (doc_id, sh) shingle sets ([[shingleSets]]): the
+    * MinHash + banding half, a projection, so a caller holding the sets
+    * derives the band keys without a second pass over the texts. */
+  private[graft] def shingleBandKeys(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), one_perm_minhash(col("sh"), MinhashHashes, 42L).as("sig"))
       .select(col("doc_id"), graft.functions.lsh_bands(col("sig"), Bands, RowsPerBand))
       .select(col("doc_id"), col("band_idx"), col("band_key"))
 

@@ -154,9 +154,16 @@ object StreamingOps extends QueryModule {
     * single-valued bid still live. Any fragment MISSING the stat falls
     * back to the scan-side aggregate (which still answers from stats via
     * the agg pushdown when possible). */
-  private[graft] def lastBidOf(s: SparkSession, path: String, colName: String = "bid"): Long = {
-    val conf = s.sparkContext.hadoopConfiguration
-    graft.sources.lance.ManifestIO.loadLatest(path, conf) match {
+  private[graft] def lastBidOf(s: SparkSession, path: String, colName: String = "bid"): Long =
+    lastBidIn(s, path, graft.sources.lance.ManifestIO.loadLatest(path,
+      s.sparkContext.hadoopConfiguration), colName)
+
+  /** [[lastBidOf]] answered from `loaded`, the table's latest manifest as
+    * the caller already read it. */
+  private def lastBidIn(s: SparkSession, path: String,
+                        loaded: Option[graft.sources.lance.LanceManifest],
+                        colName: String = "bid"): Long =
+    loaded match {
       case None => -1L
       case Some(m) =>
         val live = m.fragments.filter(_.liveRows > 0)
@@ -177,24 +184,17 @@ object StreamingOps extends QueryModule {
             }
         }
     }
-  }
 
-  /** Append `df` tagged with `bid` into the (optionally bucketed) lance
-    * state table at `path`, skipped when the table's recorded high-water
-    * mark already covers the bid — the per-table half of the replay
-    * guard; compute the mark once per batch with [[lastBidOf]]. */
+  /** Append `df` tagged with `bid` into the lance table at `path`,
+    * skipped when the table's recorded high-water mark already covers the
+    * bid — the per-table half of the replay guard; compute the mark once
+    * per batch with [[lastBidOf]]. */
   private def guardedAppend(s: SparkSession, df: DataFrame, path: String,
-                            bid: Long, lastBid: Long,
-                            bucketBy: String = null, buckets: Int = 0): Unit =
-    if (bid > lastBid) {
-      val w0 = df.withColumn("bid", lit(bid)).write.format("lance")
-      val w = if (bucketBy != null)
-        w0.option("write.bucket-by", bucketBy)
-          .option("write.bucket-count", buckets.toString)
-      else w0
-      w.mode(if (tableExists(s, path)) "append" else "overwrite")
+                            bid: Long, lastBid: Long): Unit =
+    if (bid > lastBid)
+      df.withColumn("bid", lit(bid)).write.format("lance")
+        .mode(if (tableExists(s, path)) "append" else "overwrite")
         .save(path)
-    }
 
   /** lance → filter/project → lance: the full source→sink path. The sink
     * commit is the manifest-txn exactly-once path; the source enumerates
@@ -509,9 +509,11 @@ object StreamingOps extends QueryModule {
   private val CompactSmallerThan = 1L << 20
   private val CompactTarget = 4L << 20
 
-  /** nearDedupBatch's default dst slot: the plain bid-guarded append.
-    * Named so callers that parameterize the slot (the semantic MV) and
-    * the default share one definition.
+  /** nearDedupBatch's default dst slot: the verified pairs, staged with
+    * the band keys and the state and committed before them, unless the
+    * dst table's mark already covers the batch. Named so callers that
+    * parameterize the slot (the semantic MV) and the default share one
+    * definition.
     *
     * coalesce(defaultParallelism) before the append (r21): the verified
     * frame inherits the verify join's probe-side partitioning — ONE
@@ -524,9 +526,9 @@ object StreamingOps extends QueryModule {
     * stage without a shuffle, so the write stays cores-wide parallel and
     * per-batch commit ops are history-flat (guide §6: output file
     * sizing; the object-store cost model pays per CREATE round trip). */
-  private val appendDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Unit =
-    (s, verified, _, dst, bid, dstBid) => guardedAppend(s,
-      verified.coalesce(s.sparkContext.defaultParallelism), dst, bid, dstBid)
+  private val appendDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Option[DataFrame] =
+    (s, verified, _, _, bid, dstBid) =>
+      if (bid > dstBid) Some(verified.coalesce(s.sparkContext.defaultParallelism)) else None
 
   private def streamNearDedup(s: SparkSession, dir: String): DataFrame = {
     // "/t" subpaths: the datasets must NOT pre-exist (the exists() check
@@ -552,37 +554,6 @@ object StreamingOps extends QueryModule {
     * (the uncadenced twins in equivalence specs pass it deliberately). */
   private[graft] val DefaultCompactEvery = 16
 
-  /** The shared streaming near-dedup micro-batch body — ONE implementation
-    * of the guard → bucket-cover probe → capped candidates → verify →
-    * ordered guarded appends skeleton the text and image twins both run
-    * (they differ only in how a batch becomes (band keys, exact-verify
-    * state) and in the exact verification itself).
-    *
-    * Contract, maintained here so no copy can drift:
-    *  - per-TABLE batch-id high-water guards: foreachBatch is
-    *    at-least-once and this body appends to THREE tables — a crash
-    *    between any append and the checkpoint commit replays the batch,
-    *    and each table must skip what it already holds (re-appended band
-    *    keys / verify state would inflate state and double-feed later
-    *    batches' probes). Marks are read ONCE per batch (metadata-only —
-    *    see [[lastBidOf]]); a fully-applied replay skips the whole batch.
-    *  - history probes are `read.buckets`-restricted to the BATCH's
-    *    bucket cover (IO ∝ batch, not accumulated history), candidates
-    *    form only inside shared (band_idx, band_key) buckets, and the
-    *    skew cap runs over batch-relevant buckets only (history rows for
-    *    non-batch band keys can't form candidates).
-    *  - ORDERING INVARIANT: the dst (verified pairs) append MUST precede
-    *    the keysT append. A crash between them replays with the batch's
-    *    own band keys already in history; because dst committed first,
-    *    the replay skips the pair write — reversed, the replay would
-    *    recompute pairs against a history that now contains the batch
-    *    itself (double-fed skew counts, possible missed/extra pairs).
-    *
-    * `bandAndState` maps a micro-batch to its (band keys (doc_id,
-    * band_idx, band_key), exact-verify state keyed by doc_id) — both
-    * already localCheckpoint'd (each is consumed several times below).
-    * `verify(cand, allState)` turns capped candidate pairs + the
-    * batch∪history state into verified pair rows. */
   /** Run a per-micro-batch body and free every RDD the body itself
     * checkpointed. The batch bodies localCheckpoint their multiply-
     * consumed frames (band keys, states, deltas, upsert keys) through
@@ -614,6 +585,84 @@ object StreamingOps extends QueryModule {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** A micro-batch frame that the batch body consumes several times,
+    * checkpointed LAZILY: the body's first job (the key cover) computes it
+    * and keeps its blocks, so the checkpoint costs no job of its own. */
+  private def batchCkpt(df: DataFrame): DataFrame =
+    CheckpointTracker.ckpt(df, eager = false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** One Spark job over `df`, which also computes any lazily checkpointed
+    * frame under it: the bucket ids `pmod(murmur3(c), n)` of the values of
+    * every column `c` of `cols` — the bucketed write's own bucket function,
+    * so they are the buckets those values live in. Each partition sends at
+    * most `n` ids to the driver. */
+  private def bucketCover(df: DataFrame, cols: Seq[String], n: Int): Seq[Int] = {
+    val k = cols.size
+    val ids = org.apache.spark.sql.graft.Shim.toRdd(
+      df.select(cols.map(c => pmod(hash(col(c)), lit(n))): _*)).mapPartitions { rows =>
+      val buckets = new java.util.BitSet(n)
+      rows.foreach { r =>
+        var i = 0
+        while (i < k) { buckets.set(r.getInt(i)); i += 1 }
+      }
+      Iterator.single(buckets.toLongArray)
+    }.collect()
+    val cover = new java.util.BitSet(n)
+    ids.foreach(p => cover.or(java.util.BitSet.valueOf(p)))
+    cover.stream().toArray.toSeq
+  }
+
+  /** The shared streaming near-dedup micro-batch body — ONE implementation
+    * of the guard → bucket-cover probe → capped candidates → verify →
+    * ordered commits skeleton the text, image, video and embedding twins
+    * all run (they differ only in how a batch becomes (band keys,
+    * exact-verify state) and in the exact verification itself).
+    *
+    * A text batch that probes history runs 6 Spark jobs (a twin whose
+    * verify or dst slot runs jobs of its own adds those):
+    *  1. one pass over the batch: `bandAndState`'s checkpoint (the band
+    *     keys are a projection of it) fills as the job collects the batch
+    *     band keys' bucket cover;
+    *  2. the broadcast of the batch's band keys, which the key history
+    *     probe, restricted to that cover, semi-joins;
+    *  3. the capped candidates: the job checkpoints them and collects the
+    *     state bucket cover of their endpoints;
+    *  4. the verify's broadcasts (two for the pairs twins);
+    *  5. ONE staging job writes the verified pairs, the batch's band keys
+    *     and its state into their three tables.
+    *
+    * Contract, maintained here so no copy can drift:
+    *  - per-TABLE batch-id high-water guards: foreachBatch is
+    *    at-least-once and this body writes THREE tables — a crash between
+    *    any commit and the checkpoint commit replays the batch, and each
+    *    table must skip what it already holds (re-appended band keys /
+    *    verify state would inflate state and double-feed later batches'
+    *    probes). Each table's manifest is loaded ONCE per batch: it answers
+    *    the mark (see [[lastBidOf]]), whether history exists, and the
+    *    append's schema check, and its commit starts from it. A
+    *    fully-applied replay skips the whole batch.
+    *  - history probes are `read.buckets`-restricted to the BATCH's
+    *    bucket cover (IO ∝ batch, not accumulated history), candidates
+    *    form only inside shared (band_idx, band_key) buckets, and the
+    *    skew cap runs over batch-relevant buckets only (history rows for
+    *    non-batch band keys can't form candidates).
+    *  - ORDERING INVARIANT: dst (verified pairs) commits first, then the
+    *    band keys, then the state. A crash between the dst and keysT
+    *    commits replays with dst already holding the batch's pairs, so the
+    *    replay skips the pair write — reversed, the replay would recompute
+    *    pairs against a history that now contains the batch itself
+    *    (double-fed skew counts, possible missed/extra pairs). A commit
+    *    that fails deletes its own staged fragments and those of the
+    *    tables after it; the replay stages them again.
+    *
+    * `bandAndState` maps a micro-batch to its (band keys (doc_id,
+    * band_idx, band_key), exact-verify state keyed by doc_id); whatever
+    * both read more than once it checkpoints with [[batchCkpt]].
+    * `verify(cand, allState)` turns capped candidate pairs + the
+    * batch∪history state into verified pair rows. `writeDst` fills the
+    * dst slot: it returns the rows to stage with the keys and the state
+    * ([[appendDst]]), or writes dst itself, before them, and returns None
+    * (the semantic MV's atomic upsert). */
   private def nearDedupBatch(s: SparkSession,
       dst: String, keysT: String, stateT: String,
       stateBuckets: Int, bucketCap: Int,
@@ -621,28 +670,29 @@ object StreamingOps extends QueryModule {
       verify: (DataFrame, DataFrame) => DataFrame,
       compactEvery: Int = 0,
       vacuumOnCompact: Boolean = false,
-      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Unit =
+      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Option[DataFrame] =
         appendDst)(batch: DataFrame, bid: Long): Unit =
       freeingBatchCheckpoints {
-    val dstBid = lastBidOf(s, dst)
-    val keysBid = lastBidOf(s, keysT)
-    val stateBid = lastBidOf(s, stateT)
+    val conf = s.sparkContext.hadoopConfiguration
+    val Seq(dstM, keysM, stateM) =
+      Seq(dst, keysT, stateT).map(graft.sources.lance.ManifestIO.loadLatest(_, conf))
+    val dstBid = lastBidIn(s, dst, dstM)
+    val keysBid = lastBidIn(s, keysT, keysM)
+    val stateBid = lastBidIn(s, stateT, stateM)
     val fullyApplied = bid <= dstBid && bid <= keysBid && bid <= stateBid
     if (!fullyApplied) {
       val (bk, st) = labeled(s, "graft:ndd:band+state")(bandAndState(batch))
-      val histExists = tableExists(s, keysT)
       // the batch's bucket cover — ≤ stateBuckets ints, same hash the
       // bucketed write used (partitionId = pmod(murmur3(key), N))
-      val keyBuckets = labeled(s, "graft:ndd:key-cover")(bk
-        .select(pmod(hash(col("band_key")), lit(stateBuckets)).as("b"))
-        .distinct().collect().map(_.getInt(0)))
-      val batchKeys = bk.select("band_idx", "band_key").distinct()
+      val keyBuckets = labeled(s, "graft:ndd:band+key-cover")(
+        bucketCover(bk, Seq("band_key"), stateBuckets))
       val histKeys =
-        if (histExists && keyBuckets.nonEmpty)
+        if (keysM.isDefined && keyBuckets.nonEmpty)
           s.read.format("lance")
             .option("read.buckets", keyBuckets.mkString(","))
             .load(keysT)
-            .join(broadcast(batchKeys), Seq("band_idx", "band_key"), "left_semi")
+            .join(broadcast(bk.select("band_idx", "band_key")), Seq("band_idx", "band_key"),
+              "left_semi")
         else bk.limit(0)
       val allKeys = bk.unionByName(histKeys.select("doc_id", "band_idx", "band_key"))
       // candidate generation (r20): for CAPPED families, ONE grouped
@@ -657,7 +707,7 @@ object StreamingOps extends QueryModule {
       // equal on both paths). The UNCAPPED semantic family keeps the join
       // shape: collecting an unbounded cell into one aggregation row is
       // the memory hazard the chunked join exists to avoid.
-      val cand = labeled(s, "graft:ndd:candidates")(CheckpointTracker.ckpt(
+      val cand = labeled(s, "graft:ndd:candidates")(batchCkpt(
         if (bucketCap < Int.MaxValue)
           bk.withColumn("f", lit(true))
             .unionByName(histKeys.select("doc_id", "band_idx", "band_key")
@@ -685,26 +735,29 @@ object StreamingOps extends QueryModule {
             .distinct()
         }))
       // exact-verify state probe, same bucket discipline on doc_id
-      val stBuckets = labeled(s, "graft:ndd:state-cover")(
-        cand.select(pmod(hash(col("a_id")), lit(stateBuckets)).as("b"))
-        .union(cand.select(pmod(hash(col("b_id")), lit(stateBuckets)).as("b")))
-        .distinct().collect().map(_.getInt(0)))
+      val stBuckets = labeled(s, "graft:ndd:candidates+state-cover")(
+        bucketCover(cand, Seq("a_id", "b_id"), stateBuckets))
       val histState =
-        if (histExists && stBuckets.nonEmpty)
+        if (keysM.isDefined && stBuckets.nonEmpty)
           s.read.format("lance")
             .option("read.buckets", stBuckets.mkString(","))
             .load(stateT)
         else st.limit(0)
       val verified = verify(cand,
         st.unionByName(histState.select(st.columns.map(col).toSeq: _*)))
-      // `writeDst` defaults to the plain guarded append; the semantic-MV
-      // twin swaps in an atomic labels upsert — SAME position in the
-      // ordering invariant (dst before keys/state), same bid guard
-      labeled(s, "graft:ndd:verify+dst")(writeDst(s, verified, st, dst, bid, dstBid))
-      labeled(s, "graft:ndd:append-keys")(
-        guardedAppend(s, bk, keysT, bid, keysBid, "band_key", stateBuckets))
-      labeled(s, "graft:ndd:append-state")(
-        guardedAppend(s, st, stateT, bid, stateBid, "doc_id", stateBuckets))
+      val dstRows = labeled(s, "graft:ndd:verify+dst")(writeDst(s, verified, st, dst, bid, dstBid))
+      def bucketed(c: String) =
+        Map("write.bucket-by" -> c, "write.bucket-count" -> stateBuckets.toString)
+      val saves = Seq(
+        dstRows.map(rows => (dst, rows, Map.empty[String, String], dstM)),
+        Option.when(bid > keysBid)((keysT, bk, bucketed("band_key"), keysM)),
+        Option.when(bid > stateBid)((stateT, st, bucketed("doc_id"), stateM))).flatten
+      if (saves.nonEmpty)
+        labeled(s, "graft:ndd:stage+commit")(graft.sources.lance.LanceBatchSave.saveAll(s,
+          saves.map { case (t, rows, opts, m) =>
+            graft.sources.lance.LanceBatchSave.plan(s, rows.withColumn("bid", lit(bid)), t, opts,
+              m, append = m.isDefined)
+          }))
       // MAINTENANCE CADENCE (r17, from the object-store op audit): probe
       // read ops grow with accumulated state FRAGMENTS (1 HEAD + 1 GET
       // each), not bytes — folding small fragments every `compactEvery`
@@ -744,6 +797,14 @@ object StreamingOps extends QueryModule {
     ()
   }
 
+  /** The schema of the parquet files staged in `srcDir` (None when it
+    * holds no `part-` file): the schema `s.read.parquet(srcDir)` infers,
+    * read from the first file's footer on the driver, without a job. */
+  private[graft] def stagedSchema(s: SparkSession, srcDir: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    fileNames(s, srcDir).filter(_.startsWith("part-")).sorted.headOption.map(f =>
+      org.apache.spark.sql.graft.Shim.parquetFileSchema(s, s"$srcDir/$f"))
+
   /** The near-dedup pipeline with externally-visible state-table paths
     * (so specs can verify the bucket-tagged state layout the restricted
     * probes depend on), a configurable micro-batch count (so soaks can
@@ -761,21 +822,31 @@ object StreamingOps extends QueryModule {
     val ckpt = Option(ckpt0).getOrElse(tmp("sndd-ckpt"))
     val dst = Option(dst0).getOrElse(tmp("sndd-out") + "/t")
     val stateBuckets = if (buckets > 0) buckets else defaultStateBuckets(s)
-    val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     // several source files + maxFilesPerTrigger=1 => AvailableNow really
     // runs MULTIPLE micro-batches, so batch-vs-history is exercised.
     // A pre-populated srcDir is a RESUME (crash-replay spec) — rewriting
-    // it would read as new data (see streamDedupAt)
-    if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
-      d.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
+    // it would read as new data (see streamDedupAt); its schema comes
+    // from one footer, not from a Spark job over the documents table
+    val schema = stagedSchema(s, srcDir) match {
+      case Some(staged) =>
+        org.apache.spark.sql.types.StructType(Seq(staged("doc_id"), staged("text")))
+      case None =>
+        val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
+        d.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
+        d.schema
+    }
     drain(s, ckpt, None, SizedFrom(srcDir)) {
-      s.readStream.schema(d.schema)
+      s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
       .foreachBatch(nearDedupBatch(s, dst, keysT, setsT, stateBuckets,
         Dedup.BucketCap,
-        bandAndState = b => (CheckpointTracker.ckpt(Dedup.bandKeys(b)),
-          CheckpointTracker.ckpt(Dedup.shingleSets(b))),
+        bandAndState = b => {
+          // ONE pass: the band keys are a projection of the checkpointed
+          // shingle sets, which the verify reads as the batch's state
+          val sets = batchCkpt(Dedup.shingleSets(b))
+          (Dedup.shingleBandKeys(sets), sets)
+        },
         verify = (cand, allSets) => Dedup.verifyJaccard(cand, allSets),
         compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _)
     }
@@ -888,7 +959,7 @@ object StreamingOps extends QueryModule {
           // banding here and 3× by the verify tail); the banding is a
           // narrow projection of the checkpointed frames — no second
           // eager materialization job per micro-batch (r20)
-          val frames = CheckpointTracker.ckpt(Multimodal.decodeVideoFrameSigs(s, b))
+          val frames = batchCkpt(Multimodal.decodeVideoFrameSigs(s, b))
           val bk = Multimodal.imgBandKeys(frames, carry = Seq("doc_id", "frame_idx"))
             .select(col("doc_id"), col("band_idx"),
               (col("frame_idx") * lit(65536L) + col("band_key")).as("band_key"))
@@ -949,7 +1020,7 @@ object StreamingOps extends QueryModule {
       srcParts: Int, srcDir0: String, ckpt0: String, dst0: String,
       compactEvery: Int, vacuumOnCompact: Boolean,
       seed: (DataFrame, String) => Unit,
-      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Unit,
+      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Option[DataFrame],
       finalRead: String => DataFrame,
       // maps a source micro-batch to (vec_id, label, embedding) — identity
       // keeps the fixture label as the cell; the TRAINED twin replaces it
@@ -971,7 +1042,7 @@ object StreamingOps extends QueryModule {
       .foreachBatch(nearDedupBatch(s, dst, keysT, vecsT, stateBuckets,
         bucketCap,
         bandAndState = b => {
-          val bb = CheckpointTracker.ckpt(assign(b)) // one read feeds both views
+          val bb = batchCkpt(assign(b)) // one read feeds both views
           // both views are narrow projections of the checkpointed bb — no
           // second eager materialization job per micro-batch (r20)
           (bb.select(col("vec_id").as("doc_id"), lit(0).as("band_idx"),
@@ -1112,8 +1183,8 @@ object StreamingOps extends QueryModule {
     * fail-fast if a deployment gets the sizing wrong — a diagnosed abort
     * beats a silent driver OOM or a megabyte In-list in every probe. */
   private def semanticMvUpsert(s: SparkSession, pairs: DataFrame, st: DataFrame,
-                               survT: String, bid: Long, survBid: Long): Unit = {
-    if (bid <= survBid) return // the atomic upsert already committed
+                               survT: String, bid: Long, survBid: Long): Option[DataFrame] = {
+    if (bid <= survBid) return None // the atomic upsert already committed
     val batchVecs = st.select(col("doc_id").as("vec_id"), col("label"))
     val p = CheckpointTracker.ckpt(pairs.select("a_id", "b_id"))
     // r20 job-count optimization (measured: this section ran 12-13 jobs
@@ -1220,6 +1291,7 @@ object StreamingOps extends QueryModule {
         Array(org.apache.spark.sql.sources.In("lbl",
           touched.map(_.asInstanceOf[Any]))))
     }
+    None // committed here, before the batch stages its keys and state
   }
 
   /** One-time-per-table warning for the in-cadence zero-grace vacuum:
@@ -1312,7 +1384,7 @@ object StreamingOps extends QueryModule {
           // per sig, no shuffle) from the checkpointed sigs — recomputing
           // that projection per consumer is cheaper than a second eager
           // materialization job per micro-batch (r20)
-          val sigs = CheckpointTracker.ckpt(decode(s, b))
+          val sigs = batchCkpt(decode(s, b))
           (Multimodal.imgBandKeys(sigs), sigs)
         },
         verify = sigHammingVerify,

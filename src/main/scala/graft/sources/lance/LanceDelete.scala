@@ -428,7 +428,7 @@ object LanceDelete {
     // fragments commit under the TABLE schema: a type clash on a shared
     // column would commit physical data the manifest schema misdescribes
     planning.map(_.schema).foreach(ts => requireTypeCompat(df.schema, ts, root))
-    val newFrags = LanceBatchSave.stageFragments(spark, df, root, layout.maxRowsPerFile)
+    val newFrags = LanceBatchSave.stageFragments(spark, df, root, layout.maxRowsPerFile, options)
     val plan = planning.map(m =>
       planDelete(spark, root, m, filters, options, replaceWhere = true))
     val committed = ManifestIO.commit(root, conf) { prev =>

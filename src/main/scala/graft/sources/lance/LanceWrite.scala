@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.spark.Partition
-import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD, UnionRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -109,8 +109,12 @@ class LanceWrite(root: String, schema: StructType,
   override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
     sortOrders(layout.orderedCols)
 
+  // a partition count without a distribution is an error in Spark, and a
+  // path save ignores it there too
   override def requiredNumPartitions(): Int =
-    layout.bucket.map(_._2).orElse(layout.clusterPartitions).getOrElse(0)
+    layout.bucket.map(_._2)
+      .orElse(if (layout.clusterBy.nonEmpty) layout.clusterPartitions else None)
+      .getOrElse(0)
 
   // clusterIdx rides along for batch and streaming writes alike: fragments
   // roll at cluster-key boundaries, so each is single-valued in the key
@@ -588,19 +592,50 @@ class LanceDataWriter(root: String, schema: StructType,
   * only per-fragment work is folding the returned metadata into one
   * manifest commit. No staging directory, no renames, no driver-side
   * footer loop (that serial pass was the r2 scale-killer: at 10^5-10^6
-  * fragments it serialized the whole write on the driver). */
+  * fragments it serialized the whole write on the driver). Saves to
+  * several tables stage in one job and commit in order ([[saveAll]]). */
 object LanceBatchSave {
-  /** Save `df` at `root`, whose latest manifest is `prev`, and return the
-    * committed manifest. The rows are shaped by the same [[LanceLayout]] a
-    * catalog write requests through RequiresDistributionAndOrdering, from
-    * the options over the persisted table properties: bucketed rows hash-
-    * repartition by the bucket column into the bucket count, clustered ones
-    * range-repartition by the cluster columns, and every partition sorts by
-    * the layout's order. An append keeps the table's schema; an overwrite
-    * installs `df`'s. */
-  def write(spark: SparkSession, df: DataFrame, root: String,
-            options: Map[String, String], prev: Option[LanceManifest],
-            append: Boolean): LanceManifest = {
+  /** One table a staging job writes: `rows` of `schema` become fragments
+    * under `root`, rolling at `maxRowsPerFile` rows and at every
+    * `clusterBy` key change, tagged with their partition index as the
+    * bucket when `bucketed`, stamped `sortedBy`, through a parquet writer
+    * configured from `options` (write options reach the executors through
+    * its job conf). */
+  private[lance] final case class Target(root: String, rows: RDD[InternalRow],
+                                         schema: StructType, maxRowsPerFile: Long,
+                                         clusterBy: Seq[String] = Nil,
+                                         sortedBy: Seq[String] = Nil,
+                                         bucketed: Boolean = false,
+                                         options: Map[String, String] = Map.empty)
+
+  /** A save of a frame at `root`, planned against `prev`, the latest
+    * manifest as the caller loaded it: the rows are shaped and the layout
+    * checked; nothing is written yet. */
+  final class Planned private[LanceBatchSave] (val root: String, writerSchema: StructType,
+                                               layout: LanceLayout,
+                                               options: Map[String, String],
+                                               prev: Option[LanceManifest], append: Boolean,
+                                               private[lance] val target: Target) {
+    private[LanceBatchSave] def commit(spark: SparkSession,
+                                       frags: Seq[FragmentMeta]): LanceManifest =
+      LanceWriteUtil.commitStaged(root, Shim.hadoopConf(spark, options), frags, writerSchema,
+        layout,
+        if (append) LanceWriteUtil.Staged.Append
+        else LanceWriteUtil.Staged.Truncate(installSchema = true),
+        loaded = Some(prev)).get
+  }
+
+  /** Plan a save of `df` at `root`, whose latest manifest is `prev`. The
+    * rows are shaped by the same [[LanceLayout]] a catalog write requests
+    * through RequiresDistributionAndOrdering, from the options over the
+    * persisted table properties: bucketed rows hash-repartition by the
+    * bucket column into the bucket count, clustered ones range-repartition
+    * by the cluster columns, and every partition sorts by the layout's
+    * order. An append keeps the table's schema and must match it; an
+    * overwrite installs `df`'s. */
+  def plan(spark: SparkSession, df: DataFrame, root: String,
+           options: Map[String, String], prev: Option[LanceManifest],
+           append: Boolean): Planned = {
     prev.foreach { m =>
       if (append) require(
         m.schema.fields.map(f => (f.name, f.dataType)).sameElements(
@@ -626,13 +661,35 @@ object LanceBatchSave {
       if (layout.orderedCols.isEmpty) cl
       else cl.sortWithinPartitions(layout.orderedCols.map(col): _*)
     }
-    val newFrags = stageFragments(spark, shaped, root, layout.maxRowsPerFile,
-      layout.clusterBy, sortedBy = layout.orderedCols, bucketed = layout.bucket.isDefined)
-    LanceWriteUtil.commitStaged(root, Shim.hadoopConf(spark, options), newFrags, df.schema,
-      layout,
-      if (append) LanceWriteUtil.Staged.Append
-      else LanceWriteUtil.Staged.Truncate(installSchema = true),
-      loaded = Some(prev)).get
+    new Planned(root, df.schema, layout, options, prev, append,
+      Target(root, Shim.toRdd(shaped), df.schema, layout.maxRowsPerFile, layout.clusterBy,
+        layout.orderedCols, layout.bucket.isDefined, options))
+  }
+
+  /** Save `df` at `root`, whose latest manifest is `prev`, and return the
+    * committed manifest (see [[plan]]). */
+  def write(spark: SparkSession, df: DataFrame, root: String,
+            options: Map[String, String], prev: Option[LanceManifest],
+            append: Boolean): LanceManifest =
+    saveAll(spark, Seq(plan(spark, df, root, options, prev, append))).head
+
+  /** Stage every save in ONE Spark job, then commit them one table at a
+    * time in the given order, each against the manifest it was planned
+    * on. When a commit fails, the fragments staged for that table and for
+    * every later one are deleted (tables committed before it keep their
+    * commit) and the failure is rethrown. Returns the committed manifests. */
+  def saveAll(spark: SparkSession, saves: Seq[Planned]): Seq[LanceManifest] = {
+    val staged = stagePartitions(spark, saves.map(_.target)).map(_.toSeq.flatten)
+    val conf = spark.sessionState.newHadoopConf()
+    saves.indices.map { i =>
+      try saves(i).commit(spark, staged(i))
+      catch {
+        case t: Throwable =>
+          for (j <- i until saves.size)
+            LanceWriteUtil.abandonFragments(saves(j).root, staged(j), conf)
+          throw t
+      }
+    }
   }
 
   /** Write `df` as fragments under `data/` (executor-parallel, rolling by
@@ -641,37 +698,44 @@ object LanceBatchSave {
     * unreferenced and reclaimed by vacuum. */
   private[lance] def stageFragments(spark: SparkSession, df: DataFrame, root: String,
                                     maxRowsPerFile: Long,
-                                    clusterBy: Seq[String] = Nil,
-                                    sortedBy: Seq[String] = Nil,
-                                    bucketed: Boolean = false): Seq[FragmentMeta] =
-    stagePartitions(spark, Shim.toRdd(df), df.schema, root, maxRowsPerFile, clusterBy,
-      sortedBy, bucketed).toSeq.flatten
+                                    options: Map[String, String]): Seq[FragmentMeta] =
+    stagePartitions(spark, Seq(Target(root, Shim.toRdd(df), df.schema, maxRowsPerFile,
+      options = options))).head.toSeq.flatten
 
-  /** [[stageFragments]] over rows of `schema` in one Spark job; element i
-    * holds the fragments partition i wrote (empty for an empty partition),
-    * so a caller can tag each partition's output. */
-  private[lance] def stagePartitions(spark: SparkSession, rows: RDD[InternalRow],
-                                     schema: StructType, root: String,
-                                     maxRowsPerFile: Long,
-                                     clusterBy: Seq[String] = Nil,
-                                     sortedBy: Seq[String] = Nil,
-                                     bucketed: Boolean = false): Array[Seq[FragmentMeta]] = {
-    val clusterIdx = clusterBy.map(schema.fieldIndex).toArray
-    val (factory, conf) = Shim.parquetWriterFactory(spark, schema, Map.empty)
-    ManifestIO.fs(root, conf.value).mkdirs(new Path(root, ManifestIO.DataDir))
-    rows.mapPartitionsWithIndex { (pid, rows) =>
-      if (rows.isEmpty) Iterator.single(Seq.empty[FragmentMeta])
-      else {
-        val w = new LanceDataWriter(root, schema, factory, conf, maxRowsPerFile, pid, pid.toLong,
-          clusterIdx, bucketed = bucketed, sortedBy = sortedBy)
-        try {
-          rows.foreach(w.write)
-          Iterator.single(w.commit().asInstanceOf[LanceFragmentsCommitMessage].fragments)
-        } catch {
-          case t: Throwable => w.abort(); throw t
-        } finally w.close()
-      }
-    }.collect()
+  /** Stage every target in one Spark job over the concatenation of their
+    * partitions. Element t holds target t's output by partition: element
+    * i the fragments its partition i wrote (empty for an empty partition),
+    * so a caller can tag each partition's output. A writer sees its
+    * partition's index within its own target, which is also the bucket a
+    * bucketed target tags its fragments with. */
+  private[lance] def stagePartitions(spark: SparkSession,
+                                     targets: Seq[Target]): Seq[Array[Seq[FragmentMeta]]] = {
+    // each writer factory holds its target's Hadoop conf: broadcast, a
+    // task reads the factories without deserializing every target's conf
+    val writers = spark.sparkContext.broadcast(targets.map { t =>
+      val (factory, conf) = Shim.parquetWriterFactory(spark, t.schema, t.options)
+      ManifestIO.fs(t.root, conf.value).mkdirs(new Path(t.root, ManifestIO.DataDir))
+      new LanceDataWriterFactory(t.root, t.schema, factory, conf, t.maxRowsPerFile,
+        t.clusterBy.map(t.schema.fieldIndex).toArray, t.bucketed, t.sortedBy)
+    })
+    // partition i of the union is partition i - starts(t) of target t
+    val starts = targets.scanLeft(0)(_ + _.rows.getNumPartitions).toArray
+    val out = try new UnionRDD(spark.sparkContext, targets.map(_.rows)).mapPartitionsWithIndex {
+      (i, rows) =>
+        if (rows.isEmpty) Iterator.single(Seq.empty[FragmentMeta])
+        else {
+          val t = starts.lastIndexWhere(_ <= i)
+          val pid = i - starts(t)
+          val w = writers.value(t).createWriter(pid, pid.toLong)
+          try {
+            rows.foreach(w.write)
+            Iterator.single(w.commit().asInstanceOf[LanceFragmentsCommitMessage].fragments)
+          } catch {
+            case e: Throwable => w.abort(); throw e
+          } finally w.close()
+        }
+    }.collect() finally writers.destroy()
+    targets.indices.map(t => out.slice(starts(t), starts(t + 1)))
   }
 }
 
@@ -787,8 +851,8 @@ object LanceMaintenance {
     val merged = scan.coalesce(coalescer.numPartitions, shuffle = false, Some(coalescer))
     val sorted = if (orderCols.isEmpty) merged
                  else merged.mapPartitions(Shim.sortWithinPartition(read.schema, orderCols))
-    val newFrags = LanceBatchSave.stagePartitions(spark, sorted, read.schema, root,
-        targetRows, sortedBy = orderCols)
+    val newFrags = LanceBatchSave.stagePartitions(spark, Seq(LanceBatchSave.Target(root, sorted,
+        read.schema, targetRows, sortedBy = orderCols, options = m.props))).head
       .zip(coalescer.buckets).toSeq
       .flatMap { case (frs, b) => frs.map(_.copy(bucket = b)) }
     commitRewrite(spark, root, small, newFrags, "compact")
@@ -942,7 +1006,7 @@ object LanceMaintenance {
       .repartitionByRange(parts, col("__zkey"))
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
-    val newFrags = LanceBatchSave.stageFragments(spark, clustered, root, targetRows)
+    val newFrags = LanceBatchSave.stageFragments(spark, clustered, root, targetRows, m.props)
     commitRewrite(spark, root, m.fragments, newFrags, "zorder")
   }
 

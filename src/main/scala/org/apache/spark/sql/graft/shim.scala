@@ -130,6 +130,20 @@ object Shim {
   def parquetSupportsBatch(spark: SparkSession, requiredSchema: StructType): Boolean =
     new ParquetFileFormat().supportBatch(spark, requiredSchema)
 
+  /** The schema `spark.read.parquet` infers from the parquet file at
+    * `path`, read from its footer on the driver instead of in a Spark job:
+    * the Spark schema the writer recorded in the footer, else the converted
+    * parquet schema, made nullable as a file relation's schema is. */
+  def parquetFileSchema(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sessionState.newHadoopConf(), p,
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(p, footer),
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
+        spark.sessionState.conf)).asNullable
+  }
+
   def partitionedFile(path: String, start: Long, length: Long, fileSize: Long): PartitionedFile =
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), start, length,
       Array.empty[String], 0L, fileSize, Map.empty)

@@ -38,7 +38,9 @@ class WriteLayoutSpec extends SparkSpec {
       "write.sort-by" -> "v"),
     "max_rows" -> Map("write.max-rows-per-file" -> "40"),
     "max_rows_alias" -> Map("maxRowsPerFile" -> "40"),
-    "prop" -> Map("commit.prop.owner" -> "etl"))
+    "prop" -> Map("commit.prop.owner" -> "etl"),
+    // a partition count without cluster-by shapes nothing on either path
+    "cluster_partitions_alone" -> Map("write.cluster-partitions" -> "3"))
 
   /** What a layout decides about the written table. */
   private case class Shape(tags: Seq[Int], allTagged: Boolean, sortedBy: Set[Seq[String]],
@@ -146,6 +148,19 @@ class WriteLayoutSpec extends SparkSpec {
           s"the rejection should name $key and '$value': $v1")
       }
     }
+
+  test("a path save hands its write options to the fragment writers") {
+    // write.bloom-max-keys reaches the executors through the writer's job
+    // conf: over 10 keys a column's fragment gets no bloom in its sidecar
+    def sidecarBytes(opts: Map[String, String]): Long = {
+      val root = tmp()
+      spark.range(2000).selectExpr("id", "cast(id AS string) AS s").coalesce(1)
+        .write.format("lance").options(opts).save(root)
+      val dir = new org.apache.hadoop.fs.Path(root, graft.sources.lance.Hll.Dir)
+      ManifestIO.fs(root, conf).listStatus(dir).map(_.getLen).sum
+    }
+    assert(sidecarBytes(Map("write.bloom-max-keys" -> "10")) < sidecarBytes(Map.empty))
+  }
 
   test("path replaceWhere rolls fragments at either max-rows spelling") {
     for (key <- Seq("maxRowsPerFile", "write.max-rows-per-file")) {
