@@ -3,7 +3,8 @@ package graft.operators
 import graft.sources.lance.{LanceVectorOptions, VectorIndexOptions}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -15,8 +16,10 @@ import java.nio.charset.StandardCharsets
   * (LanceIndexBuilder.java:116-152 index types and params;
   * LanceVectorSearch.java:341-345 search knobs).
   *
-  * The index IS a lance dataset: the source rows cell-range-partitioned by
-  * their KMeans assignment (fragment stats → probe pruning), with an extra
+  * The index IS a lance dataset: the source rows written under
+  * `write.cluster-by=cell`, so every fragment holds one KMeans cell and a
+  * probe's `cell IN (…)` is decided by fragment stats alone (the scan
+  * consumes it; no per-probe-set filter reaches codegen), with an extra
   * PQ `codes` column for the *_PQ types, plus a JSON sidecar
   * (`<root>/_index/meta.json`) carrying centroids, PQ codebooks and the
   * HNSW adjacency — so a fresh session `load`s and searches without
@@ -46,6 +49,10 @@ object IndexBuild {
     * the SAME commit as the indexed data (see `commit.prop.` in
     * LanceWrite), which is what makes rebuild atomic. */
   val MetaProp = "index.meta"
+
+  /** The write layout of every index write: fragments roll at each cell
+    * change, so each holds one cell. */
+  private val IndexLayout = Map("write.cluster-by" -> "cell")
 
   private val toVec = udf { a: Seq[Double] => Vectors.dense(a.toArray) }
 
@@ -172,10 +179,8 @@ object IndexBuild {
     // data+sidecar pair, never new cell/codes under old centroids/codebooks
     val epochFile = s"meta-${java.util.UUID.randomUUID().toString.take(12)}.json"
     writeMeta(s, root, io, dim, centroids, pq, graph, Some(residual), epochFile, sq)
-    indexed
-      .repartitionByRange(cells, col("cell"))
-      .sortWithinPartitions("cell")
-      .write.format("lance")
+    indexed.write.format("lance")
+      .options(IndexLayout)
       .option(s"commit.prop.$MetaProp", epochFile)
       .mode(if (overwrite) "overwrite" else "errorifexists")
       .save(root)
@@ -211,14 +216,6 @@ object IndexBuild {
     if (base == 0.0) 1.0 else cur / base
   }
 
-  /** Incrementally index new rows into an EXISTING index: assign each row
-    * to its nearest stored centroid — O(new rows · cells · dim) map-only
-    * work, no retrain, no touch of the already-indexed corpus — PQ-encode
-    * with the stored codebooks, and append cell-clustered fragments whose
-    * tight cell ranges keep probe pruning exact. The index stays fresh
-    * under batch/streaming growth at any corpus size; centroid drift is
-    * repaired by an occasional full rebuild (the reference's
-    * append-then-reindex story, LanceIndexBuilder.java:116-152). */
   /** The append path's per-row plan: codegen'd nearest-centroid assignment
     * (NearestCell handles float and double vectors natively — no cast, no
     * boxed UDF on the hot path) + PQ encode with the stored codebooks.
@@ -239,25 +236,18 @@ object IndexBuild {
     }
   }
 
-  def append(s: SparkSession, newRows: DataFrame, idx: BuiltIndex,
-             targetRowsPerFragment: Long = 100000L): Unit = {
-    val cells = idx.centroids.length
-    val encoded = assignToCells(newRows, idx)
-    // small appends should not shatter into `cells` tiny fragments: size
-    // the range partitioning to the batch, still cell-ordered so every
-    // appended fragment covers a contiguous (prunable) cell range. The
-    // sizing count runs over the CACHED assigned batch so the (possibly
-    // expensive) upstream lineage evaluates once, not twice.
-    encoded.persist()
-    try {
-      val parts = math.max(1, math.min(cells,
-        math.ceil(encoded.count().toDouble / targetRowsPerFragment).toInt))
-      encoded
-        .repartitionByRange(parts, col("cell"))
-        .sortWithinPartitions("cell")
-        .write.format("lance").mode("append").save(idx.root)
-    } finally encoded.unpersist()
-  }
+  /** Incrementally index new rows into an EXISTING index: assign each row
+    * to its nearest stored centroid — O(new rows · cells · dim) map-only
+    * work, no retrain, no touch of the already-indexed corpus — PQ-encode
+    * with the stored codebooks, and append one fragment per cell the batch
+    * touches, like the build, so probe pruning stays exact. The index
+    * stays fresh under batch/streaming growth at any corpus size; centroid
+    * drift is repaired by an occasional full rebuild (the reference's
+    * append-then-reindex story, LanceIndexBuilder.java:116-152). */
+  def append(s: SparkSession, newRows: DataFrame, idx: BuiltIndex): Unit =
+    assignToCells(newRows, idx).write.format("lance")
+      .options(IndexLayout)
+      .mode("append").save(idx.root)
 
   /** Search a built/loaded index with reference-named vector.* knobs:
     * graph-or-exact probe selection, flat or ADC scoring, optional
@@ -276,12 +266,22 @@ object IndexBuild {
              options: Map[String, String], excludeVecId: Long = -1L,
              idCol: String = "vec_id",
              pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    val (schema, rows) = searchRows(s, idx, queryVec, options, excludeVecId, idCol, pred)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The k ranked (id, dist) rows of [[search]] and their schema, as the
+    * driver holds them after the one job (`CALL system.knn` returns them
+    * as they are). */
+  private[graft] def searchRows(s: SparkSession, idx: BuiltIndex, queryVec: Array[Double],
+                                options: Map[String, String], excludeVecId: Long = -1L,
+                                idCol: String = "vec_id",
+                                pred: Option[org.apache.spark.sql.Column] = None)
+      : (StructType, Array[Row]) = {
     val so = LanceVectorOptions.search(options)
     val top = searchPlan(s, idx, queryVec, options, excludeVecId, idCol, pred)
-    if (refines(idx, so))
-      VectorIndex.refineOnDriver(s, top, queryVec, so.k, idCol, idx.opts.column)
-    else s.createDataFrame(java.util.Arrays.asList(VectorIndex.collectTop(top, "dist"): _*),
-      top.schema)
+    if (refines(idx, so)) VectorIndex.refineRows(top, queryVec, so.k, idCol, idx.opts.column)
+    else (top.schema, VectorIndex.collectTop(top, "dist"))
   }
 
   /** Only the quantized arms re-rank; a flat index's distances are exact. */
@@ -390,7 +390,27 @@ object IndexBuild {
     * handle's epoch always matches the pinned version. */
   private[graft] def loadAt(s: SparkSession, root: String,
                             m: Option[graft.sources.lance.LanceManifest]): Option[BuiltIndex] =
-    metaFileAt(s, root, m).map { case (p, epoch) => readMeta(s, root, p, epoch) }
+    metaFileAt(s, root, m).map {
+      case (p, Some(epoch)) =>
+        val k = (root, epoch)
+        handles.synchronized(Option(handles.get(k))).getOrElse {
+          val h = readMeta(s, root, p, Some(epoch))
+          handles.synchronized(handles.put(k, h))
+          h
+        }
+      case (p, None) => readMeta(s, root, p, None)
+    }
+
+  /** Parsed handles by (root, epoch sidecar file). An epoch file
+    * (`meta-<uuid>.json`) is written once, before the commit that points at
+    * it, and never rewritten, so its handle holds for every manifest that
+    * names it. LRU-bounded like [[graft.sources.lance.SidecarCache]]. The
+    * legacy fixed `meta.json` is rewritten in place and never cached. */
+  private val MaxHandles = 64
+  private val handles = new java.util.LinkedHashMap[(String, String), BuiltIndex](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, String), BuiltIndex]): Boolean =
+      size() > MaxHandles
+  }
 
   private def readMeta(s: SparkSession, root: String, p: org.apache.hadoop.fs.Path,
                        epoch: Option[String]): BuiltIndex = {

@@ -6,6 +6,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 
@@ -255,6 +256,13 @@ object VectorIndex extends QueryModule {
     * work is O(tasks·k·r) rows; the result is a local DataFrame. */
   private[operators] def refineOnDriver(s: SparkSession, top: DataFrame, qv: Array[Double],
                                         k: Int, idCol: String, vecCol: String): DataFrame = {
+    val (schema, rows) = refineRows(top, qv, k, idCol, vecCol)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** [[refineOnDriver]]'s k (id, dist) rows and their schema. */
+  private[operators] def refineRows(top: DataFrame, qv: Array[Double], k: Int,
+                                    idCol: String, vecCol: String): (StructType, Array[Row]) = {
     import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
     import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
       InterpretedOrdering, Literal, Round, SortOrder}
@@ -276,8 +284,7 @@ object VectorIndex extends QueryModule {
       SortOrder(BoundReference(1, DoubleType, nullable = true), Ascending),
       SortOrder(BoundReference(0, idF.dataType, idF.nullable), Ascending)))
     val toRow = CatalystTypeConverters.createToScalaConverter(out)
-    val rows = scored.sorted(byDistThenId).take(k).map(toRow(_).asInstanceOf[Row])
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out)
+    (out, scored.sorted(byDistThenId).take(k).map(toRow(_).asInstanceOf[Row]))
   }
 
   /** Probe the `nprobes` cells nearest to the query vector (L2). */

@@ -48,17 +48,29 @@ class LanceDataSource extends TableProvider with DataSourceRegister
     Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("lance: 'path' option required"))
 
+  /** The table [[inferSchema]] resolved, with its options: Spark's path
+    * read calls inferSchema and then getTable with the same options on one
+    * provider instance, so getTable hands this table over (once) instead
+    * of loading the manifest again. */
+  private var inferred: Option[(Map[String, String], LanceTable)] = None
+
   /** The schema of the manifest the read resolves: a versionAsOf /
     * timestampAsOf pin reads that version's schema (a pinned read lists no
     * `_versions`), else the latest. */
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new LanceTable(rootOf(options), options.asScala.toMap).manifest
-      .map(_.schema).getOrElse(new StructType())
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val opts = options.asScala.toMap
+    val table = new LanceTable(rootOf(options), opts)
+    inferred = Some((opts, table))
+    table.manifest.map(_.schema).getOrElse(new StructType())
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
-    new LanceTable(rootOf(options), options.asScala.toMap)
+    val opts = options.asScala.toMap
+    val reused = inferred.collect { case (o, t) if o == opts => t }
+    inferred = None
+    reused.getOrElse(new LanceTable(rootOf(options), opts))
   }
 
   /** V1 path-write fallback: handles dataset creation (plus append/

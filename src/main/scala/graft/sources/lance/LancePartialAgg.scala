@@ -40,8 +40,8 @@ class LancePartialAggScan(spark: SparkSession, root: String, manifest: LanceMani
     val frs = scanFrags.map { fr =>
       val p = new org.apache.hadoop.fs.Path(root, fr.path).toString
       val dv = fr.deletes.map(d => new org.apache.hadoop.fs.Path(root, d.path).toString)
-      LanceInputPartition(p, 0, fr.sizeBytes, fr.sizeBytes,
-        LanceColumnMap.of(fr, names), dv): InputPartition
+      LanceInputPartition.of(LanceFileSlice(p, 0, fr.sizeBytes, fr.sizeBytes,
+        LanceColumnMap.of(fr, names), dv)): InputPartition
     }
     (LancePartialStatsPartition(statRow) +: frs).toArray
   }

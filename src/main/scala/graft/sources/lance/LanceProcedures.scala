@@ -164,7 +164,7 @@ object LanceProcedures {
     * }}}
     *
     * A table carrying a persisted index sidecar (`_index/meta.json`)
-    * searches through [[graft.operators.IndexBuild.search]]: an eager,
+    * searches through [[graft.operators.IndexBuild.searchRows]]: an eager,
     * probe-pruned fragment scan run as one Spark job with no shuffle, whose
     * driver merges O(tasks·k) rows, or O(tasks·k·r) refine candidates on a
     * PQ/SQ index that it then re-ranks exactly. A plain table falls back
@@ -257,7 +257,7 @@ object LanceProcedures {
       }
       def probedCfg(): Option[(Array[Array[Double]], Int)] =
         if (!hasIndex) None else Some((idx.centroids.map(_.toArray), nprobes))
-      val df = mode match {
+      val ranked: Array[org.apache.spark.sql.Row] = mode match {
         case "mmr" =>
           require(metric == "cosine",
             "lance knn: mode => 'mmr' ranks by cosine — pass metric => 'cosine'")
@@ -268,7 +268,7 @@ object LanceProcedures {
           // the greedy tail consumes candidates 3x (pair self-join +
           // collect) — materialize the (candidates)-bounded rows once
           graft.operators.VectorSearch.mmrServe(cand.localCheckpoint(), k)
-            .select(col("doc_id"), col("rk"), col("cos"), col("mmr_micro"))
+            .select(col("doc_id"), col("rk"), col("cos"), col("mmr_micro")).collect()
         case "maxsim" =>
           require(metric == "cosine",
             "lance knn: mode => 'maxsim' ranks by cosine — pass metric => 'cosine'")
@@ -289,7 +289,7 @@ object LanceProcedures {
               import spark.implicits._
               graft.operators.VectorSearch.maxSimRank(modalStore("doc_id"),
                 broadcast(toks.toDF("query_id", "q_tok", "qv")), k)
-          }).select(col("doc_id"), col("score"), col("rk"))
+          }).select(col("doc_id"), col("score"), col("rk")).collect()
         case "topk" =>
         require(qv.nonEmpty, "lance knn: query => array(...) is required")
         if (hasIndex) {
@@ -298,8 +298,8 @@ object LanceProcedures {
               "vector.nprobes" -> nprobes.toString, "vector.ef" -> ef.toString) ++
             (if (refine > 0) Map("vector.refine-factor" -> refine.toString)
              else Map.empty)
-          graft.operators.IndexBuild.search(spark, idx, qv, opts, idCol = idCol,
-            pred = pred)
+          graft.operators.IndexBuild.searchRows(spark, idx, qv, opts, idCol = idCol,
+            pred = pred)._2
         } else {
           val (score, asc) = metric match {
             case "l2" => (graft.functions.vec_l2(col(column), typedLit(qv)), true)
@@ -312,7 +312,7 @@ object LanceProcedures {
           val scored = pred.map(base.filter).getOrElse(base)
             .select(col(idCol).cast("long").as("id"), round(score, 6).as("dist"))
           (if (asc) scored.orderBy(col("dist").asc, col("id").asc)
-           else scored.orderBy(col("dist").desc, col("id").asc)).limit(k)
+           else scored.orderBy(col("dist").desc, col("id").asc)).limit(k).collect()
         }
         case other => throw new IllegalArgumentException(
           s"lance knn: unknown mode $other (expected topk / mmr / maxsim)")
@@ -329,7 +329,7 @@ object LanceProcedures {
           StructField("rk", LongType, nullable = false))
         case _ => Seq(StructField("dist", DoubleType, nullable = false))
       }
-      val rows = df.collect().map(r =>
+      val rows = ranked.map(r =>
         Array[Any](r.get(0) match {
           case l: java.lang.Long => l.longValue()
           case i: java.lang.Integer => i.longValue()

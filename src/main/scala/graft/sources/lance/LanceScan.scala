@@ -843,26 +843,61 @@ object LanceColumnMap {
       fr.physicalNames.filter { case (k, _) => relevant(k) }.toSeq.sorted)
 }
 
-/** One input partition = one byte range of one fragment. Fragments larger
-  * than `splitBytes` split into ranges (the parquet reader aligns ranges to
-  * row groups), so a huge fragment still parallelizes across executors. */
-/** `changeType` labels every row of the partition for the `_change_type`
+/** One byte range of one fragment file. Fragments larger than the scan's
+  * split size split into ranges (the parquet reader aligns ranges to row
+  * groups), so a huge fragment still parallelizes across executors.
+  * `changeType` labels every row of the slice for the `_change_type`
   * metadata column (None reads as "insert"). `deleteDiff = (oldDv, newDv)`
-  * flips the partition into change-feed delete mode: emit ONLY positions
+  * flips the slice into change-feed delete mode: emit ONLY positions
   * present in newDv but not oldDv — the rows a delete commit removed. */
-case class LanceInputPartition(path: String, start: Long, length: Long,
-                               fileSize: Long,
-                               colMap: LanceColumnMap = LanceColumnMap.Identity,
-                               dv: Option[String] = None,
-                               changeType: Option[String] = None,
-                               deleteDiff: Option[(Option[String], String)] = None,
-                               bucket: Option[Int] = None)
+case class LanceFileSlice(path: String, start: Long, length: Long, fileSize: Long,
+                          colMap: LanceColumnMap = LanceColumnMap.Identity,
+                          dv: Option[String] = None,
+                          changeType: Option[String] = None,
+                          deleteDiff: Option[(Option[String], String)] = None)
+
+/** One input partition = the file slices one task reads, in order, all
+  * from fragments of one write.bucket-by value (`bucket`). */
+case class LanceInputPartition(slices: Seq[LanceFileSlice], bucket: Option[Int] = None)
     extends InputPartition with HasPartitionKey {
-  /** The fragment's write.bucket-by value — consulted only when the scan
+  /** The fragments' write.bucket-by value — consulted only when the scan
     * reports KeyGroupedPartitioning (then every partition has a bucket);
-    * byte-range splits of one fragment share a key and Spark groups them. */
+    * several partitions of one bucket share a key and Spark groups them. */
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket.getOrElse(-1)))
+}
+
+object LanceInputPartition {
+  /** The partition that reads `slice` alone. */
+  def of(slice: LanceFileSlice): LanceInputPartition = LanceInputPartition(Seq(slice))
+
+  /** Pack `slices` (each with its fragment's bucket) into partitions by
+    * the rule Spark's own file scans use (`FilePartition.getFilePartitions`):
+    * next fit in scan order, each slice costing its length plus
+    * `openCost`, a partition closing before the slice that would take it
+    * past `maxSplitBytes`. A partition also closes where the bucket
+    * changes, so no partition mixes buckets. Packs are contiguous runs of
+    * the slice order, so the rows come out in the same order as unpacked. */
+  def pack(slices: Seq[(LanceFileSlice, Option[Int])], maxSplitBytes: Long,
+           openCost: Long): Seq[LanceInputPartition] = {
+    val out = Seq.newBuilder[LanceInputPartition]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[LanceFileSlice]
+    var bucket: Option[Int] = None
+    var size = 0L
+    def close(): Unit = if (cur.nonEmpty) {
+      out += LanceInputPartition(cur.toList, bucket)
+      cur.clear()
+      size = 0L
+    }
+    slices.foreach { case (s, b) =>
+      if (b != bucket || size + s.length > maxSplitBytes) close()
+      bucket = b
+      size += s.length + openCost
+      cur += s
+    }
+    close()
+    out.result()
+  }
 }
 
 class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifest,
@@ -943,35 +978,29 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
   // ---- persisted-sort report -------------------------------------------
   // Fragments written through a distribution+ordering-enforced path
   // (bucketed/clustered/sorted writes, ordering-preserving compaction)
-  // carry the column list every row of the file honors. When each planned
-  // Spark partition is a single such sorted unit, the scan reports the
-  // common prefix back, and a co-bucketed sort-merge join plans with NO
-  // Sort on either side — on a 100 TB SPJ that deletes the last redundant
+  // carry the column list every row of the file honors. When each Spark
+  // partition is a single such sorted unit, the scan reports the common
+  // prefix back, and a co-bucketed sort-merge join plans with NO Sort on
+  // either side — on a 100 TB SPJ that deletes the last redundant
   // O(n log n) pass. Sound gating:
   //  - every live fragment must share the prefix, projected and
   //    identity-mapped (no rename/hide indirection on the sort columns);
-  //  - under KeyGroupedPartitioning, each bucket must be exactly one
-  //    unsplit fragment (a grouped bucket concatenates its members, which
-  //    is not sorted); without it, every partition is a contiguous slice
-  //    of one sorted file, which is always individually sorted.
+  //  - the scan reports KeyGroupedPartitioning and each bucket is exactly
+  //    one unsplit fragment: a grouped bucket, like a packed partition,
+  //    concatenates its files, which is not sorted. Any other scan packs
+  //    small fragments together, so it reports no ordering (the co-bucketed
+  //    SMJ is the report's only consumer).
   override def outputOrdering():
       Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     val frs = fragments
-    if (frs.isEmpty || frs.exists(_.sortedBy.isEmpty)) return Array.empty
+    if (bucketSpec.isEmpty || frs.isEmpty || frs.exists(_.sortedBy.isEmpty)) return Array.empty
     val common = frs.map(_.sortedBy).reduce { (a, b) =>
       a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1)
     }
     val usable = common.takeWhile(c => required.fieldNames.contains(c) &&
       frs.forall(fr => !fr.hidden.contains(c) && !fr.physicalNames.contains(c)))
-    if (usable.isEmpty) return Array.empty
-    val grouped = bucketSpec.isDefined
-    val splitBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    def unsplit(fr: FragmentMeta): Boolean =
-      fr.sizeBytes <= splitBytes || limit.isDefined ||
-        fr.deletes.isDefined || posRequested
-    if (grouped &&
-        (frs.flatMap(_.bucket).distinct.size != frs.size || !frs.forall(unsplit)))
-      return Array.empty
+    if (usable.isEmpty || frs.flatMap(_.bucket).distinct.size != frs.size ||
+        !frs.forall(wholeFile)) return Array.empty
     usable.map(c => org.apache.spark.sql.connector.expressions.Expressions.sort(
       org.apache.spark.sql.connector.expressions.Expressions.column(c),
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
@@ -1243,6 +1272,25 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
     filters.filter(_.references.forall(projected))
   }
 
+  /** The slice and pack size of Spark's own file scans
+    * (`FilePartition.maxSplitBytes`): `spark.sql.files.maxPartitionBytes`,
+    * lowered toward the bytes per `minPartitionNum` (default parallelism)
+    * with each file costing `openCostInBytes` more, never below the open
+    * cost. Fixed over the planned fragments, so the ordering report and
+    * the partitions planned after runtime filtering split alike. */
+  private lazy val maxSplitBytes: Long = {
+    val open = spark.sessionState.conf.filesOpenCostInBytes
+    org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(spark,
+      initialFragments.map(_.sizeBytes + open).sum)
+  }
+
+  /** Is `fr` read as one slice from the file start? DV filtering and
+    * `_pos` injection count physical rows from the file start (such
+    * fragments exist only between a delete and the next compaction); a
+    * limit reads whole files; small fragments need no split. */
+  private def wholeFile(fr: FragmentMeta): Boolean =
+    fr.sizeBytes <= maxSplitBytes || limit.isDefined || fr.deletes.isDefined || posRequested
+
   override def planInputPartitions(): Array[InputPartition] = {
     // limit: stop enumerating fragments once manifest row counts cover it
     val chosen = limit match {
@@ -1251,23 +1299,19 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
         fragments.takeWhile { fr => val take = acc < n; acc += fr.liveRows; take }
       case None => fragments
     }
-    val splitBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    chosen.flatMap { fr =>
+    val slices = chosen.flatMap { fr =>
       val p = new org.apache.hadoop.fs.Path(root, fr.path).toString
       val dv = fr.deletes.map(d => new org.apache.hadoop.fs.Path(root, d.path).toString)
-      // DV filtering and _pos injection count physical rows from the file
-      // start — such fragments read as one partition (they exist only
-      // between a delete and the next compaction)
-      if (fr.sizeBytes <= splitBytes || limit.isDefined || dv.isDefined || posRequested) {
-        Seq(LanceInputPartition(p, 0, fr.sizeBytes, fr.sizeBytes, maskKey(fr), dv,
-          bucket = fr.bucket))
-      } else {
-        (0L until fr.sizeBytes by splitBytes).map { off =>
-          LanceInputPartition(p, off, math.min(splitBytes, fr.sizeBytes - off),
-            fr.sizeBytes, maskKey(fr), bucket = fr.bucket)
-        }
+      val ranges =
+        if (wholeFile(fr)) Seq(0L -> fr.sizeBytes)
+        else (0L until fr.sizeBytes by maxSplitBytes).map(off =>
+          off -> math.min(maxSplitBytes, fr.sizeBytes - off))
+      ranges.map { case (off, len) =>
+        (LanceFileSlice(p, off, len, fr.sizeBytes, maskKey(fr), dv), fr.bucket)
       }
-    }.toArray
+    }
+    LanceInputPartition.pack(slices, maxSplitBytes,
+      spark.sessionState.conf.filesOpenCostInBytes).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -1334,40 +1378,71 @@ class LanceReaderFactory(
 
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
-  private def open(partition: InputPartition): Iterator[AnyRef] = {
-    val p = partition.asInstanceOf[LanceInputPartition]
-    readFn(Shim.partitionedFile(p.path, p.start, p.length, p.fileSize))
-      .asInstanceOf[Iterator[AnyRef]]
-  }
+  private def open[A](partition: InputPartition)(f: Iterator[AnyRef] => Iterator[A]) =
+    new LanceSliceIterator[A](partition.asInstanceOf[LanceInputPartition].slices, { s =>
+      val file = readFn(Shim.partitionedFile(s.path, s.start, s.length, s.fileSize))
+        .asInstanceOf[Iterator[AnyRef]]
+      (file, f(file))
+    })
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     // row path (complex schemas / vectorization off / limit): the closure
     // may still yield ColumnarBatch disguised as InternalRow — flatten
-    val rows = open(partition).flatMap {
+    val rows = open(partition)(_.flatMap {
       case b: ColumnarBatch => b.rowIterator().asScala
       case r: InternalRow => Iterator.single(r)
-    }
-    val capped = limit.map(n => rows.take(n)).getOrElse(rows)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        if (capped.hasNext) { current = capped.next(); true } else false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    })
+    rows.reader(limit.map(n => rows.take(n)).getOrElse(rows))
   }
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
-    val batches = open(partition).map(_.asInstanceOf[ColumnarBatch])
-    new PartitionReader[ColumnarBatch] {
-      private var current: ColumnarBatch = _
-      override def next(): Boolean = {
-        if (batches.hasNext) { current = batches.next(); true } else false
-      }
-      override def get(): ColumnarBatch = current
-      override def close(): Unit = ()
+    val batches = open(partition)(_.map(_.asInstanceOf[ColumnarBatch]))
+    batches.reader(batches)
+  }
+}
+
+/** The rows (or batches) of a partition's file slices, read one slice at a
+  * time: `open(slice)` returns the slice's file reader and the rows read
+  * through it. A slice's file reader closes (when it is `AutoCloseable`,
+  * as Spark's vectorized parquet reader is) as soon as its rows are
+  * drained, so a task holds one file open at a time; [[close]] closes the
+  * open one early (a limit can stop the read mid-slice). */
+private[graft] final class LanceSliceIterator[A](
+    slices: Seq[LanceFileSlice], open: LanceFileSlice => (Iterator[_], Iterator[A]))
+    extends Iterator[A] with java.io.Closeable {
+  private val pending = slices.iterator
+  private var file: Iterator[_] = Iterator.empty
+  private var rows: Iterator[A] = Iterator.empty
+
+  override def hasNext: Boolean = {
+    while (!rows.hasNext) {
+      close()
+      if (!pending.hasNext) return false
+      val (f, r) = open(pending.next())
+      file = f
+      rows = r
     }
+    true
+  }
+
+  override def next(): A = if (hasNext) rows.next() else Iterator.empty.next()
+
+  override def close(): Unit = {
+    file match {
+      case c: AutoCloseable => c.close()
+      case _ =>
+    }
+    file = Iterator.empty
+    rows = Iterator.empty
+  }
+
+  /** The partition reader over `it` (these rows, possibly capped), which
+    * closes the open slice when Spark closes it. */
+  def reader[B](it: Iterator[B]): PartitionReader[B] = new PartitionReader[B] {
+    private var current: B = _
+    override def next(): Boolean = if (it.hasNext) { current = it.next(); true } else false
+    override def get(): B = current
+    override def close(): Unit = LanceSliceIterator.this.close()
   }
 }
 
@@ -1460,7 +1535,13 @@ class LanceMaskedReaderFactory(groups: Map[LanceColumnMap, LanceReadGroup],
                                conf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[LanceInputPartition]
+    val rows = new LanceSliceIterator[InternalRow](
+      partition.asInstanceOf[LanceInputPartition].slices, read)
+    rows.reader(limit.map(n => rows.take(n)).getOrElse(rows))
+  }
+
+  /** One slice's file reader and its projected live rows. */
+  private def read(p: LanceFileSlice): (Iterator[_], Iterator[InternalRow]) = {
     val g = groups.getOrElse(p.colMap, throw new IllegalStateException(
       s"lance: no reader group for column map ${p.colMap} " +
         "(schema evolved between planning and read?)"))
@@ -1470,11 +1551,11 @@ class LanceMaskedReaderFactory(groups: Map[LanceColumnMap, LanceReadGroup],
     // shift physical indexes
     val needPos = p.dv.isDefined || p.deleteDiff.isDefined || posInjected
     val fn = if (needPos) g.unfilteredFn else g.readFn
-    val rows = fn(Shim.partitionedFile(p.path, p.start, p.length, p.fileSize))
-      .asInstanceOf[Iterator[AnyRef]].flatMap {
-        case b: ColumnarBatch => b.rowIterator().asScala
-        case r: InternalRow => Iterator.single(r)
-      }
+    val file = fn(Shim.partitionedFile(p.path, p.start, p.length, p.fileSize))
+    val rows = file.asInstanceOf[Iterator[AnyRef]].flatMap {
+      case b: ColumnarBatch => b.rowIterator().asScala
+      case r: InternalRow => Iterator.single(r)
+    }
     val filePath = UTF8String.fromString(p.path)
     val changeVal = UTF8String.fromString(p.changeType.getOrElse("insert"))
     def project(r: InternalRow, pos: Long): InternalRow = {
@@ -1514,14 +1595,7 @@ class LanceMaskedReaderFactory(groups: Map[LanceColumnMap, LanceReadGroup],
             }
         }
       }
-    val capped = limit.map(n => projected.take(n)).getOrElse(projected)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (capped.hasNext) { current = capped.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    (file, projected)
   }
 }
 
@@ -1540,17 +1614,17 @@ class LanceCdcBatchScan(spark: SparkSession, root: String, manifest: LanceManife
     s"LanceCdcBatchScan root=$root versions=(${startExclusive}, $endInclusive] " +
       s"ReadSchema: ${required.catalogString}"
 
-  private lazy val parts: Seq[LanceInputPartition] =
-    LanceChangeFeed.partitions(root, Shim.hadoopConf(spark, options),
+  private lazy val slices: Seq[LanceFileSlice] =
+    LanceChangeFeed.slices(root, Shim.hadoopConf(spark, options),
       required.fieldNames.toSet, startExclusive, endInclusive)
 
   override def planInputPartitions(): Array[InputPartition] =
-    parts.map(p => p: InputPartition).toArray
+    slices.map(LanceInputPartition.of(_): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new LanceMaskedReaderFactory(
       LanceReadGroup.build(spark, manifest.schema, required, Seq.empty, options,
-        parts.map(_.colMap).distinct),
+        slices.map(_.colMap).distinct),
       limit = None,
       Shim.serializableConf(Shim.hadoopConf(spark, options)))
 }

@@ -179,18 +179,19 @@ class LanceMicroBatchStream(spark: SparkSession, root: String,
     }
     frs.zip(maps).map { case (fr, cm) =>
       val dv = fr.deletes.map(d => full(d.path))
-      LanceInputPartition(full(fr.path), 0, fr.sizeBytes, fr.sizeBytes, cm, dv): InputPartition
+      LanceInputPartition.of(
+        LanceFileSlice(full(fr.path), 0, fr.sizeBytes, fr.sizeBytes, cm, dv)): InputPartition
     }.toArray
   }
 
   /** One CDC step per version: diff v-1 → v under v's recorded op. */
   private def cdcPartitions(start: Long, end: Long): Array[InputPartition] = {
-    val parts = LanceChangeFeed.partitions(root, conf, requiredNames, start, end)
+    val slices = LanceChangeFeed.slices(root, conf, requiredNames, start, end)
     synchronized {
-      plannedColMaps ++= parts.map(_.colMap)
+      plannedColMaps ++= slices.map(_.colMap)
       plannedAnyDv = true // CDC partitions need the masked path
     }
-    parts.map(p => p: InputPartition).toArray
+    slices.map(LanceInputPartition.of(_): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -216,17 +217,18 @@ class LanceMicroBatchStream(spark: SparkSession, root: String,
   override def stop(): Unit = ()
 }
 
-/** Shared CDC planner: the change rows for versions `(startExclusive,
-  * endInclusive]`, walked commit by commit so each step's recorded op is
-  * known — used by the streaming change feed and the batch version-range
-  * read (`read.start-version` / `read.end-version`). */
+/** Shared CDC planner: the file slices holding the change rows for
+  * versions `(startExclusive, endInclusive]`, walked commit by commit so
+  * each step's recorded op is known — used by the streaming change feed
+  * and the batch version-range read (`read.start-version` /
+  * `read.end-version`). */
 object LanceChangeFeed {
-  def partitions(root: String, conf: org.apache.hadoop.conf.Configuration,
-                 requiredNames: Set[String],
-                 startExclusive: Long, endInclusive: Long): Seq[LanceInputPartition] = {
+  def slices(root: String, conf: org.apache.hadoop.conf.Configuration,
+             requiredNames: Set[String],
+             startExclusive: Long, endInclusive: Long): Seq[LanceFileSlice] = {
     def full(rel: String): String =
       new org.apache.hadoop.fs.Path(root, rel).toString
-    val parts = scala.collection.mutable.ArrayBuffer.empty[LanceInputPartition]
+    val parts = scala.collection.mutable.ArrayBuffer.empty[LanceFileSlice]
     // COLUMN IDENTITY under schema evolution: the feed presents every
     // change in the LATEST schema, so a fragment must be read through the
     // latest manifest's copy of its meta — that copy accumulated every
@@ -254,7 +256,7 @@ object LanceChangeFeed {
         def add(fr: FragmentMeta, change: String, dv: Option[String],
                 diff: Option[(Option[String], String)]): Unit = {
           val idMeta = latestBy.getOrElse(fr.path, fr)
-          parts += LanceInputPartition(full(fr.path), 0, fr.sizeBytes,
+          parts += LanceFileSlice(full(fr.path), 0, fr.sizeBytes,
             fr.sizeBytes, LanceColumnMap.of(idMeta, requiredNames), dv, Some(change), diff)
         }
         cur.fragments.foreach { fr =>

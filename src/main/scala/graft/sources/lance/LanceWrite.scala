@@ -757,8 +757,8 @@ private[lance] final class BucketCoalescer private (val buckets: Array[Option[In
 
 private[lance] object BucketCoalescer {
   /** Key each partition of a lance scan RDD by its fragments' bucket tag
-    * ([[LanceInputPartition.bucket]]; a key-grouped partition holds one
-    * bucket's fragments, any other one fragment range) and cut each key's
+    * ([[LanceInputPartition.bucket]]; every scan partition, key-grouped or
+    * packed, holds slices of one bucket's fragments) and cut each key's
     * partitions, in scan order, into `outParts(key)` contiguous runs (never
     * more runs than partitions) — the positional split `coalesce(n)` makes
     * over partitions without preferred locations. Keys keep their

@@ -75,6 +75,36 @@ class CodegenSpec extends SparkSpec {
     }
   }
 
+  /** A knn query compiles nothing per probe set: every index fragment
+    * holds one cell, so the scan consumes `cell IN (probes)` and the probes
+    * never reach generated code. The subtree headers name the scan's
+    * pushed filters, probes included; the compiled sources are compared. */
+  test("searchPlans with different probe sets generate the same code, no Filter on cell") {
+    import graft.operators.{IndexBuild, VectorIndex}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val root = java.nio.file.Files.createTempDirectory("graft-cgs-").toString + "/idx"
+    val idx = IndexBuild.build(spark, Tables.t(spark, sf, "embeddings"), root, Map(
+      "index.type" -> "IVF_PQ", "index.num-partitions" -> "16", "index.num-bits" -> "4"))
+    val queries = Seq(7L, 42L).map(VectorIndex.embeddingOf(spark, sf, _))
+    for (options <- Seq(Map("vector.k" -> "10", "vector.nprobes" -> "4"),
+        Map("vector.k" -> "10", "vector.nprobes" -> "4", "vector.refine-factor" -> "20"))) {
+      assert(queries.map(q => VectorIndex.selectProbesExact(idx.centroids, q, 4).toSet)
+        .distinct.size === 2)
+      val plans = queries.map(IndexBuild.searchPlan(spark, idx, _, options)
+        .queryExecution.executedPlan)
+      for (p <- plans) {
+        assert(p.collectFirst { case s: BatchScanExec => s }.nonEmpty, p)
+        assert(p.collect { case f: FilterExec
+          if f.condition.references.exists(_.name == "cell") => f }.isEmpty, p)
+      }
+      val code = plans.map(codegenStringSeq(_).map(_._2))
+      assert(code.head.nonEmpty)
+      assert(code.head === code(1), options)
+    }
+  }
+
   for (name <- keys)
     test(s"$name compiles and matches under CODEGEN_ONLY (no interpreted fallback)") {
       val default = render(name)

@@ -124,9 +124,9 @@ class VectorSearchJobSpec extends SparkSpec {
       refine.map(r => "vector.refine-factor" -> r.toString)
 
   private def knnCall(name: String, nprobes: Int, refine: Option[Int],
-                      filter: Option[String]): String =
+                      filter: Option[String], query: Array[Double] = qv): String =
     s"CALL lance_vsj.system.knn(table => 'db.$name', " +
-      s"query => array(${qv.map(d => s"${java.lang.Double.toString(d)}D").mkString(", ")}), " +
+      s"query => array(${query.map(d => s"${java.lang.Double.toString(d)}D").mkString(", ")}), " +
       s"k => $K, nprobes => $nprobes, refine_factor => ${refine.getOrElse(0)}, " +
       s"filter => '${filter.getOrElse("")}')"
 
@@ -181,6 +181,22 @@ class VectorSearchJobSpec extends SparkSpec {
     }
   }
 
+  test("a second CALL system.knn with a new probe set compiles no code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val other = VectorIndex.embeddingOf(spark, sf, vecId = 42L)
+    for (name <- Seq("pq", "flat")) {
+      val idx = indexes(name)
+      val refine = if (name == "pq") Some(4) else None
+      assert(VectorIndex.selectProbesExact(idx.centroids, qv, 4).toSet !==
+        VectorIndex.selectProbesExact(idx.centroids, other, 4).toSet)
+      spark.sql(knnCall(name, 4, refine, None)).collect() // warm: compile the plan once
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val got = rows(spark.sql(knnCall(name, 4, refine, None, query = other)))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled, name)
+      assert(got === rows(IndexBuild.search(spark, idx, other, searchOptions(4, refine))))
+    }
+  }
+
   test("CALL system.knn resolves the manifest once and reads the pinned version's sidecar") {
     spark.sparkContext.hadoopConfiguration.set("fs.pathlogfs.impl", classOf[PathLogFs].getName)
     spark.conf.set("spark.sql.catalog.lance_plog", classOf[graft.sources.lance.LanceCatalog].getName)
@@ -209,12 +225,14 @@ class VectorSearchJobSpec extends SparkSpec {
     }
     // one listing is the catalog's table-exists check, one is the call's
     // single manifest resolution; the versionAsOf read lists nothing. The
-    // manifest is read once by the call and twice by the pinned reader
-    // (schema, then table), always at the pinned version.
+    // manifest is read once by the call and once by the pinned reader
+    // (whose table reuses the manifest its schema resolved), always at the
+    // pinned version.
     assert(listings === 2, log.mkString("\n"))
-    assert(manifests === Seq.fill(3)(f"${latest.version}%020d.manifest.json"), log.mkString("\n"))
-    // the handle is the sidecar the pinned manifest points at
-    assert(sidecars === Seq(latest.props(IndexBuild.MetaProp)), log.mkString("\n"))
+    assert(manifests === Seq.fill(2)(f"${latest.version}%020d.manifest.json"), log.mkString("\n"))
+    // the warm call parsed the pinned manifest's sidecar already: the
+    // handle comes from the per-epoch cache, so no index file is opened
+    assert(sidecars === Nil, log.mkString("\n"))
     assert(rebuilt.epoch === Some(latest.props(IndexBuild.MetaProp)))
     // the handle that manifest names answers exactly like a fresh load
     val pinnedHandle = IndexBuild.loadAt(spark, root, Some(latest)).get
