@@ -224,6 +224,11 @@ package object functions {
   def bpe_chunks(s: Column, chunkTokens: Int, stride: Int): Column =
     Column(BpeChunks(expression(s), chunkTokens, stride))
 
+  /** Micro-batch id `bid` as a bigint column whose generated code does not
+    * inline the value (see [[BatchId]]): the one way a streaming body
+    * stamps its batch id. */
+  private[graft] def batch_id(bid: Long): Column = Column(BatchId(bid))
+
   /** (name, builder) for every SQL-exposed graft function — shared by
     * session-level [[registerAll]] and the [[graft.GraftExtensions]]
     * spark.sql.extensions entry point. */

@@ -840,13 +840,13 @@ object LanceOps extends QueryModule {
     orders.filter(col("o_orderstatus") === "F")
       .write.format("lance").mode("append").option("maxRowsPerFile", "2000").save(root)
     val outRoot = tmp("cdc-out")
-    StreamingOps.drain(s, ckpt, Some(outRoot), StreamingOps.SessionParts) {
+    StreamingOps.drain(s, ckpt, StreamingOps.SessionParts) {
       s.readStream.format("lance").option("read.change-feed", "true")
         .load(root)
         .select(col("o_orderkey"), col("o_orderstatus"), col("_change_type"))
         .writeStream.format("lance")
         .outputMode("append")
-    }
+    }(StreamingOps.Into(outRoot))
     // read back the collected feed and aggregate per change type
     s.read.format("lance").load(outRoot)
       .groupBy("_change_type")
@@ -949,14 +949,14 @@ object LanceOps extends QueryModule {
     val srcDir = tmp("streaming-src")
     val ckpt = tmp("streaming-ckpt")
     s.range(1000).toDF("i").write.mode("overwrite").parquet(srcDir)
-    StreamingOps.drain(s, ckpt, Some(root), StreamingOps.SessionParts) {
+    StreamingOps.drain(s, ckpt, StreamingOps.SessionParts) {
       s.readStream
         .schema("i BIGINT")
         .parquet(srcDir)
         .writeStream
         .format("lance")
         .outputMode("append")
-    }
+    }(StreamingOps.Into(root))
     read(s, root).agg(count(lit(1)).as("n"), sum(col("i")).as("s"))
   }
 

@@ -1,9 +1,12 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.batch_id
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.graft.Shim
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -78,21 +81,42 @@ object StreamingOps extends QueryModule {
     *    that never read the count. */
   private[operators] case object SessionParts extends DrainParts
 
+  /** Where a [[drain]] puts its rows. */
+  private[operators] sealed trait DrainSink
+
+  /** The stream's own sink (the writer's format) at `path`. */
+  private[operators] final case class Into(path: String) extends DrainSink
+
+  /** `body(batch, bid)` per micro-batch, run on the CALLER's session: the
+    * batch is rebound to it and every job the body submits carries its
+    * job artifact state. Spark clones the session at every `start()` and
+    * roots the micro-batch on the clone; executors give each session its
+    * own class loader and cache generated classes per (class loader,
+    * code), so on the clone a resumed stream would recompile every class
+    * at every arrival. The caller's session outlives the query, so an
+    * arrival reuses the classes earlier arrivals compiled. */
+  private[operators] final case class EachBatch(body: (DataFrame, Long) => Unit) extends DrainSink
+
   /** The one AvailableNow drain: starts the stream `writer` builds on the
     * caller's session (so listeners on its `spark.streams` see the
-    * progress) with checkpoint `ckpt`, into `sink` (None for foreachBatch),
-    * and waits for it. A timeout stops the query and throws: falling
-    * through to read the sink while the query is still writing turns a
-    * slow machine into a confusing partial-snapshot failure. Under
-    * [[SizedFrom]] the conf covers both start() (Spark freezes it into the
-    * stateful plan and the checkpoint, so resumes stay consistent) and the
-    * drain (foreachBatch bodies plan their jobs against the live session),
-    * and is restored after, on failure too. */
-  private[operators] def drain(s: SparkSession, ckpt: String, sink: Option[String],
-                               parts: DrainParts)(writer: => DataStreamWriter[_]): Unit = {
+    * progress) with checkpoint `ckpt`, into `sink`, and waits for it. A
+    * timeout stops the query and throws: falling through to read the sink
+    * while the query is still writing turns a slow machine into a
+    * confusing partial-snapshot failure. Under [[SizedFrom]] the conf
+    * covers both start() (Spark freezes it into the stateful plan and the
+    * checkpoint, so resumes stay consistent) and the drain ([[EachBatch]]
+    * bodies plan their jobs against the caller's session), and is
+    * restored after, on failure too. */
+  private[operators] def drain(s: SparkSession, ckpt: String, parts: DrainParts)
+                              (writer: => DataStreamWriter[_])(sink: DrainSink): Unit = {
+    def start[T](w: DataStreamWriter[T]): StreamingQuery = sink match {
+      case Into(path) => w.start(path)
+      case EachBatch(body) =>
+        w.foreachBatch((batch: Dataset[T], bid: Long) =>
+          Shim.withResources(s)(body(Shim.ofRows(s, batch), bid))).start()
+    }
     def run(): Unit = {
-      val w = writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
-      val q = sink match { case Some(p) => w.start(p); case None => w.start() }
+      val q = start(writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()))
       if (!q.awaitTermination(120000L)) {
         q.stop()
         throw new IllegalStateException(s"streaming query ${q.id} did not drain within 120000ms")
@@ -127,17 +151,26 @@ object StreamingOps extends QueryModule {
 
   /** The file bytes under `dirs`, listed until they reach `cap`: past the
     * cap the clamp decides the count, so a drain over a large staging
-    * tree lists only as many files as the cap needs, not the whole tree. */
+    * tree lists only as many files as the cap needs, not the whole tree.
+    * The walk reads plain `listStatus` entries: `listFiles` builds a
+    * `LocatedFileStatus` per file, which reads the file's permissions, and
+    * on a local file system without the native Hadoop library that forks
+    * an `ls -ld` per staged file. */
   private[graft] def stagedBytes(hconf: org.apache.hadoop.conf.Configuration,
                                  dirs: Seq[String], cap: Long): Long = {
     var bytes = 0L
-    val it = dirs.iterator
-    while (bytes < cap && it.hasNext) {
-      val p = new org.apache.hadoop.fs.Path(it.next())
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) {
-        val files = fs.listFiles(p, true)
-        while (bytes < cap && files.hasNext) bytes += files.next().getLen
+    val roots = dirs.iterator
+    while (bytes < cap && roots.hasNext) {
+      val root = new org.apache.hadoop.fs.Path(roots.next())
+      val fs = root.getFileSystem(hconf)
+      val pending = scala.collection.mutable.Stack.empty[org.apache.hadoop.fs.Path]
+      if (fs.exists(root)) pending.push(root)
+      while (bytes < cap && pending.nonEmpty) {
+        val entries = fs.listStatus(pending.pop()).iterator
+        while (bytes < cap && entries.hasNext) {
+          val e = entries.next()
+          if (e.isDirectory) pending.push(e.getPath) else bytes += e.getLen
+        }
       }
     }
     bytes
@@ -192,7 +225,7 @@ object StreamingOps extends QueryModule {
   private def guardedAppend(s: SparkSession, df: DataFrame, path: String,
                             bid: Long, lastBid: Long): Unit =
     if (bid > lastBid)
-      df.withColumn("bid", lit(bid)).write.format("lance")
+      df.withColumn("bid", batch_id(bid)).write.format("lance")
         .mode(if (tableExists(s, path)) "append" else "overwrite")
         .save(path)
 
@@ -202,13 +235,13 @@ object StreamingOps extends QueryModule {
   private def streamPipeline(s: SparkSession, dir: String): DataFrame = {
     val src = tmp("spipe-src"); val dst = tmp("spipe-dst"); val ckpt = tmp("spipe-ckpt")
     t(s, dir, "orders").write.format("lance").option("maxRowsPerFile", "5000").save(src)
-    drain(s, ckpt, Some(dst), SizedFrom(src)) {
+    drain(s, ckpt, SizedFrom(src)) {
       s.readStream.format("lance").load(src)
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .select("o_orderkey", "o_custkey", "o_orderpriority")
       .writeStream.format("lance")
       .outputMode("append")
-    }
+    }(Into(dst))
     s.read.format("lance").load(dst)
       .agg(count(lit(1)).as("n"), sum("o_orderkey").cast("long").as("sum_key"))
   }
@@ -235,7 +268,7 @@ object StreamingOps extends QueryModule {
     Seq(Tuple2(new java.sql.Timestamp(maxTs.getTime + 86400L * 1000), 0.0))
       .toDF("ts", "value")
       .coalesce(1).write.mode("append").parquet(srcDir)
-    drain(s, ckpt, Some(dst), SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(ev.schema).parquet(srcDir)
       .withWatermark("ts", "0 seconds")
       .groupBy(window(col("ts"), "1 hour").as("w"))
@@ -243,7 +276,7 @@ object StreamingOps extends QueryModule {
       .select(col("w.start").as("w_start"), col("n"))
       .writeStream.format("lance")
       .outputMode("append")
-    }
+    }(Into(dst))
     s.read.format("lance").load(dst)
       .filter(col("w_start") <= lit(maxTs)) // drop the sentinel's window if emitted
       .orderBy("w_start")
@@ -354,7 +387,7 @@ object StreamingOps extends QueryModule {
     Seq((-1L, new Timestamp(maxTs.getTime + 86400L * 1000)))
       .toDF("user_id", "ts")
       .coalesce(1).write.mode("append").parquet(srcDir)
-    drain(s, ckpt, Some(dst), SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(ev.schema).parquet(srcDir)
       .withWatermark("ts", "0 seconds")
       .as[(Long, Timestamp)]
@@ -363,7 +396,7 @@ object StreamingOps extends QueryModule {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(sessionFn)
       .writeStream.format("lance")
       .outputMode("append")
-    }
+    }(Into(dst))
     s.read.format("lance").load(dst)
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "session_start")
@@ -423,38 +456,34 @@ object StreamingOps extends QueryModule {
     // data, turning the replay into a second ingest.
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       docs.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .groupBy(sha2(col("text"), 256).as("h"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .writeStream
       .outputMode("update")
-      .foreachBatch { (changed: DataFrame, bid: Long) =>
-       freeingBatchCheckpoints {
-        val stateExists = tableExists(s, state)
-        val lastGen = lastBidOf(s, state, colName = "gen")
-        if (bid > lastGen) {
-          // localCheckpoint: `changed` is consumed twice (observer + write);
-          // without it each consumer would recompute the micro-batch plan
-          val delta = CheckpointTracker.ckpt(changed.withColumn("gen", lit(bid)))
-          onBatch(bid, delta.count())
-          delta.write.format("lance")
-            .option("write.bucket-by", "h")
-            .option("write.bucket-count", buckets.toString)
-            .mode(if (stateExists) "append" else "overwrite")
-            .save(state)
-        } else {
-          // replayed micro-batch = state-table no-op. The batch must still
-          // be DRAINED: a stateful query's state-store partitions only
-          // commit when foreachBatch consumes every partition (Spark
-          // validates this), so "skip" means "count, don't write".
-          changed.count()
-        }
-        ()
-       }
+    }(EachBatch { (changed, bid) => freeingBatchCheckpoints {
+      val stateExists = tableExists(s, state)
+      val lastGen = lastBidOf(s, state, colName = "gen")
+      if (bid > lastGen) {
+        // localCheckpoint: `changed` is consumed twice (observer + write);
+        // without it each consumer would recompute the micro-batch plan
+        val delta = CheckpointTracker.ckpt(changed.withColumn("gen", batch_id(bid)))
+        onBatch(bid, delta.count())
+        delta.write.format("lance")
+          .option("write.bucket-by", "h")
+          .option("write.bucket-count", buckets.toString)
+          .mode(if (stateExists) "append" else "overwrite")
+          .save(state)
+      } else {
+        // replayed micro-batch = state-table no-op. The batch must still
+        // be DRAINED: a stateful query's state-store partitions only
+        // commit when foreachBatch consumes every partition (Spark
+        // validates this), so "skip" means "count, don't write".
+        changed.count()
       }
-    }
+    }})
     // merge-on-read: the latest generation of each touched hash group is
     // current. The window shuffles on h — the same uniform key the state
     // layout buckets by, so at scale this is bucket-local work
@@ -755,8 +784,8 @@ object StreamingOps extends QueryModule {
       if (saves.nonEmpty)
         labeled(s, "graft:ndd:stage+commit")(graft.sources.lance.LanceBatchSave.saveAll(s,
           saves.map { case (t, rows, opts, m) =>
-            graft.sources.lance.LanceBatchSave.plan(s, rows.withColumn("bid", lit(bid)), t, opts,
-              m, append = m.isDefined)
+            graft.sources.lance.LanceBatchSave.plan(s, rows.withColumn("bid", batch_id(bid)), t,
+              opts, m, append = m.isDefined)
           }))
       // MAINTENANCE CADENCE (r17, from the object-store op audit): probe
       // read ops grow with accumulated state FRAGMENTS (1 HEAD + 1 GET
@@ -835,21 +864,20 @@ object StreamingOps extends QueryModule {
         d.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
         d.schema
     }
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch(nearDedupBatch(s, dst, keysT, setsT, stateBuckets,
-        Dedup.BucketCap,
-        bandAndState = b => {
-          // ONE pass: the band keys are a projection of the checkpointed
-          // shingle sets, which the verify reads as the batch's state
-          val sets = batchCkpt(Dedup.shingleSets(b))
-          (Dedup.shingleBandKeys(sets), sets)
-        },
-        verify = (cand, allSets) => Dedup.verifyJaccard(cand, allSets),
-        compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _)
-    }
+    }(EachBatch(nearDedupBatch(s, dst, keysT, setsT, stateBuckets,
+      Dedup.BucketCap,
+      bandAndState = b => {
+        // ONE pass: the band keys are a projection of the checkpointed
+        // shingle sets, which the verify reads as the batch's state
+        val sets = batchCkpt(Dedup.shingleSets(b))
+        (Dedup.shingleBandKeys(sets), sets)
+      },
+      verify = (cand, allSets) => Dedup.verifyJaccard(cand, allSets),
+      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _))
     // batch-vs-batch finds each same-batch pair from both sides' band
     // keys; cross-batch pairs are found once (later member's batch)
     s.read.format("lance").load(dst)
@@ -948,27 +976,26 @@ object StreamingOps extends QueryModule {
       .toDF("doc_id", "video")
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       payloads.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(payloads.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch(nearDedupBatch(s, dst, keysT, framesT, stateBuckets,
-        Multimodal.ImgBucketCap,
-        bandAndState = b => {
-          // ONE decode pass feeds both views (frames are consumed by the
-          // banding here and 3× by the verify tail); the banding is a
-          // narrow projection of the checkpointed frames — no second
-          // eager materialization job per micro-batch (r20)
-          val frames = batchCkpt(Multimodal.decodeVideoFrameSigs(s, b))
-          val bk = Multimodal.imgBandKeys(frames, carry = Seq("doc_id", "frame_idx"))
-            .select(col("doc_id"), col("band_idx"),
-              (col("frame_idx") * lit(65536L) + col("band_key")).as("band_key"))
-          (bk, frames)
-        },
-        verify = (cand, allFrames) =>
-          Multimodal.videoVerifyPairs(cand, CheckpointTracker.ckpt(allFrames)),
-        compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _)
-    }
+    }(EachBatch(nearDedupBatch(s, dst, keysT, framesT, stateBuckets,
+      Multimodal.ImgBucketCap,
+      bandAndState = b => {
+        // ONE decode pass feeds both views (frames are consumed by the
+        // banding here and 3× by the verify tail); the banding is a
+        // narrow projection of the checkpointed frames — no second
+        // eager materialization job per micro-batch (r20)
+        val frames = batchCkpt(Multimodal.decodeVideoFrameSigs(s, b))
+        val bk = Multimodal.imgBandKeys(frames, carry = Seq("doc_id", "frame_idx"))
+          .select(col("doc_id"), col("band_idx"),
+            (col("frame_idx") * lit(65536L) + col("band_key")).as("band_key"))
+        (bk, frames)
+      },
+      verify = (cand, allFrames) =>
+        Multimodal.videoVerifyPairs(cand, CheckpointTracker.ckpt(allFrames)),
+      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _))
     s.read.format("lance").load(dst)
       .select("a_id", "b_id", "n_matched", "match_ratio")
       .distinct().orderBy("a_id", "b_id")
@@ -1035,24 +1062,23 @@ object StreamingOps extends QueryModule {
     seed(src, dst)
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       src.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, None, SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch(nearDedupBatch(s, dst, keysT, vecsT, stateBuckets,
-        bucketCap,
-        bandAndState = b => {
-          val bb = batchCkpt(assign(b)) // one read feeds both views
-          // both views are narrow projections of the checkpointed bb — no
-          // second eager materialization job per micro-batch (r20)
-          (bb.select(col("vec_id").as("doc_id"), lit(0).as("band_idx"),
-              col("label").as("band_key")),
-            bb.select(col("vec_id").as("doc_id"), col("label"), col("embedding")))
-        },
-        verify = cosineVerify,
-        compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact,
-        writeDst = writeDst) _)
-    }
+    }(EachBatch(nearDedupBatch(s, dst, keysT, vecsT, stateBuckets,
+      bucketCap,
+      bandAndState = b => {
+        val bb = batchCkpt(assign(b)) // one read feeds both views
+        // both views are narrow projections of the checkpointed bb — no
+        // second eager materialization job per micro-batch (r20)
+        (bb.select(col("vec_id").as("doc_id"), lit(0).as("band_idx"),
+            col("label").as("band_key")),
+          bb.select(col("vec_id").as("doc_id"), col("label"), col("embedding")))
+      },
+      verify = cosineVerify,
+      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact,
+      writeDst = writeDst) _))
     finalRead(dst)
   }
 
@@ -1258,7 +1284,7 @@ object StreamingOps extends QueryModule {
         .select(memberCols.map(col).toSeq: _*)
       val rows = memberDf.unionByName(batchRelabeled)
         .dropDuplicates("vec_id")
-        .withColumn("bid", lit(bid)).coalesce(1)
+        .withColumn("bid", batch_id(bid)).coalesce(1)
       if (touched.isEmpty) guardedAppend(s, rows.drop("bid"), survT, bid, survBid)
       else graft.sources.lance.LanceDelete.replaceWhere(s, survT, rows,
         Array(org.apache.spark.sql.sources.In("lbl",
@@ -1285,7 +1311,7 @@ object StreamingOps extends QueryModule {
             .withColumn("lbl", coalesce(col("lbl"), col("vec_id")))
         }
       val rows = relabeled.select("vec_id", "label", "lbl")
-        .withColumn("bid", lit(bid)).coalesce(1)
+        .withColumn("bid", batch_id(bid)).coalesce(1)
       if (touched.isEmpty) guardedAppend(s, rows.drop("bid"), survT, bid, survBid)
       else graft.sources.lance.LanceDelete.replaceWhere(s, survT, rows,
         Array(org.apache.spark.sql.sources.In("lbl",
@@ -1373,23 +1399,22 @@ object StreamingOps extends QueryModule {
     val stateBuckets = defaultStateBuckets(s)
     if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
       payloads.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(payloads.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch(nearDedupBatch(s, dst, keysT, sigsT, stateBuckets,
-        Multimodal.ImgBucketCap,
-        bandAndState = b => {
-          // ONE decode pass: band keys derive NARROWLY (8 projection rows
-          // per sig, no shuffle) from the checkpointed sigs — recomputing
-          // that projection per consumer is cheaper than a second eager
-          // materialization job per micro-batch (r20)
-          val sigs = batchCkpt(decode(s, b))
-          (Multimodal.imgBandKeys(sigs), sigs)
-        },
-        verify = sigHammingVerify,
-        compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _)
-    }
+    }(EachBatch(nearDedupBatch(s, dst, keysT, sigsT, stateBuckets,
+      Multimodal.ImgBucketCap,
+      bandAndState = b => {
+        // ONE decode pass: band keys derive NARROWLY (8 projection rows
+        // per sig, no shuffle) from the checkpointed sigs — recomputing
+        // that projection per consumer is cheaper than a second eager
+        // materialization job per micro-batch (r20)
+        val sigs = batchCkpt(decode(s, b))
+        (Multimodal.imgBandKeys(sigs), sigs)
+      },
+      verify = sigHammingVerify,
+      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _))
     s.read.format("lance").load(dst)
       .select("a_id", "b_id", "hamming").distinct().orderBy("a_id", "b_id")
   }
@@ -1431,19 +1456,17 @@ object StreamingOps extends QueryModule {
     // several source files + maxFilesPerTrigger=1 => build-then-append is
     // really exercised across MULTIPLE micro-batches
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, None, SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!IndexBuild.exists(s, root))
-          IndexBuild.build(s, batch, root, Map(
-            "index.type" -> "IVF_FLAT",
-            "index.num-partitions" -> VectorIndex.Cells.toString))
-        else IndexBuild.append(s, batch, IndexBuild.load(s, root))
-        ()
-      }
-    }
+    }(EachBatch { (batch, _) =>
+      if (!IndexBuild.exists(s, root))
+        IndexBuild.build(s, batch, root, Map(
+          "index.type" -> "IVF_FLAT",
+          "index.num-partitions" -> VectorIndex.Cells.toString))
+      else IndexBuild.append(s, batch, IndexBuild.load(s, root))
+    })
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
     IndexBuild.search(s, IndexBuild.load(s, root), qv,
       Map("vector.nprobes" -> VectorIndex.Cells.toString,
@@ -1474,7 +1497,7 @@ object StreamingOps extends QueryModule {
     rest.repartition(3).write.mode("overwrite").parquet(srcDir)
     val flat = idx.centroids.flatMap(_.toArray)
     val dim = flat.length / idx.centroids.length
-    drain(s, ckpt, Some(root), SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(rest.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withColumn("cell", graft.functions.nearest_cell(
@@ -1482,7 +1505,7 @@ object StreamingOps extends QueryModule {
       .writeStream.format("lance")
       .option("write.cluster-by", "cell")
       .outputMode("append")
-    }
+    }(Into(root))
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
     IndexBuild.search(s, IndexBuild.load(s, root), qv,
       Map("vector.nprobes" -> VectorIndex.Cells.toString,
@@ -1517,7 +1540,7 @@ object StreamingOps extends QueryModule {
     val flat = idx.centroids.flatMap(_.toArray)
     val dim = flat.length / idx.centroids.length
     val p = idx.pq.get
-    drain(s, ckpt, Some(root), SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(rest.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withColumn("cell", graft.functions.nearest_cell(
@@ -1527,7 +1550,7 @@ object StreamingOps extends QueryModule {
       .writeStream.format("lance")
       .option("write.cluster-by", "cell")
       .outputMode("append")
-    }
+    }(Into(root))
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
     IndexBuild.search(s, IndexBuild.load(s, root), qv,
       Map("vector.nprobes" -> VectorIndex.Cells.toString,
@@ -1632,7 +1655,7 @@ object StreamingOps extends QueryModule {
           col("user_id").as(s"${prefix}_user"), col("ts").as(s"${prefix}_ts"))
         .withWatermark(s"${prefix}_ts", delay)
     }
-    drain(s, ckpt, Some(dst), SizedFrom(vDir, pDir)) {
+    drain(s, ckpt, SizedFrom(vDir, pDir)) {
       side("v", vDir).join(side("p", pDir),
         expr("v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"),
         joinType)
@@ -1641,7 +1664,7 @@ object StreamingOps extends QueryModule {
         (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("lag_us"))
       .writeStream.format("lance")
       .outputMode("append")
-    }
+    }(Into(dst))
     s.read.format("lance").load(dst).orderBy("user_id", "view_id", "purchase_id")
   }
 
@@ -1679,13 +1702,13 @@ object StreamingOps extends QueryModule {
     val rd = s.readStream.schema(schema)
     val rd2 = if (filesPerTrigger > 0)
       rd.option("maxFilesPerTrigger", filesPerTrigger.toString) else rd
-    drain(s, ckpt, Some(dst), SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       rd2.parquet(srcDir)
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("event_id")
       .writeStream.format("lance")
       .outputMode("append")
-    }
+    }(Into(dst))
     s.read.format("lance").load(dst)
   }
 
@@ -1727,32 +1750,30 @@ object StreamingOps extends QueryModule {
       Seq.empty[(String, Long, Long, Long)]
         .toDF("o_orderpriority", "n", "sum_cents", "bid")
         .write.format("lance").save(mvTable)
-    drain(s, ckpt, None, SizedFrom(root)) {
+    drain(s, ckpt, SizedFrom(root)) {
       s.readStream.format("lance").option("read.change-feed", "true")
       .load(root)
       .select(col("o_orderpriority"),
         when(col("_change_type") === "insert", 1L).otherwise(-1L).as("sgn"),
         cents.as("c"))
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val cur = s.read.format("lance").load(mvTable)
-        val lastBid = lastBidOf(s, mvTable)
-        if (bid > lastBid) { // replayed micro-batch = no-op
-          val deltas = batch.groupBy("o_orderpriority")
-            .agg(sum("sgn").as("dn"), sum(col("sgn") * col("c")).as("dsum"))
-          cur.drop("bid")
-            .join(deltas, Seq("o_orderpriority"), "full_outer")
-            .select(col("o_orderpriority"),
-              (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-              (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dsum"), lit(0L)))
-                .as("sum_cents"))
-            .filter(col("n") > 0)
-            .withColumn("bid", lit(bid))
-            .write.format("lance").mode("overwrite").save(mvTable)
-        }
-        ()
+    }(EachBatch { (batch, bid) =>
+      val cur = s.read.format("lance").load(mvTable)
+      val lastBid = lastBidOf(s, mvTable)
+      if (bid > lastBid) { // replayed micro-batch = no-op
+        val deltas = batch.groupBy("o_orderpriority")
+          .agg(sum("sgn").as("dn"), sum(col("sgn") * col("c")).as("dsum"))
+        cur.drop("bid")
+          .join(deltas, Seq("o_orderpriority"), "full_outer")
+          .select(col("o_orderpriority"),
+            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+            (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dsum"), lit(0L)))
+              .as("sum_cents"))
+          .filter(col("n") > 0)
+          .withColumn("bid", batch_id(bid))
+          .write.format("lance").mode("overwrite").save(mvTable)
       }
-    }
+    })
     mvTable
   }
 
@@ -1806,7 +1827,7 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Timestamp, String, Long, Long, String, Long)]
         .toDF("w_start", "event_type", "n", "sum_id", "k", "bid")
         .write.format("lance").save(mvTable)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withWatermark("ts", delay)
@@ -1815,38 +1836,34 @@ object StreamingOps extends QueryModule {
       .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("sum_id"))
       .writeStream
       .outputMode("update")
-      .foreachBatch { (touched: DataFrame, bid: Long) =>
-       freeingBatchCheckpoints {
-        val lastBid = lastBidOf(s, mvTable)
-        if (bid > lastBid) {
-          // the upsert key rides the MV as a single column so the touched
-          // keys are one In() delete predicate (bounded: ∝ the batch)
-          // ckpt materializes every partition (state commit)
-          val up = CheckpointTracker.ckpt(touched.withColumn("k",
-            concat_ws("\u0001", col("w_start").cast("string"), col("event_type"))))
-          val keys = up.select("k").collect().map(_.getString(0))
-          if (keys.nonEmpty) {
-            // ONE atomic commit (REPLACE WHERE): the keyed delete and the
-            // |touched|-row append land together, so no reader can observe
-            // deleted-but-not-replaced state and a crash needs no replay
-            // repair — either the whole upsert committed (replay skips via
-            // the bid guard) or none of it did (replay redoes it whole).
-            // coalesce(1): one fragment per batch — the delta is
-            // |touched|-sized, and 32 shuffle-partition-shaped slivers
-            // per upsert would hand compaction avoidable work
-            graft.sources.lance.LanceDelete.replaceWhere(s, mvTable,
-              up.withColumn("bid", lit(bid)).coalesce(1),
-              Array(org.apache.spark.sql.sources.In("k", keys.toArray[Any])))
-          }
-        } else {
-          // replayed micro-batch = MV no-op; still drain so the stateful
-          // query's state-store partitions commit (Spark validates this)
-          touched.count()
+    }(EachBatch { (touched, bid) => freeingBatchCheckpoints {
+      val lastBid = lastBidOf(s, mvTable)
+      if (bid > lastBid) {
+        // the upsert key rides the MV as a single column so the touched
+        // keys are one In() delete predicate (bounded: ∝ the batch)
+        // ckpt materializes every partition (state commit)
+        val up = CheckpointTracker.ckpt(touched.withColumn("k",
+          concat_ws("\u0001", col("w_start").cast("string"), col("event_type"))))
+        val keys = up.select("k").collect().map(_.getString(0))
+        if (keys.nonEmpty) {
+          // ONE atomic commit (REPLACE WHERE): the keyed delete and the
+          // |touched|-row append land together, so no reader can observe
+          // deleted-but-not-replaced state and a crash needs no replay
+          // repair — either the whole upsert committed (replay skips via
+          // the bid guard) or none of it did (replay redoes it whole).
+          // coalesce(1): one fragment per batch — the delta is
+          // |touched|-sized, and 32 shuffle-partition-shaped slivers
+          // per upsert would hand compaction avoidable work
+          graft.sources.lance.LanceDelete.replaceWhere(s, mvTable,
+            up.withColumn("bid", batch_id(bid)).coalesce(1),
+            Array(org.apache.spark.sql.sources.In("k", keys.toArray[Any])))
         }
-        ()
-       }
+      } else {
+        // replayed micro-batch = MV no-op; still drain so the stateful
+        // query's state-store partitions commit (Spark validates this)
+        touched.count()
       }
-    }
+    }})
     mvTable
   }
 
@@ -1904,26 +1921,24 @@ object StreamingOps extends QueryModule {
     if (!tableExists(s, modelTable))
       Seq.empty[(Int, Int, Long, Long)].toDF("label", "b", "n", "bid")
         .write.format("lance").save(modelTable)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val lastBid = lastBidOf(s, modelTable)
-        if (bid > lastBid) { // replayed micro-batch = no-op
-          val labeled = batch.withColumn("w", TextAnalysis.tokens)
-            .withColumn("label", QualityClassifier.labelCol(qLo, qHi))
-            .filter(col("label").isNotNull)
-          QualityClassifier.featureCounts(labeled)
-            .unionByName(labeled.groupBy("label")
-              .agg(count(lit(1)).as("n"))
-              .select(col("label"), lit(-1).as("b"), col("n")))
-            .withColumn("bid", lit(bid))
-            .write.format("lance").mode("append").save(modelTable)
-        }
-        ()
+    }(EachBatch { (batch, bid) =>
+      val lastBid = lastBidOf(s, modelTable)
+      if (bid > lastBid) { // replayed micro-batch = no-op
+        val labeled = batch.withColumn("w", TextAnalysis.tokens)
+          .withColumn("label", QualityClassifier.labelCol(qLo, qHi))
+          .filter(col("label").isNotNull)
+        QualityClassifier.featureCounts(labeled)
+          .unionByName(labeled.groupBy("label")
+            .agg(count(lit(1)).as("n"))
+            .select(col("label"), lit(-1).as("b"), col("n")))
+          .withColumn("bid", batch_id(bid))
+          .write.format("lance").mode("append").save(modelTable)
       }
-    }
+    })
   }
 
   /** Streaming DECONTAMINATION gate — the ingest-time form of
@@ -1960,19 +1975,17 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Long, Long, Long, Long)]
         .toDF("doc_id", "max_overlap", "n_matched", "bid")
         .write.format("lance").save(outTable)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (bid > lastBidOf(s, outTable)) {
-          TextAnalysis.contaminationScreen(batch, bench)
-            .withColumn("bid", lit(bid))
-            .write.format("lance").mode("append").save(outTable)
-        }
-        ()
+    }(EachBatch { (batch, bid) =>
+      if (bid > lastBidOf(s, outTable)) {
+        TextAnalysis.contaminationScreen(batch, bench)
+          .withColumn("bid", batch_id(bid))
+          .write.format("lance").mode("append").save(outTable)
       }
-    }
+    })
     s.read.format("lance").load(outTable)
       .select("doc_id", "max_overlap", "n_matched")
       .orderBy("doc_id")
@@ -2000,19 +2013,17 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Long, Int, Double, Long, Long)]
         .toDF("vec_id", "label", "max_cos", "n_matched", "bid")
         .write.format("lance").save(outTable)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (bid > lastBidOf(s, outTable)) {
-          VectorSearch.semanticScreen(batch, bench)
-            .withColumn("bid", lit(bid))
-            .write.format("lance").mode("append").save(outTable)
-        }
-        ()
+    }(EachBatch { (batch, bid) =>
+      if (bid > lastBidOf(s, outTable)) {
+        VectorSearch.semanticScreen(batch, bench)
+          .withColumn("bid", batch_id(bid))
+          .write.format("lance").mode("append").save(outTable)
       }
-    }
+    })
     s.read.format("lance").load(outTable)
       .select("vec_id", "label", "max_cos", "n_matched")
       .orderBy("vec_id")
@@ -2032,15 +2043,11 @@ object StreamingOps extends QueryModule {
     val srcDir = tmp("stidx-src"); val root = tmp("stidx-idx"); val ckpt = tmp("stidx-ckpt")
     val raw = t(s, dir, "documents").select("doc_id", "text")
     raw.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        TextIndex.appendDelta(s, batch, root, bid)
-        ()
-      }
-    }
+    }(EachBatch(TextIndex.appendDelta(s, _, root, _)))
     TextIndex.search(s, root,
       TextAnalysis.Bm25Queries.toDF("query_id", "term"), TextAnalysis.Bm25TopK)
   }
@@ -2092,15 +2099,11 @@ object StreamingOps extends QueryModule {
     val idxRoot = tmp("shyb-tidx")
     val docs = t(s, dir, "documents").select("doc_id", "text")
     docs.repartition(4).write.mode("overwrite").parquet(tSrc)
-    drain(s, tCkpt, None, SizedFrom(tSrc)) {
+    drain(s, tCkpt, SizedFrom(tSrc)) {
       s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(tSrc)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        TextIndex.appendDelta(s, batch, idxRoot, bid)
-        ()
-      }
-    }
+    }(EachBatch(TextIndex.appendDelta(s, _, idxRoot, _)))
     // vector side: seed-train, then exactly-once cell-clustered appends
     val vSrc = tmp("shyb-vsrc"); val vCkpt = tmp("shyb-vck")
     val vecT = tmp("shyb-vec") + "/t"
@@ -2112,7 +2115,7 @@ object StreamingOps extends QueryModule {
     rest.repartition(3).write.mode("overwrite").parquet(vSrc)
     val flat = idx.centroids.flatMap(_.toArray)
     val dim = flat.length / idx.centroids.length
-    drain(s, vCkpt, Some(vecT), SessionParts) {
+    drain(s, vCkpt, SessionParts) {
       s.readStream.schema(rest.schema)
       .option("maxFilesPerTrigger", "1").parquet(vSrc)
       .withColumn("cell", graft.functions.nearest_cell(
@@ -2120,7 +2123,7 @@ object StreamingOps extends QueryModule {
       .writeStream.format("lance")
       .option("write.cluster-by", "cell")
       .outputMode("append")
-    }
+    }(Into(vecT))
     // serve: index-served lexical arm + streamed-table vector arm → fuse
     val lex = TextIndex.search(s, idxRoot,
       TextAnalysis.Bm25Queries.toDF("query_id", "term"), TextAnalysis.Bm25TopK)
@@ -2157,13 +2160,13 @@ object StreamingOps extends QueryModule {
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val n = e.count()
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, Some(tokT), SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .transform(b => VectorSearch.maxSimDocTokens(b, n))
       .writeStream.format("lance")
       .outputMode("append")
-    }
+    }(Into(tokT))
     VectorSearch.maxSimRank(
       s.read.format("lance").load(tokT).select("doc_id", "embedding"),
       VectorSearch.maxSimQueryVecs(s, e))
@@ -2198,7 +2201,7 @@ object StreamingOps extends QueryModule {
     val flat = cents.flatten
     val dim = cents.head.length
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, Some(tokT), SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .transform(b => VectorSearch.maxSimDocTokens(b, n))
@@ -2207,7 +2210,7 @@ object StreamingOps extends QueryModule {
       .writeStream.format("lance")
       .option("write.cluster-by", "cell")
       .outputMode("append")
-    }
+    }(Into(tokT))
     VectorSearch.maxSimRankPruned(s,
       s.read.format("lance").load(tokT).select("doc_id", "embedding", "cell"),
       VectorSearch.maxSimQueryToks(e), cents,
@@ -2232,12 +2235,12 @@ object StreamingOps extends QueryModule {
     val vecT = tmp("smmr-vec") + "/t"
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, Some(vecT), SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream.format("lance")
       .outputMode("append")
-    }
+    }(Into(vecT))
     VectorSearch.mmrServe(
       VectorSearch.mmrCandidatesFrom(s, s.read.format("lance").load(vecT))
         .localCheckpoint())
@@ -2266,7 +2269,7 @@ object StreamingOps extends QueryModule {
     val flat = cents.flatten
     val dim = cents.head.length
     e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, Some(vecT), SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withColumn("cell", graft.functions.nearest_cell(
@@ -2274,7 +2277,7 @@ object StreamingOps extends QueryModule {
       .writeStream.format("lance")
       .option("write.cluster-by", "cell")
       .outputMode("append")
-    }
+    }(Into(vecT))
     VectorSearch.mmrServe(
       VectorSearch.mmrCandidatesPruned(s,
         s.read.format("lance").load(vecT).select("vec_id", "embedding", "cell"),
@@ -2307,26 +2310,24 @@ object StreamingOps extends QueryModule {
       Seq.empty[(Long, String, Long, Long, Long)]
         .toDF("doc_id", "source", "n_grams", "dsir_micro", "bid")
         .write.format("lance").save(mv)
-    drain(s, ckpt, None, SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val lastBid = lastBidOf(s, mv)
-        if (bid > lastBid) { // replayed micro-batch = no-op
-          val batchTop = Sampling.dsirScore(batch, lam)
-            .orderBy(col("dsir_micro").desc, col("doc_id").asc)
-            .limit(Sampling.DsirK)
-          s.read.format("lance").load(mv).drop("bid")
-            .unionByName(batchTop)
-            .orderBy(col("dsir_micro").desc, col("doc_id").asc)
-            .limit(Sampling.DsirK)
-            .withColumn("bid", lit(bid))
-            .write.format("lance").mode("overwrite").save(mv)
-        }
-        ()
+    }(EachBatch { (batch, bid) =>
+      val lastBid = lastBidOf(s, mv)
+      if (bid > lastBid) { // replayed micro-batch = no-op
+        val batchTop = Sampling.dsirScore(batch, lam)
+          .orderBy(col("dsir_micro").desc, col("doc_id").asc)
+          .limit(Sampling.DsirK)
+        s.read.format("lance").load(mv).drop("bid")
+          .unionByName(batchTop)
+          .orderBy(col("dsir_micro").desc, col("doc_id").asc)
+          .limit(Sampling.DsirK)
+          .withColumn("bid", batch_id(bid))
+          .write.format("lance").mode("overwrite").save(mv)
       }
-    }
+    })
     s.read.format("lance").load(mv)
       .select("doc_id", "source", "n_grams", "dsir_micro")
       .orderBy("doc_id")
@@ -2351,25 +2352,23 @@ object StreamingOps extends QueryModule {
     if (!tableExists(s, cntT))
       Seq.empty[(String, Int, Long, Long)].toDF("source", "h", "c", "bid")
         .write.format("lance").save(cntT)
-    drain(s, ckpt, None, SessionParts) {
+    drain(s, ckpt, SessionParts) {
       s.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val lastBid = lastBidOf(s, cntT)
-        if (bid > lastBid) { // replayed micro-batch = no-op
-          val delta = TextAnalysis.driftCounts(batch)
-            .select(col("source"), col("h"), col("c").as("dc"))
-          s.read.format("lance").load(cntT).drop("bid")
-            .join(delta, Seq("source", "h"), "full_outer")
-            .select(col("source"), col("h"),
-              (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
-            .withColumn("bid", lit(bid))
-            .write.format("lance").mode("overwrite").save(cntT)
-        }
-        ()
+    }(EachBatch { (batch, bid) =>
+      val lastBid = lastBidOf(s, cntT)
+      if (bid > lastBid) { // replayed micro-batch = no-op
+        val delta = TextAnalysis.driftCounts(batch)
+          .select(col("source"), col("h"), col("c").as("dc"))
+        s.read.format("lance").load(cntT).drop("bid")
+          .join(delta, Seq("source", "h"), "full_outer")
+          .select(col("source"), col("h"),
+            (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
+          .withColumn("bid", batch_id(bid))
+          .write.format("lance").mode("overwrite").save(cntT)
       }
-    }
+    })
     TextAnalysis.driftReport(
       s.read.format("lance").load(cntT).select("source", "h", "c"))
   }
@@ -2391,23 +2390,21 @@ object StreamingOps extends QueryModule {
     raw.repartition(4).write.mode("overwrite").parquet(srcDir)
     Seq.empty[(java.sql.Date, Array[Byte], Long)].toDF("d", "sk", "bid")
       .write.format("lance").save(sketchTable)
-    drain(s, ckpt, None, SizedFrom(srcDir)) {
+    drain(s, ckpt, SizedFrom(srcDir)) {
       s.readStream.schema(raw.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val lastBid = lastBidOf(s, sketchTable)
-        if (bid > lastBid) { // replayed micro-batch = no-op
-          batch
-            .select(col("user_id"), col("ts").cast("timestamp").cast("date").as("d"))
-            .groupBy("d")
-            .agg(graft.functions.hll_sketch(col("user_id")).as("sk"))
-            .withColumn("bid", lit(bid))
-            .write.format("lance").mode("append").save(sketchTable)
-        }
-        ()
+    }(EachBatch { (batch, bid) =>
+      val lastBid = lastBidOf(s, sketchTable)
+      if (bid > lastBid) { // replayed micro-batch = no-op
+        batch
+          .select(col("user_id"), col("ts").cast("timestamp").cast("date").as("d"))
+          .groupBy("d")
+          .agg(graft.functions.hll_sketch(col("user_id")).as("sk"))
+          .withColumn("bid", batch_id(bid))
+          .write.format("lance").mode("append").save(sketchTable)
       }
-    }
+    })
     // serve DAU/WAU from the streamed sketch store: merge generations per
     // day, then the trailing-7-day window by a second register-wise merge
     val daily = s.read.format("lance").load(sketchTable)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.batch_id
 import graft.sources.lance.ManifestIO
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -93,7 +94,7 @@ object TextIndex {
         col("tc.term").as("term"), col("tc.tf").as("tf"))
     def lastBid(path: String): Long = StreamingOps.lastBidOf(s, path)
     if (bid > lastBid(root + "/postings"))
-      dt.select(col("term"), col("doc_id"), col("tf"), col("dl"), lit(bid).as("bid"))
+      dt.select(col("term"), col("doc_id"), col("tf"), col("dl"), batch_id(bid).as("bid"))
         .write.format("lance")
         .option("write.bucket-by", "term")
         .option("write.bucket-count", Buckets.toString)
@@ -101,13 +102,13 @@ object TextIndex {
         .save(root + "/postings")
     if (bid > lastBid(root + "/terms"))
       dt.groupBy("term").agg(count(lit(1)).as("df"))
-        .withColumn("bid", lit(bid))
+        .withColumn("bid", batch_id(bid))
         .write.format("lance")
         .mode(if (StreamingOps.tableExists(s, root + "/terms")) "append" else "overwrite")
         .save(root + "/terms")
     if (bid > lastBid(root + "/stats"))
       d.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-        .withColumn("bid", lit(bid))
+        .withColumn("bid", batch_id(bid))
         .write.format("lance")
         .mode(if (StreamingOps.tableExists(s, root + "/stats")) "append" else "overwrite")
         .save(root + "/stats")

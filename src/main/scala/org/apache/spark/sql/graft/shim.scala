@@ -32,6 +32,23 @@ object Shim {
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
+  /** Run `body` with `spark`'s job artifact state: every Spark job it
+    * submits, Dataset action or RDD action alike, is tagged with
+    * `spark`'s session UUID, and executors run it in that session's class
+    * loader. Generated classes are cached per (class loader, code), so
+    * jobs tagged with one long-lived session reuse the classes its earlier
+    * jobs compiled. */
+  def withResources[T](spark: SparkSession)(body: => T): T =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].artifactManager
+      .withResources(body)
+
+  /** `df`'s logical plan as a DataFrame of `spark`: its actions plan
+    * against `spark`'s conf and run under `spark`'s job artifact state. */
+  def ofRows(spark: SparkSession,
+             df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], df.queryExecution.logical)
+
   /** The physical plan's output as `RDD[InternalRow]` — the same rows an
     * executor-side V2 DataWriter would receive, without a row-to-Row
     * conversion pass. NOTE: rows are reused across `next()` calls; a

@@ -44,19 +44,7 @@ class CatalogSessionSpec extends SparkSpec {
   }
 
   test("operators set session conf only in the catalog registration and the sized drain") {
-    val dir = new java.io.File("src/main/scala/graft/operators")
-    assert(dir.isDirectory, s"run from the repository root (no ${dir.getPath})")
-    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
-    val sites = for {
-      f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)
-      src = scala.io.Source.fromFile(f, "UTF-8")
-      lines = try src.getLines().toVector finally src.close()
-      (line, i) <- lines.zipWithIndex if line.contains("conf.set(")
-    } yield {
-      // the object member the call sits in: the nearest member-level def above it
-      val owner = lines.take(i).reverseIterator.collectFirst { case member(n) => n }
-      (f.getName, owner.getOrElse("<none>"), i + 1)
-    }
+    val sites = OperatorSources.sites("conf.set(")
     val allowed = Set("LanceOps.scala" -> "catalogTables", "StreamingOps.scala" -> "drain")
     val stray = sites.filterNot { case (f, d, _) => allowed((f, d)) }
     if (stray.nonEmpty) fail(s"conf.set( outside the allowed sites: $stray")

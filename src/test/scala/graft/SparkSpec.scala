@@ -20,6 +20,28 @@ object TestSession {
   val sf: String = "/root/testdata/sf0.001"
 }
 
+/** Source scans of `src/main/scala/graft/operators`, relative to the
+  * working directory (the repository root under sbt). */
+object OperatorSources {
+  /** Each (file name, enclosing member, line) where the line contains
+    * `needle`: the enclosing member is the nearest member-level def above
+    * the line. */
+  def sites(needle: String): Seq[(String, String, Int)] = {
+    val dir = new java.io.File("src/main/scala/graft/operators")
+    assert(dir.isDirectory, s"run from the repository root (no ${dir.getPath})")
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    for {
+      f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+      src = scala.io.Source.fromFile(f, "UTF-8")
+      lines = try src.getLines().toVector finally src.close()
+      (line, i) <- lines.zipWithIndex if line.contains(needle)
+    } yield {
+      val owner = lines.take(i).reverseIterator.collectFirst { case member(n) => n }
+      (f.getName, owner.getOrElse("<none>"), i + 1)
+    }
+  }
+}
+
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = TestSession.sf

@@ -13,8 +13,10 @@ import java.util.concurrent.atomic.AtomicInteger
 /** The streaming drain contract every AvailableNow stream in the operators
   * rides: a drain sized from its staged source bytes runs its batches on
   * 1 shuffle partition with AQE off and puts both session values back on
-  * return or failure, and every drain starts on the caller's session, so
-  * a listener on `spark.streams` sees its progress.
+  * return or failure, every drain starts on the caller's session, so a
+  * listener on `spark.streams` sees its progress, and micro-batch bodies
+  * run on the caller's session too, so a warm arrival reuses the classes
+  * earlier arrivals generated.
   */
 class StreamDrainSpec extends SparkSpec {
 
@@ -130,5 +132,44 @@ class StreamDrainSpec extends SparkSpec {
       Shim.waitUntilEmpty(spark.sparkContext)
       assert(progress.get() > 0, "no progress from lance_streaming_sink")
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("a warm near-dup arrival compiles almost no generated classes") {
+    // three arrivals of the documents table, landed one file at a time
+    // into the staging dir the stream resumes over
+    val base = Files.createTempDirectory("graft-sdrain-arrivals-")
+    val parts = base.resolve("parts").toString
+    Tables.t(spark, sf, "documents").select(col("doc_id"), col("text"))
+      .repartition(3).write.parquet(parts)
+    val files = new java.io.File(parts).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
+    assert(files.length === 3, files.toSeq)
+    val src = base.resolve("src")
+    Files.createDirectories(src)
+    def arrive(k: Int): Unit = {
+      Files.move(java.nio.file.Paths.get(parts, files(k)), src.resolve(files(k)))
+      StreamingOps.streamNearDedupAt(spark, sf, base.resolve("keys").toString,
+        base.resolve("sets").toString, srcDir0 = src.toString,
+        ckpt0 = base.resolve("ckpt").toString, dst0 = base.resolve("dst").toString)
+    }
+    arrive(0)
+    arrive(1) // the first arrival that probes history
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    arrive(2)
+    val compiled = compiles.getCount - before
+    assert(compiled <= 10, s"the third arrival compiled $compiled classes")
+    // every arrival stamped its batch id into the band-key table
+    assert(StreamingOps.lastBidOf(spark, base.resolve("keys").toString) === 2L)
+  }
+
+  test("drain alone starts streams: foreachBatch, trigger and await sit in drain; no inlined batch id") {
+    for (needle <- Seq(".foreachBatch", ".trigger(", "awaitTermination")) {
+      val sites = OperatorSources.sites(needle)
+      assert(sites.map(s => (s._1, s._2)) === Seq(("StreamingOps.scala", "drain")),
+        s"$needle: $sites")
+    }
+    val inlined = OperatorSources.sites("lit(bid)")
+    assert(inlined.isEmpty, s"batch ids stamped as literals (use batch_id): $inlined")
   }
 }
