@@ -261,30 +261,39 @@ object Multimodal extends QueryModule {
     }
   }
 
-  // The synthesized GVID payloads are a test FIXTURE (production reads a
-  // binary column from storage), so they materialize ONCE per (session,
-  // corpus) into a parquet payload table and the operator reads them back
-  // — the measured work is parse + sampled decode, exactly what the real
-  // pipeline pays, not fixture encoding. Keyed/evicted like
-  // Dedup.lshPairsCache.
-  private val videoFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  /** A synthesized payload FIXTURE (production reads a binary column from
+    * storage): the payloads `synth(doc_id)` of the corpus's documents
+    * materialize ONCE per (session, corpus) into the parquet table `file`
+    * under a fresh `graft-<prefix>-` temp dir as (doc_id, `column`), and the operators
+    * read them back, so the measured work is decode, not fixture encoding.
+    * Paths that no longer exist are evicted first; keyed/evicted like
+    * Dedup.lshPairsCache. */
+  private final class PayloadFixture(prefix: String, file: String, column: String,
+                                     synth: Long => Array[Byte]) {
+    private val paths = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  private[graft] def videoFixture(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    { val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-      videoFixtureCache.entrySet().removeIf(e =>
-        !graft.sources.lance.ManifestIO.pathExists(e.getValue, conf)) }
-    videoFixtureCache.computeIfAbsent(
-      (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
-        val path = java.nio.file.Files.createTempDirectory("graft-gvid-").toString + "/videos.parquet"
-        t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions(it => it.map(id => (id, synthVideo(id))))
-          .toDF("doc_id", "video")
-          .write.parquet(path)
-        path
-      })
+    def apply(s: SparkSession, dir: String): String = {
+      import s.implicits._
+      { val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
+        paths.entrySet().removeIf(e =>
+          !graft.sources.lance.ManifestIO.pathExists(e.getValue, conf)) }
+      paths.computeIfAbsent(
+        (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
+          val path = java.nio.file.Files.createTempDirectory(s"graft-$prefix-").toString + s"/$file"
+          val payload = synth // the closure ships the function, not this cache
+          t(s, dir, "documents").select(col("doc_id")).as[Long]
+            .mapPartitions(it => it.map(id => (id, payload(id))))
+            .toDF("doc_id", column)
+            .write.parquet(path)
+          path
+        })
+    }
   }
+
+  // GVID clips: the measured work is parse + sampled decode
+  private val videoFixtures = new PayloadFixture("gvid", "videos.parquet", "video", synthVideo)
+
+  private[graft] def videoFixture(s: SparkSession, dir: String): String = videoFixtures(s, dir)
 
   private def mmVideoFrames(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -778,28 +787,12 @@ object Multimodal extends QueryModule {
     }
   }
 
-  // Audio payload fixture for the streaming twin — same posture as
-  // imageFixture: WAV payloads materialize ONCE per (session, corpus) so
-  // the measured work is decode + fingerprint, not fixture encoding.
-  private val audioFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  // WAV payloads for the streaming twin: the measured work is decode +
+  // fingerprint
+  private val audioFixtures = new PayloadFixture("aud", "audio.parquet", "audio",
+    id => AudioCodec.encodeWav(8000, 1, synthAudioDedup(id)))
 
-  private[graft] def audioFixture(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    { val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-      audioFixtureCache.entrySet().removeIf(e =>
-        !graft.sources.lance.ManifestIO.pathExists(e.getValue, conf)) }
-    audioFixtureCache.computeIfAbsent(
-      (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
-        val path = java.nio.file.Files.createTempDirectory("graft-aud-").toString + "/audio.parquet"
-        t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions(it => it.map(id =>
-            (id, AudioCodec.encodeWav(8000, 1, synthAudioDedup(id)))))
-          .toDF("doc_id", "audio")
-          .write.parquet(path)
-        path
-      })
-  }
+  private[graft] def audioFixture(s: SparkSession, dir: String): String = audioFixtures(s, dir)
 
   /** Decode a (doc_id, wav-bytes) frame into the 128-bit fingerprint
     * table (doc_id, sig_h, sig_v); undecodable payloads drop. Shared by
@@ -994,28 +987,10 @@ object Multimodal extends QueryModule {
       .select("a_id", "b_id", "hamming")
   }
 
-  // Like the video fixture: the synthesized PNGs are test payloads
-  // (production reads an image column from storage), so they materialize
-  // once per (session, corpus) and the measured work is decode + hash +
-  // banding — what the real pipeline pays per run.
-  private val imageFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  // synthesized PNGs: the measured work is decode + hash + banding
+  private val imageFixtures = new PayloadFixture("img", "images.parquet", "image", synthImage)
 
-  private[graft] def imageFixture(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    { val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-      imageFixtureCache.entrySet().removeIf(e =>
-        !graft.sources.lance.ManifestIO.pathExists(e.getValue, conf)) }
-    imageFixtureCache.computeIfAbsent(
-      (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
-        val path = java.nio.file.Files.createTempDirectory("graft-img-").toString + "/images.parquet"
-        t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions(it => it.map(id => (id, synthImage(id))))
-          .toDF("doc_id", "image")
-          .write.parquet(path)
-        path
-      })
-  }
+  private[graft] def imageFixture(s: SparkSession, dir: String): String = imageFixtures(s, dir)
 
   /** Decode a (doc_id, image-bytes) frame into the 128-bit signature
     * table (doc_id, sig_h, sig_v); undecodable payloads drop. Shared by

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -34,13 +35,8 @@ object StreamingOps extends QueryModule {
   private[graft] def tableExists(s: SparkSession, path: String): Boolean =
     graft.sources.lance.ManifestIO.exists(path, s.sparkContext.hadoopConfiguration)
 
-  /** FS-routed `listFiles().map(_.getName)` for the parquet staging dirs
-    * the streaming file source tails (empty when the dir is absent). */
-  private def fileNames(s: SparkSession, dir: String): Seq[String] =
-    graft.sources.lance.ManifestIO.listFileNames(dir, s.sparkContext.hadoopConfiguration)
-
   /** How a [[drain]] partitions its shuffles and state stores. */
-  private[operators] sealed trait DrainParts
+  private[graft] sealed trait DrainParts
 
   /** Partitions sized from the staged source dirs (r21, guide §2: derive
     * partitioning from input size instead of a constant): stateful
@@ -57,7 +53,7 @@ object StreamingOps extends QueryModule {
     * micro-batch body (each job a driver round trip that dominates a small
     * batch). Production-sized inputs never shrink, so the session's AQE
     * posture is untouched exactly when it matters. */
-  private[operators] final case class SizedFrom(dirs: String*) extends DrainParts
+  private[graft] final case class SizedFrom(dirs: String*) extends DrainParts
 
   /** The session's partition count; the conf is never touched. Each site
     * that keeps it, with the reason (r21; "measured" = the sized drain was
@@ -79,13 +75,13 @@ object StreamingOps extends QueryModule {
     *    serve side's scan parallelism (measured 1.2× slower).
     *  - q_stream_cdc, lance_streaming_sink: shuffle- and state-free plans
     *    that never read the count. */
-  private[operators] case object SessionParts extends DrainParts
+  private[graft] case object SessionParts extends DrainParts
 
   /** Where a [[drain]] puts its rows. */
-  private[operators] sealed trait DrainSink
+  private[graft] sealed trait DrainSink
 
   /** The stream's own sink (the writer's format) at `path`. */
-  private[operators] final case class Into(path: String) extends DrainSink
+  private[graft] final case class Into(path: String) extends DrainSink
 
   /** `body(batch, bid)` per micro-batch, run on the CALLER's session: the
     * batch is rebound to it and every job the body submits carries its
@@ -95,7 +91,7 @@ object StreamingOps extends QueryModule {
     * code), so on the clone a resumed stream would recompile every class
     * at every arrival. The caller's session outlives the query, so an
     * arrival reuses the classes earlier arrivals compiled. */
-  private[operators] final case class EachBatch(body: (DataFrame, Long) => Unit) extends DrainSink
+  private[graft] final case class EachBatch(body: (DataFrame, Long) => Unit) extends DrainSink
 
   /** The one AvailableNow drain: starts the stream `writer` builds on the
     * caller's session (so listeners on its `spark.streams` see the
@@ -107,8 +103,8 @@ object StreamingOps extends QueryModule {
     * checkpoint, so resumes stay consistent) and the drain ([[EachBatch]]
     * bodies plan their jobs against the caller's session), and is
     * restored after, on failure too. */
-  private[operators] def drain(s: SparkSession, ckpt: String, parts: DrainParts)
-                              (writer: => DataStreamWriter[_])(sink: DrainSink): Unit = {
+  private[graft] def drain(s: SparkSession, ckpt: String, parts: DrainParts)
+                          (writer: => DataStreamWriter[_])(sink: DrainSink): Unit = {
     def start[T](w: DataStreamWriter[T]): StreamingQuery = sink match {
       case Into(path) => w.start(path)
       case EachBatch(body) =>
@@ -176,6 +172,45 @@ object StreamingOps extends QueryModule {
     bytes
   }
 
+  /** The schema of the parquet files staged in `srcDir` (None when it
+    * holds no `part-` file): the schema `s.read.parquet(srcDir)` infers,
+    * read from the first file's footer on the driver, without a job. The
+    * listing is FS-routed and empty when the dir is absent. */
+  private[graft] def stagedSchema(s: SparkSession, srcDir: String): Option[StructType] =
+    graft.sources.lance.ManifestIO.listFileNames(srcDir, s.sparkContext.hadoopConfiguration)
+      .filter(_.startsWith("part-")).sorted.headOption
+      .map(f => org.apache.spark.sql.graft.Shim.parquetFileSchema(s, s"$srcDir/$f"))
+
+  /** Tail the parquet files in `srcDir`, read as `schema`, ONE file per
+    * trigger (so a dir of several files drains in several micro-batches),
+    * and [[drain]] the stream `query` builds on them. */
+  private def drainFiles(s: SparkSession, srcDir: String, schema: StructType,
+                         ckpt: String, parts: DrainParts)
+                        (query: DataFrame => DataStreamWriter[_])(sink: DrainSink): Unit =
+    drain(s, ckpt, parts)(query(s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)))(sink)
+
+  /** The one staged file-stream source: stages `frame` into `srcDir` as
+    * `srcParts` parquet files, then [[drainFiles]] them. A `srcDir` that
+    * already holds `part-` files is a RESUME: it is not rewritten (fresh
+    * part-file names would read as new data and double-ingest; callers
+    * streaming new rows land them there as new files themselves) and
+    * `frame` is never built. The stream's schema then comes from one staged
+    * footer, projected to `cols` when given; one listing decides both. */
+  private[graft] def drainStaged(s: SparkSession, srcDir: String, ckpt: String,
+                                 parts: DrainParts, srcParts: Int, frame: => DataFrame,
+                                 cols: Seq[String] = Nil)
+                                (query: DataFrame => DataStreamWriter[_])(sink: DrainSink): Unit = {
+    val schema = stagedSchema(s, srcDir) match {
+      case Some(staged) => if (cols.isEmpty) staged else StructType(cols.map(staged(_)))
+      case None =>
+        val df = frame
+        df.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
+        df.schema
+    }
+    drainFiles(s, srcDir, schema, ckpt, parts)(query)(sink)
+  }
+
   /** The max batch id recorded in a lance state table under `col` —
     * -1 when the table is absent or empty. Answered on the DRIVER from
     * the manifest's per-fragment stats (one metadata read, ZERO Spark
@@ -218,16 +253,26 @@ object StreamingOps extends QueryModule {
         }
     }
 
-  /** Append `df` tagged with `bid` into the lance table at `path`,
-    * skipped when the table's recorded high-water mark already covers the
-    * bid — the per-table half of the replay guard; compute the mark once
-    * per batch with [[lastBidOf]]. */
-  private def guardedAppend(s: SparkSession, df: DataFrame, path: String,
-                            bid: Long, lastBid: Long): Unit =
+  /** Write `df` tagged with `bid` into the existing lance table at `path`
+    * in `mode`, skipped when the table's recorded high-water mark `lastBid`
+    * already covers the bid — the per-table half of the replay guard;
+    * compute the mark once per batch with [[lastBidOf]]. */
+  private def guardedAppend(df: => DataFrame, path: String, bid: Long, lastBid: Long,
+                            mode: String): Unit =
     if (bid > lastBid)
-      df.withColumn("bid", batch_id(bid)).write.format("lance")
-        .mode(if (tableExists(s, path)) "append" else "overwrite")
-        .save(path)
+      df.withColumn("bid", batch_id(bid)).write.format("lance").mode(mode).save(path)
+
+  /** The bid-guarded sink of a stateless stream: seeds `table` as the
+    * empty frame `empty` when it is absent, then writes each micro-batch's
+    * `rows(batch)` into it in `mode` through [[guardedAppend]].
+    * foreachBatch is at-least-once, so a replayed micro-batch (its bid
+    * already at or under the table's mark) is a no-op. `rows` may read
+    * `table` itself: an `overwrite` view merges its own last version. */
+  private def guardedSink(s: SparkSession, table: String, empty: => DataFrame,
+                          mode: String = "append")(rows: DataFrame => DataFrame): DrainSink = {
+    if (!tableExists(s, table)) empty.write.format("lance").save(table)
+    EachBatch((batch, bid) => guardedAppend(rows(batch), table, bid, lastBidOf(s, table), mode))
+  }
 
   /** lance → filter/project → lance: the full source→sink path. The sink
     * commit is the manifest-txn exactly-once path; the source enumerates
@@ -430,10 +475,8 @@ object StreamingOps extends QueryModule {
     * contract directly: rows appended per batch ∝ that batch, constant as
     * history grows. Pass `srcDir0`/`ckpt0` to make the run RESUMABLE (the
     * crash-replay spec re-runs the same checkpoint after deleting its last
-    * commit marker). NOTE: a srcDir0 that already holds part- files is a
-    * RESUME — `docs` is deliberately NOT re-written there (fresh part-file
-    * names would read as new data and double-ingest); callers streaming
-    * new documents must append them to srcDir0 as new files themselves.
+    * commit marker); a srcDir0 that already holds part- files is a resume
+    * (see [[drainStaged]]).
     *
     * foreachBatch is at-least-once: a crash BETWEEN the state append and
     * the checkpoint commit replays the batch, which would re-append the
@@ -449,21 +492,14 @@ object StreamingOps extends QueryModule {
     val srcDir = Option(srcDir0).getOrElse(tmp("sdedup-src"))
     val ckpt = Option(ckpt0).getOrElse(tmp("sdedup-ckpt"))
     val buckets = defaultStateBuckets(s)
-    // several source files + maxFilesPerTrigger=1 => AvailableNow really
-    // runs MULTIPLE micro-batches, so the delta-append path is exercised.
-    // A re-run (crash replay) must NOT rewrite the source: overwrite
-    // produces fresh part-file names the file source would treat as new
-    // data, turning the replay into a second ingest.
-    if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
-      docs.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .groupBy(sha2(col("text"), 256).as("h"))
+    // several source files => AvailableNow really runs MULTIPLE
+    // micro-batches, so the delta-append path is exercised
+    drainStaged(s, srcDir, ckpt, SizedFrom(srcDir), srcParts, docs)(
+      _.groupBy(sha2(col("text"), 256).as("h"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .writeStream
       .outputMode("update")
-    }(EachBatch { (changed, bid) => freeingBatchCheckpoints {
+    )(EachBatch { (changed, bid) => freeingBatchCheckpoints {
       val stateExists = tableExists(s, state)
       val lastGen = lastBidOf(s, state, colName = "gen")
       if (bid > lastGen) {
@@ -697,10 +733,9 @@ object StreamingOps extends QueryModule {
       stateBuckets: Int, bucketCap: Int,
       bandAndState: DataFrame => (DataFrame, DataFrame),
       verify: (DataFrame, DataFrame) => DataFrame,
-      compactEvery: Int = 0,
-      vacuumOnCompact: Boolean = false,
-      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Option[DataFrame] =
-        appendDst)(batch: DataFrame, bid: Long): Unit =
+      compactEvery: Int, vacuumOnCompact: Boolean,
+      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Option[DataFrame])
+      (batch: DataFrame, bid: Long): Unit =
       freeingBatchCheckpoints {
     val conf = s.sparkContext.hadoopConfiguration
     val Seq(dstM, keysM, stateM) =
@@ -826,19 +861,43 @@ object StreamingOps extends QueryModule {
     ()
   }
 
-  /** The schema of the parquet files staged in `srcDir` (None when it
-    * holds no `part-` file): the schema `s.read.parquet(srcDir)` infers,
-    * read from the first file's footer on the driver, without a job. */
-  private[graft] def stagedSchema(s: SparkSession, srcDir: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    fileNames(s, srcDir).filter(_.startsWith("part-")).sorted.headOption.map(f =>
-      org.apache.spark.sql.graft.Shim.parquetFileSchema(s, s"$srcDir/$f"))
+  /** The one near-dup family scaffold behind the text, signature, video
+    * and embedding streams: resolves the source dir, checkpoint and dst
+    * (fresh temp dirs named by `prefix` unless given), runs `seed(source,
+    * dst)`, stages `source` with [[drainStaged]] (a resume never builds
+    * it), drains every micro-batch through [[nearDedupBatch]] and returns
+    * `finalRead(dst)`. `parts` picks the drain's partitioning from the
+    * source dir; `buckets <= 0` derives the state bucket count from the
+    * cluster. */
+  private def nearDedupStream(s: SparkSession, prefix: String, source: => DataFrame,
+      parts: String => DrainParts, keysT: String, stateT: String, srcParts: Int,
+      srcDir0: String, ckpt0: String, dst0: String,
+      compactEvery: Int, vacuumOnCompact: Boolean, bucketCap: Int,
+      bandAndState: DataFrame => (DataFrame, DataFrame),
+      verify: (DataFrame, DataFrame) => DataFrame,
+      finalRead: String => DataFrame,
+      buckets: Int = 0, cols: Seq[String] = Nil,
+      seed: (=> DataFrame, String) => Unit = (_, _) => (),
+      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Option[DataFrame] =
+        appendDst): DataFrame = {
+    val srcDir = Option(srcDir0).getOrElse(tmp(s"$prefix-src"))
+    val dst = Option(dst0).getOrElse(tmp(s"$prefix-out") + "/t")
+    val stateBuckets = if (buckets > 0) buckets else defaultStateBuckets(s)
+    lazy val src = source // built at most once: only to stage or to seed
+    seed(src, dst)
+    drainStaged(s, srcDir, Option(ckpt0).getOrElse(tmp(s"$prefix-ckpt")), parts(srcDir),
+      srcParts, src, cols)(_.writeStream)(EachBatch(nearDedupBatch(s, dst, keysT, stateT,
+      stateBuckets, bucketCap, bandAndState, verify, compactEvery, vacuumOnCompact, writeDst) _))
+    finalRead(dst)
+  }
 
   /** The near-dedup pipeline with externally-visible state-table paths
     * (so specs can verify the bucket-tagged state layout the restricted
     * probes depend on), a configurable micro-batch count (so soaks can
     * watch per-batch cost against growing history), and an overridable
-    * state bucket count (`buckets <= 0` derives it from the cluster). */
+    * state bucket count (`buckets <= 0` derives it from the cluster).
+    * A resumed arrival lists `srcDir0` once, reads (doc_id, text) by one
+    * staged footer's schema and never reads the documents table. */
   private[graft] def streamNearDedupAt(s: SparkSession, dir: String,
                                        keysT: String, setsT: String,
                                        srcParts: Int = 4,
@@ -846,43 +905,22 @@ object StreamingOps extends QueryModule {
                                        srcDir0: String = null, ckpt0: String = null,
                                        dst0: String = null,
                                        compactEvery: Int = DefaultCompactEvery,
-                                       vacuumOnCompact: Boolean = false): DataFrame = {
-    val srcDir = Option(srcDir0).getOrElse(tmp("sndd-src"))
-    val ckpt = Option(ckpt0).getOrElse(tmp("sndd-ckpt"))
-    val dst = Option(dst0).getOrElse(tmp("sndd-out") + "/t")
-    val stateBuckets = if (buckets > 0) buckets else defaultStateBuckets(s)
-    // several source files + maxFilesPerTrigger=1 => AvailableNow really
-    // runs MULTIPLE micro-batches, so batch-vs-history is exercised.
-    // A pre-populated srcDir is a RESUME (crash-replay spec) — rewriting
-    // it would read as new data (see streamDedupAt); its schema comes
-    // from one footer, not from a Spark job over the documents table
-    val schema = stagedSchema(s, srcDir) match {
-      case Some(staged) =>
-        org.apache.spark.sql.types.StructType(Seq(staged("doc_id"), staged("text")))
-      case None =>
-        val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        d.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-        d.schema
-    }
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch(nearDedupBatch(s, dst, keysT, setsT, stateBuckets,
-      Dedup.BucketCap,
+                                       vacuumOnCompact: Boolean = false): DataFrame =
+    nearDedupStream(s, "sndd", t(s, dir, "documents").select(col("doc_id"), col("text")),
+      SizedFrom(_), keysT, setsT, srcParts, srcDir0, ckpt0, dst0,
+      compactEvery, vacuumOnCompact, Dedup.BucketCap,
       bandAndState = b => {
         // ONE pass: the band keys are a projection of the checkpointed
         // shingle sets, which the verify reads as the batch's state
         val sets = batchCkpt(Dedup.shingleSets(b))
         (Dedup.shingleBandKeys(sets), sets)
       },
-      verify = (cand, allSets) => Dedup.verifyJaccard(cand, allSets),
-      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _))
-    // batch-vs-batch finds each same-batch pair from both sides' band
-    // keys; cross-batch pairs are found once (later member's batch)
-    s.read.format("lance").load(dst)
-      .select("a_id", "b_id", "jaccard").distinct().orderBy("a_id", "b_id")
-  }
+      verify = Dedup.verifyJaccard,
+      // batch-vs-batch finds each same-batch pair from both sides' band
+      // keys; cross-batch pairs are found once (later member's batch)
+      finalRead = dst => s.read.format("lance").load(dst)
+        .select("a_id", "b_id", "jaccard").distinct().orderBy("a_id", "b_id"),
+      buckets = buckets, cols = Seq("doc_id", "text"))
 
   /** Streaming IMAGE near-dedup — the image twin of q_stream_neardedup:
     * arriving image payloads dedup against everything seen so far without
@@ -967,21 +1005,11 @@ object StreamingOps extends QueryModule {
                                         srcDir0: String = null, ckpt0: String = null,
                                         dst0: String = null,
                                         compactEvery: Int = DefaultCompactEvery,
-                                        vacuumOnCompact: Boolean = false): DataFrame = {
-    val srcDir = Option(srcDir0).getOrElse(tmp("svid-src"))
-    val ckpt = Option(ckpt0).getOrElse(tmp("svid-ckpt"))
-    val dst = Option(dst0).getOrElse(tmp("svid-out") + "/t")
-    val stateBuckets = defaultStateBuckets(s)
-    val payloads = s.read.parquet(Multimodal.videoFixture(s, dir))
-      .toDF("doc_id", "video")
-    if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
-      payloads.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(payloads.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch(nearDedupBatch(s, dst, keysT, framesT, stateBuckets,
-      Multimodal.ImgBucketCap,
+                                        vacuumOnCompact: Boolean = false): DataFrame =
+    nearDedupStream(s, "svid",
+      s.read.parquet(Multimodal.videoFixture(s, dir)).toDF("doc_id", "video"),
+      SizedFrom(_), keysT, framesT, srcParts, srcDir0, ckpt0, dst0,
+      compactEvery, vacuumOnCompact, Multimodal.ImgBucketCap,
       bandAndState = b => {
         // ONE decode pass feeds both views (frames are consumed by the
         // banding here and 3× by the verify tail); the banding is a
@@ -995,11 +1023,9 @@ object StreamingOps extends QueryModule {
       },
       verify = (cand, allFrames) =>
         Multimodal.videoVerifyPairs(cand, CheckpointTracker.ckpt(allFrames)),
-      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _))
-    s.read.format("lance").load(dst)
-      .select("a_id", "b_id", "n_matched", "match_ratio")
-      .distinct().orderBy("a_id", "b_id")
-  }
+      finalRead = dst => s.read.format("lance").load(dst)
+        .select("a_id", "b_id", "n_matched", "match_ratio")
+        .distinct().orderBy("a_id", "b_id"))
 
   /** Streaming EMBEDDING near-dup — the fourth member of the family:
     * arriving vectors dedup against everything seen so far under
@@ -1031,43 +1057,28 @@ object StreamingOps extends QueryModule {
       vacuumOnCompact: Boolean = false): DataFrame =
     streamEmbFamilyAt(s, dir, keysT, vecsT, prefix = "semb",
       bucketCap = EmbStreamCap, srcParts, srcDir0, ckpt0, dst0,
-      compactEvery, vacuumOnCompact,
-      seed = (_, _) => (), writeDst = appendDst,
+      compactEvery, vacuumOnCompact, survivorView = false,
       finalRead = dst => s.read.format("lance").load(dst)
         .select("a_id", "b_id", "label", "cos").distinct().orderBy("a_id", "b_id"))
 
-  /** The ONE wrapper behind the embedding-family streaming keys — the
-    * pairs twin and the semantic MV differ ONLY in (cap, dst seeding,
-    * the writeDst slot, the final read), so the source/scaffold cannot
-    * drift between them (the same no-copy rule nearDedupBatch enforces
-    * one level down for the batch body). */
+  /** The embedding members of [[nearDedupStream]]: the pairs twin and the
+    * semantic MVs differ ONLY in (cap, the dst slot, the final read).
+    * `survivorView` swaps the dst append for the survivor view, seeded
+    * empty before the stream (REPLACE WHERE needs a standing table; the
+    * q_stream_mv_window pattern) and upserted by [[semanticMvUpsert]].
+    * `assign` maps a source micro-batch to (vec_id, label, embedding):
+    * identity keeps the fixture label as the cell; the TRAINED twin
+    * replaces it with the frozen-centroid NearestCell assignment. */
   private def streamEmbFamilyAt(s: SparkSession, dir: String,
       keysT: String, vecsT: String, prefix: String,
       bucketCap: Int,
       srcParts: Int, srcDir0: String, ckpt0: String, dst0: String,
-      compactEvery: Int, vacuumOnCompact: Boolean,
-      seed: (DataFrame, String) => Unit,
-      writeDst: (SparkSession, DataFrame, DataFrame, String, Long, Long) => Option[DataFrame],
+      compactEvery: Int, vacuumOnCompact: Boolean, survivorView: Boolean,
       finalRead: String => DataFrame,
-      // maps a source micro-batch to (vec_id, label, embedding) — identity
-      // keeps the fixture label as the cell; the TRAINED twin replaces it
-      // with the frozen-centroid NearestCell assignment (same pattern as
-      // q_stream_index's ingest projection)
-      assign: DataFrame => DataFrame = identity): DataFrame = {
-    val srcDir = Option(srcDir0).getOrElse(tmp(s"$prefix-src"))
-    val ckpt = Option(ckpt0).getOrElse(tmp(s"$prefix-ckpt"))
-    val dst = Option(dst0).getOrElse(tmp(s"$prefix-out") + "/t")
-    val stateBuckets = defaultStateBuckets(s)
-    val src = t(s, dir, "embeddings").select("vec_id", "label", "embedding")
-    seed(src, dst)
-    if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
-      src.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch(nearDedupBatch(s, dst, keysT, vecsT, stateBuckets,
-      bucketCap,
+      assign: DataFrame => DataFrame = identity): DataFrame =
+    nearDedupStream(s, prefix, t(s, dir, "embeddings").select("vec_id", "label", "embedding"),
+      _ => SessionParts, keysT, vecsT, srcParts, srcDir0, ckpt0, dst0,
+      compactEvery, vacuumOnCompact, bucketCap,
       bandAndState = b => {
         val bb = batchCkpt(assign(b)) // one read feeds both views
         // both views are narrow projections of the checkpointed bb — no
@@ -1077,10 +1088,13 @@ object StreamingOps extends QueryModule {
           bb.select(col("vec_id").as("doc_id"), col("label"), col("embedding")))
       },
       verify = cosineVerify,
-      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact,
-      writeDst = writeDst) _))
-    finalRead(dst)
-  }
+      finalRead = finalRead,
+      seed = (src, survT) =>
+        if (survivorView && !tableExists(s, survT))
+          src.select(col("vec_id"), col("label"))
+            .withColumn("lbl", col("vec_id")).withColumn("bid", lit(-1L))
+            .limit(0).write.format("lance").save(survT),
+      writeDst = if (survivorView) semanticMvUpsert else appendDst)
 
   /** Streaming SemDeDup — dedup_semantic maintained as an INCREMENTAL
     * materialized view, with EXACT batch equality at every stream end:
@@ -1131,15 +1145,7 @@ object StreamingOps extends QueryModule {
     // state tables: the upsert's bid guard skips replays whole.
     streamEmbFamilyAt(s, dir, keysT, vecsT, prefix = "ssem",
       bucketCap = Int.MaxValue, srcParts, srcDir0, ckpt0, dst0,
-      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact,
-      // REPLACE WHERE needs a standing table: seed the view empty (the
-      // q_stream_mv_window pattern), schema = survivors + component label
-      seed = (src, survT) =>
-        if (!tableExists(s, survT))
-          src.select(col("vec_id"), col("label"))
-            .withColumn("lbl", col("vec_id")).withColumn("bid", lit(-1L))
-            .limit(0).write.format("lance").save(survT),
-      writeDst = semanticMvUpsert,
+      compactEvery, vacuumOnCompact, survivorView = true,
       finalRead = survT => s.read.format("lance").load(survT)
         .filter(col("vec_id") === col("lbl"))
         .select("vec_id", "label").orderBy("vec_id"))
@@ -1174,13 +1180,7 @@ object StreamingOps extends QueryModule {
     val flat = cents.flatten
     streamEmbFamilyAt(s, dir, keysT, vecsT, prefix = "sstr",
       bucketCap = Int.MaxValue, srcParts, srcDir0, ckpt0, dst0,
-      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact,
-      seed = (src, survT) =>
-        if (!tableExists(s, survT))
-          src.select(col("vec_id"), col("label"))
-            .withColumn("lbl", col("vec_id")).withColumn("bid", lit(-1L))
-            .limit(0).write.format("lance").save(survT),
-      writeDst = semanticMvUpsert,
+      compactEvery, vacuumOnCompact, survivorView = true,
       finalRead = survT => s.read.format("lance").load(survT)
         .filter(col("vec_id") === col("lbl"))
         .select(col("vec_id"), col("label").cast("long").as("cell"))
@@ -1256,14 +1256,14 @@ object StreamingOps extends QueryModule {
       else surv.filter(col("lbl").isin(touched.toSeq: _*))
         .select(memberCols.map(col).toSeq: _*)
         .limit(EdgeLocalCap.toInt + 1).collect()
-    if (pLocal && memberRows.length <= EdgeLocalCap) {
+    val rows = if (pLocal && memberRows.length <= EdgeLocalCap) {
       // ---- fully-local relabel: 3 bounded collects + 1 write ----
       val edges = pHead.map(r => (r.getLong(0), r.getLong(1))) ++
         memberRows.iterator.filter(r => r.getLong(0) != r.getLong(2))
           .map(r => (r.getLong(0), r.getLong(2)))
       val lblOf: Map[Long, Long] =
         if (edges.isEmpty) Map.empty else Dedup.localLabels(edges).toMap
-      val memberSchema = org.apache.spark.sql.types.StructType(
+      val memberSchema = StructType(
         surv.select(memberCols.map(col).toSeq: _*).schema)
       val memberDf = s.createDataFrame(
         java.util.Arrays.asList(memberRows.map { r =>
@@ -1273,7 +1273,7 @@ object StreamingOps extends QueryModule {
       val lblDf = s.createDataFrame(
         java.util.Arrays.asList(lblOf.toSeq.map {
           case (n, l) => org.apache.spark.sql.Row(n, l) }: _*),
-        org.apache.spark.sql.types.StructType(Seq(
+        StructType(Seq(
           org.apache.spark.sql.types.StructField("vec_id",
             org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("new_lbl",
@@ -1282,13 +1282,7 @@ object StreamingOps extends QueryModule {
         .join(broadcast(lblDf), Seq("vec_id"), "left")
         .withColumn("lbl", coalesce(col("new_lbl"), col("vec_id")))
         .select(memberCols.map(col).toSeq: _*)
-      val rows = memberDf.unionByName(batchRelabeled)
-        .dropDuplicates("vec_id")
-        .withColumn("bid", batch_id(bid)).coalesce(1)
-      if (touched.isEmpty) guardedAppend(s, rows.drop("bid"), survT, bid, survBid)
-      else graft.sources.lance.LanceDelete.replaceWhere(s, survT, rows,
-        Array(org.apache.spark.sql.sources.In("lbl",
-          touched.map(_.asInstanceOf[Any]))))
+      memberDf.unionByName(batchRelabeled).dropDuplicates("vec_id")
     } else {
       // ---- over-bound fallback: the former DataFrame tail, unchanged ----
       val members =
@@ -1310,13 +1304,14 @@ object StreamingOps extends QueryModule {
             .join(labels.select(col("node").as("vec_id"), col("lbl")), Seq("vec_id"), "left")
             .withColumn("lbl", coalesce(col("lbl"), col("vec_id")))
         }
-      val rows = relabeled.select("vec_id", "label", "lbl")
-        .withColumn("bid", batch_id(bid)).coalesce(1)
-      if (touched.isEmpty) guardedAppend(s, rows.drop("bid"), survT, bid, survBid)
-      else graft.sources.lance.LanceDelete.replaceWhere(s, survT, rows,
-        Array(org.apache.spark.sql.sources.In("lbl",
-          touched.map(_.asInstanceOf[Any]))))
+      relabeled.select("vec_id", "label", "lbl")
     }
+    // the view is seeded before the stream starts, so a batch that touches
+    // no standing component appends
+    if (touched.isEmpty) guardedAppend(rows.coalesce(1), survT, bid, survBid, "append")
+    else graft.sources.lance.LanceDelete.replaceWhere(s, survT,
+      rows.withColumn("bid", batch_id(bid)).coalesce(1),
+      Array(org.apache.spark.sql.sources.In("lbl", touched.map(_.asInstanceOf[Any]))))
     None // committed here, before the batch stages its keys and state
   }
 
@@ -1385,26 +1380,16 @@ object StreamingOps extends QueryModule {
     * decode, real audio decode — the ONLY thing the modality twins
     * change), run through [[nearDedupBatch]] with the shared 8×16-bit
     * banding and the exact hamming verify. */
-  private[graft] def streamSigDedupAt(s: SparkSession, payloads: DataFrame,
+  private[graft] def streamSigDedupAt(s: SparkSession, payloads: => DataFrame,
       keysT: String, sigsT: String,
       decode: (SparkSession, DataFrame) => DataFrame,
       srcParts: Int = 4,
       srcDir0: String = null, ckpt0: String = null,
       dst0: String = null, prefix: String = "ssig",
       compactEvery: Int = DefaultCompactEvery,
-      vacuumOnCompact: Boolean = false): DataFrame = {
-    val srcDir = Option(srcDir0).getOrElse(tmp(s"$prefix-src"))
-    val ckpt = Option(ckpt0).getOrElse(tmp(s"$prefix-ckpt"))
-    val dst = Option(dst0).getOrElse(tmp(s"$prefix-out") + "/t")
-    val stateBuckets = defaultStateBuckets(s)
-    if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
-      payloads.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(payloads.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch(nearDedupBatch(s, dst, keysT, sigsT, stateBuckets,
-      Multimodal.ImgBucketCap,
+      vacuumOnCompact: Boolean = false): DataFrame =
+    nearDedupStream(s, prefix, payloads, SizedFrom(_), keysT, sigsT, srcParts,
+      srcDir0, ckpt0, dst0, compactEvery, vacuumOnCompact, Multimodal.ImgBucketCap,
       bandAndState = b => {
         // ONE decode pass: band keys derive NARROWLY (8 projection rows
         // per sig, no shuffle) from the checkpointed sigs — recomputing
@@ -1414,10 +1399,8 @@ object StreamingOps extends QueryModule {
         (Multimodal.imgBandKeys(sigs), sigs)
       },
       verify = sigHammingVerify,
-      compactEvery = compactEvery, vacuumOnCompact = vacuumOnCompact) _))
-    s.read.format("lance").load(dst)
-      .select("a_id", "b_id", "hamming").distinct().orderBy("a_id", "b_id")
-  }
+      finalRead = dst => s.read.format("lance").load(dst)
+        .select("a_id", "b_id", "hamming").distinct().orderBy("a_id", "b_id"))
 
   /** Exact 128-bit hamming verify over candidate pairs — one definition
     * for every signature modality, matching Multimodal.hashPairs' batch
@@ -1450,29 +1433,51 @@ object StreamingOps extends QueryModule {
     * a FULL-probe search over the streamed table is exact KNN, so
     * streamed-index == brute-force oracle. */
   private def streamIndex(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = tmp("sidx-src"); val ckpt = tmp("sidx-ckpt")
     val root = tmp("sidx-idx") + "/t"
-    val e = t(s, dir, "embeddings")
-    // several source files + maxFilesPerTrigger=1 => build-then-append is
-    // really exercised across MULTIPLE micro-batches
-    e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch { (batch, _) =>
-      if (!IndexBuild.exists(s, root))
-        IndexBuild.build(s, batch, root, Map(
-          "index.type" -> "IVF_FLAT",
-          "index.num-partitions" -> VectorIndex.Cells.toString))
+    // several source files => build-then-append is really exercised
+    // across MULTIPLE micro-batches
+    drainStaged(s, tmp("sidx-src"), tmp("sidx-ckpt"), SessionParts, 4,
+      t(s, dir, "embeddings"))(_.writeStream)(EachBatch { (batch, _) =>
+      if (!IndexBuild.exists(s, root)) IndexBuild.build(s, batch, root, ivf("IVF_FLAT"))
       else IndexBuild.append(s, batch, IndexBuild.load(s, root))
     })
+    searchAll(s, dir, root)
+  }
+
+  /** An IVF index of `tpe` over [[VectorIndex.Cells]] cells, plus `opts`. */
+  private def ivf(tpe: String, opts: (String, String)*): Map[String, String] =
+    Map("index.type" -> tpe, "index.num-partitions" -> VectorIndex.Cells.toString) ++ opts
+
+  /** The query vector's top-K over the index at `root`, probing EVERY
+    * cell: exact KNN, the streamed-index keys' correctness statement. */
+  private def searchAll(s: SparkSession, dir: String, root: String,
+                        opts: (String, String)*): DataFrame = {
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
     IndexBuild.search(s, IndexBuild.load(s, root), qv,
       Map("vector.nprobes" -> VectorIndex.Cells.toString,
-          "vector.k" -> VectorIndex.K.toString),
+          "vector.k" -> VectorIndex.K.toString) ++ opts,
       excludeVecId = VectorIndex.QueryVecId)
   }
+
+  /** Stage `src` as `srcParts` files and stream it into the lance table at
+    * `root` through the exactly-once lance StreamingWrite (epoch-tagged
+    * manifest commits: a replayed micro-batch is a no-op), every row
+    * assigned the nearest FROZEN centroid of `cents` by the codegen'd
+    * NearestCell projection (the centroids fold in as literals) and every
+    * append clustered by that cell, so probe pruning holds for streamed
+    * fragments exactly as for built ones. `shape` maps the source rows
+    * before the assignment; `encode` adds columns after it. */
+  private def appendCells(s: SparkSession, prefix: String, src: => DataFrame, srcParts: Int,
+                          cents: Array[Array[Double]], root: String,
+                          shape: DataFrame => DataFrame = identity,
+                          encode: DataFrame => DataFrame = identity): Unit =
+    drainStaged(s, tmp(s"$prefix-src"), tmp(s"$prefix-ckpt"), SessionParts, srcParts, src)(b =>
+      shape(b).withColumn("cell", graft.functions.nearest_cell(
+        col("embedding"), cents.flatten, cents.length, cents.head.length))
+      .transform(encode)
+      .writeStream.format("lance")
+      .option("write.cluster-by", "cell")
+      .outputMode("append"))(Into(root))
 
   /** EXACTLY-ONCE streaming index appends — the production form of
     * q_stream_index's maintenance loop: instead of foreachBatch (at-least-
@@ -1487,30 +1492,12 @@ object StreamingOps extends QueryModule {
     * ones. Seed corpus trains; the stream never retrains — drift repair
     * stays CALL system.reindex's job. Full-probe search == exact KNN. */
   private def streamIndexOnce(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = tmp("sidxo-src"); val ckpt = tmp("sidxo-ckpt")
     val root = tmp("sidxo-idx") + "/t"
     val e = t(s, dir, "embeddings")
-    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), root, Map(
-      "index.type" -> "IVF_FLAT",
-      "index.num-partitions" -> VectorIndex.Cells.toString))
-    val rest = e.filter(col("vec_id") % 4 =!= 0)
-    rest.repartition(3).write.mode("overwrite").parquet(srcDir)
-    val flat = idx.centroids.flatMap(_.toArray)
-    val dim = flat.length / idx.centroids.length
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(rest.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withColumn("cell", graft.functions.nearest_cell(
-        col("embedding"), flat, idx.centroids.length, dim))
-      .writeStream.format("lance")
-      .option("write.cluster-by", "cell")
-      .outputMode("append")
-    }(Into(root))
-    val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
-    IndexBuild.search(s, IndexBuild.load(s, root), qv,
-      Map("vector.nprobes" -> VectorIndex.Cells.toString,
-          "vector.k" -> VectorIndex.K.toString),
-      excludeVecId = VectorIndex.QueryVecId)
+    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), root, ivf("IVF_FLAT"))
+    appendCells(s, "sidxo", e.filter(col("vec_id") % 4 =!= 0), 3,
+      idx.centroids.map(_.toArray), root)
+    searchAll(s, dir, root)
   }
 
   /** EXACTLY-ONCE streaming appends for an IVF_PQ index — the PQ
@@ -1526,37 +1513,18 @@ object StreamingOps extends QueryModule {
     * approximate by construction → rows-only key, with the equality and
     * replay statements spec-gated against a batch-append twin index. */
   private def streamIndexOncePq(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = tmp("sidxp-src"); val ckpt = tmp("sidxp-ckpt")
     val root = tmp("sidxp-idx") + "/t"
     val e = t(s, dir, "embeddings")
-    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), root, Map(
-      "index.type" -> "IVF_PQ",
-      // 4-bit codes: the seed subset is smaller than the default 256-code
-      // books (KMeans caps centers at the sample size)
-      "index.num-bits" -> "4",
-      "index.num-partitions" -> VectorIndex.Cells.toString))
-    val rest = e.filter(col("vec_id") % 4 =!= 0)
-    rest.repartition(3).write.mode("overwrite").parquet(srcDir)
-    val flat = idx.centroids.flatMap(_.toArray)
-    val dim = flat.length / idx.centroids.length
+    // 4-bit codes: the seed subset is smaller than the default 256-code
+    // books (KMeans caps centers at the sample size)
+    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), root,
+      ivf("IVF_PQ", "index.num-bits" -> "4"))
     val p = idx.pq.get
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(rest.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withColumn("cell", graft.functions.nearest_cell(
-        col("embedding"), flat, idx.centroids.length, dim))
-      .withColumn("codes", graft.functions.pq_encode(
-        col("embedding"), p.flat, p.m, p.codes, p.subDim))
-      .writeStream.format("lance")
-      .option("write.cluster-by", "cell")
-      .outputMode("append")
-    }(Into(root))
-    val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
-    IndexBuild.search(s, IndexBuild.load(s, root), qv,
-      Map("vector.nprobes" -> VectorIndex.Cells.toString,
-          "vector.k" -> VectorIndex.K.toString,
-          "vector.refine-factor" -> "4"),
-      excludeVecId = VectorIndex.QueryVecId)
+    appendCells(s, "sidxp", e.filter(col("vec_id") % 4 =!= 0), 3,
+      idx.centroids.map(_.toArray), root,
+      encode = _.withColumn("codes", graft.functions.pq_encode(
+        col("embedding"), p.flat, p.m, p.codes, p.subDim)))
+    searchAll(s, dir, root, "vector.refine-factor" -> "4")
   }
 
   /** Stream-stream event-time interval join — the Flink-parity two-stream
@@ -1600,7 +1568,7 @@ object StreamingOps extends QueryModule {
       leaf
     }
     streamJoinFrom(s, views, purchases,
-      org.apache.spark.sql.types.StructType(ev.schema.filterNot(_.name == "event_type")),
+      StructType(ev.schema.filterNot(_.name == "event_type")),
       "3650 days")
   }
 
@@ -1638,7 +1606,7 @@ object StreamingOps extends QueryModule {
     * ordered files with controlled modification times to pin per-batch
     * watermark behavior). */
   private[graft] def streamJoinFrom(s: SparkSession, vDir: String, pDir: String,
-                                    schema: org.apache.spark.sql.types.StructType,
+                                    schema: StructType,
                                     delay: String,
                                     joinType: String = "inner",
                                     filesPerTrigger: Int = 0): DataFrame = {
@@ -1695,7 +1663,7 @@ object StreamingOps extends QueryModule {
     * returning the raw surviving rows (specs assert expiry/re-emission
     * row by row). */
   private[graft] def streamDedupWindowFrom(s: SparkSession, srcDir: String,
-                                           schema: org.apache.spark.sql.types.StructType,
+                                           schema: StructType,
                                            delay: String,
                                            filesPerTrigger: Int = 0): DataFrame = {
     val dst = tmp("sddw-dst"); val ckpt = tmp("sddw-ckpt")
@@ -1746,10 +1714,6 @@ object StreamingOps extends QueryModule {
                                      mvTable: String, ckpt: String): String = {
     import s.implicits._
     val cents = round(col("o_totalprice") * 100, 0).cast("long")
-    if (!tableExists(s, mvTable))
-      Seq.empty[(String, Long, Long, Long)]
-        .toDF("o_orderpriority", "n", "sum_cents", "bid")
-        .write.format("lance").save(mvTable)
     drain(s, ckpt, SizedFrom(root)) {
       s.readStream.format("lance").option("read.change-feed", "true")
       .load(root)
@@ -1757,22 +1721,17 @@ object StreamingOps extends QueryModule {
         when(col("_change_type") === "insert", 1L).otherwise(-1L).as("sgn"),
         cents.as("c"))
       .writeStream
-    }(EachBatch { (batch, bid) =>
-      val cur = s.read.format("lance").load(mvTable)
-      val lastBid = lastBidOf(s, mvTable)
-      if (bid > lastBid) { // replayed micro-batch = no-op
-        val deltas = batch.groupBy("o_orderpriority")
-          .agg(sum("sgn").as("dn"), sum(col("sgn") * col("c")).as("dsum"))
-        cur.drop("bid")
-          .join(deltas, Seq("o_orderpriority"), "full_outer")
-          .select(col("o_orderpriority"),
-            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-            (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dsum"), lit(0L)))
-              .as("sum_cents"))
-          .filter(col("n") > 0)
-          .withColumn("bid", batch_id(bid))
-          .write.format("lance").mode("overwrite").save(mvTable)
-      }
+    }(guardedSink(s, mvTable, Seq.empty[(String, Long, Long, Long)]
+        .toDF("o_orderpriority", "n", "sum_cents", "bid"), "overwrite") { batch =>
+      val deltas = batch.groupBy("o_orderpriority")
+        .agg(sum("sgn").as("dn"), sum(col("sgn") * col("c")).as("dsum"))
+      s.read.format("lance").load(mvTable).drop("bid")
+        .join(deltas, Seq("o_orderpriority"), "full_outer")
+        .select(col("o_orderpriority"),
+          (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+          (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dsum"), lit(0L)))
+            .as("sum_cents"))
+        .filter(col("n") > 0)
     })
     mvTable
   }
@@ -1820,23 +1779,21 @@ object StreamingOps extends QueryModule {
     * MV refresh over the parquet docs at `srcDir`, maintaining the lance
     * MV at `mvTable`. Returns mvTable. */
   private[graft] def streamMvWindowRefresh(s: SparkSession, srcDir: String,
-      schema: org.apache.spark.sql.types.StructType, mvTable: String,
+      schema: StructType, mvTable: String,
       ckpt: String, delay: String): String = {
     import s.implicits._
     if (!tableExists(s, mvTable))
       Seq.empty[(Timestamp, String, Long, Long, String, Long)]
         .toDF("w_start", "event_type", "n", "sum_id", "k", "bid")
         .write.format("lance").save(mvTable)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withWatermark("ts", delay)
+    drainFiles(s, srcDir, schema, ckpt, SizedFrom(srcDir))(
+      _.withWatermark("ts", delay)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum("event_id").cast("long").as("sum_id"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("sum_id"))
       .writeStream
       .outputMode("update")
-    }(EachBatch { (touched, bid) => freeingBatchCheckpoints {
+    )(EachBatch { (touched, bid) => freeingBatchCheckpoints {
       val lastBid = lastBidOf(s, mvTable)
       if (bid > lastBid) {
         // the upsert key rides the MV as a single column so the touched
@@ -1915,29 +1872,18 @@ object StreamingOps extends QueryModule {
     * source. Extracted from [[streamClassifier]]. */
   private[graft] def classifierRefresh(s: SparkSession, srcDir: String,
       modelTable: String, ckpt: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       qLo: Double, qHi: Double): Unit = {
     import s.implicits._
-    if (!tableExists(s, modelTable))
-      Seq.empty[(Int, Int, Long, Long)].toDF("label", "b", "n", "bid")
-        .write.format("lance").save(modelTable)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch { (batch, bid) =>
-      val lastBid = lastBidOf(s, modelTable)
-      if (bid > lastBid) { // replayed micro-batch = no-op
-        val labeled = batch.withColumn("w", TextAnalysis.tokens)
-          .withColumn("label", QualityClassifier.labelCol(qLo, qHi))
-          .filter(col("label").isNotNull)
-        QualityClassifier.featureCounts(labeled)
-          .unionByName(labeled.groupBy("label")
-            .agg(count(lit(1)).as("n"))
-            .select(col("label"), lit(-1).as("b"), col("n")))
-          .withColumn("bid", batch_id(bid))
-          .write.format("lance").mode("append").save(modelTable)
-      }
+    drainFiles(s, srcDir, schema, ckpt, SizedFrom(srcDir))(_.writeStream)(guardedSink(s,
+        modelTable, Seq.empty[(Int, Int, Long, Long)].toDF("label", "b", "n", "bid")) { batch =>
+      val labeled = batch.withColumn("w", TextAnalysis.tokens)
+        .withColumn("label", QualityClassifier.labelCol(qLo, qHi))
+        .filter(col("label").isNotNull)
+      QualityClassifier.featureCounts(labeled)
+        .unionByName(labeled.groupBy("label")
+          .agg(count(lit(1)).as("n"))
+          .select(col("label"), lit(-1).as("b"), col("n")))
     })
   }
 
@@ -1964,28 +1910,14 @@ object StreamingOps extends QueryModule {
       srcDir0: String = null, ckpt0: String = null): DataFrame = {
     import s.implicits._
     val srcDir = Option(srcDir0).getOrElse(tmp("scont-src"))
-    val ckpt = Option(ckpt0).getOrElse(tmp("scont-ckpt"))
-    if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
-      docs.repartition(srcParts).write.mode("overwrite").parquet(srcDir)
     // standing benchmark, MATERIALIZED once: without the localCheckpoint
     // the lazy plan (full corpus scan + shingling) would re-execute inside
     // every micro-batch, making per-batch cost ∝ corpus instead of ∝ batch
     val bench = TextAnalysis.contaminationBench(docs).localCheckpoint()
-    if (!tableExists(s, outTable))
-      Seq.empty[(Long, Long, Long, Long)]
-        .toDF("doc_id", "max_overlap", "n_matched", "bid")
-        .write.format("lance").save(outTable)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch { (batch, bid) =>
-      if (bid > lastBidOf(s, outTable)) {
-        TextAnalysis.contaminationScreen(batch, bench)
-          .withColumn("bid", batch_id(bid))
-          .write.format("lance").mode("append").save(outTable)
-      }
-    })
+    drainStaged(s, srcDir, Option(ckpt0).getOrElse(tmp("scont-ckpt")), SizedFrom(srcDir),
+      srcParts, docs)(_.writeStream)(guardedSink(s, outTable, Seq.empty[(Long, Long, Long, Long)]
+        .toDF("doc_id", "max_overlap", "n_matched", "bid"))(
+      TextAnalysis.contaminationScreen(_, bench)))
     s.read.format("lance").load(outTable)
       .select("doc_id", "max_overlap", "n_matched")
       .orderBy("doc_id")
@@ -2002,28 +1934,14 @@ object StreamingOps extends QueryModule {
   private def streamContaminationSemantic(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val srcDir = tmp("ssem-src"); val outTable = tmp("ssem-out") + "/t"
-    val ckpt = tmp("ssem-ckpt")
     val e = t(s, dir, "embeddings")
-    val raw = e.select("vec_id", "embedding", "label")
-    if (!fileNames(s, srcDir).exists(_.startsWith("part-")))
-      raw.repartition(4).write.mode("overwrite").parquet(srcDir)
     // standing benchmark, materialized once
     val bench = VectorSearch.semanticBench(e).localCheckpoint()
-    if (!tableExists(s, outTable))
-      Seq.empty[(Long, Int, Double, Long, Long)]
-        .toDF("vec_id", "label", "max_cos", "n_matched", "bid")
-        .write.format("lance").save(outTable)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch { (batch, bid) =>
-      if (bid > lastBidOf(s, outTable)) {
-        VectorSearch.semanticScreen(batch, bench)
-          .withColumn("bid", batch_id(bid))
-          .write.format("lance").mode("append").save(outTable)
-      }
-    })
+    drainStaged(s, srcDir, tmp("ssem-ckpt"), SizedFrom(srcDir), 4,
+      e.select("vec_id", "embedding", "label"))(_.writeStream)(guardedSink(s, outTable,
+        Seq.empty[(Long, Int, Double, Long, Long)]
+          .toDF("vec_id", "label", "max_cos", "n_matched", "bid"))(
+      VectorSearch.semanticScreen(_, bench)))
     s.read.format("lance").load(outTable)
       .select("vec_id", "label", "max_cos", "n_matched")
       .orderBy("vec_id")
@@ -2040,14 +1958,10 @@ object StreamingOps extends QueryModule {
     * scan-side BM25 key exactly — the same oracle as text_search_bm25. */
   private def streamTextIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val srcDir = tmp("stidx-src"); val root = tmp("stidx-idx"); val ckpt = tmp("stidx-ckpt")
-    val raw = t(s, dir, "documents").select("doc_id", "text")
-    raw.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch(TextIndex.appendDelta(s, _, root, _)))
+    val srcDir = tmp("stidx-src"); val root = tmp("stidx-idx")
+    drainStaged(s, srcDir, tmp("stidx-ckpt"), SizedFrom(srcDir), 4,
+      t(s, dir, "documents").select("doc_id", "text"))(_.writeStream)(
+      EachBatch(TextIndex.appendDelta(s, _, root, _)))
     TextIndex.search(s, root,
       TextAnalysis.Bm25Queries.toDF("query_id", "term"), TextAnalysis.Bm25TopK)
   }
@@ -2095,35 +2009,17 @@ object StreamingOps extends QueryModule {
                              prunedVec: Boolean, nprobes0: Int = 0): DataFrame = {
     import s.implicits._
     // text side: per-batch guarded delta appends to the standing index
-    val tSrc = tmp("shyb-tsrc"); val tCkpt = tmp("shyb-tck")
+    val tSrc = tmp("shyb-tsrc")
     val idxRoot = tmp("shyb-tidx")
-    val docs = t(s, dir, "documents").select("doc_id", "text")
-    docs.repartition(4).write.mode("overwrite").parquet(tSrc)
-    drain(s, tCkpt, SizedFrom(tSrc)) {
-      s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(tSrc)
-      .writeStream
-    }(EachBatch(TextIndex.appendDelta(s, _, idxRoot, _)))
+    drainStaged(s, tSrc, tmp("shyb-tck"), SizedFrom(tSrc), 4,
+      t(s, dir, "documents").select("doc_id", "text"))(_.writeStream)(
+      EachBatch(TextIndex.appendDelta(s, _, idxRoot, _)))
     // vector side: seed-train, then exactly-once cell-clustered appends
-    val vSrc = tmp("shyb-vsrc"); val vCkpt = tmp("shyb-vck")
     val vecT = tmp("shyb-vec") + "/t"
     val e = t(s, dir, "embeddings")
-    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), vecT, Map(
-      "index.type" -> "IVF_FLAT",
-      "index.num-partitions" -> VectorIndex.Cells.toString))
-    val rest = e.filter(col("vec_id") % 4 =!= 0)
-    rest.repartition(3).write.mode("overwrite").parquet(vSrc)
-    val flat = idx.centroids.flatMap(_.toArray)
-    val dim = flat.length / idx.centroids.length
-    drain(s, vCkpt, SessionParts) {
-      s.readStream.schema(rest.schema)
-      .option("maxFilesPerTrigger", "1").parquet(vSrc)
-      .withColumn("cell", graft.functions.nearest_cell(
-        col("embedding"), flat, idx.centroids.length, dim))
-      .writeStream.format("lance")
-      .option("write.cluster-by", "cell")
-      .outputMode("append")
-    }(Into(vecT))
+    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), vecT, ivf("IVF_FLAT"))
+    appendCells(s, "shyb-v", e.filter(col("vec_id") % 4 =!= 0), 3,
+      idx.centroids.map(_.toArray), vecT)
     // serve: index-served lexical arm + streamed-table vector arm → fuse
     val lex = TextIndex.search(s, idxRoot,
       TextAnalysis.Bm25Queries.toDF("query_id", "term"), TextAnalysis.Bm25TopK)
@@ -2155,18 +2051,12 @@ object StreamingOps extends QueryModule {
     * serving prunes probes; the gate serves from the whole store — the
     * exact, oracle-checkable configuration. */
   private def streamMaxSim(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = tmp("smax-src"); val ckpt = tmp("smax-ck")
     val tokT = tmp("smax-tok") + "/t"
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val n = e.count()
-    e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .transform(b => VectorSearch.maxSimDocTokens(b, n))
-      .writeStream.format("lance")
-      .outputMode("append")
-    }(Into(tokT))
+    drainStaged(s, tmp("smax-src"), tmp("smax-ck"), SessionParts, 4, e)(
+      VectorSearch.maxSimDocTokens(_, n).writeStream.format("lance").outputMode("append")
+    )(Into(tokT))
     VectorSearch.maxSimRank(
       s.read.format("lance").load(tokT).select("doc_id", "embedding"),
       VectorSearch.maxSimQueryVecs(s, e))
@@ -2191,26 +2081,13 @@ object StreamingOps extends QueryModule {
 
   private def streamMaxSimPrunedAt(s: SparkSession, dir: String,
                                    nprobes0: Int): DataFrame = {
-    val srcDir = tmp("smaxp-src"); val ckpt = tmp("smaxp-ck")
     val tokT = tmp("smaxp-tok") + "/t"
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val n = e.count()
     val cents = Dedup.trainCentroids(s,
       VectorSearch.maxSimDocTokens(e.filter(col("vec_id") % 4 === 0), n),
       "embedding", VectorIndex.Cells)
-    val flat = cents.flatten
-    val dim = cents.head.length
-    e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .transform(b => VectorSearch.maxSimDocTokens(b, n))
-      .withColumn("cell", graft.functions.nearest_cell(
-        col("embedding"), flat, cents.length, dim))
-      .writeStream.format("lance")
-      .option("write.cluster-by", "cell")
-      .outputMode("append")
-    }(Into(tokT))
+    appendCells(s, "smaxp", e, 4, cents, tokT, shape = VectorSearch.maxSimDocTokens(_, n))
     VectorSearch.maxSimRankPruned(s,
       s.read.format("lance").load(tokT).select("doc_id", "embedding", "cell"),
       VectorSearch.maxSimQueryToks(e), cents,
@@ -2231,16 +2108,10 @@ object StreamingOps extends QueryModule {
     * gate serves from the whole store — the exact, oracle-checkable
     * configuration. */
   private def streamMmr(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = tmp("smmr-src"); val ckpt = tmp("smmr-ck")
     val vecT = tmp("smmr-vec") + "/t"
-    val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream.format("lance")
-      .outputMode("append")
-    }(Into(vecT))
+    drainStaged(s, tmp("smmr-src"), tmp("smmr-ck"), SessionParts, 4,
+      t(s, dir, "embeddings").select("vec_id", "embedding"))(
+      _.writeStream.format("lance").outputMode("append"))(Into(vecT))
     VectorSearch.mmrServe(
       VectorSearch.mmrCandidatesFrom(s, s.read.format("lance").load(vecT))
         .localCheckpoint())
@@ -2261,23 +2132,11 @@ object StreamingOps extends QueryModule {
 
   private def streamMmrPrunedAt(s: SparkSession, dir: String,
                                 nprobes0: Int): DataFrame = {
-    val srcDir = tmp("smmrp-src"); val ckpt = tmp("smmrp-ck")
     val vecT = tmp("smmrp-vec") + "/t"
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val cents = Dedup.trainCentroids(s,
       e.filter(col("vec_id") % 4 === 0), "embedding", VectorIndex.Cells)
-    val flat = cents.flatten
-    val dim = cents.head.length
-    e.repartition(4).write.mode("overwrite").parquet(srcDir)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withColumn("cell", graft.functions.nearest_cell(
-        col("embedding"), flat, cents.length, dim))
-      .writeStream.format("lance")
-      .option("write.cluster-by", "cell")
-      .outputMode("append")
-    }(Into(vecT))
+    appendCells(s, "smmrp", e, 4, cents, vecT)
     VectorSearch.mmrServe(
       VectorSearch.mmrCandidatesPruned(s,
         s.read.format("lance").load(vecT).select("vec_id", "embedding", "cell"),
@@ -2301,32 +2160,19 @@ object StreamingOps extends QueryModule {
     * ever. */
   private def streamDsir(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val srcDir = tmp("sdsr-src"); val ckpt = tmp("sdsr-ck")
     val mv = tmp("sdsr-mv") + "/t"
-    val d = t(s, dir, "documents").select("doc_id", "source", "lang", "text")
     val lam = Sampling.dsirTrain(s, dir, oracleKey = "q_stream_dsir")
-    d.repartition(4).write.mode("overwrite").parquet(srcDir)
-    if (!tableExists(s, mv))
-      Seq.empty[(Long, String, Long, Long, Long)]
-        .toDF("doc_id", "source", "n_grams", "dsir_micro", "bid")
-        .write.format("lance").save(mv)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch { (batch, bid) =>
-      val lastBid = lastBidOf(s, mv)
-      if (bid > lastBid) { // replayed micro-batch = no-op
-        val batchTop = Sampling.dsirScore(batch, lam)
-          .orderBy(col("dsir_micro").desc, col("doc_id").asc)
-          .limit(Sampling.DsirK)
-        s.read.format("lance").load(mv).drop("bid")
-          .unionByName(batchTop)
-          .orderBy(col("dsir_micro").desc, col("doc_id").asc)
-          .limit(Sampling.DsirK)
-          .withColumn("bid", batch_id(bid))
-          .write.format("lance").mode("overwrite").save(mv)
-      }
+    drainStaged(s, tmp("sdsr-src"), tmp("sdsr-ck"), SessionParts, 4,
+      t(s, dir, "documents").select("doc_id", "source", "lang", "text"))(_.writeStream)(
+      guardedSink(s, mv, Seq.empty[(Long, String, Long, Long, Long)]
+        .toDF("doc_id", "source", "n_grams", "dsir_micro", "bid"), "overwrite") { batch =>
+      val batchTop = Sampling.dsirScore(batch, lam)
+        .orderBy(col("dsir_micro").desc, col("doc_id").asc)
+        .limit(Sampling.DsirK)
+      s.read.format("lance").load(mv).drop("bid")
+        .unionByName(batchTop)
+        .orderBy(col("dsir_micro").desc, col("doc_id").asc)
+        .limit(Sampling.DsirK)
     })
     s.read.format("lance").load(mv)
       .select("doc_id", "source", "n_grams", "dsir_micro")
@@ -2345,29 +2191,17 @@ object StreamingOps extends QueryModule {
     * verbatim) gates on corpus_drift's full χ² oracle UNCHANGED. */
   private def streamDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val srcDir = tmp("sdft-src"); val ckpt = tmp("sdft-ck")
     val cntT = tmp("sdft-cnt") + "/t"
-    val d = t(s, dir, "documents").select("doc_id", "source", "lang", "text")
-    d.repartition(4).write.mode("overwrite").parquet(srcDir)
-    if (!tableExists(s, cntT))
-      Seq.empty[(String, Int, Long, Long)].toDF("source", "h", "c", "bid")
-        .write.format("lance").save(cntT)
-    drain(s, ckpt, SessionParts) {
-      s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch { (batch, bid) =>
-      val lastBid = lastBidOf(s, cntT)
-      if (bid > lastBid) { // replayed micro-batch = no-op
-        val delta = TextAnalysis.driftCounts(batch)
-          .select(col("source"), col("h"), col("c").as("dc"))
-        s.read.format("lance").load(cntT).drop("bid")
-          .join(delta, Seq("source", "h"), "full_outer")
-          .select(col("source"), col("h"),
-            (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
-          .withColumn("bid", batch_id(bid))
-          .write.format("lance").mode("overwrite").save(cntT)
-      }
+    drainStaged(s, tmp("sdft-src"), tmp("sdft-ck"), SessionParts, 4,
+      t(s, dir, "documents").select("doc_id", "source", "lang", "text"))(_.writeStream)(
+      guardedSink(s, cntT, Seq.empty[(String, Int, Long, Long)].toDF("source", "h", "c", "bid"),
+        "overwrite") { batch =>
+      val delta = TextAnalysis.driftCounts(batch)
+        .select(col("source"), col("h"), col("c").as("dc"))
+      s.read.format("lance").load(cntT).drop("bid")
+        .join(delta, Seq("source", "h"), "full_outer")
+        .select(col("source"), col("h"),
+          (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
     })
     TextAnalysis.driftReport(
       s.read.format("lance").load(cntT).select("source", "h", "c"))
@@ -2385,25 +2219,13 @@ object StreamingOps extends QueryModule {
   private def streamDauHll(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val srcDir = tmp("sdau-src"); val sketchTable = tmp("sdau-sk") + "/t"
-    val ckpt = tmp("sdau-ckpt")
-    val raw = t(s, dir, "events").select(col("user_id"), col("ts"))
-    raw.repartition(4).write.mode("overwrite").parquet(srcDir)
-    Seq.empty[(java.sql.Date, Array[Byte], Long)].toDF("d", "sk", "bid")
-      .write.format("lance").save(sketchTable)
-    drain(s, ckpt, SizedFrom(srcDir)) {
-      s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-    }(EachBatch { (batch, bid) =>
-      val lastBid = lastBidOf(s, sketchTable)
-      if (bid > lastBid) { // replayed micro-batch = no-op
-        batch
-          .select(col("user_id"), col("ts").cast("timestamp").cast("date").as("d"))
-          .groupBy("d")
-          .agg(graft.functions.hll_sketch(col("user_id")).as("sk"))
-          .withColumn("bid", batch_id(bid))
-          .write.format("lance").mode("append").save(sketchTable)
-      }
+    drainStaged(s, srcDir, tmp("sdau-ckpt"), SizedFrom(srcDir), 4,
+      t(s, dir, "events").select(col("user_id"), col("ts")))(_.writeStream)(
+      guardedSink(s, sketchTable,
+        Seq.empty[(java.sql.Date, Array[Byte], Long)].toDF("d", "sk", "bid")) {
+      _.select(col("user_id"), col("ts").cast("timestamp").cast("date").as("d"))
+        .groupBy("d")
+        .agg(graft.functions.hll_sketch(col("user_id")).as("sk"))
     })
     // serve DAU/WAU from the streamed sketch store: merge generations per
     // day, then the trailing-7-day window by a second register-wise merge

@@ -237,67 +237,66 @@ object ManifestIO {
     * its create() costs ~10ms per file in permission + checksum overhead
     * (vs ~0.1ms for NIO), and sidecars land at every fragment close.
     * Non-local filesystems go through the ordinary create-exclusive. */
-  def writeSmallFile(f: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
-    val isLocal = Option(path.toUri.getScheme).forall(s => s == "file" || s.isEmpty) ||
-      f.getScheme == "file"
-    if (isLocal) {
-      val target = java.nio.file.Paths.get(f.makeQualified(path).toUri.getPath)
-      java.nio.file.Files.createDirectories(target.getParent)
-      java.nio.file.Files.write(target, bytes,
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-    } else {
-      f.mkdirs(path.getParent)
-      val out = f.create(path, false)
-      try out.write(bytes) finally out.close()
+  def writeSmallFile(f: FileSystem, path: Path, bytes: Array[Byte]): Unit =
+    localPath(f, path) match {
+      case Some(target) =>
+        java.nio.file.Files.createDirectories(target.getParent)
+        java.nio.file.Files.write(target, bytes,
+          java.nio.file.StandardOpenOption.CREATE_NEW,
+          java.nio.file.StandardOpenOption.WRITE)
+      case None =>
+        f.mkdirs(path.getParent)
+        val out = f.create(path, false)
+        try out.write(bytes) finally out.close()
     }
-  }
+
+  /** The NIO path of `path` when it lives on the local file system (no
+    * scheme, `file:`, or `f` is the local FileSystem); None otherwise. The
+    * local branches of the small-file IO below bypass Hadoop through it. */
+  private def localPath(f: FileSystem, path: Path): Option[java.nio.file.Path] =
+    if (Option(path.toUri.getScheme).forall(s => s == "file" || s.isEmpty) || f.getScheme == "file")
+      Some(java.nio.file.Paths.get(f.makeQualified(path).toUri.getPath))
+    else None
 
   /** Read a small immutable/overwritable file written by [[writeSmallFile]]
     * or [[writeSmallFileOverwrite]]; None when absent. Same local-NIO fast
     * path as the writers (a Hadoop LocalFileSystem open costs ~10ms in
     * checksum overhead for files read per-query, e.g. index version pins). */
-  def readSmallFile(f: FileSystem, path: Path): Option[Array[Byte]] = {
-    val isLocal = Option(path.toUri.getScheme).forall(s => s == "file" || s.isEmpty) ||
-      f.getScheme == "file"
-    if (isLocal) {
-      val target = java.nio.file.Paths.get(f.makeQualified(path).toUri.getPath)
-      if (!java.nio.file.Files.exists(target)) None
-      else Some(java.nio.file.Files.readAllBytes(target))
-    } else {
-      if (!f.exists(path)) None
-      else {
-        val rawLen = f.getFileStatus(path).getLen
-        require(rawLen <= Int.MaxValue,
-          s"readSmallFile is for small sidecars; $path is $rawLen bytes")
-        val len = rawLen.toInt
-        val in = f.open(path)
-        try {
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf)
-          Some(buf)
-        } finally in.close()
-      }
+  def readSmallFile(f: FileSystem, path: Path): Option[Array[Byte]] =
+    localPath(f, path) match {
+      case Some(target) =>
+        if (!java.nio.file.Files.exists(target)) None
+        else Some(java.nio.file.Files.readAllBytes(target))
+      case None =>
+        if (!f.exists(path)) None
+        else {
+          val rawLen = f.getFileStatus(path).getLen
+          require(rawLen <= Int.MaxValue,
+            s"readSmallFile is for small sidecars; $path is $rawLen bytes")
+          val len = rawLen.toInt
+          val in = f.open(path)
+          try {
+            val buf = new Array[Byte](len)
+            in.readFully(0, buf)
+            Some(buf)
+          } finally in.close()
+        }
     }
-  }
 
   /** Write a small mutable sidecar file, REPLACING any existing content
     * (e.g. an index's corpus-version pin, re-stamped on rebuild). Readers
     * racing a rewrite see old-or-new bytes, never an error — acceptable
     * for advisory metadata whose staleness only costs a rebuild. */
-  def writeSmallFileOverwrite(f: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
-    val isLocal = Option(path.toUri.getScheme).forall(s => s == "file" || s.isEmpty) ||
-      f.getScheme == "file"
-    if (isLocal) {
-      val target = java.nio.file.Paths.get(f.makeQualified(path).toUri.getPath)
-      java.nio.file.Files.createDirectories(target.getParent)
-      java.nio.file.Files.write(target, bytes)
-    } else {
-      f.mkdirs(path.getParent)
-      val out = f.create(path, true)
-      try out.write(bytes) finally out.close()
+  def writeSmallFileOverwrite(f: FileSystem, path: Path, bytes: Array[Byte]): Unit =
+    localPath(f, path) match {
+      case Some(target) =>
+        java.nio.file.Files.createDirectories(target.getParent)
+        java.nio.file.Files.write(target, bytes)
+      case None =>
+        f.mkdirs(path.getParent)
+        val out = f.create(path, true)
+        try out.write(bytes) finally out.close()
     }
-  }
 
   /** Whether `path` exists, routed through the path's own FileSystem (with
     * the local-NIO fast path) — the check raw `java.io.File.exists()` gets
@@ -306,12 +305,7 @@ object ManifestIO {
   def pathExists(path: String, conf: Configuration): Boolean = {
     val p = new Path(path)
     val f = p.getFileSystem(conf)
-    val isLocal = Option(p.toUri.getScheme).forall(s => s == "file" || s.isEmpty) ||
-      f.getScheme == "file"
-    if (isLocal)
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(f.makeQualified(p).toUri.getPath))
-    else f.exists(p)
+    localPath(f, p).fold(f.exists(p))(java.nio.file.Files.exists(_))
   }
 
   /** File names directly under `dir` (empty when absent) — the FS-routed
@@ -324,33 +318,30 @@ object ManifestIO {
   }
 
   /** Atomically create `path` with `bytes`; false if it already exists. */
-  private def writeExclusive(f: FileSystem, path: Path, bytes: Array[Byte]): Boolean = {
-    val isLocal = Option(path.toUri.getScheme).forall(s => s == "file" || s.isEmpty) ||
-      f.getScheme == "file"
-    if (isLocal) {
-      val target = java.nio.file.Paths.get(f.makeQualified(path).toUri.getPath)
-      val tmp = target.resolveSibling(s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-      try {
-        java.nio.file.Files.write(tmp, bytes)
+  private def writeExclusive(f: FileSystem, path: Path, bytes: Array[Byte]): Boolean =
+    localPath(f, path) match {
+      case Some(target) =>
+        val tmp = target.resolveSibling(s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
         try {
-          java.nio.file.Files.createLink(target, tmp) // atomic, fails if exists
+          java.nio.file.Files.write(tmp, bytes)
+          try {
+            java.nio.file.Files.createLink(target, tmp) // atomic, fails if exists
+            true
+          } catch {
+            case _: java.nio.file.FileAlreadyExistsException => false
+          }
+        } finally {
+          java.nio.file.Files.deleteIfExists(tmp)
+        }
+      case None =>
+        try {
+          val out = f.create(path, false)
+          try out.write(bytes) finally out.close()
           true
         } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
+          case NonFatal(_) => false
         }
-      } finally {
-        java.nio.file.Files.deleteIfExists(tmp)
-      }
-    } else {
-      try {
-        val out = f.create(path, false)
-        try out.write(bytes) finally out.close()
-        true
-      } catch {
-        case NonFatal(_) => false
-      }
     }
-  }
 
   // ---- JSON (json4s, shipped with Spark) ---------------------------------
 

@@ -20,26 +20,31 @@ object TestSession {
   val sf: String = "/root/testdata/sf0.001"
 }
 
-/** Source scans of `src/main/scala/graft/operators`, relative to the
-  * working directory (the repository root under sbt). */
+/** Source scans of the main sources, relative to the working directory
+  * (the repository root under sbt). */
 object OperatorSources {
-  /** Each (file name, enclosing member, line) where the line contains
-    * `needle`: the enclosing member is the nearest member-level def above
-    * the line. */
-  def sites(needle: String): Seq[(String, String, Int)] = {
-    val dir = new java.io.File("src/main/scala/graft/operators")
-    assert(dir.isDirectory, s"run from the repository root (no ${dir.getPath})")
+  /** Each (file name, enclosing member, line number, line) of the `.scala`
+    * files directly under `dir` where `matches(line)`: the enclosing member
+    * is the nearest member-level def above the line. */
+  def sites(dir: String, matches: String => Boolean): Seq[(String, String, Int, String)] = {
+    val d = new java.io.File(dir)
+    assert(d.isDirectory, s"run from the repository root (no ${d.getPath})")
     val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
     for {
-      f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+      f <- d.listFiles().toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)
       src = scala.io.Source.fromFile(f, "UTF-8")
       lines = try src.getLines().toVector finally src.close()
-      (line, i) <- lines.zipWithIndex if line.contains(needle)
+      (line, i) <- lines.zipWithIndex if matches(line)
     } yield {
       val owner = lines.take(i).reverseIterator.collectFirst { case member(n) => n }
-      (f.getName, owner.getOrElse("<none>"), i + 1)
+      (f.getName, owner.getOrElse("<none>"), i + 1, line)
     }
   }
+
+  /** Each (file name, enclosing member, line number) under
+    * `src/main/scala/graft/operators` where the line contains `needle`. */
+  def sites(needle: String): Seq[(String, String, Int)] =
+    sites("src/main/scala/graft/operators", _.contains(needle)).map(s => (s._1, s._2, s._3))
 }
 
 abstract class SparkSpec extends AnyFunSuite {

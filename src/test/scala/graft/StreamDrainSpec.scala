@@ -163,6 +163,53 @@ class StreamDrainSpec extends SparkSpec {
     assert(StreamingOps.lastBidOf(spark, base.resolve("keys").toString) === 2L)
   }
 
+  /** The `part-` file names under `dir`, each with its bytes. */
+  private def partFiles(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().toSeq.filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  /** Drain the staged source at `srcDir` into a batch recorder: returns the
+    * (batch id, rows) of every micro-batch, in order. */
+  private def drainStagedBatches(srcDir: String, srcParts: Int,
+                                 frame: => DataFrame): Seq[(Long, Long)] = {
+    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    StreamingOps.drainStaged(spark, srcDir,
+      Files.createTempDirectory("graft-sdrain-ckpt-").toString,
+      StreamingOps.SessionParts, srcParts, frame)(_.writeStream)(
+      StreamingOps.EachBatch((b, bid) => batches += ((bid, b.count()))))
+    batches.toSeq
+  }
+
+  test("staged source, fresh: stages n part files and drains them in n micro-batches") {
+    val srcDir = Files.createTempDirectory("graft-sdrain-staged-").toString
+    val batches = drainStagedBatches(srcDir, 3, docs())
+    assert(partFiles(srcDir).size === 3)
+    assert(batches.map(_._1) === Seq(0L, 1L, 2L))
+    assert(batches.map(_._2).sum === 40L)
+    assert(batches.forall(_._2 > 0), batches)
+  }
+
+  test("staged source, resume: the staged files stay as they are and the frame is never built") {
+    val srcDir = Files.createTempDirectory("graft-sdrain-resume-").toString
+    docs().repartition(2).write.mode("append").parquet(srcDir)
+    val staged = partFiles(srcDir)
+    assert(staged.size === 2)
+    val batches = drainStagedBatches(srcDir, 5,
+      throw new IllegalStateException("a resume built its source frame"))
+    assert(partFiles(srcDir) === staged)
+    assert(batches.map(_._1) === Seq(0L, 1L))
+    assert(batches.map(_._2).sum === 40L)
+  }
+
+  test("one staged source and one cell append: their stream options sit in their helpers") {
+    val perTrigger = OperatorSources.sites("\"maxFilesPerTrigger\", \"1\"")
+    assert(perTrigger.map(s => (s._1, s._2)) === Seq(("StreamingOps.scala", "drainFiles")),
+      perTrigger)
+    val cellAppends = OperatorSources.sites("\"write.cluster-by\", \"cell\"")
+      .filter(_._1 == "StreamingOps.scala")
+    assert(cellAppends.map(_._2) === Seq("appendCells"), cellAppends)
+  }
+
   test("drain alone starts streams: foreachBatch, trigger and await sit in drain; no inlined batch id") {
     for (needle <- Seq(".foreachBatch", ".trigger(", "awaitTermination")) {
       val sites = OperatorSources.sites(needle)

@@ -178,8 +178,6 @@ class WriteLayoutSpec extends SparkSpec {
   }
 
   test("layout keys are parsed only in the layout module") {
-    val dir = new java.io.File("src/main/scala/graft/sources/lance")
-    assert(dir.isDirectory, s"run from the repository root (no ${dir.getPath})")
     val keys = Seq("write.cluster-by", "clusterBy", "write.sort-by", "sortBy",
       "write.bucket-by", "bucketBy", "write.bucket-count", "bucketCount",
       "write.cluster-partitions", "write.max-rows-per-file", "maxRowsPerFile",
@@ -187,13 +185,10 @@ class WriteLayoutSpec extends SparkSpec {
     // a string literal that IS a layout key (either case), not prose naming one
     val literal = keys.map(k => "\"" + java.util.regex.Pattern.quote(k) + "\"")
       .mkString("(?i)", "|", "").r
-    val sites = for {
-      f <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)
-      if f.getName != "LanceLayout.scala"
-      src = scala.io.Source.fromFile(f, "UTF-8")
-      lines = try src.getLines().toVector finally src.close()
-      (line, i) <- lines.zipWithIndex if literal.findFirstIn(line).isDefined
-    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    val sites = OperatorSources.sites("src/main/scala/graft/sources/lance",
+      literal.findFirstIn(_).isDefined).collect {
+      case (f, _, n, line) if f != "LanceLayout.scala" => s"$f:$n: ${line.trim}"
+    }
     if (sites.nonEmpty) fail(s"layout key literals outside LanceLayout.scala:\n${sites.mkString("\n")}")
   }
 
