@@ -137,6 +137,10 @@ object Bench {
     .replaceAll(TruncatedWithId, "$1$2...")
     .replaceAll("lambda (\\w+?)_\\d+\\b", "lambda $1_")
     .replaceAll("_[0-9a-f]{32}\\b", "_<uuid>")
+    // an RDD's call site (`MapPartitionsRDD[n] at localCheckpoint at
+    // StreamingOps.scala:2245`) names a source line, which moves with any
+    // edit above it
+    .replaceAll("(\\.scala):\\d+", "$1:N")
     // NORMALIZER v3 (r19): LanceScan lines print the table's manifest
     // version and fragment counts — run-shape data (how many commits a
     // stream happened to make, compaction cadence hits), not plan
@@ -173,53 +177,46 @@ object Bench {
       "usage: Bench | Bench plan OUTDIR TAG key... | Bench profile key...")
   }
 
+  /** A key's serving part: `run` executes the key once and returns the
+    * frame it executed; `plan` maps that frame to the one the fingerprint
+    * and `Bench plan` read. An `ivf_*` key's search is eager and returns a
+    * local table, so its `plan` is the one Spark plan the search collects
+    * (`IndexBuild.searchPlan`). */
+  private case class Served(run: () => DataFrame, plan: DataFrame => DataFrame = identity)
+
   /** The body every mode runs for `name`: performs the key's one-time build
-    * now (its wall recorded in `builds`) and returns the serving part, which
-    * executes the key and returns the executed frame. Five keys charge a
-    * build outside the query: IVF/PQ/SQ index builds and the session-memoized
-    * LSH pair set and trained SemDeDup index, which repeat consumers never
-    * pay again. */
+    * now (its wall recorded in `builds`) and returns the serving part.
+    * Every `ivf_*` key builds its `IndexBuild` index once (charged to
+    * `<key>_build`, `_search` dropped) and times the search alone; two more
+    * keys charge the session-memoized LSH pair set and trained SemDeDup
+    * index, which repeat consumers never pay again. */
   private def keyBody(spark: SparkSession, sfDir: String, name: String,
                       fn: (SparkSession, String) => DataFrame,
-                      builds: mutable.Map[String, Double]): () => DataFrame = {
+                      builds: mutable.Map[String, Double]): Served = {
     import operators.VectorIndex
     def build[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       builds(label) = (System.nanoTime() - t0) / 1e9
       r
     }
-    def cached(df: DataFrame): DataFrame = { val c = df.cache(); c.count(); c }
-    lazy val qv = VectorIndex.embeddingOf(spark, sfDir, VectorIndex.QueryVecId)
-    val query: () => DataFrame = name match {
-      case "ivf_flat_search" =>
-        val (root, centroids) = build("ivf_flat_build")(VectorIndex.buildIvfFlat(spark, sfDir))
-        () => VectorIndex.ivfSearch(spark, root, centroids, qv, nprobes = VectorIndex.Cells,
-          k = VectorIndex.K, excludeVecId = VectorIndex.QueryVecId)
-      case "dedup_semantic_trained" =>
-        build("semdedup_idx_build")(operators.Dedup.trainedSemIndex(spark, sfDir))
-        () => fn(spark, sfDir)
-      case "dedup_minhash_lsh" =>
-        build("lsh_pairs_build")(operators.Dedup.lshPairs(spark, sfDir).count())
-        () => fn(spark, sfDir)
-      case "ivf_pq_search" =>
-        // codebook training + encode is the build; the ADC query is timed
-        val (codes, flat, subDim) = build("ivf_pq_build") {
-          val (encoded, flat, subDim) = VectorIndex.buildPq(spark, sfDir)
-          (cached(encoded), flat, subDim)
+    VectorIndex.ivfKeys.get(name) match {
+      case Some(key) =>
+        val idx = build(name.stripSuffix("_search") + "_build")(
+          VectorIndex.buildKey(spark, sfDir, key))
+        val qv = VectorIndex.embeddingOf(spark, sfDir, VectorIndex.QueryVecId)
+        // the search is eager: it has run when it returns
+        Served(() => VectorIndex.searchKey(spark, idx, key, qv),
+          _ => VectorIndex.searchKeyPlan(spark, idx, key, qv))
+      case None =>
+        name match {
+          case "dedup_semantic_trained" =>
+            build("semdedup_idx_build")(operators.Dedup.trainedSemIndex(spark, sfDir))
+          case "dedup_minhash_lsh" =>
+            build("lsh_pairs_build")(operators.Dedup.lshPairs(spark, sfDir).count())
+          case _ =>
         }
-        val lut = VectorIndex.pqLut(qv, flat, subDim)
-        () => VectorIndex.pqAdcTopK(codes, lut, k = 10, excludeVecId = VectorIndex.QueryVecId)
-      case "ivf_sq_search" =>
-        // stats pass + encode is the build; the ADC + refine query is timed
-        val (codes, mins, scales) = build("ivf_sq_build") {
-          val (encoded, mins, scales) = VectorIndex.buildSq(spark, sfDir)
-          (cached(encoded), mins, scales)
-        }
-        () => VectorIndex.sqTopKRefined(spark, codes, mins, scales, qv, k = VectorIndex.K,
-          refineFactor = 4, excludeVecId = VectorIndex.QueryVecId)
-      case _ => () => fn(spark, sfDir)
+        Served(() => { val df = fn(spark, sfDir); df.count(); df })
     }
-    () => { val df = query(); df.count(); df }
   }
 
   /** Short hash of the normalized static (pre-AQE) physical plan plus its
@@ -278,10 +275,10 @@ object Bench {
     val bodies = mutable.LinkedHashMap[String, () => Unit]()
     keys.foreach { name =>
       try {
-        val run = keyBody(spark, sfDir, name, qs(name), builds)
+        val served = keyBody(spark, sfDir, name, qs(name), builds)
         val body: () => Unit = () => {
-          val df = run()
-          if (!plans.contains(name)) plans(name) = planFingerprint(df)
+          val df = served.run()
+          if (!plans.contains(name)) plans(name) = planFingerprint(served.plan(df))
         }
         bodies(name) = body
         body() // warmup: JIT + codegen cache + FS cache
@@ -334,10 +331,10 @@ object Bench {
     "dedup_ngram_jaccard" -> "PLAN CHANGED r15: candidate signature moved from 126-hash MinHash to one-permutation hashing (1 hash/gram + densification); output identical (exact verify decides), expect large speedup vs r14's 6.7 s",
     "contamination_semantic" -> "PLAN CHANGED r17 (two-phase screen) and AGAIN r18 (dimension-gated auto mode: rows under 256 dims short-circuit past the hamming eval, so the 64-dim fixture now runs the exact semantics with the sketch columns still present); output identical at every step, the screen's win is at production dims",
     "__spaced" -> "keys suffixed __spaced are the same query re-measured at the end of the run (since r17: every key whose noise band exceeds 0.5, plus the two map-only canaries); a first-slot/spaced disagreement marks bench-order noise, not a plan change",
-    "builds" -> "since r17 one-time build entries (ivf_flat_build, lsh_pairs_build, ivf_pq_build, ivf_sq_build) live in the builds map, excluded from queries and total; r16-and-earlier totals include them",
+    "builds" -> "since r17 one-time build entries (ivf_flat_build, lsh_pairs_build, ivf_pq_build, ivf_sq_build) live in the builds map, excluded from queries and total; r16-and-earlier totals include them. Since the one-index change every ivf_* key builds its persisted IndexBuild index once (<key>_build, _search dropped) and times IndexBuild.search alone, and its plan fingerprint reads IndexBuild.searchPlan: ivf_filtered_search no longer times its build, and ivf_pq_search / ivf_sq_search time a disk-backed, cell-pruned index search instead of a scan of a cached in-memory frame, so none of the three compares with earlier rounds",
     "host_tide" -> "wall times are single-host measurements: compare rounds through tools/bench_compare.py (noise bands, spaced re-medians, per-batch streaming denominators) and treat a broad same-direction shift on unchanged plan fingerprints as host speed, not code — the late-r18 close measured untouched map-only canaries at 1.5-2x their same-day morning walls on identical code/plans (shared-host slowdown, load 1.7 with zero local processes)",
     "data" -> "per-key data-side record of the LAST measured run: streaming batches/inputRows/sinkRows (StreamingQueryProgress) and lance manifest commits; the denominators for adjudicating streaming wall-time swings",
-    "plans" -> "since r17: per-key sha-prefix:line-count fingerprint of the normalized static physical plan (ids/paths stripped, pre-AQE); equal across rounds = wall swing is host/data, changed = a real plan change — streaming keys fingerprint their sink-read side only. NORMALIZER v2 since r18 (JVM lambda identities in typed-API nodes stripped — they flipped fingerprints on unchanged code); v3 since r19 (LanceScan manifest version / fragment counts stripped — run-shape data, flipped q_stream_image_dedup on identical code); v4 since r20 (the v3 strips anchored to LanceScan description lines, and fragment counts bucketed to pruned-vs-full instead of deleted so a lost-pruning regression flips the tripwire again); v5 (scan metadata values that Spark cut mid-way keep only their text up to the first expression id, whose digit count moved the cut; Scala-API lambda variable counters and per-run table-name suffixes stripped), so fingerprints compare only within the same normalizer version")
+    "plans" -> "since r17: per-key sha-prefix:line-count fingerprint of the normalized static physical plan (ids/paths stripped, pre-AQE); equal across rounds = wall swing is host/data, changed = a real plan change — streaming keys fingerprint their sink-read side only. NORMALIZER v2 since r18 (JVM lambda identities in typed-API nodes stripped — they flipped fingerprints on unchanged code); v3 since r19 (LanceScan manifest version / fragment counts stripped — run-shape data, flipped q_stream_image_dedup on identical code); v4 since r20 (the v3 strips anchored to LanceScan description lines, and fragment counts bucketed to pruned-vs-full instead of deleted so a lost-pruning regression flips the tripwire again); v5 (scan metadata values that Spark cut mid-way keep only their text up to the first expression id, whose digit count moved the cut; Scala-API lambda variable counters and per-run table-name suffixes stripped); v6 (the source line of an RDD call site, `at StreamingOps.scala:N`, stripped — it moved with every edit above it and flipped the q_stream_mmr* formatted plans), so fingerprints compare only within the same normalizer version")
 
   /** The bench artifact: ONE compact line with the fixed field order
     * metric,value,unit,queries,errors,noise,builds,data,plans,notes,sf —
@@ -368,8 +365,8 @@ object Bench {
     val qs = SparkEntry.queries
     Files.createDirectories(Paths.get(outDir))
     val unstable = keys.filter { k =>
-      val run = keyBody(spark, sfDir, k, qs(k), mutable.Map.empty)
-      val reps = Seq.fill(2)(run())
+      val served = keyBody(spark, sfDir, k, qs(k), mutable.Map.empty)
+      val reps = Seq.fill(2)(served.plan(served.run()))
       val formatted = reps.head.queryExecution.explainString(ExplainMode.fromString("formatted"))
       val out = s"$outDir/${k}_$tag.txt"
       Files.writeString(Paths.get(out), formatted)
@@ -393,7 +390,7 @@ object Bench {
     val qs = SparkEntry.queries
     keys.foreach { k =>
       val builds = mutable.LinkedHashMap[String, Double]()
-      val run = keyBody(spark, sfDir, k, qs(k), builds)
+      val run = keyBody(spark, sfDir, k, qs(k), builds).run
       builds.foreach { case (b, s) => println(f"[profile] $k build $b $s%.3fs") }
       println(f"[profile] $k warmup ${Harness.secs(run())}%.3fs")
       val last = (1 to 3).map { i =>

@@ -21,6 +21,17 @@ package object functions {
   def vec_cosine(a: Column, b: Column): Column =
     Column(VectorDistance(expression(a), expression(b), "cosine"))
 
+  /** The ranking score of `metric` between `a` and `b`, and whether it
+    * ranks ascending: l2 is a distance (ascending), cosine and dot are
+    * similarities (descending). Another metric fails naming `caller`. */
+  def vec_score(metric: String, a: Column, b: Column, caller: String): (Column, Boolean) =
+    metric match {
+      case "l2" | "cosine" | "dot" =>
+        (Column(VectorDistance(expression(a), expression(b), metric)), metric == "l2")
+      case other => throw new IllegalArgumentException(
+        s"$caller: unknown metric $other (expected l2 / cosine / dot)")
+    }
+
   /** distance → similarity, as the reference defines it
     * (LanceVectorSearch.SearchResult.getSimilarity: 1/(1+d), 1.0 at d=0). */
   def distance_to_similarity(d: Column): Column = {

@@ -262,9 +262,4 @@ object CentroidGraph {
   /** Rebuild from persisted per-layer adjacency (index sidecar load). */
   def fromLayers(centroids: Array[Vector], layers: Seq[Layer]): CentroidGraph =
     new CentroidGraph(centroids, layers)
-
-  /** Legacy single-layer sidecars persisted only the L0 adjacency. */
-  def fromNeighbors(centroids: Array[Vector], neighbors: Array[Array[Int]]): CentroidGraph =
-    new CentroidGraph(centroids,
-      Seq(Layer(Array.tabulate(centroids.length)(identity), neighbors)))
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.sources.lance.{LanceVectorOptions, VectorIndexOptions}
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -21,10 +20,11 @@ import java.nio.charset.StandardCharsets
   * probe's `cell IN (…)` is decided by fragment stats alone (the scan
   * consumes it; no per-probe-set filter reaches codegen), with an extra
   * PQ `codes` column for the *_PQ types, plus a JSON sidecar
-  * (`<root>/_index/meta.json`) carrying centroids, PQ codebooks and the
-  * HNSW adjacency — so a fresh session `load`s and searches without
-  * rebuilding. All per-row math (encode, ADC, exact re-rank) is codegen'd
-  * expressions; driver-side work is O(cells), never O(rows).
+  * (`<root>/_index/meta-<uuid>.json`, named by the manifest's `index.meta`
+  * property) carrying centroids, PQ codebooks and the HNSW adjacency — so
+  * a fresh session `load`s and searches without rebuilding. All per-row
+  * math (encode, ADC, exact re-rank) is codegen'd expressions;
+  * driver-side work is O(cells), never O(rows).
   */
 object IndexBuild {
 
@@ -53,8 +53,6 @@ object IndexBuild {
   /** The write layout of every index write: fragments roll at each cell
     * change, so each holds one cell. */
   private val IndexLayout = Map("write.cluster-by" -> "cell")
-
-  private val toVec = udf { a: Seq[Double] => Vectors.dense(a.toArray) }
 
   /** Largest power-of-two sub-vector count ≤ 16 dividing `dim` (the
     * reference auto-calculates when index.num-sub-vectors is unset). */
@@ -101,28 +99,14 @@ object IndexBuild {
     }
   }
 
-  /** Does `root` carry a persisted index? Checks the manifest's sidecar
-    * pointer first (the atomic source of truth), then the legacy fixed
-    * `_index/meta.json` path. */
+  /** Does `root` carry a persisted index? Its manifest's sidecar pointer
+    * (the atomic source of truth) says. */
   def exists(s: SparkSession, root: String): Boolean =
-    metaFileAt(s, root, latestManifest(s, root)).isDefined
+    latestManifest(s, root).exists(_.props.contains(MetaProp))
 
   private def latestManifest(s: SparkSession, root: String) =
     graft.sources.lance.ManifestIO.loadLatest(root,
       org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty))
-
-  /** The sidecar file `m`, a manifest of `root`, points at, with its epoch:
-    * the `index.meta` pointer, else the legacy fixed path if present. */
-  private def metaFileAt(s: SparkSession, root: String,
-                         m: Option[graft.sources.lance.LanceManifest])
-      : Option[(org.apache.hadoop.fs.Path, Option[String])] =
-    m.flatMap(_.props.get(MetaProp)) match {
-      case Some(epoch) => Some((metaPath(root, epoch), Some(epoch)))
-      case None =>
-        val legacy = metaPath(root)
-        val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-        if (legacy.getFileSystem(conf).exists(legacy)) Some((legacy, None)) else None
-    }
 
   private def buildWith(s: SparkSession, source: DataFrame, root: String,
                         io: VectorIndexOptions, overwrite: Boolean): BuiltIndex = {
@@ -130,17 +114,11 @@ object IndexBuild {
     val dim = source.select(size(col(vecCol))).first().getInt(0)
     val cells = io.numPartitions
 
-    // r20: adaptive trainer (driver-local LocalKMeans under the sample
-    // bounds, MLlib above) + the codegen'd NearestCell assignment the
-    // append path already uses (assignToCells) — build and append share
-    // one tie-break, the MLlib fv conversion leaves the build path, and
-    // the per-iteration distributed-job overhead that dominated training
-    // wall at gate scale is gone. Full-probe searches are exact under any
-    // centroids, so gated answers are unchanged.
+    // adaptive trainer (driver-local LocalKMeans under the sample bounds,
+    // MLlib above); rows are assigned and encoded by assignToCells, the
+    // rule appends use, so build and append share one tie-break
     val centArr = VectorIndex.fitCentroids(
       VectorIndex.trainingSample(source.select(col(vecCol))), vecCol, cells, 42L)
-    val assigned = source.withColumn("cell", graft.functions.nearest_cell(
-      col(vecCol), centArr.flatten, centArr.length, centArr.head.length))
     val centroids = centArr.map(Vectors.dense)
 
     val isPq = io.indexType.endsWith("_PQ")
@@ -158,13 +136,7 @@ object IndexBuild {
       val (mins, scales) = VectorIndex.sqStats(source, vecCol)
       Some(SqMeta(mins, scales))
     }
-    val indexed = (pq, sq) match {
-      case (Some(p), _) => assigned.withColumn("codes",
-        graft.functions.pq_encode(col(vecCol), p.flat, p.m, p.codes, p.subDim))
-      case (_, Some(q)) => assigned.withColumn("scodes",
-        graft.functions.sq_encode(col(vecCol), q.mins, q.scales))
-      case _ => assigned
-    }
+    val indexed = assignToCells(source, vecCol, centArr, pq, sq)
     val graph = if (!io.indexType.startsWith("IVF_HNSW")) None
                 else Some(CentroidGraph.build(s, centroids, io.hnswM,
                   io.efConstruction, io.maxLevel))
@@ -216,18 +188,23 @@ object IndexBuild {
     if (base == 0.0) 1.0 else cur / base
   }
 
-  /** The append path's per-row plan: codegen'd nearest-centroid assignment
-    * (NearestCell handles float and double vectors natively — no cast, no
-    * boxed UDF on the hot path) + PQ encode with the stored codebooks.
-    * Exposed so specs can assert the plan stays UDF-free. */
-  private[graft] def assignToCells(newRows: DataFrame, idx: BuiltIndex): DataFrame = {
-    val vecCol = idx.opts.column
-    val cells = idx.centroids.length
-    val flat = idx.centroids.flatMap(_.toArray)
-    val dim = flat.length / cells
-    val assigned = newRows.withColumn("cell",
-      graft.functions.nearest_cell(col(vecCol), flat, cells, dim))
-    (idx.pq, idx.sq) match {
+  /** The append path's per-row plan: [[assignToCells]] with the stored
+    * centroids, codebooks and quantizer. Exposed so specs can assert the
+    * plan stays UDF-free. */
+  private[graft] def assignToCells(newRows: DataFrame, idx: BuiltIndex): DataFrame =
+    assignToCells(newRows, idx.opts.column, idx.centroids.map(_.toArray), idx.pq, idx.sq)
+
+  /** The one encode rule of every index write (build, append, streamed
+    * appends): codegen'd nearest-centroid assignment (NearestCell handles
+    * float and double vectors natively — no cast, no boxed UDF on the hot
+    * path) + PQ or SQ encode, with the centroids and codebooks folded in
+    * as literals. A malformed vector gets a null cell and null codes. */
+  private[graft] def assignToCells(rows: DataFrame, vecCol: String,
+                                   cents: Array[Array[Double]], pq: Option[PqMeta],
+                                   sq: Option[SqMeta]): DataFrame = {
+    val assigned = rows.withColumn("cell", graft.functions.nearest_cell(
+      col(vecCol), cents.flatten, cents.length, cents.head.length))
+    (pq, sq) match {
       case (Some(p), _) => assigned.withColumn("codes",
         graft.functions.pq_encode(col(vecCol), p.flat, p.m, p.codes, p.subDim))
       case (_, Some(q)) => assigned.withColumn("scodes",
@@ -261,7 +238,7 @@ object IndexBuild {
     * shuffle and no broadcast, and returns the k (id, dist) rows as a
     * local DataFrame. The driver merges at most tasks·k rows (tasks·k·r
     * with a refine factor r on a quantized index) and re-ranks the
-    * refine candidates itself ([[VectorIndex.refineOnDriver]]). */
+    * refine candidates itself ([[VectorIndex.refineRows]]). */
   def search(s: SparkSession, idx: BuiltIndex, queryVec: Array[Double],
              options: Map[String, String], excludeVecId: Long = -1L,
              idCol: String = "vec_id",
@@ -343,15 +320,14 @@ object IndexBuild {
 
   // ---- sidecar persistence (json4s, as ManifestIO) -----------------------
 
-  private def metaPath(root: String, file: String = "meta.json") =
+  private def metaPath(root: String, file: String) =
     new org.apache.hadoop.fs.Path(root, s"_index/$file")
 
   private def writeMeta(s: SparkSession, root: String, io: VectorIndexOptions,
                         dim: Int, centroids: Array[Vector], pq: Option[PqMeta],
                         graph: Option[CentroidGraph],
-                        residual: Option[Double] = None,
-                        file: String = "meta.json",
-                        sq: Option[SqMeta] = None): Unit = {
+                        residual: Option[Double], file: String,
+                        sq: Option[SqMeta]): Unit = {
     val j = JObject(
       "indexType" -> JString(io.indexType),
       "column" -> JString(io.column),
@@ -390,31 +366,28 @@ object IndexBuild {
     * handle's epoch always matches the pinned version. */
   private[graft] def loadAt(s: SparkSession, root: String,
                             m: Option[graft.sources.lance.LanceManifest]): Option[BuiltIndex] =
-    metaFileAt(s, root, m).map {
-      case (p, Some(epoch)) =>
-        val k = (root, epoch)
-        handles.synchronized(Option(handles.get(k))).getOrElse {
-          val h = readMeta(s, root, p, Some(epoch))
-          handles.synchronized(handles.put(k, h))
-          h
-        }
-      case (p, None) => readMeta(s, root, p, None)
+    m.flatMap(_.props.get(MetaProp)).map { epoch =>
+      val k = (root, epoch)
+      handles.synchronized(Option(handles.get(k))).getOrElse {
+        val h = readMeta(s, root, epoch)
+        handles.synchronized(handles.put(k, h))
+        h
+      }
     }
 
   /** Parsed handles by (root, epoch sidecar file). An epoch file
     * (`meta-<uuid>.json`) is written once, before the commit that points at
     * it, and never rewritten, so its handle holds for every manifest that
-    * names it. LRU-bounded like [[graft.sources.lance.SidecarCache]]. The
-    * legacy fixed `meta.json` is rewritten in place and never cached. */
+    * names it. LRU-bounded like [[graft.sources.lance.SidecarCache]]. */
   private val MaxHandles = 64
   private val handles = new java.util.LinkedHashMap[(String, String), BuiltIndex](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[(String, String), BuiltIndex]): Boolean =
       size() > MaxHandles
   }
 
-  private def readMeta(s: SparkSession, root: String, p: org.apache.hadoop.fs.Path,
-                       epoch: Option[String]): BuiltIndex = {
+  private def readMeta(s: SparkSession, root: String, epoch: String): BuiltIndex = {
     val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
+    val p = metaPath(root, epoch)
     val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen.toInt
     val bytes = new Array[Byte](len)
@@ -447,24 +420,16 @@ object IndexBuild {
     val (graph, hnswM, efc, maxLevel) = (j \ "hnsw") match {
       case JNothing | JNull => (None, 16, 100, 7)
       case hj =>
-        val g = (hj \ "layers") match {
-          case JArray(ls) =>
-            val layers = ls.map { lj =>
-              val members = (lj \ "members").asInstanceOf[JArray].arr.map(int).toArray
-              val adjLists = (lj \ "adj").asInstanceOf[JArray].arr
-                .map(_.asInstanceOf[JArray].arr.map(int).toArray)
-              val adj = new Array[Array[Int]](centroids.length)
-              members.zip(adjLists).foreach { case (gid, ns) => adj(gid) = ns }
-              CentroidGraph.Layer(members, adj)
-            }
-            CentroidGraph.fromLayers(centroids, layers)
-          case _ => // legacy single-layer sidecar
-            CentroidGraph.fromNeighbors(centroids,
-              (hj \ "neighbors").asInstanceOf[JArray].arr
-                .map(_.asInstanceOf[JArray].arr.map(int).toArray).toArray)
+        val layers = (hj \ "layers").asInstanceOf[JArray].arr.map { lj =>
+          val members = (lj \ "members").asInstanceOf[JArray].arr.map(int).toArray
+          val adjLists = (lj \ "adj").asInstanceOf[JArray].arr
+            .map(_.asInstanceOf[JArray].arr.map(int).toArray)
+          val adj = new Array[Array[Int]](centroids.length)
+          members.zip(adjLists).foreach { case (gid, ns) => adj(gid) = ns }
+          CentroidGraph.Layer(members, adj)
         }
-        (Some(g), int(hj \ "m"), int(hj \ "efConstruction"),
-          (hj \ "maxLevel") match { case JNothing | JNull => 1; case v => int(v) })
+        (Some(CentroidGraph.fromLayers(centroids, layers)), int(hj \ "m"),
+          int(hj \ "efConstruction"), int(hj \ "maxLevel"))
     }
     val io = VectorIndexOptions(indexType, (j \ "column").asInstanceOf[JString].s,
       centroids.length, pq.map(_.m), pq.map(p => 31 - Integer.numberOfLeadingZeros(p.codes)).getOrElse(8),
@@ -473,6 +438,6 @@ object IndexBuild {
       case JNothing | JNull => None
       case v => Some(num(v))
     }
-    BuiltIndex(root, io, centroids, pq, graph, residual, epoch = epoch, sq = sq)
+    BuiltIndex(root, io, centroids, pq, graph, residual, epoch = Some(epoch), sq = sq)
   }
 }

@@ -1438,46 +1438,38 @@ object StreamingOps extends QueryModule {
     // across MULTIPLE micro-batches
     drainStaged(s, tmp("sidx-src"), tmp("sidx-ckpt"), SessionParts, 4,
       t(s, dir, "embeddings"))(_.writeStream)(EachBatch { (batch, _) =>
-      if (!IndexBuild.exists(s, root)) IndexBuild.build(s, batch, root, ivf("IVF_FLAT"))
+      if (!IndexBuild.exists(s, root)) IndexBuild.build(s, batch, root, VectorIndex.ivf("IVF_FLAT"))
       else IndexBuild.append(s, batch, IndexBuild.load(s, root))
     })
     searchAll(s, dir, root)
   }
-
-  /** An IVF index of `tpe` over [[VectorIndex.Cells]] cells, plus `opts`. */
-  private def ivf(tpe: String, opts: (String, String)*): Map[String, String] =
-    Map("index.type" -> tpe, "index.num-partitions" -> VectorIndex.Cells.toString) ++ opts
 
   /** The query vector's top-K over the index at `root`, probing EVERY
     * cell: exact KNN, the streamed-index keys' correctness statement. */
   private def searchAll(s: SparkSession, dir: String, root: String,
                         opts: (String, String)*): DataFrame = {
     val qv = VectorIndex.embeddingOf(s, dir, VectorIndex.QueryVecId)
-    IndexBuild.search(s, IndexBuild.load(s, root), qv,
-      Map("vector.nprobes" -> VectorIndex.Cells.toString,
-          "vector.k" -> VectorIndex.K.toString) ++ opts,
+    IndexBuild.search(s, IndexBuild.load(s, root), qv, VectorIndex.probeAll(opts: _*),
       excludeVecId = VectorIndex.QueryVecId)
   }
 
   /** Stage `src` as `srcParts` files and stream it into the lance table at
     * `root` through the exactly-once lance StreamingWrite (epoch-tagged
     * manifest commits: a replayed micro-batch is a no-op), every row
-    * assigned the nearest FROZEN centroid of `cents` by the codegen'd
-    * NearestCell projection (the centroids fold in as literals) and every
+    * assigned the nearest FROZEN centroid of `cents` (and PQ-encoded with
+    * `pq`'s frozen codebooks) by `IndexBuild.assignToCells`, and every
     * append clustered by that cell, so probe pruning holds for streamed
     * fragments exactly as for built ones. `shape` maps the source rows
-    * before the assignment; `encode` adds columns after it. */
+    * before the assignment. */
   private def appendCells(s: SparkSession, prefix: String, src: => DataFrame, srcParts: Int,
                           cents: Array[Array[Double]], root: String,
                           shape: DataFrame => DataFrame = identity,
-                          encode: DataFrame => DataFrame = identity): Unit =
+                          pq: Option[IndexBuild.PqMeta] = None): Unit =
     drainStaged(s, tmp(s"$prefix-src"), tmp(s"$prefix-ckpt"), SessionParts, srcParts, src)(b =>
-      shape(b).withColumn("cell", graft.functions.nearest_cell(
-        col("embedding"), cents.flatten, cents.length, cents.head.length))
-      .transform(encode)
-      .writeStream.format("lance")
-      .option("write.cluster-by", "cell")
-      .outputMode("append"))(Into(root))
+      IndexBuild.assignToCells(shape(b), "embedding", cents, pq, None)
+        .writeStream.format("lance")
+        .option("write.cluster-by", "cell")
+        .outputMode("append"))(Into(root))
 
   /** EXACTLY-ONCE streaming index appends — the production form of
     * q_stream_index's maintenance loop: instead of foreachBatch (at-least-
@@ -1494,7 +1486,8 @@ object StreamingOps extends QueryModule {
   private def streamIndexOnce(s: SparkSession, dir: String): DataFrame = {
     val root = tmp("sidxo-idx") + "/t"
     val e = t(s, dir, "embeddings")
-    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), root, ivf("IVF_FLAT"))
+    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), root,
+      VectorIndex.ivf("IVF_FLAT"))
     appendCells(s, "sidxo", e.filter(col("vec_id") % 4 =!= 0), 3,
       idx.centroids.map(_.toArray), root)
     searchAll(s, dir, root)
@@ -1518,12 +1511,9 @@ object StreamingOps extends QueryModule {
     // 4-bit codes: the seed subset is smaller than the default 256-code
     // books (KMeans caps centers at the sample size)
     val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), root,
-      ivf("IVF_PQ", "index.num-bits" -> "4"))
-    val p = idx.pq.get
+      VectorIndex.ivf("IVF_PQ", "index.num-bits" -> "4"))
     appendCells(s, "sidxp", e.filter(col("vec_id") % 4 =!= 0), 3,
-      idx.centroids.map(_.toArray), root,
-      encode = _.withColumn("codes", graft.functions.pq_encode(
-        col("embedding"), p.flat, p.m, p.codes, p.subDim)))
+      idx.centroids.map(_.toArray), root, pq = idx.pq)
     searchAll(s, dir, root, "vector.refine-factor" -> "4")
   }
 
@@ -2017,7 +2007,8 @@ object StreamingOps extends QueryModule {
     // vector side: seed-train, then exactly-once cell-clustered appends
     val vecT = tmp("shyb-vec") + "/t"
     val e = t(s, dir, "embeddings")
-    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), vecT, ivf("IVF_FLAT"))
+    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 4 === 0), vecT,
+      VectorIndex.ivf("IVF_FLAT"))
     appendCells(s, "shyb-v", e.filter(col("vec_id") % 4 =!= 0), 3,
       idx.centroids.map(_.toArray), vecT)
     // serve: index-served lexical arm + streamed-table vector arm → fuse

@@ -1,33 +1,30 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
-import graft.functions.vec_l2
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 
-/** IVF vector indexes (reference: LanceIndexBuilder.java:116-141 — IVF_FLAT
-  * num-partitions, IVF_PQ num-sub-vectors/num-bits).
+/** The IVF training kernels, the probed-cell scan and the `ivf_*` keys
+  * (reference: LanceIndexBuilder.java:116-141 — IVF_FLAT num-partitions,
+  * IVF_PQ num-sub-vectors/num-bits).
   *
-  * IVF_FLAT build: KMeans centroids (MLlib), every vector assigned to its
-  * nearest cell, the assigned dataset written through the lance connector
-  * `repartitionByRange(cell)` — so each fragment covers a contiguous cell
-  * range and carries cell min/max stats. Search: pick `nprobes` nearest
-  * centroids driver-side (k-sized work), read the index with
-  * `cell IN (probed…)` — LanceScan's fragment pruning skips every fragment
-  * whose cell range misses the probe set, so IO scales with nprobes/k, not
-  * dataset size; the in-cell scan is the codegen'd VectorDistance + a
-  * TakeOrderedAndProject top-k. At 100 TB: the index dataset is built once
-  * (the build is one KMeans + one shuffled write) and each query touches
-  * only the probed fragments.
+  * The index itself is [[IndexBuild]]'s persisted, cell-clustered lance
+  * dataset: every `ivf_*` key is data ([[IvfKey]]: index options, search
+  * options, an optional filter) built by `IndexBuild.build` and searched
+  * by `IndexBuild.search`, the path `CALL system.knn` serves. A search
+  * picks `nprobes` centroids driver-side (k-sized work) and reads the
+  * index with `cell IN (probed…)`: LanceScan's fragment pruning skips
+  * every fragment of an unprobed cell, so IO scales with nprobes/cells,
+  * not dataset size.
   *
-  * The `ivf_flat_search` correctness key probes ALL cells — IVF with full
-  * probing is exactly brute-force KNN, so the DuckDB oracle is the exact
-  * scan; the recall/pruning behavior at nprobes < k is covered by
+  * The oracle-checked keys probe ALL cells — IVF with full probing is
+  * exactly brute-force KNN, so the DuckDB oracle is the exact scan; the
+  * recall/pruning behavior at nprobes < cells is covered by
   * VectorIndexSpec instead (approximate results can't hash-match a SQL
   * oracle).
   */
@@ -43,7 +40,7 @@ object VectorIndex extends QueryModule {
     * the call sites, so float32 and float64 embedding columns both feed it
     * (reference maps FixedSizeList<Float64>: LanceTypeConverter.java:69-70). */
   private val toVec = udf { a: Seq[Double] => Vectors.dense(a.toArray) }
-  private[operators] def asVec(c: org.apache.spark.sql.Column) =
+  private[operators] def asVec(c: Column) =
     toVec(c.cast("array<double>"))
 
   /** Cap KMeans TRAINING input (deterministic seed); assignment/encoding
@@ -157,26 +154,6 @@ object VectorIndex extends QueryModule {
     }
   }
 
-  /** Build the IVF_FLAT index: returns (index dataset root, centroids). */
-  def buildIvfFlat(s: SparkSession, dir: String, cells: Int = Cells): (String, Array[Vector]) = {
-    val root = Files.createTempDirectory("graft-ivf-").toString
-    val e = t(s, dir, "embeddings")
-    val cents = fitCentroids(trainingSample(e.select(col("embedding"))),
-      "embedding", cells, 42L)
-    // assignment via the codegen'd NearestCell (the append path's rule,
-    // IndexBuild.assignToCells) instead of an MLlib transform — build and
-    // append now share one tie-break (strict <, lowest index); full-probe
-    // searches are exact under ANY assignment, so gated answers are
-    // unchanged
-    e.withColumn("cell", graft.functions.nearest_cell(col("embedding"),
-        cents.flatten, cents.length, cents.head.length))
-      .select(col("vec_id"), col("embedding"), col("label"), col("cell"))
-      .repartitionByRange(cells, col("cell"))
-      .sortWithinPartitions("cell")
-      .write.format("lance").save(root)
-    (root, cents.map(Vectors.dense))
-  }
-
   /** Exact probe selection: the `nprobes` nearest centroids, driver-side
     * O(cells) — fine at thousands of cells; [[CentroidGraph.probe]] is the
     * sub-linear alternative at 100k+ cells. */
@@ -187,49 +164,32 @@ object VectorIndex extends QueryModule {
       .sortBy { case (i, d) => (d, i) }
       .take(nprobes).map(_._1)
 
-  /** The probed-cell scan shared by every IVF variant, ranked: fragment
-    * pruning on the cell range, the codegen'd distance against the query
-    * vector as a literal, top-k by [[rankTop]]. A literal array is a
-    * reference object in the generated code, so the code is the same for
-    * every query and no broadcast join is planned. [[probedScan]] drops
-    * null scores lazily; `IndexBuild.search` collects this plan instead. */
+  /** The probed-cell scan of every IVF search, ranked: fragment pruning on
+    * the cell range, the codegen'd distance against the query vector as a
+    * literal, top-k by [[rankTop]]. A literal array is a reference object
+    * in the generated code, so the code is the same for every query and no
+    * broadcast join is planned. `IndexBuild.search` collects this plan. */
   private[operators] def probedTop(s: SparkSession, indexRoot: String,
                          readOptions: Map[String, String], probed: Array[Int],
                          queryVec: Array[Double], metric: String, k: Int,
-                         excludeVecId: Long, idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val score = metric match {
-      case "l2" => vec_l2 _
-      case "cosine" => graft.functions.vec_cosine _
-      case "dot" => graft.functions.vec_dot _
-    }
+                         excludeVecId: Long, idCol: String, vecCol: String,
+                         pred: Option[Column]): DataFrame = {
+    val (score, asc) = graft.functions.vec_score(metric,
+      col(vecCol), typedLit(queryVec.map(_.toFloat)), "lance index search")
     val base0 = s.read.format("lance").options(readOptions).load(indexRoot)
       .filter(col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId)
     val scored = pred.map(base0.filter).getOrElse(base0)
-      .select(col(idCol),
-        round(score(col(vecCol), typedLit(queryVec.map(_.toFloat))), 6).as("dist"))
-    rankTop(scored, "dist", asc = metric == "l2", k, idCol)
+      .select(col(idCol), round(score, 6).as("dist"))
+    rankTop(scored, "dist", asc, k, idCol)
   }
-
-  /** [[probedTop]] as a lazy frame: a malformed row scores null, and the
-    * nulls the limit let through are dropped here. */
-  private[operators] def probedScan(s: SparkSession, indexRoot: String,
-                         readOptions: Map[String, String], probed: Array[Int],
-                         queryVec: Array[Double], metric: String, k: Int,
-                         excludeVecId: Long, idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    probedTop(s, indexRoot, readOptions, probed, queryVec, metric, k, excludeVecId,
-      idCol, vecCol, pred).filter(col("dist").isNotNull)
 
   /** Rank `scored` by (`by`, id) and keep `n` rows, nulls LAST. Null
     * scores come from malformed rows (ragged dims, a null element). They
     * are not filtered before the sort: Spark pushes an `IS NOT NULL` on
     * the alias below the projection, which evaluates the distance kernel
     * twice per row. A null can reach the `n` rows only when fewer than `n`
-    * rows score, so dropping nulls after the limit keeps the same scored
-    * rows ([[collectTop]], [[probedScan]]). */
+    * rows score, so dropping nulls after the limit ([[collectTop]]) keeps
+    * the same scored rows. */
   private[operators] def rankTop(scored: DataFrame, by: String, asc: Boolean, n: Int,
                                  idCol: String): DataFrame =
     scored.orderBy(if (asc) col(by).asc_nulls_last else col(by).desc_nulls_last,
@@ -245,22 +205,15 @@ object VectorIndex extends QueryModule {
   }
 
   /** The exact re-rank behind every refine search (`IndexBuild.search`'s
-    * quantized arms, [[ivfPqRefine]], [[sqTopKRefined]]). `top` is a
-    * [[rankTop]] plan of (id, vector, `adc_dist`) limited to k·r
-    * candidates; it is collected in one job ([[collectTop]]). The
-    * candidates are then scored on the driver with the same
-    * `round(vec_l2(vector, query), 6)` Catalyst expression the distributed
-    * plan used. Interpreted eval runs the same double arithmetic as the
-    * generated code, so distances are bit-identical. The k rows are kept
-    * by (dist ASC NULLS FIRST, id ASC), Spark's default ordering. Driver
-    * work is O(tasks·k·r) rows; the result is a local DataFrame. */
-  private[operators] def refineOnDriver(s: SparkSession, top: DataFrame, qv: Array[Double],
-                                        k: Int, idCol: String, vecCol: String): DataFrame = {
-    val (schema, rows) = refineRows(top, qv, k, idCol, vecCol)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** [[refineOnDriver]]'s k (id, dist) rows and their schema. */
+    * quantized arms). `top` is a [[rankTop]] plan of (id, vector,
+    * `adc_dist`) limited to k·r candidates; it is collected in one job
+    * ([[collectTop]]). The candidates are then scored on the driver with
+    * the same `round(vec_l2(vector, query), 6)` Catalyst expression the
+    * distributed plan used. Interpreted eval runs the same double
+    * arithmetic as the generated code, so distances are bit-identical. The
+    * k rows are kept by (dist ASC NULLS FIRST, id ASC), Spark's default
+    * ordering. Driver work is O(tasks·k·r) rows. Returns the k (id, dist)
+    * rows and their schema. */
   private[operators] def refineRows(top: DataFrame, qv: Array[Double], k: Int,
                                     idCol: String, vecCol: String): (StructType, Array[Row]) = {
     import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -287,169 +240,16 @@ object VectorIndex extends QueryModule {
     (out, scored.sorted(byDistThenId).take(k).map(toRow(_).asInstanceOf[Row]))
   }
 
-  /** Probe the `nprobes` cells nearest to the query vector (L2). */
-  def ivfSearch(s: SparkSession, indexRoot: String, centroids: Array[Vector],
-                queryVec: Array[Double], nprobes: Int, k: Int,
-                excludeVecId: Long = -1L): DataFrame =
-    probedScan(s, indexRoot, Map.empty, selectProbesExact(centroids, queryVec, nprobes),
-      queryVec, "l2", k, excludeVecId)
-
-  /** Options-driven index search: one option map carries both the lance
-    * read options (versionAsOf, …) and the reference-named vector knobs
-    * (vector.metric / vector.k / vector.nprobes / vector.ef /
-    * vector.refine-factor — config/LanceOptions.java:197-238). With a
-    * [[CentroidGraph]] the ef knob bounds the graph search; without one,
-    * probe selection is exact and ef is inert (as in the reference's
-    * non-HNSW indexes). */
-  def searchIndex(s: SparkSession, indexRoot: String, centroids: Array[Vector],
-                  queryVec: Array[Double], options: Map[String, String],
-                  excludeVecId: Long = -1L,
-                  graph: Option[CentroidGraph] = None): DataFrame = {
-    val o = graft.sources.lance.LanceVectorOptions.search(options)
-    val probed = graph match {
-      case Some(g) => g.probe(queryVec, o.nprobes, o.ef)
-      case None => selectProbesExact(centroids, queryVec, o.nprobes)
-    }
-    probedScan(s, indexRoot, options, probed, queryVec, o.metric, o.k, excludeVecId)
-  }
-
   /** Driver-side fetch of one embedding (k-sized, not a data scan). */
   def embeddingOf(s: SparkSession, dir: String, vecId: Long): Array[Double] =
     t(s, dir, "embeddings").filter(col("vec_id") === vecId)
       .select("embedding").first().getSeq[Float](0).map(_.toDouble).toArray
 
-  private def ivfFlatSearch(s: SparkSession, dir: String): DataFrame = {
-    val (root, centroids) = buildIvfFlat(s, dir)
-    val qv = embeddingOf(s, dir, QueryVecId)
-    // nprobes = all cells → exact KNN (the oracle-checkable configuration)
-    ivfSearch(s, root, centroids, qv, nprobes = Cells, k = K, excludeVecId = QueryVecId)
-  }
-
-  /** FILTERED ANN over the index — the vector-store feature plain KNN
-    * keys don't exercise: the filterable payload column (`label`) is
-    * STORED IN the index table (exactly how production filtered-ANN
-    * works — pre-filtering needs the predicate column beside the
-    * vectors), the predicate applies INSIDE the probed-cell scan (before
-    * any distance math, pushed to the lance scan's fragment/row pruning),
-    * and the k-heap ranks only surviving rows. Probing all cells makes
-    * the gate configuration exact, so the key carries the full
-    * brute-force-filtered oracle; production trades probes for recall
-    * exactly as the unfiltered keys do. */
-  private def ivfFilteredSearch(s: SparkSession, dir: String): DataFrame = {
-    val (root, centroids) = buildIvfFlat(s, dir)
-    val qv = embeddingOf(s, dir, QueryVecId)
-    probedScan(s, root, Map.empty, selectProbesExact(centroids, qv, Cells),
-      qv, "l2", K, excludeVecId = QueryVecId,
-      pred = Some(col("label") === 3))
-  }
-
-  /** IVF_HNSW-equivalent: probe selection via the centroid graph's greedy
-    * ef-search instead of the exact O(cells) scan. With ef = nprobes =
-    * all cells the graph provably visits every node (ring edge), so the
-    * result equals exact KNN and shares the ivf_flat oracle; sub-full ef
-    * behavior is covered by VectorIndexSpec. */
-  private def ivfHnswSearch(s: SparkSession, dir: String): DataFrame = {
-    val (root, centroids) = buildIvfFlat(s, dir)
-    val io = graft.sources.lance.LanceVectorOptions.index(Map("index.type" -> "IVF_HNSW"))
-    val graph = CentroidGraph.build(s, centroids, io.hnswM, io.efConstruction, io.maxLevel)
-    val qv = embeddingOf(s, dir, QueryVecId)
-    searchIndex(s, root, centroids, qv,
-      Map("vector.nprobes" -> Cells.toString, "vector.ef" -> Cells.toString,
-          "vector.k" -> K.toString),
-      excludeVecId = QueryVecId, graph = Some(graph))
-  }
-
-  // ---- IVF_PQ ------------------------------------------------------------
-
-  /** Product quantization: split the 64-dim space into `M` subspaces,
-    * KMeans a 2^bits codebook per subspace, encode every vector as M code
-    * ids, and answer queries with an asymmetric-distance (ADC) scan: a
-    * per-query M×codes lookup table makes each row's approximate distance
-    * M table lookups instead of a 64-dim loop. Encode and ADC are native
-    * codegen'd expressions (functions/PqExpressions.scala) so both the
-    * build and the query scan stay inside WholeStageCodegen — no UDF on
-    * either hot path. Approximate by construction → rows-only keys +
-    * recall covered in VectorIndexSpec.
-    */
-  private val M = 8
-  private val CodeBits = 4 // 16 codes per subspace
-  private val Codes = 1 << CodeBits
-
-  /** Encoded dataset (vec_id, embedding, codes) + flattened [m][code][dim]
-    * codebooks. Codebook training is M small KMeans fits run concurrently
-    * from one cached sample ([[trainPqCodebooks]]); encoding is the
-    * codegen'd PqEncode over the full dataset. */
-  def buildPq(s: SparkSession, dir: String): (DataFrame, Array[Double], Int) = {
-    val e = t(s, dir, "embeddings")
-    val dim = e.select(size(col("embedding"))).first().getInt(0)
-    val subDim = dim / M
-    val flat = trainPqCodebooks(trainingSample(e), "embedding", M, Codes, subDim)
-    val encoded = e.select(col("vec_id"), col("embedding"),
-      graft.functions.pq_encode(col("embedding"), flat, M, Codes, subDim).as("codes"))
-    (encoded, flat, subDim)
-  }
-
-  /** Per-query flattened ADC LUT: lut[m*Codes + c] = ||q_sub − codebook||². */
-  def pqLut(qv: Array[Double], flat: Array[Double], subDim: Int): Array[Double] = {
-    val lut = new Array[Double](M * Codes)
-    for (m <- 0 until M; c <- 0 until Codes) {
-      var s = 0.0
-      for (d <- 0 until subDim) {
-        val diff = qv(m * subDim + d) - flat((m * Codes + c) * subDim + d)
-        s += diff * diff
-      }
-      lut(m * Codes + c) = s
-    }
-    lut
-  }
-
-  /** Query-time ADC top-k over an encoded dataset (no build work). */
-  def pqAdcTopK(encoded: DataFrame, lut: Array[Double], k: Int,
-                excludeVecId: Long): DataFrame =
-    encoded.filter(col("vec_id") =!= excludeVecId)
-      .select(col("vec_id"),
-        round(graft.functions.pq_adc(col("codes"), lut, M, Codes), 6).as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vec_id").asc)
-      .limit(k)
-
-  private def ivfPqSearch(s: SparkSession, dir: String): DataFrame = {
-    val (encoded, flat, subDim) = buildPq(s, dir)
-    val qv = embeddingOf(s, dir, QueryVecId)
-    pqAdcTopK(encoded, pqLut(qv, flat, subDim), k = 10, excludeVecId = QueryVecId)
-  }
-
-  /** PQ search with refine: fetch k×refineFactor ADC candidates, re-rank
-    * them with the exact L2 on the driver ([[refineOnDriver]]), keep k (reference:
-    * LanceVectorSearch.java:159-161 refine-factor). */
-  def ivfPqRefine(s: SparkSession, dir: String, k: Int, refineFactor: Int): DataFrame = {
-    val (encoded, flat, subDim) = buildPq(s, dir)
-    val qv = embeddingOf(s, dir, QueryVecId)
-    val lut = pqLut(qv, flat, subDim)
-    val scored = encoded.filter(col("vec_id") =!= QueryVecId)
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.pq_adc(col("codes"), lut, M, Codes).as("adc_dist"))
-    refineOnDriver(s, rankTop(scored, "adc_dist", asc = true, k * refineFactor, "vec_id"),
-      qv, k, "vec_id", "embedding")
-  }
-
-  // ---- IVF_SQ8 (scalar quantization) --------------------------------------
-
-  /** Per-dimension [min, max] → uint8 scalar quantization — the
-    * quantization ladder's middle rung (NOT in the reference, whose ladder
-    * stops at IVF_PQ; added for the LLM-pipeline ANN surface): 4× less
-    * vector IO than float32 while keeping 8 bits per DIMENSION of precision
-    * (vs PQ's 4 bits per 8-dim subspace), so an SQ candidate scan plus a
-    * small exact refine reproduces exact KNN where PQ needs a far larger
-    * refine. Build = ONE stats pass (per-dimension min/max, 2·dim
-    * aggregates) + the codegen'd [[graft.functions.SqEncode]] map; the
-    * mins/scales ride the plan as literals. At 100 TB both stages are
-    * single agg/map passes over the corpus. */
-  /** Per-dimension [min, max] → (mins, scales) for SQ8, in ONE narrow
-    * posexplode + groupBy(dim) pass instead of a 2·dim-column agg: the
-    * wide-agg plan's generated code grows with dim (seconds of janino
-    * compile at 64 dims, worse at 1024); this shape compiles small and
-    * shuffles only dim rows after partial agg, at any dim. Shared by the
-    * flat key and the persisted IVF_SQ build. */
+  /** Per-dimension [min, max] → (mins, scales) for the IVF_SQ quantizer,
+    * in ONE narrow posexplode + groupBy(dim) pass instead of a 2·dim-column
+    * agg: the wide-agg plan's generated code grows with dim (seconds of
+    * janino compile at 64 dims, worse at 1024); this shape compiles small
+    * and shuffles only dim rows after partial agg, at any dim. */
   private[operators] def sqStats(df: DataFrame, vecCol: String): (Array[Double], Array[Double]) = {
     val stats = df.select(posexplode(col(vecCol)).as(Seq("d", "v")))
       .groupBy("d").agg(min(col("v").cast("double")).as("mn"),
@@ -461,82 +261,68 @@ object VectorIndex extends QueryModule {
     (mins, scales)
   }
 
-  def buildSq(s: SparkSession, dir: String): (DataFrame, Array[Double], Array[Double]) = {
+  /** An IVF index of `tpe` over [[Cells]] cells, plus `opts`. */
+  private[operators] def ivf(tpe: String, opts: (String, String)*): Map[String, String] =
+    Map("index.type" -> tpe, "index.num-partitions" -> Cells.toString) ++ opts
+
+  /** Top-[[K]] search options probing EVERY cell, plus `opts`: IVF with
+    * full probing is exact KNN under any centroids, the oracle-checkable
+    * configuration (recall at nprobes < cells is VectorIndexSpec's). */
+  private[operators] def probeAll(opts: (String, String)*): Map[String, String] =
+    Map("vector.nprobes" -> Cells.toString, "vector.k" -> K.toString) ++ opts
+
+  /** One `ivf_*` key as data: the `IndexBuild` index options, the search
+    * options, an optional search filter, and the `embeddings` rows
+    * appended after the build (the other rows build the index). */
+  case class IvfKey(index: Map[String, String], search: Map[String, String],
+                    pred: Option[Column] = None, appended: Option[Column] = None)
+
+  /** 8 sub-vectors of 4-bit codes: 16 codes per 8-dim subspace. */
+  private val Pq = ivf("IVF_PQ", "index.num-sub-vectors" -> "8", "index.num-bits" -> "4")
+
+  /** Every key probes all cells. `ivf_filtered_search` stores the `label`
+    * payload in the index and filters inside the probed-cell scan, before
+    * ranking. `ivf_append_search` appends a fifth of the corpus against
+    * the frozen centroids and searches a fresh handle. The HNSW key's full
+    * ef visits every graph node. PQ ranks by ADC alone (rows-only keys);
+    * SQ's 8-bit codes plus a 4x exact refine reproduce exact KNN. */
+  val ivfKeys: Map[String, IvfKey] = Map(
+    "ivf_flat_search" -> IvfKey(ivf("IVF_FLAT"), probeAll()),
+    "ivf_filtered_search" -> IvfKey(ivf("IVF_FLAT"), probeAll(), pred = Some(col("label") === 3)),
+    "ivf_append_search" -> IvfKey(ivf("IVF_FLAT"), probeAll(),
+      appended = Some(col("vec_id") % 5 === 0)),
+    "ivf_hnsw_search" -> IvfKey(ivf("IVF_HNSW"), probeAll("vector.ef" -> Cells.toString)),
+    "ivf_pq_search" -> IvfKey(Pq, probeAll("vector.k" -> "10")),
+    "ivf_pq_refine" -> IvfKey(Pq, probeAll("vector.k" -> "10", "vector.refine-factor" -> "4")),
+    "ivf_sq_search" -> IvfKey(ivf("IVF_SQ"), probeAll("vector.refine-factor" -> "4")),
+    "ivf_sq_index_search" -> IvfKey(ivf("IVF_SQ"), probeAll("vector.refine-factor" -> "4")))
+
+  /** Build `key`'s index over `embeddings` in a fresh directory. */
+  def buildKey(s: SparkSession, dir: String, key: IvfKey): IndexBuild.BuiltIndex = {
     val e = t(s, dir, "embeddings")
-    val (mins, scales) = sqStats(e, "embedding")
-    val encoded = e.select(col("vec_id"), col("embedding"),
-      graft.functions.sq_encode(col("embedding"), mins, scales).as("scodes"))
-    (encoded, mins, scales)
+    val root = Files.createTempDirectory("graft-ivf-").toString
+    key.appended match {
+      case None => IndexBuild.build(s, e, root, key.index)
+      case Some(rest) =>
+        IndexBuild.append(s, e.filter(rest), IndexBuild.build(s, e.filter(!rest), root, key.index))
+        IndexBuild.load(s, root)
+    }
   }
 
-  /** SQ ADC candidates + exact re-rank via [[refineOnDriver]]. At refine = 4
-    * the 8-bit codes' per-coordinate error (≤ scale/2) keeps the true
-    * top-k inside the candidate set, so the key reproduces exact KNN and
-    * carries the FULL oracle. Like knn_join_pq's generous-refine gate this
-    * is an EMPIRICAL posture, verified by the refine==exact spec and the
-    * oracle on the gate corpus, not a proof — embeddings whose rank-k
-    * distance boundary is tighter than the accumulated half-step error
-    * would need a larger refine (the exactness knob, not a code change). */
-  def sqTopKRefined(s: SparkSession, encoded: DataFrame, mins: Array[Double],
-                    scales: Array[Double], qv: Array[Double], k: Int,
-                    refineFactor: Int, excludeVecId: Long): DataFrame = {
-    val qm = Array.tabulate(qv.length)(d => qv(d) - mins(d))
-    val scored = encoded.filter(col("vec_id") =!= excludeVecId)
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.sq_adc(col("scodes"), qm, scales).as("adc_dist"))
-    refineOnDriver(s, rankTop(scored, "adc_dist", asc = true, k * refineFactor, "vec_id"),
-      qv, k, "vec_id", "embedding")
-  }
+  /** `key`'s search of `idx` for `qv`: the eager `IndexBuild.search`. */
+  def searchKey(s: SparkSession, idx: IndexBuild.BuiltIndex, key: IvfKey,
+                qv: Array[Double]): DataFrame =
+    IndexBuild.search(s, idx, qv, key.search, excludeVecId = QueryVecId, pred = key.pred)
 
-  private def ivfSqSearch(s: SparkSession, dir: String): DataFrame = {
-    val (encoded, mins, scales) = buildSq(s, dir)
-    sqTopKRefined(s, encoded, mins, scales, embeddingOf(s, dir, QueryVecId),
-      k = K, refineFactor = 4, excludeVecId = QueryVecId)
-  }
+  /** The one Spark plan [[searchKey]] collects. */
+  def searchKeyPlan(s: SparkSession, idx: IndexBuild.BuiltIndex, key: IvfKey,
+                    qv: Array[Double]): DataFrame =
+    IndexBuild.searchPlan(s, idx, qv, key.search, excludeVecId = QueryVecId, pred = key.pred)
 
-  /** IVF_SQ through the PERSISTED index path: the SQ quantizer lives in
-    * the atomic sidecar next to the centroids, the scan is cell-pruned
-    * (fragment ranges on `cell`), appends re-encode against the FROZEN
-    * mins/scales (out-of-envelope values clamp — bounded error, never a
-    * wrong-range read), and search is the shared ADC+refine tail. Full
-    * probes + refine ⇒ exact — the same gate configuration as ivf_flat. */
-  private def ivfSqIndexSearch(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.t(s, dir, "embeddings")
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfsq-").toString
-    val idx = IndexBuild.build(s, e, root,
-      Map("index.type" -> "IVF_SQ", "index.num-partitions" -> Cells.toString))
-    IndexBuild.search(s, idx, embeddingOf(s, dir, QueryVecId),
-      Map("vector.nprobes" -> Cells.toString, "vector.k" -> K.toString,
-        "vector.refine-factor" -> "4"),
-      excludeVecId = QueryVecId)
+  val queries: Map[String, (SparkSession, String) => DataFrame] = ivfKeys.map {
+    case (name, key) => name -> ((s: SparkSession, dir: String) =>
+      searchKey(s, buildKey(s, dir, key), key, embeddingOf(s, dir, QueryVecId)))
   }
-
-  /** Incremental maintenance: index 80% of the corpus, IndexBuild.append
-    * the rest against the FROZEN centroids/codebooks (no retrain, no
-    * rewrite of indexed fragments), then full-probe search — which must
-    * equal exact KNN over the whole corpus, proving appended vectors are
-    * first-class index citizens. */
-  private def ivfAppendSearch(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.t(s, dir, "embeddings")
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf-append-").toString
-    val idx = IndexBuild.build(s, e.filter(col("vec_id") % 5 =!= 0), root,
-      Map("index.type" -> "IVF_FLAT", "index.num-partitions" -> Cells.toString))
-    IndexBuild.append(s, e.filter(col("vec_id") % 5 === 0), idx)
-    val qv = embeddingOf(s, dir, QueryVecId)
-    IndexBuild.search(s, IndexBuild.load(s, root), qv,
-      Map("vector.nprobes" -> Cells.toString, "vector.k" -> K.toString),
-      excludeVecId = QueryVecId)
-  }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ivf_flat_search" -> ivfFlatSearch,
-    "ivf_filtered_search" -> ivfFilteredSearch,
-    "ivf_append_search" -> ivfAppendSearch,
-    "ivf_hnsw_search" -> ivfHnswSearch,
-    "ivf_pq_search" -> ivfPqSearch,
-    "ivf_pq_refine" -> ((s, dir) => ivfPqRefine(s, dir, k = 10, refineFactor = 4)),
-    "ivf_sq_search" -> ivfSqSearch,
-    "ivf_sq_index_search" -> ivfSqIndexSearch)
 
   private[operators] val exactKnnSql =
     s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = $QueryVecId)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
-import graft.functions.{distance_to_similarity, vec_cosine, vec_dot, vec_l2}
+import graft.functions.{distance_to_similarity, vec_cosine, vec_dot, vec_l2, vec_score}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -214,13 +214,7 @@ object VectorSearch extends QueryModule {
           corpus.withColumn("__cell",
             coalesce(graft.functions.nearest_cell(col(vecCol), flat, nc, dim), lit(-1))))
       }
-    val (score, asc) = metric match {
-      case "l2" => ((a: Column, b: Column) => vec_l2(a, b), true)
-      case "cosine" => ((a: Column, b: Column) => vec_cosine(a, b), false)
-      case "dot" => ((a: Column, b: Column) => vec_dot(a, b), false)
-      case other => throw new IllegalArgumentException(
-        s"knnJoin: unknown metric $other (expected l2 / cosine / dot)")
-    }
+    val (score, asc) = vec_score(metric, col("__cv"), col("__qv"), "knnJoin")
     val q = qTagged.select(col(qIdCol).as("q_id"), col(vecCol).as("__qv"), col("__cell"))
     val c = cTagged.select(col(cIdCol).as("n_id"), col(vecCol).as("__cv"), col("__cell"))
     val joined0 = q.join(c, "__cell")
@@ -228,7 +222,7 @@ object VectorSearch extends QueryModule {
     val distOrder = if (asc) col("dist").asc else col("dist").desc
     joined
       .select(col("q_id"), col("n_id"),
-        round(score(col("__cv"), col("__qv")), 6).as("dist"))
+        round(score, 6).as("dist"))
       .withColumn("rk", row_number()
         .over(Window.partitionBy("q_id").orderBy(distOrder, col("n_id").asc))
         .cast("long"))
@@ -266,19 +260,13 @@ object VectorSearch extends QueryModule {
         .cast("long"))
       .filter(col("rk") <= shortlist)
       .select("q_id", "n_id")
-    val (score, asc) = metric match {
-      case "l2" => ((a: Column, b: Column) => vec_l2(a, b), true)
-      case "cosine" => ((a: Column, b: Column) => vec_cosine(a, b), false)
-      case "dot" => ((a: Column, b: Column) => vec_dot(a, b), false)
-      case other => throw new IllegalArgumentException(
-        s"knnJoinHamming: unknown metric $other")
-    }
+    val (score, asc) = vec_score(metric, col("__cv"), col("__qv"), "knnJoinHamming")
     val distOrder = if (asc) col("dist").asc else col("dist").desc
     val qv = queries.select(col(qIdCol).as("q_id"), col(vecCol).as("__qv"))
     val cv = corpus.select(col(cIdCol).as("n_id"), col(vecCol).as("__cv"))
     cv.join(broadcast(short), "n_id").join(broadcast(qv), "q_id")
       .select(col("q_id"), col("n_id"),
-        round(score(col("__cv"), col("__qv")), 6).as("dist"))
+        round(score, 6).as("dist"))
       .withColumn("rk", row_number()
         .over(Window.partitionBy("q_id").orderBy(distOrder, col("n_id").asc))
         .cast("long"))
@@ -315,19 +303,13 @@ object VectorSearch extends QueryModule {
       .options(IndexBuild.pinnedOptions(s, idx)).load(idx.root)
       .select(col(cIdCol).as("n_id"), col(vecCol).as("__cv"),
         col("cell").as("__cell"))
-    val (score, asc) = metric match {
-      case "l2" => ((a: Column, b: Column) => vec_l2(a, b), true)
-      case "cosine" => ((a: Column, b: Column) => vec_cosine(a, b), false)
-      case "dot" => ((a: Column, b: Column) => vec_dot(a, b), false)
-      case other => throw new IllegalArgumentException(
-        s"knnJoin: unknown metric $other (expected l2 / cosine / dot)")
-    }
+    val (score, asc) = vec_score(metric, col("__cv"), col("__qv"), "knnJoin")
     val distOrder = if (asc) col("dist").asc else col("dist").desc
     val joined0 = q.join(c, "__cell")
     val joined = if (excludeSelf) joined0.filter(col("q_id") =!= col("n_id")) else joined0
     joined
       .select(col("q_id"), col("n_id"),
-        round(score(col("__cv"), col("__qv")), 6).as("dist"))
+        round(score, 6).as("dist"))
       .withColumn("rk", row_number()
         .over(Window.partitionBy("q_id").orderBy(distOrder, col("n_id").asc))
         .cast("long"))

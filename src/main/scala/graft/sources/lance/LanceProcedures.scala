@@ -33,41 +33,24 @@ object LanceProcedures {
     if (!(ident.namespace.sameElements(Array(Namespace))))
       throw new IllegalArgumentException(
         s"lance: procedures live in the '$Namespace' namespace, got ${ident.namespace.mkString(".")}")
-    ident.name match {
-      case "compact" => compact(catalog)
-      case "vacuum" => vacuum(catalog)
-      case "history" => history(catalog)
-      case "zorder" => zorder(catalog)
-      case "knn" => knn(catalog)
-      case "knn_join" => knnJoin(catalog)
-      case "search" => search(catalog)
-      case "hybrid" => hybrid(catalog)
-      case "reindex" => reindex(catalog)
-      case "stats" => stats(catalog)
-      case "decontaminate" => decontaminate(catalog)
-      case "dedup" => dedup(catalog)
-      case "sample" => sample(catalog)
-      case "split" => split(catalog)
-      case "score" => score(catalog)
-      case "chunk" => chunk(catalog)
-      case "pack" => pack(catalog)
-      case "semdedup" => semdedup(catalog)
-      case "dsir" => dsir(catalog)
-      case "dsir_refresh" => dsirRefresh(catalog)
-      case "drift" => drift(catalog)
-      case other => throw new IllegalArgumentException(
-        s"lance: unknown procedure $other (expected compact / vacuum / history / " +
-          "zorder / knn / knn_join / search / reindex / stats / decontaminate / " +
-          "dedup / sample / split / score / chunk / pack / semdedup / dsir / " +
-          "dsir_refresh / drift)")
-    }
+    val build = procedures.getOrElse(ident.name, throw new IllegalArgumentException(
+      s"lance: unknown procedure ${ident.name} (expected ${procedures.keys.mkString(" / ")})"))
+    build(catalog)
   }
 
+  /** Every procedure by name: [[load]], [[list]] and the unknown-name
+    * error all read this table. */
+  private val procedures =
+    scala.collection.immutable.ListMap[String, LanceCatalog => UnboundProcedure](
+      "compact" -> compact, "vacuum" -> vacuum, "history" -> history, "zorder" -> zorder,
+      "knn" -> knn, "knn_join" -> knnJoin, "search" -> search, "hybrid" -> hybrid,
+      "reindex" -> reindex, "stats" -> stats, "decontaminate" -> decontaminate,
+      "dedup" -> dedup, "sample" -> sample, "split" -> split, "score" -> score,
+      "chunk" -> chunk, "pack" -> pack, "semdedup" -> semdedup, "dsir" -> dsir,
+      "dsir_refresh" -> dsirRefresh, "drift" -> drift)
+
   def list(): Array[Identifier] =
-    Array("compact", "vacuum", "history", "zorder", "knn", "knn_join", "search", "hybrid",
-        "reindex", "stats", "decontaminate", "dedup", "sample", "split", "score",
-        "chunk", "pack", "semdedup", "dsir", "dsir_refresh", "drift")
-      .map(Identifier.of(Array(Namespace), _))
+    procedures.keys.toArray.map(Identifier.of(Array(Namespace), _))
 
   private def param(name: String, dt: DataType, default: Option[String] = None) = {
     val b = ProcedureParameter.in(name, dt)
@@ -163,7 +146,7 @@ object LanceProcedures {
     *                       refine_factor => 2, id_column => 'vec_id')
     * }}}
     *
-    * A table carrying a persisted index sidecar (`_index/meta.json`)
+    * A table whose manifest points at a persisted index sidecar
     * searches through [[graft.operators.IndexBuild.searchRows]]: an eager,
     * probe-pruned fragment scan run as one Spark job with no shuffle, whose
     * driver merges O(tasks·k) rows, or O(tasks·k·r) refine candidates on a
@@ -301,13 +284,8 @@ object LanceProcedures {
           graft.operators.IndexBuild.searchRows(spark, idx, qv, opts, idCol = idCol,
             pred = pred)._2
         } else {
-          val (score, asc) = metric match {
-            case "l2" => (graft.functions.vec_l2(col(column), typedLit(qv)), true)
-            case "cosine" => (graft.functions.vec_cosine(col(column), typedLit(qv)), false)
-            case "dot" => (graft.functions.vec_dot(col(column), typedLit(qv)), false)
-            case other => throw new IllegalArgumentException(
-              s"lance knn: unknown metric $other (expected l2 / cosine / dot)")
-          }
+          val (score, asc) =
+            graft.functions.vec_score(metric, col(column), typedLit(qv), "lance knn")
           val base = spark.read.format("lance").options(pinned).load(root)
           val scored = pred.map(base.filter).getOrElse(base)
             .select(col(idCol).cast("long").as("id"), round(score, 6).as("dist"))

@@ -54,6 +54,18 @@ class ProcedureSummarySpec extends SparkSpec {
     assert(outCount(out) === expected)
   }
 
+  test("an unknown procedure's error lists every procedure list() returns") {
+    import org.apache.spark.sql.connector.catalog.Identifier
+    import graft.sources.lance.{LanceCatalog, LanceProcedures}
+    val names = LanceProcedures.list().map(_.name).toSeq
+    assert(names.contains("hybrid") && names.distinct === names, names)
+    val err = intercept[IllegalArgumentException](LanceProcedures.load(new LanceCatalog,
+      Identifier.of(Array(LanceProcedures.Namespace), "no_such_procedure")))
+    val expected = "\\(expected (.*)\\)".r.findFirstMatchIn(err.getMessage)
+      .map(_.group(1).split(" / ").toSeq)
+    assert(expected === Some(names), err.getMessage)
+  }
+
   test("knn_join: (output_table, n_rows); without output_table the rows keep their non-null schema") {
     assertNRows("knn_join(queries => 'db.q', corpus => 'db.emb', k => 5, cells => 8, " +
       "nprobes => 8, exclude_self => true, output_table => 'db.kj_out')", "kj_out", 100L)

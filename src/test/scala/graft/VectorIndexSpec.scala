@@ -1,41 +1,49 @@
 package graft
 
-import graft.operators.{CentroidGraph, VectorIndex}
+import graft.operators.{CentroidGraph, IndexBuild, VectorIndex}
 import org.apache.spark.sql.functions._
 
 /** Approximation-quality tests for the IVF indexes (the correctness keys
   * run exact-equivalent configurations; this covers nprobes < cells). */
 class VectorIndexSpec extends SparkSpec {
 
+  /** A fresh 16-cell `IndexBuild` index of `tpe` over the fixture's
+    * embeddings, plus `opts`. */
+  private def built(tpe: String, opts: (String, String)*): IndexBuild.BuiltIndex =
+    IndexBuild.build(spark, Tables.t(spark, sf, "embeddings"),
+      java.nio.file.Files.createTempDirectory("graft-ivfspec-").toString,
+      Map("index.type" -> tpe, "index.num-partitions" -> "16") ++ opts)
+
+  private lazy val flatIdx = built("IVF_FLAT")
+
+  /** The fragment counts (kept, total) of the index scan in `plan`. */
+  private def fragments(plan: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val text = plan.queryExecution.executedPlan.toString
+    val m = "fragments=(\\d+)/(\\d+)".r.findFirstMatchIn(text)
+    assert(m.isDefined, text)
+    (m.get.group(1).toInt, m.get.group(2).toInt)
+  }
+
   test("ivf_flat recall grows with nprobes and reaches >= 0.8 at 10/16") {
     // near-random 64-dim vectors are the worst case for IVF (true
     // neighbors scatter across cells): measured recall@10 here is
     // 2→0.2, 4→0.4, 8→0.7, 10→0.9, 12→1.0
-    val (root, centroids) = VectorIndex.buildIvfFlat(spark, sf)
     val qv = VectorIndex.embeddingOf(spark, sf, vecId = 1L)
-    def recallAt(nprobes: Int, exact: Set[Long]): Double = {
-      val a = VectorIndex.ivfSearch(spark, root, centroids, qv,
-        nprobes, k = 10, excludeVecId = 1L).collect().map(_.getLong(0)).toSet
-      a.intersect(exact).size.toDouble / exact.size
-    }
-    val exact = VectorIndex.ivfSearch(spark, root, centroids, qv,
-      nprobes = 16, k = 10, excludeVecId = 1L)
+    def ids(nprobes: Int): Set[Long] = IndexBuild.search(spark, flatIdx, qv,
+      Map("vector.nprobes" -> nprobes.toString, "vector.k" -> "10"), excludeVecId = 1L)
       .collect().map(_.getLong(0)).toSet
-    val r2 = recallAt(2, exact); val r10 = recallAt(10, exact)
+    val exact = ids(16)
+    def recallAt(nprobes: Int): Double = ids(nprobes).intersect(exact).size.toDouble / exact.size
+    val r2 = recallAt(2); val r10 = recallAt(10)
     assert(r10 >= 0.8, s"recall@nprobes=10 was $r10")
     assert(r10 >= r2, s"recall not monotone: $r2 -> $r10")
   }
 
   test("ivf probe filter prunes index fragments in the plan") {
-    val (root, centroids) = VectorIndex.buildIvfFlat(spark, sf)
     val qv = VectorIndex.embeddingOf(spark, sf, vecId = 1L)
-    val plan = VectorIndex.ivfSearch(spark, root, centroids, qv, nprobes = 2, k = 10)
-      .queryExecution.executedPlan.toString
-    // fragments=<pruned>/<total> — pruned must be strictly fewer
-    val m = "fragments=(\\d+)/(\\d+)".r.findFirstMatchIn(plan)
-    assert(m.isDefined, plan)
-    assert(m.get.group(1).toInt < m.get.group(2).toInt,
-      s"no fragment pruning: ${m.get.matched}")
+    val (kept, total) = fragments(IndexBuild.searchPlan(spark, flatIdx, qv,
+      Map("vector.nprobes" -> "2", "vector.k" -> "10")))
+    assert(kept < total, s"no fragment pruning: $kept/$total")
   }
 
   test("ivf_pq_search is deterministic and roughly orders by true distance") {
@@ -52,8 +60,10 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("pq scan is UDF-free (codegen'd encode + ADC)") {
-    val plan = SparkEntry.queries("ivf_pq_search")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val key = VectorIndex.ivfKeys("ivf_pq_search")
+    val idx = VectorIndex.buildKey(spark, sf, key)
+    val plan = VectorIndex.searchKeyPlan(spark, idx, key,
+      VectorIndex.embeddingOf(spark, sf, vecId = 1L)).queryExecution.executedPlan.toString
     assert(!plan.contains("UDF"), plan)
     assert(!plan.contains("BatchEvalPython"), plan)
     assert(plan.toLowerCase.contains("pqadc"), plan)
@@ -80,27 +90,23 @@ class VectorIndexSpec extends SparkSpec {
     }
   }
 
-  test("searchIndex honors vector.* options: metric, k, nprobes pruning") {
-    val (root, centroids) = VectorIndex.buildIvfFlat(spark, sf)
+  test("IndexBuild.search honors vector.* options: metric, k, nprobes pruning") {
     val qv = VectorIndex.embeddingOf(spark, sf, vecId = 1L)
-    val res = VectorIndex.searchIndex(spark, root, centroids, qv,
+    val rows = IndexBuild.search(spark, flatIdx, qv,
       Map("vector.metric" -> "cosine", "vector.k" -> "7", "vector.nprobes" -> "16"),
-      excludeVecId = 1L)
-    val rows = res.collect()
+      excludeVecId = 1L).collect()
     assert(rows.length === 7)
     // cosine is a similarity: descending order
     val scores = rows.map(_.getDouble(1))
     assert(scores.sameElements(scores.sorted.reverse), scores.mkString(","))
     // small nprobes must prune index fragments in the plan
-    val plan = VectorIndex.searchIndex(spark, root, centroids, qv,
-      Map("vector.nprobes" -> "2"), excludeVecId = 1L)
-      .queryExecution.executedPlan.toString
-    val m = "fragments=(\\d+)/(\\d+)".r.findFirstMatchIn(plan)
-    assert(m.isDefined && m.get.group(1).toInt < m.get.group(2).toInt, plan)
+    val (kept, total) = fragments(IndexBuild.searchPlan(spark, flatIdx, qv,
+      Map("vector.nprobes" -> "2"), excludeVecId = 1L))
+    assert(kept < total, s"no fragment pruning: $kept/$total")
   }
 
   test("centroid graph: full-ef probe == exact probe selection; partial ef still sane") {
-    val (_, centroids) = VectorIndex.buildIvfFlat(spark, sf)
+    val centroids = flatIdx.centroids
     val qv = VectorIndex.embeddingOf(spark, sf, vecId = 1L)
     val g = CentroidGraph.build(spark, centroids, m = 4, efConstruction = 16)
     val exact = VectorIndex.selectProbesExact(centroids, qv, 4)
@@ -113,7 +119,6 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("options-driven index build/load/search: full-probe flat == exact; PQ+HNSW reload from disk") {
-    import graft.operators.IndexBuild
     val base = java.nio.file.Files.createTempDirectory("graft-idxbuild-").toString
     val e = Tables.t(spark, sf, "embeddings")
     val qv = VectorIndex.embeddingOf(spark, sf, vecId = 1L)
@@ -150,7 +155,6 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("incremental append indexes new vectors without retraining; search equals full scan") {
-    import graft.operators.IndexBuild
     val base = java.nio.file.Files.createTempDirectory("graft-idxappend-").toString
     val e = Tables.t(spark, sf, "embeddings")
     val (seed, late) = (e.filter(col("vec_id") < 400), e.filter(col("vec_id") >= 400))
@@ -192,7 +196,6 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("append assignment plan is UDF-free (codegen'd NearestCell + PqEncode)") {
-    import graft.operators.IndexBuild
     val base = java.nio.file.Files.createTempDirectory("graft-idxplan-").toString
     val e = Tables.t(spark, sf, "embeddings")
     val idx = IndexBuild.build(spark, e.filter(col("vec_id") < 400), base,
@@ -220,8 +223,13 @@ class VectorIndexSpec extends SparkSpec {
       }
   }
 
+  test("one encode rule: pq_encode and sq_encode appear only in IndexBuild.assignToCells") {
+    val sites = Seq("pq_encode(", "sq_encode(").flatMap(OperatorSources.sites)
+    assert(sites.map(s => (s._1, s._2)).distinct === Seq(("IndexBuild.scala", "assignToCells")),
+      sites)
+  }
+
   test("drift ratio stays ~1 for in-distribution appends, inflates on shift") {
-    import graft.operators.IndexBuild
     val base = java.nio.file.Files.createTempDirectory("graft-idxdrift-").toString
     val e = Tables.t(spark, sf, "embeddings")
     val idx = IndexBuild.build(spark, e.filter(col("vec_id") < 400), base,
@@ -245,7 +253,6 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("CALL system.reindex: no-op in-distribution, rebuild on drift, recall recovers") {
-    import graft.operators.IndexBuild
     spark.conf.set("spark.sql.catalog.lance_rx",
       classOf[graft.sources.lance.LanceCatalog].getName)
     val wh = java.nio.file.Files.createTempDirectory("graft-rxproc-").toString
@@ -327,7 +334,6 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("CALL system.knn searches through a persisted index, equals the Scala API") {
-    import graft.operators.IndexBuild
     spark.conf.set("spark.sql.catalog.lance_knn",
       classOf[graft.sources.lance.LanceCatalog].getName)
     val wh = java.nio.file.Files.createTempDirectory("graft-knnproc-").toString
@@ -820,7 +826,6 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("q_stream_index_pq: streamed PQ appends == batch-append twin; crash-replayed epoch is a no-op") {
-    import graft.operators.IndexBuild
     import org.apache.spark.sql.streaming.Trigger
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(s"graft-$p-").toString
     val e = Tables.t(spark, sf, "embeddings")
@@ -907,7 +912,7 @@ class VectorIndexSpec extends SparkSpec {
       .limit(10).collect().map(_.getLong(0)).toSet
     val plain = SparkEntry.queries("ivf_pq_search")(spark, sf)
       .collect().map(_.getLong(0)).toSet
-    val refined = VectorIndex.ivfPqRefine(spark, sf, k = 10, refineFactor = 4)
+    val refined = SparkEntry.queries("ivf_pq_refine")(spark, sf)
       .collect().map(_.getLong(0)).toSet
     assert(refined.size === 10)
     val rPlain = plain.intersect(truth).size
@@ -951,7 +956,9 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("SQ8: roundtrip error bounded by half a step; ADC == driver-recomputed distance; refine == exact") {
-    val (encoded, mins, scales) = operators.VectorIndex.buildSq(spark, sf)
+    val idx = built("IVF_SQ")
+    val (mins, scales) = (idx.sq.get.mins, idx.sq.get.scales)
+    val encoded = spark.read.format("lance").load(idx.root).select("vec_id", "embedding", "scodes")
     val rows = encoded.limit(50).collect()
     // per-coordinate dequantization error <= scale/2 (+ double eps): the
     // affine code covers the trained envelope, rint picks the nearer step
@@ -1049,15 +1056,21 @@ class VectorIndexSpec extends SparkSpec {
     // the top-k. A ragged row must simply vanish from the result.
     val tmp = java.nio.file.Files.createTempDirectory("graft-sqnull-").toString
     import spark.implicits._
-    val rows = (0L to 20L).map(i =>
-      (i, Array(i.toFloat, (i % 5).toFloat, 1f, 0f), 0)) :+
-      ((99L, Array(0.5f, 0.5f), 0)) // ragged: 2 dims vs 4 → null codes
-    rows.toDF("vec_id", "embedding", "label").write.mode("overwrite")
-      .parquet(s"$tmp/embeddings.parquet")
-    val (encoded, mins, scales) = operators.VectorIndex.buildSq(spark, tmp)
+    val rows = (0L to 20L).map(i => (i, Array(i.toFloat, (i % 5).toFloat, 1f, 0f), 0))
+    val idx = IndexBuild.build(spark, rows.toDF("vec_id", "embedding", "label"), tmp,
+      Map("index.type" -> "IVF_SQ", "index.num-partitions" -> "2"))
+    val ragged = Seq((99L, Array(0.5f, 0.5f), 0)).toDF("vec_id", "embedding", "label")
+    // an append assigns the ragged row (2 dims vs 4) a null cell and null codes...
+    IndexBuild.append(spark, ragged, idx)
+    // ...and a row written into a probed cell by hand keeps its null codes
+    // in the scan, so its ADC score is null
+    ragged.withColumn("cell", lit(0)).withColumn("scodes", lit(null).cast("binary"))
+      .write.format("lance").mode("append").save(tmp)
+    val stored = spark.read.format("lance").load(tmp)
+    assert(stored.filter(col("vec_id") === 99L && col("cell") === 0).count() === 1)
     val qv = Array(1.0, 1.0, 1.0, 0.0)
-    val got = operators.VectorIndex.sqTopKRefined(spark, encoded, mins, scales,
-      qv, k = 5, refineFactor = 2, excludeVecId = -1L)
+    val got = IndexBuild.search(spark, IndexBuild.load(spark, tmp), qv,
+      Map("vector.nprobes" -> "2", "vector.k" -> "5", "vector.refine-factor" -> "2"))
       .collect().map(_.getLong(0)).toSeq
     assert(!got.contains(99L), s"malformed row surfaced in the top-k: $got")
     assert(got.size === 5)
@@ -1320,8 +1333,9 @@ class VectorIndexSpec extends SparkSpec {
     // property — the payload predicate applies at the lance scan (fragment
     // stats + row filtering), not as a post-scan Spark filter over every
     // probed vector
-    val plan = SparkEntry.queries("ivf_filtered_search")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val key = VectorIndex.ivfKeys("ivf_filtered_search")
+    val plan = VectorIndex.searchKeyPlan(spark, VectorIndex.buildKey(spark, sf, key), key,
+      VectorIndex.embeddingOf(spark, sf, vecId = 1L)).queryExecution.executedPlan.toString
     assert(plan.contains("EqualTo(label,3)"),
       s"label predicate not pushed to the index scan:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"),
