@@ -140,9 +140,9 @@ object FamilySoak {
         .orderBy(col("dsir_micro").desc, col("doc_id").asc).limit(10).collect()
       operators.TextAnalysis.driftReport(
         operators.TextAnalysis.driftCounts(d0)).collect()
-      operators.VectorSearch.maxSimRank(
+      operators.VectorSearch.maxSimRank(spark,
         operators.VectorSearch.maxSimDocTokens(e0.select("vec_id", "embedding"), e0.count()),
-        operators.VectorSearch.maxSimQueryVecs(spark, e0)).collect()
+        operators.VectorSearch.maxSimQueryToks(e0), None).collect()
       operators.Dedup.embeddingPairs(
           e0.select("vec_id", "embedding", "label"), operators.Dedup.EmbChunkCap)
         .filter(col("cos") >= 0.3).count()
@@ -202,9 +202,9 @@ object FamilySoak {
       val e = spark.read.parquet(path).select("vec_id", "embedding")
       val n = e.count()
       val res = timed(s"knn_maxsim $tag") {
-        operators.VectorSearch.maxSimRank(
+        operators.VectorSearch.maxSimRank(spark,
           operators.VectorSearch.maxSimDocTokens(e, n),
-          operators.VectorSearch.maxSimQueryVecs(spark, e)).collect()
+          operators.VectorSearch.maxSimQueryToks(e), None).collect()
       }
       require(res.length == 3 * operators.VectorSearch.MaxSimK,
         s"maxsim $tag: expected ${3 * operators.VectorSearch.MaxSimK} rows, got ${res.length}")
@@ -223,7 +223,7 @@ object FamilySoak {
       sized(tag)
       val e = spark.read.parquet(path)
       val cents = timed(s"sweep train 256 cells $tag") {
-        operators.Dedup.trainCentroids(spark,
+        operators.VectorIndex.trainCentroids(
           e.filter(pmod(col("vec_id"), lit(97)) === 0), "embedding", 256)
       }
       val signBits = (0 until subBits).map { j =>
@@ -276,7 +276,7 @@ object FamilySoak {
       val queries = qids.zipWithIndex.map { case (id, i) => (i.toLong, qv(id)) }
       for (n <- Seq(500, 1000)) {
         val cand = timed(s"mmr candidates N=$n $tag") {
-          operators.VectorSearch.mmrCandidatesForVecs(spark, e, queries, None, n)
+          operators.VectorSearch.mmrCandidates(spark, e, queries, None, n)
             .localCheckpoint(true,
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         }
@@ -315,7 +315,8 @@ object FamilySoak {
         }
         val e = spark.read.parquet(ePath).select("vec_id", "embedding")
         val vec = timed(s"hybrid vector arm $tag") {
-          operators.TextAnalysis.hybridVectorArm(spark, e).localCheckpoint()
+          operators.TextAnalysis.hybridVectorArm(spark, e,
+            operators.TextAnalysis.hybridQueries(e), None).localCheckpoint()
         }
         val fused = timed(s"hybrid rrf fuse $tag") {
           operators.TextAnalysis.hybridRrfFuse(lex, vec).collect()
@@ -385,7 +386,7 @@ object FamilySoak {
       sized("full")
       val e = spark.read.parquet(path).select("vec_id", "embedding")
       val cents = timed(s"pruned-serve train $SoakCells cells") {
-        operators.Dedup.trainCentroids(spark,
+        operators.VectorIndex.trainCentroids(
           e.filter(pmod(col("vec_id"), lit(97)) === 0), "embedding", SoakCells)
       }
       val storeRoot = s"$out/served_store/t"
@@ -400,7 +401,8 @@ object FamilySoak {
         .select("vec_id", "embedding", "cell")
       def serveWall(np: Int, label: String): Double = {
         timed(s"pruned-serve vector arm $label") {
-          operators.TextAnalysis.hybridVectorArmPruned(spark, store, cents, np).collect()
+          operators.TextAnalysis.hybridVectorArm(spark, store,
+            operators.TextAnalysis.hybridQueries(store), Some((cents, np))).collect()
         }
         walls(s"pruned-serve vector arm $label")
       }
@@ -415,7 +417,7 @@ object FamilySoak {
       val queries = qids.zipWithIndex.map { case (id, i) => (i.toLong, qv(id)) }
       def mmrWall(np: Int, label: String): Double = {
         timed(s"pruned-serve mmr candidates $label") {
-          operators.VectorSearch.mmrCandidatesForVecs(spark, store, queries,
+          operators.VectorSearch.mmrCandidates(spark, store, queries,
             Some((cents, np)), 500).collect()
         }
         walls(s"pruned-serve mmr candidates $label")

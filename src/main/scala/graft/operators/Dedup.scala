@@ -653,41 +653,13 @@ object Dedup extends QueryModule {
 
   /** Session-memoized trained index per (session, dir) — one KMeans +
     * persisted-sidecar build per corpus, reused across Verify/Bench
-    * consumers (the lshPairsCache posture). */
-  private val semIdxCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), IndexBuild.BuiltIndex]()
-  // a long-lived JVM (test forks, a notebook reusing the classloader) runs
-  // many sessions — without cleanup each would leak one on-disk index per
-  // session forever; one shutdown hook reaps every root this JVM built
-  private val semIdxReaper: java.util.concurrent.ConcurrentLinkedQueue[String] = {
-    val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      q.forEach { root =>
-        // the roots were created by java.nio on the LOCAL filesystem, so
-        // qualify with an explicit file: scheme — a fresh Configuration
-        // with a non-local fs.defaultFS would otherwise resolve the
-        // scheme-less path remotely and delete the wrong tree
-        val p = new org.apache.hadoop.fs.Path("file:" + root).getParent
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        fs.delete(p, true); ()
-      }, "graft-semidx-reaper"))
-    q
-  }
+    * consumers. */
+  private val semIndexes = new FixtureMemo[IndexBuild.BuiltIndex]("semidx", _.root)
 
-  private[graft] def trainedSemIndex(s: SparkSession, dir: String): IndexBuild.BuiltIndex = {
-    { val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-      semIdxCache.entrySet().removeIf(e =>
-        !graft.sources.lance.ManifestIO.pathExists(e.getValue.root, conf)) }
-    semIdxCache.computeIfAbsent(
-      (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-semidx-").toString + "/t"
-        semIdxReaper.add(root)
-        IndexBuild.build(s, t(s, dir, "embeddings"), root, Map(
-          "index.type" -> "IVF_FLAT",
-          "index.num-partitions" -> TrainedSemCells.toString))
-      })
-  }
+  private[graft] def trainedSemIndex(s: SparkSession, dir: String): IndexBuild.BuiltIndex =
+    semIndexes(s, dir)(tmp => IndexBuild.build(s, t(s, dir, "embeddings"), tmp + "/t", Map(
+      "index.type" -> "IVF_FLAT",
+      "index.num-partitions" -> TrainedSemCells.toString)))
 
   /** Nearest-stored-centroid assignment: (vec_id, label = trained cell,
     * embedding) — `label` so [[embeddingPairs]] blocks on it unchanged. */
@@ -731,17 +703,6 @@ object Dedup extends QueryModule {
     labels.filter(col("node") =!= col("lbl"))
       .select(col("node").as("vec_id"))
   }
-
-  /** Train the coarse quantizer's centroids for a SemDeDup pass — the
-    * same recipe as the IVF builds (KMeans, capped deterministic sample,
-    * seed 42) without persisting an index; CALL system.semdedup's
-    * product is the curated table, not a standing index. */
-  private[graft] def trainCentroids(s: SparkSession, corpus: DataFrame,
-                                    vecCol: String, cells: Int): Array[Array[Double]] =
-    // r20: the adaptive trainer (driver-local under the sample bounds,
-    // MLlib above) — same seed-42 determinism contract
-    VectorIndex.fitCentroids(
-      VectorIndex.trainingSample(corpus.select(col(vecCol))), vecCol, cells, 42L)
 
   private def dedupSemanticTrained(s: SparkSession, dir: String): DataFrame = {
     val idx = trainedSemIndex(s, dir)

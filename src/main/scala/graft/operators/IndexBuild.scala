@@ -99,6 +99,18 @@ object IndexBuild {
     }
   }
 
+  /** One manifest resolution for a vector CALL: the read options pinning
+    * the latest version and the index handle that version's sidecar
+    * pointer names (None on a plain table). Every read of the call uses
+    * the options, so a rebuild committed mid-call cannot pair this
+    * version's `cell` column with newer centroids. */
+  private[graft] def pinnedLatest(s: SparkSession,
+                                  root: String): (Map[String, String], Option[BuiltIndex]) = {
+    val m = latestManifest(s, root)
+    (m.map(v => Map("versionAsOf" -> v.version.toString)).getOrElse(Map.empty),
+      loadAt(s, root, m))
+  }
+
   /** Does `root` carry a persisted index? Its manifest's sidecar pointer
     * (the atomic source of truth) says. */
   def exists(s: SparkSession, root: String): Boolean =
@@ -117,8 +129,7 @@ object IndexBuild {
     // adaptive trainer (driver-local LocalKMeans under the sample bounds,
     // MLlib above); rows are assigned and encoded by assignToCells, the
     // rule appends use, so build and append share one tie-break
-    val centArr = VectorIndex.fitCentroids(
-      VectorIndex.trainingSample(source.select(col(vecCol))), vecCol, cells, 42L)
+    val centArr = VectorIndex.trainCentroids(source, vecCol, cells)
     val centroids = centArr.map(Vectors.dense)
 
     val isPq = io.indexType.endsWith("_PQ")
@@ -278,6 +289,16 @@ object IndexBuild {
       case Some(g) => g.probe(queryVec, so.nprobes, so.ef)
       case None => VectorIndex.selectProbesExact(idx.centroids, queryVec, so.nprobes)
     }
+    // every arm ranks the same probed base: fragment pruning on the cell
+    // range, then the caller's filter. The query vector is a literal (a
+    // reference object in the generated code), so the code is the same for
+    // every query and no broadcast join is planned. Lazy: a bad metric
+    // fails before any read.
+    lazy val base = {
+      val base0 = s.read.format("lance").options(options).load(idx.root)
+        .filter(col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId)
+      pred.map(base0.filter).getOrElse(base0)
+    }
     // the quantized arms share one ADC scan; only the scorer differs (PQ
     // LUT lookups vs SQ dequantized subtraction)
     def adcTop(adc: org.apache.spark.sql.Column): DataFrame = {
@@ -287,9 +308,6 @@ object IndexBuild {
       require(so.metric == "l2",
         s"lance index search: the quantized (ADC) path reconstructs L2; " +
           s"metric '${so.metric}' needs an IVF_FLAT/IVF_HNSW index")
-      val base0 = s.read.format("lance").options(options).load(idx.root)
-        .filter(col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId)
-      val base = pred.map(base0.filter).getOrElse(base0)
       if (refines(idx, so))
         VectorIndex.rankTop(base.select(col(idCol), col(idx.opts.column), adc.as("adc_dist")),
           "adc_dist", asc = true, so.k * so.refineFactor.get, idCol)
@@ -299,8 +317,10 @@ object IndexBuild {
     }
     (idx.pq, idx.sq) match {
       case (None, None) =>
-        VectorIndex.probedTop(s, idx.root, options, probed, queryVec,
-          so.metric, so.k, excludeVecId, idCol, idx.opts.column, pred)
+        val (score, asc) = graft.functions.vec_score(so.metric,
+          col(idx.opts.column), typedLit(queryVec.map(_.toFloat)), "lance index search")
+        VectorIndex.rankTop(base.select(col(idCol), round(score, 6).as("dist")),
+          "dist", asc, so.k, idCol)
       case (Some(p), _) =>
         val lut = new Array[Double](p.m * p.codes)
         for (mm <- 0 until p.m; c <- 0 until p.codes) {

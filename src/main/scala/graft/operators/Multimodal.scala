@@ -265,28 +265,23 @@ object Multimodal extends QueryModule {
     * storage): the payloads `synth(doc_id)` of the corpus's documents
     * materialize ONCE per (session, corpus) into the parquet table `file`
     * under a fresh `graft-<prefix>-` temp dir as (doc_id, `column`), and the operators
-    * read them back, so the measured work is decode, not fixture encoding.
-    * Paths that no longer exist are evicted first; keyed/evicted like
-    * Dedup.lshPairsCache. */
+    * read them back, so the measured work is decode, not fixture encoding
+    * ([[FixtureMemo]]). */
   private final class PayloadFixture(prefix: String, file: String, column: String,
                                      synth: Long => Array[Byte]) {
-    private val paths = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+    private val paths = new FixtureMemo[String](prefix, identity)
 
     def apply(s: SparkSession, dir: String): String = {
       import s.implicits._
-      { val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-        paths.entrySet().removeIf(e =>
-          !graft.sources.lance.ManifestIO.pathExists(e.getValue, conf)) }
-      paths.computeIfAbsent(
-        (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
-          val path = java.nio.file.Files.createTempDirectory(s"graft-$prefix-").toString + s"/$file"
-          val payload = synth // the closure ships the function, not this cache
-          t(s, dir, "documents").select(col("doc_id")).as[Long]
-            .mapPartitions(it => it.map(id => (id, payload(id))))
-            .toDF("doc_id", column)
-            .write.parquet(path)
-          path
-        })
+      paths(s, dir) { tmp =>
+        val path = tmp + s"/$file"
+        val payload = synth // the closure ships the function, not this cache
+        t(s, dir, "documents").select(col("doc_id")).as[Long]
+          .mapPartitions(it => it.map(id => (id, payload(id))))
+          .toDF("doc_id", column)
+          .write.parquet(path)
+        path
+      }
     }
   }
 

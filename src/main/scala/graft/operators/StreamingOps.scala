@@ -1977,12 +1977,12 @@ object StreamingOps extends QueryModule {
   /** q_stream_hybrid with the vector arm served PROBE-PRUNED (r18 verdict
     * item 1 — the production config): the maintained store is already
     * cell-clustered, so serving reads only the queries' probed cells via
-    * the static cell-IN pushdown ([[TextAnalysis.hybridVectorArmPruned]]).
+    * the static cell-IN pushdown ([[TextAnalysis.hybridVectorArm]]).
     * The gate probes every cell — provably equal to the brute arm, so the
     * key keeps text_search_hybrid's FULL oracle while the plan is the one
     * you'd run at 100× (fragment-pruned at partial probes, recall-spec'd
     * in RetrievalPrunedSpec). */
-  private def streamHybridPruned(s: SparkSession, dir: String): DataFrame =
+  private def streamHybridPrunedFull(s: SparkSession, dir: String): DataFrame =
     streamHybridAt(s, dir, prunedVec = true)
 
   /** The PRODUCTION serving config of q_stream_hybrid_pruned — partial
@@ -2015,14 +2015,11 @@ object StreamingOps extends QueryModule {
     val lex = TextIndex.search(s, idxRoot,
       TextAnalysis.Bm25Queries.toDF("query_id", "term"), TextAnalysis.Bm25TopK)
       .select(col("query_id"), col("doc_id"), col("rk").as("r"))
-    val vecArm =
-      if (prunedVec) TextAnalysis.hybridVectorArmPruned(s,
-        s.read.format("lance").load(vecT).select("vec_id", "embedding", "cell"),
-        idx.centroids.map(_.toArray),
-        nprobes = if (nprobes0 > 0) nprobes0 else idx.centroids.length)
-      else TextAnalysis.hybridVectorArm(s,
-        s.read.format("lance").load(vecT).select("vec_id", "embedding"))
-    TextAnalysis.hybridRrfFuse(lex, vecArm)
+    val store = s.read.format("lance").load(vecT).select("vec_id", "embedding", "cell")
+    val probe = if (!prunedVec) None else Some((idx.centroids.map(_.toArray),
+      if (nprobes0 > 0) nprobes0 else idx.centroids.length))
+    TextAnalysis.hybridRrfFuse(lex,
+      TextAnalysis.hybridVectorArm(s, store, TextAnalysis.hybridQueries(store), probe))
   }
 
   /** Streaming MULTI-VECTOR retrieval — the serving-side twin of
@@ -2048,9 +2045,9 @@ object StreamingOps extends QueryModule {
     drainStaged(s, tmp("smax-src"), tmp("smax-ck"), SessionParts, 4, e)(
       VectorSearch.maxSimDocTokens(_, n).writeStream.format("lance").outputMode("append")
     )(Into(tokT))
-    VectorSearch.maxSimRank(
+    VectorSearch.maxSimRank(s,
       s.read.format("lance").load(tokT).select("doc_id", "embedding"),
-      VectorSearch.maxSimQueryVecs(s, e))
+      VectorSearch.maxSimQueryToks(e), None)
   }
 
   /** q_stream_maxsim with the token store CELL-CLUSTERED and served
@@ -2059,11 +2056,11 @@ object StreamingOps extends QueryModule {
     * posture), every arriving token row lands with the codegen'd
     * NearestCell projection under write.cluster-by=cell (exactly-once
     * lance StreamingWrite), and serving reads only each query token's
-    * probed cells ([[VectorSearch.maxSimRankPruned]] — static cell-IN
+    * probed cells ([[VectorSearch.maxSimRank]] — static cell-IN
     * pushdown, fragment-pruned). The gate probes every cell, so the
     * scored pairs provably equal the broadcast cross-join's and the key
     * keeps knn_maxsim's FULL oracle; partial probes are recall-spec'd. */
-  private def streamMaxSimPruned(s: SparkSession, dir: String): DataFrame =
+  private def streamMaxSimPrunedFull(s: SparkSession, dir: String): DataFrame =
     streamMaxSimPrunedAt(s, dir, nprobes0 = 0)
 
   /** Production config: partial probes (see [[streamHybridPrunedP8]]). */
@@ -2075,21 +2072,21 @@ object StreamingOps extends QueryModule {
     val tokT = tmp("smaxp-tok") + "/t"
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val n = e.count()
-    val cents = Dedup.trainCentroids(s,
+    val cents = VectorIndex.trainCentroids(
       VectorSearch.maxSimDocTokens(e.filter(col("vec_id") % 4 === 0), n),
       "embedding", VectorIndex.Cells)
     appendCells(s, "smaxp", e, 4, cents, tokT, shape = VectorSearch.maxSimDocTokens(_, n))
-    VectorSearch.maxSimRankPruned(s,
+    VectorSearch.maxSimRank(s,
       s.read.format("lance").load(tokT).select("doc_id", "embedding", "cell"),
-      VectorSearch.maxSimQueryToks(e), cents,
-      nprobes = if (nprobes0 > 0) nprobes0 else cents.length)
+      VectorSearch.maxSimQueryToks(e),
+      Some((cents, if (nprobes0 > 0) nprobes0 else cents.length)))
   }
 
   /** Streaming DIVERSIFIED retrieval — the serving-side twin of knn_mmr,
     * completing the retrieval-serving family (text index, hybrid, MaxSim,
     * MMR): an arriving corpus maintains the standing vector table via the
     * exactly-once lance StreamingWrite, and the MMR workload serves from
-    * it — the candidate scan ([[VectorSearch.mmrCandidatesFrom]]) and the
+    * it — the candidate scan ([[VectorSearch.mmrCandidates]]) and the
     * pair-sims + greedy tail ([[VectorSearch.mmrServe]]) are the batch
     * key's VERBATIM, reading the streamed table instead of the fixture.
     * The store is append-only, so at stream end it holds exactly the
@@ -2103,18 +2100,16 @@ object StreamingOps extends QueryModule {
     drainStaged(s, tmp("smmr-src"), tmp("smmr-ck"), SessionParts, 4,
       t(s, dir, "embeddings").select("vec_id", "embedding"))(
       _.writeStream.format("lance").outputMode("append"))(Into(vecT))
-    VectorSearch.mmrServe(
-      VectorSearch.mmrCandidatesFrom(s, s.read.format("lance").load(vecT))
-        .localCheckpoint())
+    VectorSearch.mmrKey(s, s.read.format("lance").load(vecT), None)
   }
 
   /** q_stream_mmr with the store CELL-CLUSTERED and the candidate scan
     * PROBE-PRUNED (r18 verdict item 1): seed-trained frozen centroids,
     * exactly-once cell-clustered appends (q_stream_index_once's loop),
-    * candidates via [[VectorSearch.mmrCandidatesPruned]] (static cell-IN
+    * candidates via [[VectorSearch.mmrCandidates]] (static cell-IN
     * pushdown), greedy tail verbatim. Full probes at the gate ⇒
     * knn_mmr's FULL oracle unchanged; partial probes recall-spec'd. */
-  private def streamMmrPruned(s: SparkSession, dir: String): DataFrame =
+  private def streamMmrPrunedFull(s: SparkSession, dir: String): DataFrame =
     streamMmrPrunedAt(s, dir, nprobes0 = 0)
 
   /** Production config: partial probes (see [[streamHybridPrunedP8]]). */
@@ -2125,14 +2120,12 @@ object StreamingOps extends QueryModule {
                                 nprobes0: Int): DataFrame = {
     val vecT = tmp("smmrp-vec") + "/t"
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    val cents = Dedup.trainCentroids(s,
+    val cents = VectorIndex.trainCentroids(
       e.filter(col("vec_id") % 4 === 0), "embedding", VectorIndex.Cells)
     appendCells(s, "smmrp", e, 4, cents, vecT)
-    VectorSearch.mmrServe(
-      VectorSearch.mmrCandidatesPruned(s,
-        s.read.format("lance").load(vecT).select("vec_id", "embedding", "cell"),
-        cents, nprobes = if (nprobes0 > 0) nprobes0 else cents.length)
-        .localCheckpoint())
+    VectorSearch.mmrKey(s,
+      s.read.format("lance").load(vecT).select("vec_id", "embedding", "cell"),
+      Some((cents, if (nprobes0 > 0) nprobes0 else cents.length)))
   }
 
   /** Streaming DSIR selection — sample_dsir maintained as an incremental
@@ -2242,15 +2235,15 @@ object StreamingOps extends QueryModule {
     "q_stream_mv_window" -> streamMvWindow,
     "q_stream_text_index" -> streamTextIndex,
     "q_stream_hybrid" -> streamHybrid,
-    "q_stream_hybrid_pruned" -> streamHybridPruned,
+    "q_stream_hybrid_pruned" -> streamHybridPrunedFull,
     "q_stream_hybrid_pruned_p8" -> streamHybridPrunedP8,
     "q_stream_maxsim" -> streamMaxSim,
-    "q_stream_maxsim_pruned" -> streamMaxSimPruned,
+    "q_stream_maxsim_pruned" -> streamMaxSimPrunedFull,
     "q_stream_maxsim_pruned_p8" -> streamMaxSimPrunedP8,
     "q_stream_dsir" -> streamDsir,
     "q_stream_drift" -> streamDrift,
     "q_stream_mmr" -> streamMmr,
-    "q_stream_mmr_pruned" -> streamMmrPruned,
+    "q_stream_mmr_pruned" -> streamMmrPrunedFull,
     "q_stream_mmr_pruned_p8" -> streamMmrPrunedP8,
     "q_stream_dau_hll" -> streamDauHll,
     "q_stream_classifier" -> streamClassifier,

@@ -718,66 +718,32 @@ object TextAnalysis extends QueryModule {
   private def textSearchHybrid(s: SparkSession, dir: String): DataFrame = {
     val lex = textSearchBm25(s, dir)
       .select(col("query_id"), col("doc_id"), col("rk").as("r"))
-    hybridRrfFuse(lex, hybridVectorArm(s, t(s, dir, "embeddings")))
+    val e = t(s, dir, "embeddings")
+    hybridRrfFuse(lex, hybridVectorArm(s, e, hybridQueries(e), None))
   }
 
-  /** The hybrid key's VECTOR arm over any (vec_id, embedding) corpus
-    * projection: per query, top-k by 6-dp rounded cosine, vec_id
-    * tiebreak. Shared by the batch key (scan side) and the streaming
-    * twin (the maintained cell-clustered table, all cells = exact). */
-  private[graft] def hybridVectorArm(s: SparkSession, e: DataFrame): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val qv = e.join(broadcast(HybridQueryVecs.toDF("query_id", "vec_id")), "vec_id")
-      .select(col("query_id"), col("embedding").as("qv"))
-    val byQcos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("doc_id").asc)
-    e.crossJoin(broadcast(qv))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        round(graft.functions.vec_cosine(col("embedding"), col("qv")), 6).as("cos"))
-      .withColumn("r", row_number().over(byQcos).cast("long"))
-      .filter(col("r") <= Bm25TopK)
-      .select("query_id", "doc_id", "r")
-  }
-
-  /** [[hybridVectorArm]]'s probe-pruned twin over a CELL-CLUSTERED store
-    * (the production serving config): each query reads only its probed
-    * cells through [[VectorSearch.probedSlice]] — a static cell-IN
-    * pushdown the fragment stats prune on — with the identical 6-dp
-    * cosine rank tail. nprobes == |cells| ⇒ row-for-row equal to the
-    * brute-force arm (the full-oracle gate config); partial probes trade
-    * recall for fragments read (recall-spec'd). */
-  private[graft] def hybridVectorArmPruned(s: SparkSession, store: DataFrame,
-                                               cents: Array[Array[Double]],
-                                               nprobes: Int): DataFrame = {
+  /** The fixture's [[HybridQueryVecs]] resolved from a (vec_id,
+    * embedding) store with the k-bounded id lookup. */
+  private[graft] def hybridQueries(store: DataFrame): Seq[(Long, Array[Float])] = {
     val qv = VectorSearch.resolveVecs(store, HybridQueryVecs.map(_._2))
-    hybridVectorArmForVecs(s, store,
-      HybridQueryVecs.map { case (q, vid) => (q, qv(vid)) },
-      Some((cents, nprobes)), Bm25TopK)
+    HybridQueryVecs.map { case (q, vid) => (q, qv(vid)) }
   }
 
-  /** The vector rank arm for an ARBITRARY query-vector workload — the
-    * `CALL system.hybrid` router and [[hybridVectorArmPruned]]'s core:
-    * probed slice of a cell-clustered store when `probed` is set, the
-    * broadcast-queries codegen'd cosine scan otherwise; identical 6-dp
-    * rank tail either way. */
-  private[graft] def hybridVectorArmForVecs(s: SparkSession, store: DataFrame,
-                                            queries: Seq[(Long, Array[Float])],
-                                            probed: Option[(Array[Array[Double]], Int)],
-                                            topK: Int): DataFrame = {
-    import s.implicits._
+  /** The hybrid VECTOR arm: per query, top-k of `store` (vec_id,
+    * embedding[, cell]) by 6-dp rounded cosine, vec_id tiebreak, read
+    * through [[VectorSearch.probedSlice]] — each query's probed cells of
+    * a cell-clustered store (a static cell-IN pushdown the fragment stats
+    * prune on), or the whole store with `probe = None`. Full probes are
+    * row-for-row the brute-force arm (the full-oracle gate config);
+    * partial probes trade recall for fragments read (recall-spec'd). */
+  private[graft] def hybridVectorArm(s: SparkSession, store: DataFrame,
+                                     queries: Seq[(Long, Array[Float])],
+                                     probe: Option[(Array[Array[Double]], Int)],
+                                     topK: Int = Bm25TopK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byQcos = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("doc_id").asc)
-    val base = probed match {
-      case Some((cents, np)) =>
-        VectorSearch.probedSlice(s, store.select("vec_id", "embedding", "cell"),
-          queries, cents, np)
-      case None =>
-        store.select("vec_id", "embedding")
-          .crossJoin(broadcast(queries.toDF("__pq", "__qv")))
-    }
-    base
+    VectorSearch.probedSlice(s, store, queries, probe)
       .select(col("__pq").as("query_id"), col("vec_id").as("doc_id"),
         round(graft.functions.vec_cosine(col("embedding"), col("__qv")), 6).as("cos"))
       .withColumn("r", row_number().over(byQcos).cast("long"))

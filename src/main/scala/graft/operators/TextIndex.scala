@@ -199,20 +199,13 @@ object TextIndex {
 
   // per-(session, dir) memo of the built index root: the standing index
   // is built ONCE and every query batch after reads it — the posture the
-  // operator exists to prove. Keyed like Dedup.lshPairsCache (sessionUUID
-  // + immutable corpus dir), stopped-session entries purged on access.
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  // operator exists to prove
+  private val indexes = new FixtureMemo[String]("textidx", identity)
 
   /** The standing index for a testdata corpus dir (built on first use). */
-  def indexFor(s: SparkSession, dir: String): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    indexCache.entrySet().removeIf(e => !exists(e.getValue, conf))
-    indexCache.computeIfAbsent(
-      (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
-        val root = java.nio.file.Files.createTempDirectory("graft-textidx-").toString
-        build(s, Tables.t(s, dir, "documents").select("doc_id", "text"), root)
-        root
-      })
-  }
+  def indexFor(s: SparkSession, dir: String): String =
+    indexes(s, dir) { root =>
+      build(s, Tables.t(s, dir, "documents").select("doc_id", "text"), root)
+      root
+    }
 }

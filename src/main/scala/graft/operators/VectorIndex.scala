@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 
-/** The IVF training kernels, the probed-cell scan and the `ivf_*` keys
+/** The IVF training kernels, the top-k ranking helpers and the `ivf_*` keys
   * (reference: LanceIndexBuilder.java:116-141 — IVF_FLAT num-partitions,
   * IVF_PQ num-sub-vectors/num-bits).
   *
@@ -67,24 +67,27 @@ object VectorIndex extends QueryModule {
   private[operators] val LocalTrainBytes = 64L << 20
   private[operators] val LocalTrainFlops = 2000000000L
 
-  /** Train `k` centroids over an (already TrainCap-capped) sample of
-    * `vecCol` vectors — [[LocalKMeans]] under the bounds (collected ONCE,
-    * sorted for layout-independent determinism), MLlib above them.
-    * Returns dense double centroids; min(k, n) rows like MLlib. */
-  private[operators] def fitCentroids(sample: DataFrame, vecCol: String,
-                                      k: Int, seed: Long): Array[Array[Double]] = {
+  /** The one centroid trainer — every index build, streamed cell store,
+    * ad-hoc knn_join and SemDeDup pass trains through it: `cells`
+    * centroids of `vecCol` over the TrainCap-capped sample of `df`, seed
+    * 42 — [[LocalKMeans]] under the bounds (collected ONCE, sorted for
+    * layout-independent determinism), MLlib above them. Returns dense
+    * double centroids; min(cells, n) rows like MLlib. */
+  private[graft] def trainCentroids(df: DataFrame, vecCol: String,
+                                    cells: Int): Array[Array[Double]] = {
+    val sample = trainingSample(df.select(col(vecCol)))
     val head = sample.agg(count(lit(1)), max(size(col(vecCol)))).first()
     val n = head.getLong(0)
     val dim = if (head.isNullAt(1)) 0 else head.getInt(1)
-    require(n > 0, s"fitCentroids: empty training sample for $vecCol")
+    require(n > 0, s"trainCentroids: empty training sample for $vecCol")
     if (n * dim * 4 <= LocalTrainBytes &&
-        n * dim * math.min(k, n) * 10L <= LocalTrainFlops) {
+        n * dim * math.min(cells, n) * 10L <= LocalTrainFlops) {
       val pts = sample.select(col(vecCol).cast("array<float>"))
         .collect().map(_.getSeq[Float](0).toArray)
       java.util.Arrays.sort(pts, LocalKMeans.floatArrayOrdering)
-      LocalKMeans.fit(pts, k, seed)
+      LocalKMeans.fit(pts, cells, 42L)
     } else {
-      new KMeans().setK(k).setSeed(seed).setMaxIter(10)
+      new KMeans().setK(cells).setSeed(42L).setMaxIter(10)
         .setFeaturesCol("fv").setPredictionCol("cell")
         .fit(sample.select(asVec(col(vecCol)).as("fv")))
         .clusterCenters.map(_.toArray)
@@ -103,7 +106,7 @@ object VectorIndex extends QueryModule {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     // r20: driver-local subspace fits under the same bounds as
-    // fitCentroids — ONE collect of the capped sample, M seeded
+    // trainCentroids — ONE collect of the capped sample, M seeded
     // LocalKMeans fits (seed 42+mm, as the MLlib loop used) over slices
     // of the lexicographically-sorted sample. Above the bounds the
     // cached-sample concurrent MLlib fits below run unchanged.
@@ -163,25 +166,6 @@ object VectorIndex extends QueryModule {
       .map { case (c, i) => (i, Vectors.sqdist(c, Vectors.dense(queryVec))) }
       .sortBy { case (i, d) => (d, i) }
       .take(nprobes).map(_._1)
-
-  /** The probed-cell scan of every IVF search, ranked: fragment pruning on
-    * the cell range, the codegen'd distance against the query vector as a
-    * literal, top-k by [[rankTop]]. A literal array is a reference object
-    * in the generated code, so the code is the same for every query and no
-    * broadcast join is planned. `IndexBuild.search` collects this plan. */
-  private[operators] def probedTop(s: SparkSession, indexRoot: String,
-                         readOptions: Map[String, String], probed: Array[Int],
-                         queryVec: Array[Double], metric: String, k: Int,
-                         excludeVecId: Long, idCol: String, vecCol: String,
-                         pred: Option[Column]): DataFrame = {
-    val (score, asc) = graft.functions.vec_score(metric,
-      col(vecCol), typedLit(queryVec.map(_.toFloat)), "lance index search")
-    val base0 = s.read.format("lance").options(readOptions).load(indexRoot)
-      .filter(col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId)
-    val scored = pred.map(base0.filter).getOrElse(base0)
-      .select(col(idCol), round(score, 6).as("dist"))
-    rankTop(scored, "dist", asc, k, idCol)
-  }
 
   /** Rank `scored` by (`by`, id) and keep `n` rows, nulls LAST. Null
     * scores come from malformed rows (ragged dims, a null element). They

@@ -181,13 +181,13 @@ object VectorSearch extends QueryModule {
               qIdCol: String, cIdCol: String, vecCol: String, k: Int,
               metric: String = "l2", cells: Int = 0, nprobes: Int = 0,
               excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (qTagged, cTagged) =
+    val (q, cCell) =
       if (cells <= 1) {
-        (queries.withColumn("__cell", lit(0)), corpus.withColumn("__cell", lit(0)))
+        (queries.select(col(qIdCol).as("q_id"), col(vecCol).as("__qv"), lit(0).as("__cell")),
+          lit(0))
       } else {
         // r21: the ad-hoc cell training rides the SAME adaptive trainer as
-        // every index build (VectorIndex.fitCentroids — driver-local
+        // every index build (VectorIndex.trainCentroids — driver-local
         // LocalKMeans under the 64 MB / 2 GFlop bounds, the former MLlib
         // fit above them): the inline MLlib fit paid ~10 iterations of
         // distributed-job scheduling inside the timed join for a
@@ -195,12 +195,8 @@ object VectorSearch extends QueryModule {
         // Centroid values legitimately differ; the gated configs probe
         // every cell (nprobes == cells ⇒ exact top-k under ANY centroids)
         // and partial-probe recall is spec-measured, not assumed.
-        val centroids = VectorIndex.fitCentroids(
-          VectorIndex.trainingSample(corpus.select(col(vecCol))), vecCol, cells, 42L)
-        val nc = centroids.length
+        val centroids = VectorIndex.trainCentroids(corpus, vecCol, cells)
         val flat = centroids.flatten
-        val dim = flat.length / nc
-        val p = if (nprobes <= 0) nc else math.min(nprobes, nc)
         // coalesce(cell, -1): NearestCell is nullable (null on a malformed
         // vector), so a nullable join key makes the planner infer
         // IsNotNull(nearestcell(...)) and push it below the projection —
@@ -209,17 +205,36 @@ object VectorSearch extends QueryModule {
         // `Filter isnotnull(nearestcell(...))`). The -1 sentinel never
         // matches a probe (cell ids are 0..cells-1), so malformed rows
         // drop in the join exactly as null keys did — one eval per row.
-        (queries.withColumn("__cell",
-            explode(graft.functions.nearest_cells(col(vecCol), flat, nc, dim, p))),
-          corpus.withColumn("__cell",
-            coalesce(graft.functions.nearest_cell(col(vecCol), flat, nc, dim), lit(-1))))
+        (queryCells(queries, qIdCol, vecCol, flat, centroids.length, nprobes),
+          coalesce(graft.functions.nearest_cell(col(vecCol), flat, centroids.length,
+            flat.length / centroids.length), lit(-1)))
       }
+    cellJoinTop(q, corpus.select(col(cIdCol).as("n_id"), col(vecCol).as("__cv"),
+      cCell.as("__cell")), k, metric, excludeSelf)
+  }
+
+  /** The query side of every cell-blocked join: each query row as
+    * (q_id, __qv) exploded to its `nprobes` nearest cells (codegen'd
+    * NearestCells, per-row probe selection; `nprobes <= 0` probes all). */
+  private def queryCells(queries: DataFrame, qIdCol: String, vecCol: String,
+                         flat: Array[Double], cells: Int, nprobes: Int): DataFrame = {
+    val p = if (nprobes <= 0) cells else math.min(nprobes, cells)
+    queries.select(col(qIdCol).as("q_id"), col(vecCol).as("__qv"),
+      explode(graft.functions.nearest_cells(col(vecCol), flat, cells, flat.length / cells, p))
+        .as("__cell"))
+  }
+
+  /** The cell equi-join + per-query top-k of both [[knnJoin]] forms: the
+    * (q_id, __qv, __cell) probes meet the (n_id, __cv, __cell) corpus on
+    * the cell, and a window keeps each query's k nearest by the ROUNDED
+    * distance with neighbor-id tiebreak. */
+  private def cellJoinTop(q: DataFrame, c: DataFrame, k: Int, metric: String,
+                          excludeSelf: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val (score, asc) = vec_score(metric, col("__cv"), col("__qv"), "knnJoin")
-    val q = qTagged.select(col(qIdCol).as("q_id"), col(vecCol).as("__qv"), col("__cell"))
-    val c = cTagged.select(col(cIdCol).as("n_id"), col(vecCol).as("__cv"), col("__cell"))
+    val distOrder = if (asc) col("dist").asc else col("dist").desc
     val joined0 = q.join(c, "__cell")
     val joined = if (excludeSelf) joined0.filter(col("q_id") =!= col("n_id")) else joined0
-    val distOrder = if (asc) col("dist").asc else col("dist").desc
     joined
       .select(col("q_id"), col("n_id"),
         round(score, 6).as("dist"))
@@ -288,33 +303,15 @@ object VectorSearch extends QueryModule {
   def knnJoin(s: SparkSession, queries: DataFrame, idx: IndexBuild.BuiltIndex,
               qIdCol: String, k: Int, metric: String, nprobes: Int,
               excludeSelf: Boolean, cIdCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cells = idx.centroids.length
-    val flat = idx.centroids.flatMap(_.toArray)
-    val dim = flat.length / cells
-    val p = if (nprobes <= 0) cells else math.min(nprobes, cells)
     val vecCol = idx.opts.column
-    val q = queries.select(col(qIdCol).as("q_id"), col(vecCol).as("__qv"),
-      explode(graft.functions.nearest_cells(col(vecCol), flat, cells, dim, p))
-        .as("__cell"))
     // pinned: verifies the table still points at this handle's sidecar (a
     // rebuild between load and join would re-cell the data under us)
     val c = s.read.format("lance")
       .options(IndexBuild.pinnedOptions(s, idx)).load(idx.root)
       .select(col(cIdCol).as("n_id"), col(vecCol).as("__cv"),
         col("cell").as("__cell"))
-    val (score, asc) = vec_score(metric, col("__cv"), col("__qv"), "knnJoin")
-    val distOrder = if (asc) col("dist").asc else col("dist").desc
-    val joined0 = q.join(c, "__cell")
-    val joined = if (excludeSelf) joined0.filter(col("q_id") =!= col("n_id")) else joined0
-    joined
-      .select(col("q_id"), col("n_id"),
-        round(score, 6).as("dist"))
-      .withColumn("rk", row_number()
-        .over(Window.partitionBy("q_id").orderBy(distOrder, col("n_id").asc))
-        .cast("long"))
-      .filter(col("rk") <= k)
-      .orderBy(col("q_id").asc, col("rk").asc)
+    cellJoinTop(queryCells(queries, qIdCol, vecCol, idx.centroids.flatMap(_.toArray),
+      idx.centroids.length, nprobes), c, k, metric, excludeSelf)
   }
 
   /** ADC-scored KNN join against a persisted IVF_PQ index — the
@@ -350,19 +347,14 @@ object VectorSearch extends QueryModule {
     val pq = idx.pq.getOrElse(throw new IllegalArgumentException(
       s"knnJoinPq: index at ${idx.root} has no PQ codebooks (build with index.type=IVF_PQ)"))
     require(refine >= 1, s"knnJoinPq: refine must be >= 1, got $refine")
-    val cells = idx.centroids.length
-    val flat = idx.centroids.flatMap(_.toArray)
-    val dim = flat.length / cells
-    val p = if (nprobes <= 0) cells else math.min(nprobes, cells)
     val vecCol = idx.opts.column
     // ONE pinned version for both index reads below (codes for scoring,
     // vectors for the re-rank): a commit landing between them would score
     // against one snapshot and re-rank against another, silently dropping
     // re-written ids from the inner join
     val pinned = IndexBuild.pinnedOptions(s, idx)
-    val q = queries.select(col(qIdCol).as("q_id"), col(vecCol).as("__qv"),
-      explode(graft.functions.nearest_cells(col(vecCol), flat, cells, dim, p))
-        .as("__cell"))
+    val q = queryCells(queries, qIdCol, vecCol, idx.centroids.flatMap(_.toArray),
+      idx.centroids.length, nprobes)
     // corpus side of the cell join: id + codes + cell ONLY — the float
     // vector column stays out of the scan (column pruning) and out of the
     // shuffle; it is read again below for just the k×refine re-rank rows
@@ -727,31 +719,29 @@ object VectorSearch extends QueryModule {
           pmod(col("tok_id") - off + n, lit(n))): _*)))
       .select("doc_id", "embedding")
 
-  /** The broadcast query-token sets: 3 tokens per query, resolved from the
-    * embeddings slice (the HybridQueryVecs posture). */
-  private[graft] def maxSimQueryVecs(s: SparkSession, e: DataFrame): DataFrame = {
+  /** MaxSim over a token store: every query TOKEN is a probe unit of
+    * [[probedSlice]] (its probed cells, or the whole store with `probe =
+    * None`), scored by 6-dp rounded cosine and ranked by [[maxSimTail]].
+    * Full probes give exactly the brute-force scored pairs, so the tail
+    * reproduces the exact ranking. `qtoks` are (query_id, q_tok, vector)
+    * with q_tok unique. */
+  private[graft] def maxSimRank(s: SparkSession, tokenStore: DataFrame,
+                                qtoks: Seq[(Long, Long, Array[Float])],
+                                probe: Option[(Array[Array[Double]], Int)],
+                                k: Int = MaxSimK): DataFrame = {
     import s.implicits._
-    val qTokens = MaxSimQueries.flatMap(q => (0 until 3).map(j => (q, 100 * q + j)))
-      .toDF("query_id", "tok_id")
-    e.join(broadcast(qTokens), col("vec_id") === col("tok_id"))
-      .select(col("query_id"), col("tok_id").as("q_tok"), col("embedding").as("qv"))
+    val qmap = qtoks.map { case (q, tok, _) => (q, tok) }.toDF("query_id", "q_tok")
+    maxSimTail(
+      probedSlice(s, tokenStore, qtoks.map { case (_, tok, v) => (tok, v) }, probe)
+        .select(col("__pq").as("q_tok"), col("doc_id"),
+          round(vec_cosine(col("embedding"), col("__qv")), 6).as("cos"))
+        .join(broadcast(qmap), "q_tok")
+        .select("query_id", "q_tok", "doc_id", "cos"), k)
   }
-
-  /** The relational MaxSim tail — ONE definition for the batch key and the
-    * streaming twin: broadcast the query tokens over a codegen'd cosine
-    * scan of the token store, max per (query, doc, q-token) on 6-dp
-    * rounded cosines, integer micro-unit Σ per (query, doc), pre-shuffle
-    * k-heap rank with doc_id tiebreaks. */
-  private[graft] def maxSimRank(docTokens: DataFrame, qv: DataFrame,
-                                k: Int = MaxSimK): DataFrame =
-    maxSimTail(docTokens.crossJoin(broadcast(qv))
-      .select(col("query_id"), col("q_tok"), col("doc_id"),
-        round(vec_cosine(col("embedding"), col("qv")), 6).as("cos")), k)
 
   /** The max-per-q-token → micro-Σ → k-heap tail over scored
     * (query_id, q_tok, doc_id, cos) pairs — ONE definition whether the
-    * pairs came from the broadcast cross-join (exact arms) or the probed
-    * slice ([[maxSimRankPruned]]). */
+    * pairs came from the whole store or its probed cells. */
   private[graft] def maxSimTail(scored: DataFrame, k: Int = MaxSimK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byScore = Window.partitionBy("query_id")
@@ -771,8 +761,7 @@ object VectorSearch extends QueryModule {
 
   private def knnMaxSim(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    val n = e.count()
-    maxSimRank(maxSimDocTokens(e, n), maxSimQueryVecs(s, e))
+    maxSimRank(s, maxSimDocTokens(e, e.count()), maxSimQueryToks(e), None)
   }
 
   /** The knn_maxsim DuckDB twin — shared verbatim by `knn_maxsim_indexed`
@@ -807,66 +796,43 @@ object VectorSearch extends QueryModule {
 
   /** Session-memoized PERSISTED token store per (session, dir): the
     * cell-clustered lance table + frozen centroids the batch index-served
-    * MaxSim key reads — built once, reused across Verify/Bench consumers
-    * (the trainedSemIndex posture, shutdown reaper included). */
-  private val tokStoreCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, Array[Array[Double]])]()
-  private val tokStoreReaper: java.util.concurrent.ConcurrentLinkedQueue[String] = {
-    val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      q.forEach { root =>
-        // java.nio-created LOCAL roots — qualify with an explicit file:
-        // scheme so a non-local fs.defaultFS cannot redirect the delete
-        val p = new org.apache.hadoop.fs.Path("file:" + root).getParent
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        fs.delete(p, true); ()
-      }, "graft-tokstore-reaper"))
-    q
-  }
+    * MaxSim key reads — built once, reused across Verify/Bench consumers. */
+  private val tokStores =
+    new FixtureMemo[(String, Array[Array[Double]])]("tokstore", _._1)
 
   private[graft] def persistedTokenStore(
-      s: SparkSession, dir: String): (String, Array[Array[Double]]) = {
-    { val conf = org.apache.spark.sql.graft.Shim.hadoopConf(s, Map.empty)
-      tokStoreCache.entrySet().removeIf(e =>
-        !graft.sources.lance.ManifestIO.pathExists(e.getValue._1, conf)) }
-    tokStoreCache.computeIfAbsent(
-      (org.apache.spark.sql.graft.Shim.sessionUUID(s), dir), _ => {
-        val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-        val n = e.count()
-        val toks = maxSimDocTokens(e, n)
-        val cents = Dedup.trainCentroids(s, toks, "embedding", VectorIndex.Cells)
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-tokstore-").toString + "/t"
-        tokStoreReaper.add(root)
-        toks.withColumn("cell", graft.functions.nearest_cell(
-            col("embedding"), cents.flatten, cents.length, cents.head.length))
-          .write.format("lance")
-          .option("write.cluster-by", "cell")
-          .save(root)
-        (root, cents)
-      })
-  }
+      s: SparkSession, dir: String): (String, Array[Array[Double]]) =
+    tokStores(s, dir) { tmp =>
+      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
+      val toks = maxSimDocTokens(e, e.count())
+      val cents = VectorIndex.trainCentroids(toks, "embedding", VectorIndex.Cells)
+      val root = tmp + "/t"
+      toks.withColumn("cell", graft.functions.nearest_cell(
+          col("embedding"), cents.flatten, cents.length, cents.head.length))
+        .write.format("lance")
+        .option("write.cluster-by", "cell")
+        .save(root)
+      (root, cents)
+    }
 
   /** knn_maxsim served from the PERSISTED cell-clustered token store —
     * the batch twin of q_stream_maxsim_pruned, completing the MaxSim side
     * of VERDICT r18 item 2 (index-served candidates): the standing token
     * table lands cell-clustered at write, each query TOKEN reads only its
-    * probed cells ([[maxSimRankPruned]]), and the shared tail reproduces
+    * probed cells ([[maxSimRank]]), and the shared tail reproduces
     * the exact ranking. Gate config probes every cell ⇒ row-for-row equal
     * to knn_maxsim (full oracle unchanged); partial probes are the scale
     * path, recall-spec'd with a fragment-prune plan assert
     * (RetrievalPrunedSpec). */
   private def knnMaxSimIndexed(s: SparkSession, dir: String): DataFrame = {
     val (root, cents) = persistedTokenStore(s, dir)
-    maxSimRankPruned(s,
-      s.read.format("lance").load(root).select("doc_id", "embedding", "cell"),
-      maxSimQueryToks(t(s, dir, "embeddings")), cents, nprobes = cents.length)
+    maxSimRank(s, s.read.format("lance").load(root).select("doc_id", "embedding", "cell"),
+      maxSimQueryToks(t(s, dir, "embeddings")), Some((cents, cents.length)))
   }
 
   /** The (query_id, q_tok, vector) triples of the fixture's query-token
     * sets, resolved with the k-bounded id lookup — the driver-side form
-    * the probed-slice servers take (one definition for the batch indexed
-    * key and the streaming pruned twin). */
+    * [[maxSimRank]] takes (one definition for every MaxSim key). */
   private[graft] def maxSimQueryToks(e: DataFrame): Seq[(Long, Long, Array[Float])] = {
     val ids = MaxSimQueries.flatMap(q => (0 until 3).map(j => 100 * q + j))
     val vecs = resolveVecs(e, ids)
@@ -896,42 +862,46 @@ object VectorSearch extends QueryModule {
   private[graft] val MmrK = 10
   private[graft] val MmrQueries = Seq((1L, 100L), (2L, 200L), (3L, 300L))
 
-  /** The candidate stage alone (pre-materialization), so its plan shape —
-    * broadcast query vecs over one codegen'd cosine scan, top-N as a
-    * pre-shuffle k-heap — is assertable by the spec. The operator
-    * materializes the (N × |queries|)-bounded result before fanning it
+  /** The MMR candidate stage: each query's top-`n` docs of `store`
+    * (vec_id, embedding[, cell]) by 6-dp rounded cosine in integer
+    * micro-units, read through [[probedSlice]] — its probed cells, or the
+    * whole store crossed with the broadcast query vectors when `probe` is
+    * None — with the top-n as a pre-shuffle k-heap. The operator
+    * materializes the (n × |queries|)-bounded result before fanning it
     * into the pair self-join. */
-  /** The candidate stage over ANY (vec_id, embedding) store — one scan
-    * whether the store is the fixture table (batch key) or the streamed
-    * standing table (q_stream_mmr). Query vectors resolve from the same
-    * store and broadcast. */
-  private[graft] def mmrCandidatesFrom(s: SparkSession, e0: DataFrame): DataFrame = {
-    import s.implicits._
+  private[graft] def mmrCandidates(s: SparkSession, store: DataFrame,
+                                   queries: Seq[(Long, Array[Float])],
+                                   probe: Option[(Array[Array[Double]], Int)],
+                                   n: Int = MmrN): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = e0.select("vec_id", "embedding")
-    val qv = e.join(broadcast(MmrQueries.toDF("query_id", "qvid")),
-        col("vec_id") === col("qvid"))
-      .select(col("query_id"), col("embedding").as("qv"))
-    val excl = MmrQueries.map(_._2)
     val byQ = Window.partitionBy("query_id")
       .orderBy(col("qsim").desc, col("doc_id").asc)
-    e.filter(!col("vec_id").isin(excl: _*))
-      .crossJoin(broadcast(qv))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        round(round(vec_cosine(col("embedding"), col("qv")), 6) * 1e6)
+    probedSlice(s, store, queries, probe)
+      .select(col("__pq").as("query_id"), col("vec_id").as("doc_id"),
+        round(round(vec_cosine(col("embedding"), col("__qv")), 6) * 1e6)
           .cast("long").as("qsim"),
         col("embedding"))
       .withColumn("rnk", row_number().over(byQ))
-      .filter(col("rnk") <= MmrN)
+      .filter(col("rnk") <= n)
   }
 
-  /** The candidate stage alone (pre-materialization), so its plan shape —
-    * broadcast query vecs over one codegen'd cosine scan, top-N as a
-    * pre-shuffle k-heap — is assertable by the spec. The operator
-    * materializes the (N × |queries|)-bounded result before fanning it
-    * into the pair self-join. */
-  private[graft] def mmrCandidates(s: SparkSession, dir: String): DataFrame =
-    mmrCandidatesFrom(s, t(s, dir, "embeddings"))
+  /** The gated MMR workload over a (vec_id, embedding[, cell]) store: the
+    * fixture queries with their vectors resolved from the store, and the
+    * store without the query docs. */
+  private[graft] def mmrWorkload(store: DataFrame): (Seq[(Long, Array[Float])], DataFrame) = {
+    val ids = MmrQueries.map(_._2)
+    val qv = resolveVecs(store, ids)
+    (MmrQueries.map { case (q, vid) => (q, qv(vid)) }, store.filter(!col("vec_id").isin(ids: _*)))
+  }
+
+  /** The gated MMR keys' body: candidates over `store` (probed or whole),
+    * materialized — the tail consumes them 3× (pair self-join + collect) —
+    * then the greedy tail. */
+  private[graft] def mmrKey(s: SparkSession, store: DataFrame,
+                            probe: Option[(Array[Array[Double]], Int)]): DataFrame = {
+    val (queries, docs) = mmrWorkload(store)
+    mmrServe(mmrCandidates(s, docs, queries, probe).localCheckpoint())
+  }
 
   /** The pair-sims + greedy tail over MATERIALIZED candidates — shared
     * verbatim by the batch key and the streaming serving twin. */
@@ -966,9 +936,7 @@ object VectorSearch extends QueryModule {
   }
 
   private def knnMmr(s: SparkSession, dir: String): DataFrame =
-    // consumed 3× in the tail (pair self-join + collect): materialize the
-    // N × |queries| candidate rows instead of re-scanning the corpus
-    mmrServe(mmrCandidates(s, dir).localCheckpoint())
+    mmrKey(s, t(s, dir, "embeddings"), None)
 
   // ---- probe-pruned serving (the production config of the retrieval
   // family) ----------------------------------------------------------------
@@ -996,84 +964,31 @@ object VectorSearch extends QueryModule {
     e.filter(col(idCol).isin(ids: _*)).select(col(idCol), col(vecCol))
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
 
-  /** The probed slice of a CELL-CLUSTERED store for a k-bounded query
-    * workload: rows of each query's `nprobes` nearest cells, tagged
-    * `__pq` (the query's id) and `__qv` (its vector). One fragment-pruned
-    * scan + two broadcast joins; output rows ≤ |store ∩ probed cells| ×
-    * (probes sharing a cell). */
+  /** The one candidate source of every served retrieval (MMR, MaxSim,
+    * the hybrid vector arm) for a k-bounded query workload: `store` rows
+    * tagged `__pq` (the query's id) and `__qv` (its vector). With `probe
+    * = Some((centroids, nprobes))` the store is CELL-CLUSTERED and each
+    * query keeps only its `nprobes` nearest cells: one fragment-pruned
+    * scan + two broadcast joins, output rows ≤ |store ∩ probed cells| ×
+    * (probes sharing a cell). With None every row crosses the broadcast
+    * queries — the exact brute-force arm. */
   private[graft] def probedSlice(s: SparkSession, store: DataFrame,
                                  queries: Seq[(Long, Array[Float])],
-                                 cents: Array[Array[Double]],
-                                 nprobes: Int): DataFrame = {
+                                 probe: Option[(Array[Array[Double]], Int)]): DataFrame = {
     import s.implicits._
-    import org.apache.spark.ml.linalg.Vectors
-    val cvecs = cents.map(Vectors.dense)
-    val p = math.max(1, math.min(nprobes, cents.length))
-    val probes = queries.flatMap { case (qid, v) =>
-      VectorIndex.selectProbesExact(cvecs, v.map(_.toDouble), p).map(c => (qid, c))
-    }
-    val union = probes.map(_._2).distinct.sorted
     val qvDf = queries.toDF("__pq", "__qv")
-    store.filter(col("cell").isin(union: _*))
-      .join(broadcast(probes.toDF("__pq", "cell")), "cell")
-      .join(broadcast(qvDf), "__pq")
-  }
-
-  /** [[mmrCandidatesFrom]]'s probe-pruned twin over a cell-clustered
-    * store: identical qsim/rank math on the probed slice. nprobes ==
-    * |cells| ⇒ row-for-row equal to the brute-force candidate stage. */
-  private[graft] def mmrCandidatesPruned(s: SparkSession, store: DataFrame,
-                                         cents: Array[Array[Double]],
-                                         nprobes: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qv = resolveVecs(store, MmrQueries.map(_._2))
-    val queries = MmrQueries.map { case (q, vid) => (q, qv(vid)) }
-    val excl = MmrQueries.map(_._2)
-    val byQ = Window.partitionBy("query_id")
-      .orderBy(col("qsim").desc, col("doc_id").asc)
-    probedSlice(s, store.select("vec_id", "embedding", "cell"), queries, cents, nprobes)
-      .filter(!col("vec_id").isin(excl: _*))
-      .select(col("__pq").as("query_id"), col("vec_id").as("doc_id"),
-        round(round(vec_cosine(col("embedding"), col("__qv")), 6) * 1e6)
-          .cast("long").as("qsim"),
-        col("embedding"))
-      .withColumn("rnk", row_number().over(byQ))
-      .filter(col("rnk") <= MmrN)
-  }
-
-  /** The MMR candidate stage for an ARBITRARY k-bounded query-vector
-    * workload — the `CALL system.knn(mode => 'mmr')` router. Same
-    * qsim/rank math as the gated keys' stages: probe-pruned over a
-    * cell-clustered store when `probed` carries (centroids, nprobes)
-    * ([[probedSlice]] — one fragment-pruned scan + broadcast joins), the
-    * broadcast-queries codegen'd cosine scan + pre-shuffle k-heap
-    * otherwise. `store` arrives pre-filtered (the procedure applies its
-    * `filter` predicate against the user's column names before the
-    * rename) with columns (vec_id, embedding[, cell]). */
-  private[graft] def mmrCandidatesForVecs(
-      s: SparkSession, store: DataFrame,
-      queries: Seq[(Long, Array[Float])],
-      probed: Option[(Array[Array[Double]], Int)],
-      n: Int): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val byQ = Window.partitionBy("query_id")
-      .orderBy(col("qsim").desc, col("doc_id").asc)
-    val base = probed match {
-      case Some((cents, np)) =>
-        probedSlice(s, store.select("vec_id", "embedding", "cell"),
-          queries, cents, np)
-      case None =>
-        store.select("vec_id", "embedding")
-          .crossJoin(broadcast(queries.toDF("__pq", "__qv")))
+    probe match {
+      case None => store.crossJoin(broadcast(qvDf))
+      case Some((cents, nprobes)) =>
+        val cvecs = cents.map(org.apache.spark.ml.linalg.Vectors.dense)
+        val p = math.max(1, math.min(nprobes, cents.length))
+        val probes = queries.flatMap { case (qid, v) =>
+          VectorIndex.selectProbesExact(cvecs, v.map(_.toDouble), p).map(c => (qid, c))
+        }
+        store.filter(col("cell").isin(probes.map(_._2).distinct.sorted: _*))
+          .join(broadcast(probes.toDF("__pq", "cell")), "cell")
+          .join(broadcast(qvDf), "__pq")
     }
-    base
-      .select(col("__pq").as("query_id"), col("vec_id").as("doc_id"),
-        round(round(vec_cosine(col("embedding"), col("__qv")), 6) * 1e6)
-          .cast("long").as("qsim"),
-        col("embedding"))
-      .withColumn("rnk", row_number().over(byQ))
-      .filter(col("rnk") <= n)
   }
 
   /** knn_mmr served from the PERSISTED index (VERDICT r18 item 2): the
@@ -1084,33 +999,9 @@ object VectorSearch extends QueryModule {
     * scale path, recall-spec'd with a fragment-pruned plan assert. */
   private def knnMmrIndexed(s: SparkSession, dir: String): DataFrame = {
     val idx = Dedup.trainedSemIndex(s, dir)
-    val store = s.read.format("lance")
-      .options(IndexBuild.pinnedOptions(s, idx)).load(idx.root)
-      .select("vec_id", "embedding", "cell")
-    mmrServe(mmrCandidatesPruned(s, store, idx.centroids.map(_.toArray),
-      idx.centroids.length).localCheckpoint())
-  }
-
-  /** [[maxSimRank]]'s probe-pruned twin: the query TOKEN is the probe
-    * unit; each q-token reads only its probed cells of the token store.
-    * nprobes == |cells| ⇒ the scored pairs equal the broadcast
-    * cross-join's exactly, so the shared tail reproduces the exact
-    * ranking. */
-  private[graft] def maxSimRankPruned(s: SparkSession, tokenStore: DataFrame,
-                                      qtoks: Seq[(Long, Long, Array[Float])],
-                                      cents: Array[Array[Double]],
-                                      nprobes: Int,
-                                      k: Int = MaxSimK): DataFrame = {
-    import s.implicits._
-    val queries = qtoks.map { case (_, tok, v) => (tok, v) }
-    val qmap = qtoks.map { case (q, tok, _) => (q, tok) }.toDF("query_id", "q_tok")
-    maxSimTail(
-      probedSlice(s, tokenStore.select("doc_id", "embedding", "cell"),
-          queries, cents, nprobes)
-        .select(col("__pq").as("q_tok"), col("doc_id"),
-          round(vec_cosine(col("embedding"), col("__qv")), 6).as("cos"))
-        .join(broadcast(qmap), "q_tok")
-        .select("query_id", "q_tok", "doc_id", "cos"), k)
+    mmrKey(s, s.read.format("lance").options(IndexBuild.pinnedOptions(s, idx)).load(idx.root)
+        .select("vec_id", "embedding", "cell"),
+      Some((idx.centroids.map(_.toArray), idx.centroids.length)))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -199,7 +199,6 @@ object LanceProcedures {
       val pred: Option[org.apache.spark.sql.Column] =
         Some(in.getUTF8String(9).toString.trim).filter(_.nonEmpty)
           .map(org.apache.spark.sql.functions.expr)
-      val conf = Shim.hadoopConf(spark, Map.empty)
       import org.apache.spark.sql.functions._
       val mode = in.getUTF8String(11).toString.toLowerCase(java.util.Locale.ROOT)
       // resolve the manifest ONCE and pin EVERY read of this call to it: the
@@ -208,10 +207,7 @@ object LanceProcedures {
       // from a different snapshot than the distances. The index handle is
       // the sidecar that same manifest points at, so a rebuild committed
       // mid-call cannot pair this version's codes with newer codebooks.
-      val latest = ManifestIO.loadLatest(root, conf)
-      val pinned: Map[String, String] =
-        latest.map(m => Map("versionAsOf" -> m.version.toString)).getOrElse(Map.empty)
-      val index = graft.operators.IndexBuild.loadAt(spark, root, latest)
+      val (pinned, index) = graft.operators.IndexBuild.pinnedLatest(spark, root)
       val hasIndex = index.isDefined
       lazy val idx = {
         val i = index.get
@@ -221,8 +217,8 @@ object LanceProcedures {
       }
       // mode => 'mmr' | 'maxsim' (r19 verdict item 1): the r19 serving
       // machinery, SQL-reachable — same entry points as the gated keys
-      // (mmrCandidatesForVecs -> probedSlice -> mmrServe;
-      // maxSimRankPruned / maxSimRank), so full probes over an indexed
+      // (mmrCandidates -> probedSlice -> mmrServe; maxSimRank ->
+      // probedSlice -> maxSimTail), so full probes over an indexed
       // store reproduce the gated answers row-for-row and partial probes
       // run the fragment-pruned production plan. Both rank by the proven
       // 6-dp cosine contract; the optional `filter` narrows candidates
@@ -245,7 +241,7 @@ object LanceProcedures {
           require(metric == "cosine",
             "lance knn: mode => 'mmr' ranks by cosine — pass metric => 'cosine'")
           require(qv.nonEmpty, "lance knn: mode => 'mmr' needs query => array(...)")
-          val cand = graft.operators.VectorSearch.mmrCandidatesForVecs(
+          val cand = graft.operators.VectorSearch.mmrCandidates(
             spark, modalStore("vec_id"), Seq((0L, qv.map(_.toFloat))),
             probedCfg(), in.getInt(12))
           // the greedy tail consumes candidates 3x (pair self-join +
@@ -264,15 +260,9 @@ object LanceProcedures {
           }.toSeq
           require(toks.nonEmpty,
             "lance knn: mode => 'maxsim' needs query_toks => array(array(...), ...)")
-          (probedCfg() match {
-            case Some((cents, _)) =>
-              graft.operators.VectorSearch.maxSimRankPruned(
-                spark, modalStore("doc_id"), toks, cents, nprobes, k)
-            case None =>
-              import spark.implicits._
-              graft.operators.VectorSearch.maxSimRank(modalStore("doc_id"),
-                broadcast(toks.toDF("query_id", "q_tok", "qv")), k)
-          }).select(col("doc_id"), col("score"), col("rk")).collect()
+          graft.operators.VectorSearch.maxSimRank(spark, modalStore("doc_id"), toks,
+              probedCfg(), k)
+            .select(col("doc_id"), col("score"), col("rk")).collect()
         case "topk" =>
         require(qv.nonEmpty, "lance knn: query => array(...) is required")
         if (hasIndex) {
@@ -416,10 +406,8 @@ object LanceProcedures {
       val excludeSelf = in.getBoolean(10)
       val outTable = in.getUTF8String(11).toString.trim
       val queries = spark.read.format("lance").load(qRoot)
-      val hasIndex = graft.operators.IndexBuild.exists(spark, cRoot)
-      val result =
-        if (hasIndex) {
-          val idx = graft.operators.IndexBuild.load(spark, cRoot)
+      val result = graft.operators.IndexBuild.pinnedLatest(spark, cRoot) match {
+        case (_, Some(idx)) =>
           require(idx.opts.column == column,
             s"lance knn_join: index at $cRoot covers column ${idx.opts.column}, not $column")
           if (idx.pq.isDefined && refine > 0) {
@@ -432,11 +420,11 @@ object LanceProcedures {
             graft.operators.VectorSearch.knnJoin(spark, queries, idx, qId,
               k, metric, nprobes, excludeSelf, cIdCol = cId)
           }
-        } else {
-          val corpus = spark.read.format("lance").load(cRoot)
+        case (pinned, None) =>
+          val corpus = spark.read.format("lance").options(pinned).load(cRoot)
           graft.operators.VectorSearch.knnJoin(spark, queries, corpus,
             qId, cId, column, k, metric, cells, nprobes, excludeSelf)
-        }
+      }
       import org.apache.spark.sql.functions._
       val normalized = result.select(col("q_id").cast("long").as("q_id"),
         col("n_id").cast("long").as("n_id"), col("dist"), col("rk"))
@@ -539,28 +527,19 @@ object LanceProcedures {
       val lex = graft.operators.TextIndex.search(spark, idxRoot,
           terms.map(t => (0L, t)).toDF("query_id", "term"), k)
         .select(col("query_id"), col("doc_id"), col("rk").as("r"))
-      val pinned: Map[String, String] =
-        ManifestIO.loadLatest(vRoot, Shim.hadoopConf(spark, Map.empty))
-          .map(m => Map("versionAsOf" -> m.version.toString)).getOrElse(Map.empty)
-      val queries = Seq((0L, qvec))
-      val vec =
-        if (graft.operators.IndexBuild.exists(spark, vRoot)) {
-          val idx = graft.operators.IndexBuild.load(spark, vRoot)
-          require(idx.opts.column == vCol,
-            s"lance hybrid: index at $vRoot covers column ${idx.opts.column}, not $vCol")
-          val cents = idx.centroids.map(_.toArray)
-          val np = if (nprobes0 > 0) nprobes0 else cents.length
-          val store = spark.read.format("lance").options(pinned).load(vRoot)
-            .select(col(vIdCol).cast("long").as("vec_id"),
-              col(vCol).as("embedding"), col("cell"))
-          graft.operators.TextAnalysis.hybridVectorArmForVecs(
-            spark, store, queries, Some((cents, np)), k)
-        } else {
-          val store = spark.read.format("lance").options(pinned).load(vRoot)
-            .select(col(vIdCol).cast("long").as("vec_id"), col(vCol).as("embedding"))
-          graft.operators.TextAnalysis.hybridVectorArmForVecs(
-            spark, store, queries, None, k)
-        }
+      // ONE manifest resolution: the pinned store and the centroids its
+      // cells were assigned by come from the same version
+      val (pinned, index) = graft.operators.IndexBuild.pinnedLatest(spark, vRoot)
+      val probe = index.map { idx =>
+        require(idx.opts.column == vCol,
+          s"lance hybrid: index at $vRoot covers column ${idx.opts.column}, not $vCol")
+        (idx.centroids.map(_.toArray), if (nprobes0 > 0) nprobes0 else idx.centroids.length)
+      }
+      val store = spark.read.format("lance").options(pinned).load(vRoot)
+        .select(Seq(col(vIdCol).cast("long").as("vec_id"), col(vCol).as("embedding")) ++
+          probe.map(_ => col("cell")): _*)
+      val vec = graft.operators.TextAnalysis.hybridVectorArm(
+        spark, store, Seq((0L, qvec)), probe, k)
       val fused = graft.operators.TextAnalysis.hybridRrfFuse(lex, vec, k)
         .select("doc_id", "n_arms", "rrf", "rk")
         .collect() // k-bounded: one query, rk <= k
@@ -1223,7 +1202,7 @@ object LanceProcedures {
       require(cells >= 1, s"lance semdedup: cells must be >= 1, got $cells")
       import org.apache.spark.sql.functions.col
       val corpus = spark.read.format("lance").load(root)
-      val cents = graft.operators.Dedup.trainCentroids(spark, corpus, vecCol, cells)
+      val cents = graft.operators.VectorIndex.trainCentroids(corpus, vecCol, cells)
       val dim = cents.head.length
       val assigned = corpus.select(col(idCol).as("vec_id"),
         graft.functions.nearest_cell(col(vecCol), cents.flatten, cents.length, dim)

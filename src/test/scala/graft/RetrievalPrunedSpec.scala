@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, IndexBuild, VectorIndex, VectorSearch, TextAnalysis}
+import graft.operators.{IndexBuild, VectorIndex, VectorSearch, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
@@ -28,29 +28,25 @@ class RetrievalPrunedSpec extends SparkSpec {
     .options(IndexBuild.pinnedOptions(spark, idx)).load(idx.root)
     .select("vec_id", "embedding", "cell")
   private def idxCents: Array[Array[Double]] = idx.centroids.map(_.toArray)
+  private def probe(nprobes: Int) = Some((idxCents, nprobes))
 
   test("mmr over the index: full probes equal the brute key; partial probes prune fragments and keep recall") {
-    val exact = VectorSearch.mmrServe(
-        VectorSearch.mmrCandidatesFrom(spark, Tables.t(spark, sf, "embeddings"))
-          .localCheckpoint())
+    val exact = VectorSearch.mmrKey(spark, Tables.t(spark, sf, "embeddings"), None)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val full = VectorSearch.mmrServe(
-        VectorSearch.mmrCandidatesPruned(spark, idxStore, idxCents, nprobes = 16)
-          .localCheckpoint())
+    val full = VectorSearch.mmrKey(spark, idxStore, probe(16))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(full.toSeq === exact.toSeq, "full-probe pruned serving must be exact")
     // the approximate scale path: selected sets per query keep recall
-    val approx = VectorSearch.mmrServe(
-        VectorSearch.mmrCandidatesPruned(spark, idxStore, idxCents, nprobes = 8)
-          .localCheckpoint())
+    val approx = VectorSearch.mmrKey(spark, idxStore, probe(8))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exactSet = exact.map(r => (r._1, r._2)).toSet
     val recall = approx.intersect(exactSet).size.toDouble / exactSet.size
     info(s"mmr recall at 8/16 probes: $recall")
     assert(recall >= 0.4, s"mmr recall at 8/16 probes: $recall")
     // and the probe union actually prunes fragments at low nprobes
+    val (queries, docs) = VectorSearch.mmrWorkload(idxStore)
     val (kept, total) = fragPruned(
-      VectorSearch.mmrCandidatesPruned(spark, idxStore, idxCents, nprobes = 2))
+      VectorSearch.mmrCandidates(spark, docs, queries, probe(2)))
     assert(total > 1, s"store has $total fragment(s) — pruning unobservable")
     assert(kept < total, s"no fragment pruning: $kept/$total")
   }
@@ -59,7 +55,7 @@ class RetrievalPrunedSpec extends SparkSpec {
     val e = Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
     val n = e.count()
     val toks = VectorSearch.maxSimDocTokens(e, n)
-    val cents = Dedup.trainCentroids(spark, toks, "embedding", 16)
+    val cents = VectorIndex.trainCentroids(toks, "embedding", 16)
     val root = java.nio.file.Files
       .createTempDirectory("graft-rps-tok-").toString + "/t"
     toks.withColumn("cell", graft.functions.nearest_cell(
@@ -70,13 +66,8 @@ class RetrievalPrunedSpec extends SparkSpec {
       .save(root)
     (root, cents)
   }
-  private def qtoks: Seq[(Long, Long, Array[Float])] = {
-    val e = Tables.t(spark, sf, "embeddings")
-    val ids = VectorSearch.MaxSimQueries.flatMap(q => (0 until 3).map(j => 100 * q + j))
-    val vecs = VectorSearch.resolveVecs(e, ids)
-    VectorSearch.MaxSimQueries.flatMap(q =>
-      (0 until 3).map(j => (q, 100 * q + j, vecs(100 * q + j))))
-  }
+  private def qtoks: Seq[(Long, Long, Array[Float])] =
+    VectorSearch.maxSimQueryToks(Tables.t(spark, sf, "embeddings"))
 
   test("maxsim over the clustered token store: full probes exact; partial probes prune and keep recall") {
     val (root, cents) = tokenFixture
@@ -84,20 +75,19 @@ class RetrievalPrunedSpec extends SparkSpec {
       .select("doc_id", "embedding", "cell")
     val e = Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
     val n = e.count()
-    val exact = VectorSearch.maxSimRank(
-        VectorSearch.maxSimDocTokens(e, n), VectorSearch.maxSimQueryVecs(spark, e))
+    val exact = VectorSearch.maxSimRank(spark, VectorSearch.maxSimDocTokens(e, n), qtoks, None)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    val full = VectorSearch.maxSimRankPruned(spark, store, qtoks, cents, nprobes = 16)
+    val full = VectorSearch.maxSimRank(spark, store, qtoks, Some((cents, 16)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(full.toSeq === exact.toSeq, "full-probe pruned serving must be exact")
-    val approx = VectorSearch.maxSimRankPruned(spark, store, qtoks, cents, nprobes = 8)
+    val approx = VectorSearch.maxSimRank(spark, store, qtoks, Some((cents, 8)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exactSet = exact.map(r => (r._1, r._2)).toSet
     val recall = approx.intersect(exactSet).size.toDouble / exactSet.size
     info(s"maxsim recall at 8/16 probes: $recall")
     assert(recall >= 0.4, s"maxsim recall at 8/16 probes: $recall")
     val (kept, total) = fragPruned(
-      VectorSearch.maxSimRankPruned(spark, store, qtoks, cents, nprobes = 1))
+      VectorSearch.maxSimRank(spark, store, qtoks, Some((cents, 1))))
     assert(total > 1, s"token store has $total fragment(s)")
     assert(kept < total, s"no fragment pruning: $kept/$total")
   }
@@ -113,22 +103,36 @@ class RetrievalPrunedSpec extends SparkSpec {
   }
 
   test("hybrid vector arm over the index: full probes exact; partial probes prune and keep recall") {
-    val exact = TextAnalysis.hybridVectorArm(spark,
-        Tables.t(spark, sf, "embeddings").select("vec_id", "embedding"))
+    val e = Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
+    val queries = TextAnalysis.hybridQueries(e)
+    val exact = TextAnalysis.hybridVectorArm(spark, e, queries, None)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val full = TextAnalysis.hybridVectorArmPruned(spark, idxStore, idxCents, nprobes = 16)
+    val full = TextAnalysis.hybridVectorArm(spark, idxStore, queries, probe(16))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(full.toSeq === exact.toSeq, "full-probe pruned serving must be exact")
-    val approx = TextAnalysis.hybridVectorArmPruned(spark, idxStore, idxCents, nprobes = 8)
+    val approx = TextAnalysis.hybridVectorArm(spark, idxStore, queries, probe(8))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exactSet = exact.map(r => (r._1, r._2)).toSet
     val recall = approx.intersect(exactSet).size.toDouble / exactSet.size
     info(s"hybrid vector-arm recall at 8/16 probes: $recall")
     assert(recall >= 0.4, s"hybrid vector-arm recall at 8/16 probes: $recall")
     val (kept, total) = fragPruned(
-      TextAnalysis.hybridVectorArmPruned(spark, idxStore, idxCents, nprobes = 2))
+      TextAnalysis.hybridVectorArm(spark, idxStore, queries, probe(2)))
     assert(total > 1, s"store has $total fragment(s)")
     assert(kept < total, s"no fragment pruning: $kept/$total")
+  }
+
+  test("one probed slice: cell-IN probes appear only in probedSlice and IndexBuild.searchPlan") {
+    // every served retrieval reads its candidates through one probed
+    // slice and every index search through one probed base; a second
+    // `cell IN` site or a *Pruned / *ForVecs twin forks the family again
+    val probes = OperatorSources.sites("col(\"cell\").isin(").map(s => (s._1, s._2))
+    assert(probes.toSet === Set(("VectorSearch.scala", "probedSlice"),
+      ("IndexBuild.scala", "searchPlan")), probes.mkString("\n"))
+    val twin = """\bdef \w+(Pruned|ForVecs)\b""".r.unanchored
+    val twins = OperatorSources.sites("src/main/scala/graft/operators",
+      line => twin.findFirstIn(line).isDefined)
+    assert(twins.isEmpty, twins.mkString("\n"))
   }
 
   test("partial-probe gated keys (_p8): the benched production configs hold the recall floor") {
@@ -157,5 +161,38 @@ class RetrievalPrunedSpec extends SparkSpec {
     val rHy = hyP8.intersect(hyExact).size.toDouble / hyExact.size
     info(s"q_stream_hybrid_pruned_p8 recall: $rHy")
     assert(rHy >= 0.4, s"hybrid _p8 recall $rHy below floor")
+  }
+
+  test("fixture memo: every fixture root is reaped at exit, and a deleted root is rebuilt") {
+    import graft.operators.{Dedup, FixtureMemo, Multimodal, TextIndex}
+    val roots = Map(
+      "semidx" -> Dedup.trainedSemIndex(spark, sf).root,
+      "tokstore" -> VectorSearch.persistedTokenStore(spark, sf)._1,
+      "textidx" -> TextIndex.indexFor(spark, sf),
+      "gvid" -> Multimodal.videoFixture(spark, sf),
+      "aud" -> Multimodal.audioFixture(spark, sf),
+      "img" -> Multimodal.imageFixture(spark, sf))
+    for ((name, root) <- roots)
+      assert(FixtureMemo.reaps(root), s"$name root $root is not deleted at exit")
+    assert(!FixtureMemo.reaps(sf))
+    // the memo: one build per (session, dir); a root deleted under it is
+    // evicted on the next access and built again in a fresh temp dir
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val memo = new FixtureMemo[String]("spec", identity)
+    def fixture(): String = memo(spark, sf) { tmp =>
+      builds.incrementAndGet()
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp, "t")).toString
+    }
+    val first = fixture()
+    assert(fixture() === first)
+    assert(builds.get === 1)
+    assert(FixtureMemo.reaps(first))
+    val dir = java.nio.file.Paths.get(first)
+    java.nio.file.Files.delete(dir)
+    val second = fixture()
+    assert(builds.get === 2)
+    assert(second !== first)
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(second)))
+    assert(FixtureMemo.reaps(second))
   }
 }

@@ -1319,7 +1319,8 @@ class VectorIndexSpec extends SparkSpec {
     // materializes its N×|queries| output before the pair fan-out, which
     // truncates the final plan's lineage): query vecs broadcast, top-N as
     // a pre-shuffle k-heap
-    val plan = VectorSearch.mmrCandidates(spark, sf)
+    val (queries, docs) = VectorSearch.mmrWorkload(Tables.t(spark, sf, "embeddings"))
+    val plan = VectorSearch.mmrCandidates(spark, docs, queries, None)
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"),
       s"mmr candidate top-N not a k-heap:\n$plan")
@@ -1390,7 +1391,7 @@ class VectorIndexSpec extends SparkSpec {
   test("CALL system.knn mode => 'mmr': equals the gated key at full probes, serves pruned at partial") {
     // VERDICT r19 item 1: the pruned serving machinery, SQL-reachable.
     // The CALL routes through the SAME entry points as the gated keys
-    // (mmrCandidatesForVecs -> probedSlice -> mmrServe), so at full
+    // (mmrCandidates -> probedSlice -> mmrServe), so at full
     // probes over an indexed store it must equal knn_mmr (== the
     // knn_mmr_indexed full-probe answer) ROW-FOR-ROW per query; the
     // fragment-prune plan assert for partial probes lives in
@@ -1435,7 +1436,7 @@ class VectorIndexSpec extends SparkSpec {
     // Same posture for late-interaction retrieval: query_toks carries the
     // token SET, the table is the (doc_id, embedding) token store
     // cell-clustered by its index, and the CALL routes through
-    // maxSimRankPruned — full probes == the gated knn_maxsim answer.
+    // maxSimRank's probed slice — full probes == the gated knn_maxsim answer.
     import graft.operators.{IndexBuild, VectorSearch}
     spark.conf.set("spark.sql.catalog.lance_msp",
       classOf[graft.sources.lance.LanceCatalog].getName)

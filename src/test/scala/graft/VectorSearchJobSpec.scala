@@ -243,4 +243,38 @@ class VectorSearchJobSpec extends SparkSpec {
     val first = ManifestIO.load(root, ManifestIO.listVersions(root, conf).head, conf)
     assert(IndexBuild.loadAt(spark, root, Some(first)).get.epoch === built.epoch)
   }
+
+  test("a warm CALL system.hybrid resolves the vector table's manifest once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.pathlogfs.impl", classOf[PathLogFs].getName)
+    spark.conf.set("spark.sql.catalog.lance_hlog", classOf[graft.sources.lance.LanceCatalog].getName)
+    val local = java.nio.file.Files.createTempDirectory("graft-vsj-hlog-").toString
+    spark.conf.set("spark.sql.catalog.lance_hlog.warehouse", s"pathlogfs://$local")
+    spark.sql("CREATE NAMESPACE lance_hlog.db")
+    Tables.t(spark, sf, "documents").select("doc_id", "text")
+      .write.format("lance").save(s"pathlogfs://$local/db/docs")
+    val vRoot = s"pathlogfs://$local/db/vecs"
+    val built = IndexBuild.build(spark, emb, vRoot, Map("index.type" -> "IVF_FLAT",
+      "index.num-partitions" -> Cells.toString))
+    IndexBuild.rebuild(spark, built)
+    val conf = org.apache.spark.sql.graft.Shim.hadoopConf(spark, Map.empty)
+    val latest = ManifestIO.loadLatest(vRoot, conf).get
+    val call = "CALL lance_hlog.system.hybrid(table => 'db.docs', vector_table => 'db.vecs', " +
+      s"terms => 'data model', query_vec => array(${qv.map(d => s"${d}D").mkString(", ")}), " +
+      s"k => 5, nprobes => 4)"
+    val warm = spark.sql(call).collect() // warm: builds the text index, parses the sidecar
+    PathLogFs.reset()
+    assert(spark.sql(call).collect().toSeq === warm.toSeq)
+    val log = PathLogFs.entries.filter(_._2.contains("/db/vecs/"))
+    val listings = log.count { case (op, p) => op == "listStatus" && p.endsWith("/_versions") }
+    val manifests = log.collect {
+      case ("open", p) if p.endsWith(".manifest.json") => p.split('/').last
+    }
+    // one listing is the catalog's table-exists check on vector_table, one
+    // is the call's single manifest resolution; the pinned store read
+    // lists nothing, and the manifest is read once by the call and once by
+    // the pinned reader, always at the pinned version
+    assert(listings === 2, log.mkString("\n"))
+    assert(manifests === Seq.fill(2)(f"${latest.version}%020d.manifest.json"), log.mkString("\n"))
+    assert(!log.exists(_._2.contains("/_index/")), log.mkString("\n"))
+  }
 }
