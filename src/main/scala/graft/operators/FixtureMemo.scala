@@ -27,7 +27,7 @@ private[graft] final class FixtureMemo[T](prefix: String, rootOf: T => String) {
 private[graft] object FixtureMemo {
   // a long-lived JVM (test forks, a notebook reusing the classloader) runs
   // many sessions — without cleanup each would leak its fixtures on disk
-  // forever; one shutdown hook deletes every dir the memos created
+  // forever; one shutdown hook deletes every dir `tempDir` created
   private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     dirs.forEach { d =>
@@ -41,13 +41,15 @@ private[graft] object FixtureMemo {
       })
     }, "graft-fixture-reaper"))
 
-  private def tempDir(prefix: String): String = {
+  /** A fresh local temp dir `graft-<prefix>-*`, deleted at JVM exit: the
+    * one way graft's fixtures and temp tables make a temp root. */
+  private[graft] def tempDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-$prefix-")
     dirs.add(d)
     d.toString
   }
 
-  /** Is `path` inside a temp dir some memo created (and so deleted at JVM
+  /** Is `path` inside a temp dir `tempDir` created (and so deleted at JVM
     * exit)? */
   private[graft] def reaps(path: String): Boolean = {
     val p = java.nio.file.Paths.get(path)

@@ -99,16 +99,27 @@ object IndexBuild {
     }
   }
 
-  /** One manifest resolution for a vector CALL: the read options pinning
-    * the latest version and the index handle that version's sidecar
-    * pointer names (None on a plain table). Every read of the call uses
-    * the options, so a rebuild committed mid-call cannot pair this
-    * version's `cell` column with newer centroids. */
-  private[graft] def pinnedLatest(s: SparkSession,
-                                  root: String): (Map[String, String], Option[BuiltIndex]) = {
-    val m = latestManifest(s, root)
-    (m.map(v => Map("versionAsOf" -> v.version.toString)).getOrElse(Map.empty),
-      loadAt(s, root, m))
+  /** One manifest resolution of a vector CALL's table: `table` carries
+    * the latest manifest, read once, and `index` is the handle that
+    * manifest's sidecar pointer names (None on a plain table). Every read
+    * of the call goes through [[read]], so a rebuild committed mid-call
+    * cannot pair this version's `cell` column with newer centroids. */
+  private[graft] final case class Pinned(table: graft.sources.lance.LanceTable,
+                                         index: Option[BuiltIndex]) {
+    def root: String = table.root
+
+    /** The table at this version, planned from the parsed manifest: no
+      * data-source lookup, no `_versions` listing, no manifest read. */
+    def read(s: SparkSession): DataFrame = org.apache.spark.sql.graft.Shim.readTable(s, table)
+  }
+
+  /** The latest version of `root` as a [[Pinned]] (None when `root` holds
+    * no table): one `_versions` listing and one manifest read, through a
+    * table whose Hadoop conf carries `fsOptions`. */
+  private[graft] def pinnedLatest(s: SparkSession, root: String,
+                                  fsOptions: Map[String, String] = Map.empty): Option[Pinned] = {
+    val table = new graft.sources.lance.LanceTable(root, fsOptions)
+    table.manifest.map(m => Pinned(table, loadAt(s, root, Some(m))))
   }
 
   /** Does `root` carry a persisted index? Its manifest's sidecar pointer
@@ -260,16 +271,25 @@ object IndexBuild {
 
   /** The k ranked (id, dist) rows of [[search]] and their schema, as the
     * driver holds them after the one job (`CALL system.knn` returns them
-    * as they are). */
+    * as they are). The job is [[VectorIndex.collectTop]]'s: the ranked
+    * plan's top-k node run as one `runJob` with one small cleaned closure,
+    * its InternalRows handed to the refine with no Row conversion. `from`
+    * is the rows to search, a CALL's pinned read; by default `idx.root`
+    * read with `options`. */
   private[graft] def searchRows(s: SparkSession, idx: BuiltIndex, queryVec: Array[Double],
                                 options: Map[String, String], excludeVecId: Long = -1L,
                                 idCol: String = "vec_id",
-                                pred: Option[org.apache.spark.sql.Column] = None)
+                                pred: Option[org.apache.spark.sql.Column] = None,
+                                from: Option[DataFrame] = None)
       : (StructType, Array[Row]) = {
     val so = LanceVectorOptions.search(options)
-    val top = searchPlan(s, idx, queryVec, options, excludeVecId, idCol, pred)
+    val top = searchPlan(s, idx, queryVec, options, excludeVecId, idCol, pred, from)
     if (refines(idx, so)) VectorIndex.refineRows(top, queryVec, so.k, idCol, idx.opts.column)
-    else (top.schema, VectorIndex.collectTop(top, "dist"))
+    else {
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(top.schema)
+      (top.schema, VectorIndex.collectTop(top, "dist").map(toRow(_).asInstanceOf[Row]))
+    }
   }
 
   /** Only the quantized arms re-rank; a flat index's distances are exact. */
@@ -277,13 +297,15 @@ object IndexBuild {
     so.refineFactor.isDefined && (idx.pq.isDefined || idx.sq.isDefined)
 
   /** The one Spark plan [[search]] collects: the probed-cell scan ranked
-    * by its scorer with nulls last ([[VectorIndex.rankTop]]). The flat arm
-    * and the ADC-only arms keep k (id, dist) rows; a refine search keeps
-    * k·r (id, vector, adc_dist) candidates. */
+    * by its scorer with nulls last ([[VectorIndex.rankTop]]), whose
+    * executed root is a `TakeOrderedAndProject`. The flat arm and the
+    * ADC-only arms keep k (id, dist) rows; a refine search keeps k·r (id,
+    * vector, adc_dist) candidates. */
   private[graft] def searchPlan(s: SparkSession, idx: BuiltIndex, queryVec: Array[Double],
                                 options: Map[String, String], excludeVecId: Long = -1L,
                                 idCol: String = "vec_id",
-                                pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+                                pred: Option[org.apache.spark.sql.Column] = None,
+                                from: Option[DataFrame] = None): DataFrame = {
     val so = LanceVectorOptions.search(options)
     val probed = idx.graph match {
       case Some(g) => g.probe(queryVec, so.nprobes, so.ef)
@@ -294,11 +316,11 @@ object IndexBuild {
     // reference object in the generated code), so the code is the same for
     // every query and no broadcast join is planned. Lazy: a bad metric
     // fails before any read.
-    lazy val base = {
-      val base0 = s.read.format("lance").options(options).load(idx.root)
-        .filter(col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId)
-      pred.map(base0.filter).getOrElse(base0)
-    }
+    lazy val base = from.getOrElse(s.read.format("lance").options(options).load(idx.root))
+    val probedRows = (col("cell").isin(probed.toIndexedSeq: _*) && col(idCol) =!= excludeVecId) +:
+      pred.toSeq
+    def ranked(cols: Seq[org.apache.spark.sql.Column], by: String, asc: Boolean, n: Int) =
+      VectorIndex.rankTop(base, probedRows, cols, by, asc, n, idCol)
     // the quantized arms share one ADC scan; only the scorer differs (PQ
     // LUT lookups vs SQ dequantized subtraction)
     def adcTop(adc: org.apache.spark.sql.Column): DataFrame = {
@@ -309,18 +331,16 @@ object IndexBuild {
         s"lance index search: the quantized (ADC) path reconstructs L2; " +
           s"metric '${so.metric}' needs an IVF_FLAT/IVF_HNSW index")
       if (refines(idx, so))
-        VectorIndex.rankTop(base.select(col(idCol), col(idx.opts.column), adc.as("adc_dist")),
-          "adc_dist", asc = true, so.k * so.refineFactor.get, idCol)
+        ranked(Seq(col(idCol), col(idx.opts.column), adc.as("adc_dist")),
+          "adc_dist", asc = true, so.k * so.refineFactor.get)
       else
-        VectorIndex.rankTop(base.select(col(idCol), round(adc, 6).as("dist")),
-          "dist", asc = true, so.k, idCol)
+        ranked(Seq(col(idCol), round(adc, 6).as("dist")), "dist", asc = true, so.k)
     }
     (idx.pq, idx.sq) match {
       case (None, None) =>
         val (score, asc) = graft.functions.vec_score(so.metric,
           col(idx.opts.column), typedLit(queryVec.map(_.toFloat)), "lance index search")
-        VectorIndex.rankTop(base.select(col(idCol), round(score, 6).as("dist")),
-          "dist", asc, so.k, idCol)
+        ranked(Seq(col(idCol), round(score, 6).as("dist")), "dist", asc, so.k)
       case (Some(p), _) =>
         val lut = new Array[Double](p.m * p.codes)
         for (mm <- 0 until p.m; c <- 0 until p.codes) {

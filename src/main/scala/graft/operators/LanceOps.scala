@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import java.nio.file.Files
 import java.util.UUID
 
 /** Driver-contract queries for the lance-style connector (§A of the
@@ -17,8 +16,7 @@ import java.util.UUID
 object LanceOps extends QueryModule {
   import Tables._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(s"graft-$prefix-").toString
+  private def tmp(prefix: String): String = FixtureMemo.tempDir(prefix)
 
   private def read(s: SparkSession, root: String): DataFrame =
     s.read.format("lance").load(root)

@@ -24,8 +24,7 @@ import java.sql.Timestamp
 object StreamingOps extends QueryModule {
   import Tables._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(s"graft-$prefix-").toString
+  private def tmp(prefix: String): String = FixtureMemo.tempDir(prefix)
 
   /** Whether the lance table at `path` exists (has a committed manifest),
     * routed through the path's FileSystem — NOT `java.io.File`, which is
@@ -643,12 +642,8 @@ object StreamingOps extends QueryModule {
     * single-threaded, so the restore keeps sections properly nested.
     * Costs nothing; makes the UI (and `Bench profile`) attribute per-batch
     * wall to band/probe/verify/append instead of one opaque start(). */
-  private def labeled[T](s: SparkSession, d: String)(body: => T): T = {
-    val sc = s.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(d)
-    try body finally sc.setJobDescription(prev)
-  }
+  private def labeled[T](s: SparkSession, d: String)(body: => T): T =
+    org.apache.spark.sql.graft.Jobs.described(s.sparkContext, d)(body)
 
   /** A micro-batch frame that the batch body consumes several times,
     * checkpointed LAZILY: the body's first job (the key cover) computes it
@@ -660,22 +655,11 @@ object StreamingOps extends QueryModule {
     * frame under it: the bucket ids `pmod(murmur3(c), n)` of the values of
     * every column `c` of `cols` — the bucketed write's own bucket function,
     * so they are the buckets those values live in. Each partition sends at
-    * most `n` ids to the driver. */
-  private def bucketCover(df: DataFrame, cols: Seq[String], n: Int): Seq[Int] = {
-    val k = cols.size
-    val ids = org.apache.spark.sql.graft.Shim.toRdd(
-      df.select(cols.map(c => pmod(hash(col(c)), lit(n))): _*)).mapPartitions { rows =>
-      val buckets = new java.util.BitSet(n)
-      rows.foreach { r =>
-        var i = 0
-        while (i < k) { buckets.set(r.getInt(i)); i += 1 }
-      }
-      Iterator.single(buckets.toLongArray)
-    }.collect()
-    val cover = new java.util.BitSet(n)
-    ids.foreach(p => cover.or(java.util.BitSet.valueOf(p)))
-    cover.stream().toArray.toSeq
-  }
+    * most `n` ids to the driver. The job runs through `Jobs.cover`, so
+    * Spark cleans one closure, declared in a small class. */
+  private def bucketCover(df: DataFrame, cols: Seq[String], n: Int): Seq[Int] =
+    org.apache.spark.sql.graft.Jobs.cover(org.apache.spark.sql.graft.Shim.toRdd(
+      df.select(cols.map(c => pmod(hash(col(c)), lit(n))): _*)), n)
 
   /** The shared streaming near-dedup micro-batch body — ONE implementation
     * of the guard → bucket-cover probe → capped candidates → verify →

@@ -4,10 +4,10 @@ import graft.{QueryModule, Tables}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Jobs
 import org.apache.spark.sql.types.StructType
-
-import java.nio.file.Files
 
 /** The IVF training kernels, the top-k ranking helpers and the `ivf_*` keys
   * (reference: LanceIndexBuilder.java:116-141 — IVF_FLAT num-partitions,
@@ -167,40 +167,45 @@ object VectorIndex extends QueryModule {
       .sortBy { case (i, d) => (d, i) }
       .take(nprobes).map(_._1)
 
-  /** Rank `scored` by (`by`, id) and keep `n` rows, nulls LAST. Null
-    * scores come from malformed rows (ragged dims, a null element). They
-    * are not filtered before the sort: Spark pushes an `IS NOT NULL` on
-    * the alias below the projection, which evaluates the distance kernel
-    * twice per row. A null can reach the `n` rows only when fewer than `n`
-    * rows score, so dropping nulls after the limit ([[collectTop]]) keeps
-    * the same scored rows. */
-  private[operators] def rankTop(scored: DataFrame, by: String, asc: Boolean, n: Int,
-                                 idCol: String): DataFrame =
-    scored.orderBy(if (asc) col(by).asc_nulls_last else col(by).desc_nulls_last,
-      col(idCol).asc).limit(n)
+  /** `base` filtered by each of `filters`, projected to `cols`, ranked by
+    * (`by`, id) with nulls LAST, keeping `n` rows: the plan of
+    * `base.filter(…).select(cols: _*).orderBy(…).limit(n)`, analysed once
+    * (`Shim.filterSelectTop`). Null scores come from malformed rows (ragged
+    * dims, a null element). They are not filtered before the sort: Spark
+    * pushes an `IS NOT NULL` on the alias below the projection, which
+    * evaluates the distance kernel twice per row. A null can reach the `n`
+    * rows only when fewer than `n` rows score, so dropping nulls after the
+    * limit ([[collectTop]]) keeps the same scored rows. */
+  private[operators] def rankTop(base: DataFrame, filters: Seq[Column], cols: Seq[Column],
+                                 by: String, asc: Boolean, n: Int, idCol: String): DataFrame =
+    org.apache.spark.sql.graft.Shim.filterSelectTop(base, filters, cols,
+      Seq(if (asc) col(by).asc_nulls_last else col(by).desc_nulls_last, col(idCol).asc), n)
 
-  /** Collect a [[rankTop]] plan in ONE Spark job: `TakeOrderedAndProject`
-    * at the plan root keeps a k-heap per partition and merges at most
-    * tasks·n rows on the driver, with no shuffle and no second stage.
-    * Rows with a null `by` score are dropped. */
-  private[operators] def collectTop(top: DataFrame, by: String): Array[Row] = {
+  /** Collect a [[rankTop]] plan in ONE Spark job, labelled
+    * `graft:knn:rank`: the executed plan's root `TakeOrderedAndProject`
+    * runs its child through `Jobs.takeOrdered` (a bounded heap per
+    * partition, at most tasks·n rows merged on the driver, no shuffle, no
+    * second stage; the only closure Spark cleans is `Jobs`' own). Any
+    * other plan root fails. Rows with a null `by` score are dropped. The
+    * rows stay InternalRows, in the plan's output layout. */
+  private[operators] def collectTop(top: DataFrame, by: String): Array[InternalRow] = {
     val i = top.schema.fieldIndex(by)
-    top.collect().filterNot(_.isNullAt(i))
+    Jobs.takeOrdered(top.queryExecution, "graft:knn:rank").filterNot(_.isNullAt(i))
   }
 
   /** The exact re-rank behind every refine search (`IndexBuild.search`'s
     * quantized arms). `top` is a [[rankTop]] plan of (id, vector,
     * `adc_dist`) limited to k·r candidates; it is collected in one job
-    * ([[collectTop]]). The candidates are then scored on the driver with
-    * the same `round(vec_l2(vector, query), 6)` Catalyst expression the
-    * distributed plan used. Interpreted eval runs the same double
-    * arithmetic as the generated code, so distances are bit-identical. The
-    * k rows are kept by (dist ASC NULLS FIRST, id ASC), Spark's default
-    * ordering. Driver work is O(tasks·k·r) rows. Returns the k (id, dist)
-    * rows and their schema. */
+    * ([[collectTop]]), and its InternalRows are scored on the driver as
+    * they are, with the same `round(vec_l2(vector, query), 6)` Catalyst
+    * expression the distributed plan used. Interpreted eval runs the same
+    * double arithmetic as the generated code, so distances are
+    * bit-identical. The k rows are kept by (dist ASC NULLS FIRST, id ASC),
+    * Spark's default ordering. Driver work is O(tasks·k·r) rows. Returns
+    * the k (id, dist) rows and their schema. */
   private[operators] def refineRows(top: DataFrame, qv: Array[Double], k: Int,
                                     idCol: String, vecCol: String): (StructType, Array[Row]) = {
-    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
       InterpretedOrdering, Literal, Round, SortOrder}
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
@@ -211,11 +216,9 @@ object VectorIndex extends QueryModule {
       Literal.create(qv.map(_.toFloat), ArrayType(FloatType, containsNull = false)), "l2"),
       Literal(6))
     val out = StructType(Seq(idF, StructField("dist", DoubleType, nullable = true)))
-    val toId = CatalystTypeConverters.createToCatalystConverter(idF.dataType)
-    val toVec = CatalystTypeConverters.createToCatalystConverter(vecF.dataType)
     val (iId, iVec) = (top.schema.fieldIndex(idCol), top.schema.fieldIndex(vecCol))
     val scored = collectTop(top, "adc_dist").map { r =>
-      InternalRow(toId(r.get(iId)), dist.eval(InternalRow(toVec(r.get(iVec)))))
+      InternalRow(r.get(iId, idF.dataType), dist.eval(InternalRow(r.getArray(iVec))))
     }
     val byDistThenId = new InterpretedOrdering(Seq(
       SortOrder(BoundReference(1, DoubleType, nullable = true), Ascending),
@@ -284,7 +287,7 @@ object VectorIndex extends QueryModule {
   /** Build `key`'s index over `embeddings` in a fresh directory. */
   def buildKey(s: SparkSession, dir: String, key: IvfKey): IndexBuild.BuiltIndex = {
     val e = t(s, dir, "embeddings")
-    val root = Files.createTempDirectory("graft-ivf-").toString
+    val root = FixtureMemo.tempDir("ivf")
     key.appended match {
       case None => IndexBuild.build(s, e, root, key.index)
       case Some(rest) =>

@@ -395,7 +395,7 @@ object VectorSearch extends QueryModule {
     * DuckDB exact-KNN oracle as knn_join). */
   private def knnJoinPqQuery(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val root = java.nio.file.Files.createTempDirectory("graft-knnjoin-pq-").toString
+    val root = FixtureMemo.tempDir("knnjoin-pq")
     // 8-bit codebooks: near-uniform synthetic embeddings are PQ's worst
     // case (distances concentrate), so the gate uses full-resolution
     // codebooks + a generous refine to keep the true top-k inside the

@@ -44,23 +44,34 @@ class LanceCatalog extends TableCatalog with SupportsNamespaces
     if (ident.namespace.isEmpty && ident.name == "bucket") LanceBucketFunction
     else throw new org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException(ident)
 
-  /** Resolve a procedure's `table => 'db.t'` argument to the dataset root. */
-  private[lance] def tableRootFor(table: String): String = {
+  /** A procedure's `table => 'db.t'` argument as an identifier and its
+    * dataset root, unchecked. */
+  private def procedureTable(table: String): (Identifier, String) = {
     val parts = table.split('.')
     require(parts.nonEmpty && parts.forall(_.nonEmpty), s"bad table name: $table")
     val ident = Identifier.of(parts.init, parts.last)
-    val p = tablePath(ident)
-    if (!ManifestIO.exists(p.toString, conf))
+    (ident, tablePath(ident).toString)
+  }
+
+  /** Resolve a procedure's `table => 'db.t'` argument to the dataset root. */
+  private[lance] def tableRootFor(table: String): String = {
+    val (ident, root) = procedureTable(table)
+    if (!ManifestIO.exists(root, conf))
       throw new NoSuchTableException(ident)
-    p.toString
+    root
   }
 
   /** Same resolution WITHOUT the existence check — for procedure output
     * tables that are about to be created (e.g. knn_join's output_table). */
-  private[lance] def tableRootForCreate(table: String): String = {
-    val parts = table.split('.')
-    require(parts.nonEmpty && parts.forall(_.nonEmpty), s"bad table name: $table")
-    tablePath(Identifier.of(parts.init, parts.last)).toString
+  private[lance] def tableRootForCreate(table: String): String = procedureTable(table)._2
+
+  /** A vector procedure's table at its latest version, resolved once: the
+    * one `_versions` listing that finds the latest manifest is also the
+    * existence check. */
+  private[lance] def pinnedTable(table: String): graft.operators.IndexBuild.Pinned = {
+    val (ident, root) = procedureTable(table)
+    graft.operators.IndexBuild.pinnedLatest(SparkSession.active, root, fsOptions)
+      .getOrElse(throw new NoSuchTableException(ident))
   }
 
   private var catalogName: String = _

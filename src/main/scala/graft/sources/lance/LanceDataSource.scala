@@ -110,7 +110,9 @@ class LanceTable(val root: String, extraOptions: Map[String, String],
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
   private def spark = SparkSession.active
-  private def conf = Shim.hadoopConf(spark, extraOptions)
+  /** Built once: the manifest reads, the scan builder and its scan share
+    * it. */
+  private lazy val conf = Shim.hadoopConf(spark, extraOptions)
 
   /** Manifest pinned at table resolution: versionAsOf / timestampAsOf
     * option, else latest. */
@@ -182,7 +184,9 @@ class LanceTable(val root: String, extraOptions: Map[String, String],
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val m = manifest.getOrElse(
       throw new IllegalStateException(s"lance dataset not found: $root"))
-    new LanceScanBuilder(spark, root, m, extraOptions ++ options.asScala.toMap)
+    val merged = extraOptions ++ options.asScala.toMap
+    new LanceScanBuilder(spark, root, m, merged,
+      if (merged == extraOptions) conf else Shim.hadoopConf(spark, merged))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =

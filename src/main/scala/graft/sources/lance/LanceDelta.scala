@@ -109,7 +109,7 @@ class LanceDeltaScanBuilder(spark: SparkSession, root: String,
     }
     op.scanSnapshot = affected.map(fr => fr.path -> fr.deletes.map(_.path)).toMap
     new LanceParquetScan(spark, root, manifest, affected, required, Seq.empty,
-      None, options)
+      None, options, Shim.hadoopConf(spark, options))
   }
 }
 

@@ -76,6 +76,12 @@ object LanceProcedures {
   private def bound(procName: String, catalog: LanceCatalog,
                     params: Array[ProcedureParameter])
                    (run: (String, InternalRow) => (StructType, Seq[Array[Any]])): UnboundProcedure =
+    boundOn(procName, params, catalog.tableRootFor)(run)
+
+  /** [[bound]] with the `table` argument resolved by `resolve`. */
+  private def boundOn[A](procName: String, params: Array[ProcedureParameter],
+                         resolve: String => A)
+                        (run: (A, InternalRow) => (StructType, Seq[Array[Any]])): UnboundProcedure =
     new UnboundProcedure {
       override def name(): String = procName
       override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
@@ -83,9 +89,7 @@ object LanceProcedures {
         override def parameters(): Array[ProcedureParameter] = params
         override def isDeterministic: Boolean = false // reads/commits manifests
         override def call(input: InternalRow): java.util.Iterator[Scan] = {
-          val table = input.getUTF8String(0).toString
-          val root = catalog.tableRootFor(table)
-          val (schema, resultRows) = run(root, input)
+          val (schema, resultRows) = run(resolve(input.getUTF8String(0).toString), input)
           // procedure output must be a LocalScan (driver-side rows)
           val scan: Scan = new org.apache.spark.sql.connector.read.LocalScan {
             override def rows(): Array[InternalRow] =
@@ -150,12 +154,15 @@ object LanceProcedures {
     * searches through [[graft.operators.IndexBuild.searchRows]]: an eager,
     * probe-pruned fragment scan run as one Spark job with no shuffle, whose
     * driver merges O(tasks·k) rows, or O(tasks·k·r) refine candidates on a
-    * PQ/SQ index that it then re-ranks exactly. A plain table falls back
-    * to brute-force exact KNN (codegen'd distance + TakeOrderedAndProject —
-    * a per-partition k-heap with a k-sized driver merge, never a global
-    * sort). Both return k (id, dist) rows — driver-side result size is k.
-    * Each call resolves the table's manifest once: every read pins to that
-    * version and the index handle comes from that manifest's sidecar
+    * PQ/SQ index that it then re-ranks exactly. The job is one `runJob`
+    * labelled `graft:knn:rank` with one small cleaned closure. A plain
+    * table falls back to brute-force exact KNN (codegen'd distance +
+    * TakeOrderedAndProject — a per-partition k-heap with a k-sized driver
+    * merge, never a global sort). Both return k (id, dist) rows —
+    * driver-side result size is k. Each call resolves the table once
+    * ([[LanceCatalog.pinnedTable]]): one `_versions` listing, which is also
+    * the existence check, and one manifest read. Every read plans from
+    * that parsed manifest and the index handle comes from its sidecar
     * pointer.
     *
     * r20 serving modes: `mode => 'mmr'` re-ranks a `candidates => N`
@@ -167,7 +174,7 @@ object LanceProcedures {
     * exact brute-force answers at full probes — gated end to end by
     * knn_mmr_sql / knn_maxsim_sql's full oracles. */
   private def knn(catalog: LanceCatalog): UnboundProcedure =
-    bound("knn", catalog, Array(
+    boundOn("knn", Array(
       param("table", StringType),
       // optional since r20: mode => 'maxsim' takes its vectors via
       // query_toks; topk/mmr still require a non-empty query
@@ -184,8 +191,9 @@ object LanceProcedures {
       param("mode", StringType, Some("'topk'")),
       param("candidates", IntegerType, Some("40")),
       param("query_toks", ArrayType(ArrayType(DoubleType)),
-        Some("CAST(array() AS ARRAY<ARRAY<DOUBLE>>)")))) { (root, in) =>
+        Some("CAST(array() AS ARRAY<ARRAY<DOUBLE>>)"))), catalog.pinnedTable) { (pinned, in) =>
       val spark = SparkSession.active
+      val root = pinned.root
       val qv = in.getArray(1).toDoubleArray()
       val column = in.getUTF8String(2).toString
       val k = in.getInt(3)
@@ -201,13 +209,14 @@ object LanceProcedures {
           .map(org.apache.spark.sql.functions.expr)
       import org.apache.spark.sql.functions._
       val mode = in.getUTF8String(11).toString.toLowerCase(java.util.Locale.ROOT)
-      // resolve the manifest ONCE and pin EVERY read of this call to it: the
-      // ranked search and the matched-row lookup below are two separate
-      // reads, and a concurrent commit between them would return columns
-      // from a different snapshot than the distances. The index handle is
-      // the sidecar that same manifest points at, so a rebuild committed
-      // mid-call cannot pair this version's codes with newer codebooks.
-      val (pinned, index) = graft.operators.IndexBuild.pinnedLatest(spark, root)
+      // the manifest was resolved ONCE and EVERY read of this call plans
+      // from it: the ranked search and the matched-row lookup below are two
+      // separate reads, and a concurrent commit between them would return
+      // columns from a different snapshot than the distances. The index
+      // handle is the sidecar that same manifest points at, so a rebuild
+      // committed mid-call cannot pair this version's codes with newer
+      // codebooks.
+      val index = pinned.index
       val hasIndex = index.isDefined
       lazy val idx = {
         val i = index.get
@@ -226,7 +235,7 @@ object LanceProcedures {
       def modalStore(dId: String): org.apache.spark.sql.DataFrame = {
         // pre-filter with the USER's column names, then rename to the
         // machinery's (vec_id/doc_id, embedding[, cell])
-        val base = spark.read.format("lance").options(pinned).load(root)
+        val base = pinned.read(spark)
         val f = pred.map(base.filter).getOrElse(base)
         if (hasIndex)
           f.select(col(idCol).cast("long").as(dId),
@@ -266,17 +275,17 @@ object LanceProcedures {
         case "topk" =>
         require(qv.nonEmpty, "lance knn: query => array(...) is required")
         if (hasIndex) {
-          val opts = pinned ++
+          val opts =
             Map("vector.k" -> k.toString, "vector.metric" -> metric,
               "vector.nprobes" -> nprobes.toString, "vector.ef" -> ef.toString) ++
             (if (refine > 0) Map("vector.refine-factor" -> refine.toString)
              else Map.empty)
           graft.operators.IndexBuild.searchRows(spark, idx, qv, opts, idCol = idCol,
-            pred = pred)._2
+            pred = pred, from = Some(pinned.read(spark)))._2
         } else {
           val (score, asc) =
             graft.functions.vec_score(metric, col(column), typedLit(qv), "lance knn")
-          val base = spark.read.format("lance").options(pinned).load(root)
+          val base = pinned.read(spark)
           val scored = pred.map(base.filter).getOrElse(base)
             .select(col(idCol).cast("long").as("id"), round(score, 6).as("dist"))
           (if (asc) scored.orderBy(col("dist").asc, col("id").asc)
@@ -315,7 +324,7 @@ object LanceProcedures {
           rows.toSeq)
       } else {
         val ids = rows.map(_(0).asInstanceOf[Long]).toSeq
-        val lookupDf = knnLookup(spark, root, pinned, idCol, ids, extra)
+        val lookupDf = knnLookup(pinned.read(spark), idCol, ids, extra)
         val extraSchema = lookupDf.schema.fields.drop(1)
         val conv = extraSchema.map(f =>
           org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -341,12 +350,10 @@ object LanceProcedures {
     * scan; typed literals keep bloom/dictionary fragment pruning for every
     * integral id type. Package-visible so specs assert the pruning on the
     * real code path. */
-  private[graft] def knnLookup(spark: SparkSession, root: String,
-                               pinned: Map[String, String], idCol: String,
+  private[graft] def knnLookup(lookupBase: DataFrame, idCol: String,
                                ids: Seq[Long], extra: Seq[String]):
       org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val lookupBase = spark.read.format("lance").options(pinned).load(root)
     val typedIds: Seq[Any] = lookupBase.schema(idCol).dataType match {
       case LongType => ids
       case IntegerType => ids.map(_.toInt)
@@ -394,7 +401,8 @@ object LanceProcedures {
       param("exclude_self", BooleanType, Some("false")),
       param("output_table", StringType, Some("''")))) { (qRoot, in) =>
       val spark = SparkSession.active
-      val cRoot = catalog.tableRootFor(in.getUTF8String(1).toString)
+      val corpus = catalog.pinnedTable(in.getUTF8String(1).toString)
+      val cRoot = corpus.root
       val column = in.getUTF8String(2).toString
       val qId = in.getUTF8String(3).toString
       val cId = in.getUTF8String(4).toString
@@ -406,8 +414,8 @@ object LanceProcedures {
       val excludeSelf = in.getBoolean(10)
       val outTable = in.getUTF8String(11).toString.trim
       val queries = spark.read.format("lance").load(qRoot)
-      val result = graft.operators.IndexBuild.pinnedLatest(spark, cRoot) match {
-        case (_, Some(idx)) =>
+      val result = corpus.index match {
+        case Some(idx) =>
           require(idx.opts.column == column,
             s"lance knn_join: index at $cRoot covers column ${idx.opts.column}, not $column")
           if (idx.pq.isDefined && refine > 0) {
@@ -420,9 +428,8 @@ object LanceProcedures {
             graft.operators.VectorSearch.knnJoin(spark, queries, idx, qId,
               k, metric, nprobes, excludeSelf, cIdCol = cId)
           }
-        case (pinned, None) =>
-          val corpus = spark.read.format("lance").options(pinned).load(cRoot)
-          graft.operators.VectorSearch.knnJoin(spark, queries, corpus,
+        case None =>
+          graft.operators.VectorSearch.knnJoin(spark, queries, corpus.read(spark),
             qId, cId, column, k, metric, cells, nprobes, excludeSelf)
       }
       import org.apache.spark.sql.functions._
@@ -511,7 +518,11 @@ object LanceProcedures {
       val spark = SparkSession.active
       import spark.implicits._
       import org.apache.spark.sql.functions._
-      val vRoot = catalog.tableRootFor(in.getUTF8String(1).toString)
+      // ONE resolution of the vector table, which is also its existence
+      // check: the pinned store and the centroids its cells were assigned
+      // by come from the same version
+      val vecs = catalog.pinnedTable(in.getUTF8String(1).toString)
+      val vRoot = vecs.root
       val terms = in.getUTF8String(2).toString
         .split("[,\\s]+").map(_.trim).filter(_.nonEmpty).toSeq
       val qvec = in.getArray(3).toDoubleArray().map(_.toFloat)
@@ -527,15 +538,12 @@ object LanceProcedures {
       val lex = graft.operators.TextIndex.search(spark, idxRoot,
           terms.map(t => (0L, t)).toDF("query_id", "term"), k)
         .select(col("query_id"), col("doc_id"), col("rk").as("r"))
-      // ONE manifest resolution: the pinned store and the centroids its
-      // cells were assigned by come from the same version
-      val (pinned, index) = graft.operators.IndexBuild.pinnedLatest(spark, vRoot)
-      val probe = index.map { idx =>
+      val probe = vecs.index.map { idx =>
         require(idx.opts.column == vCol,
           s"lance hybrid: index at $vRoot covers column ${idx.opts.column}, not $vCol")
         (idx.centroids.map(_.toArray), if (nprobes0 > 0) nprobes0 else idx.centroids.length)
       }
-      val store = spark.read.format("lance").options(pinned).load(vRoot)
+      val store = vecs.read(spark)
         .select(Seq(col(vIdCol).cast("long").as("vec_id"), col(vCol).as("embedding")) ++
           probe.map(_ => col("cell")): _*)
       val vec = graft.operators.TextAnalysis.hybridVectorArm(

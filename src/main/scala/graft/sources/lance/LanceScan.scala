@@ -38,7 +38,8 @@ import scala.jdk.CollectionConverters._
   *   sums and everything else decline to a normal scan.
   */
 class LanceScanBuilder(spark: SparkSession, root: String, manifest: LanceManifest,
-                       options: Map[String, String]) extends ScanBuilder
+                       options: Map[String, String],
+                       conf: org.apache.hadoop.conf.Configuration) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownAggregates {
 
@@ -553,9 +554,9 @@ class LanceScanBuilder(spark: SparkSession, root: String, manifest: LanceManifes
         readCols, specs, spark.sessionState.conf.ansiEnabled, options)
     case _ =>
       val pruned = LancePruning.prune(restrictedFragments, manifest.schema,
-        filters, root, LancePruning.bloomProbe(root, Shim.hadoopConf(spark, options)))
+        filters, root, LancePruning.bloomProbe(root, conf))
       new LanceParquetScan(spark, root, manifest, pruned, required, filters.toSeq,
-        limit, options)
+        limit, options, conf)
   }
 }
 
@@ -903,7 +904,8 @@ object LanceInputPartition {
 class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifest,
                        initialFragments: Seq[FragmentMeta], required: StructType,
                        filters: Seq[Filter], limit: Option[Int],
-                       options: Map[String, String]) extends Scan with Batch
+                       options: Map[String, String],
+                       conf: org.apache.hadoop.conf.Configuration) extends Scan with Batch
     with SupportsReportStatistics with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -935,7 +937,7 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
     val v1 = Shim.predicatesToV1(predicates)
     if (v1.nonEmpty) {
       val pruned = LancePruning.prune(fragments, manifest.schema, v1, root,
-        LancePruning.bloomProbe(root, Shim.hadoopConf(spark, options)))
+        LancePruning.bloomProbe(root, conf))
       // When this scan reports KeyGroupedPartitioning, the distinct
       // partition-key set was fixed at planning; runtime pruning that
       // empties a whole bucket would shrink it afterwards — a combination
@@ -1045,7 +1047,6 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
     // folds — at 100k fragments × wide schemas an O(cols × fragments)
     // pass per planning is real driver CPU for nothing.
     if (frs.isEmpty || !spark.sessionState.conf.cboEnabled) return out
-    val conf = Shim.hadoopConf(spark, options)
     val sidecarsOk =
       frs.size <= NdvSidecarCap && frs.forall(_.sketches.isDefined)
     // physical fragment stats are sound ESTIMATES under delete vectors
@@ -1334,7 +1335,7 @@ class LanceParquetScan(spark: SparkSession, root: String, manifest: LanceManifes
       new LanceMaskedReaderFactory(
         LanceReadGroup.build(spark, manifest.schema, required, readerFilters, options,
           colMaps, posRequested),
-        limit, Shim.serializableConf(Shim.hadoopConf(spark, options)))
+        limit, Shim.serializableConf(conf))
     }
   }
 }

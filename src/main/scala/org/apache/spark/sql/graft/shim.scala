@@ -49,6 +49,35 @@ object Shim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], df.queryExecution.logical)
 
+  /** A read of the DSv2 `table` as a DataFrame of `spark`, planned from
+    * the table object itself: no data-source lookup by format name. */
+  def readTable(spark: SparkSession,
+                table: org.apache.spark.sql.connector.catalog.Table): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
+
+  /** The plan `base.filter(f)` for each of `filters` in turn, then
+    * `.select(cols: _*).orderBy(order: _*).limit(n)` builds, node for node,
+    * analysed once: each of those Dataset steps would run the analyzer over
+    * the whole plan again. */
+  def filterSelectTop(base: org.apache.spark.sql.DataFrame, filters: Seq[Column],
+                      cols: Seq[Column], order: Seq[Column],
+                      n: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, Project, Sort}
+    val spark = base.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val filtered = filters.foldLeft(base.queryExecution.analyzed)((plan, f) =>
+      Filter(spark.toRichColumn(f).expr, plan))
+    val sortOrder = order.map(c => spark.toRichColumn(c).expr match {
+      case so: SortOrder => so
+      case e => SortOrder(e, Ascending)
+    })
+    org.apache.spark.sql.classic.Dataset.ofRows(spark,
+      Limit(org.apache.spark.sql.catalyst.expressions.Literal(n),
+        Sort(sortOrder, global = true, Project(cols.map(spark.toRichColumn(_).named), filtered))))
+  }
+
   /** The physical plan's output as `RDD[InternalRow]` — the same rows an
     * executor-side V2 DataWriter would receive, without a row-to-Row
     * conversion pass. NOTE: rows are reused across `next()` calls; a

@@ -195,4 +195,25 @@ class RetrievalPrunedSpec extends SparkSpec {
     assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(second)))
     assert(FixtureMemo.reaps(second))
   }
+
+  test("the streamed keys', lance keys' and index keys' temp roots are reaped at exit") {
+    import graft.operators.{FixtureMemo, VectorIndex}
+    import graft.sources.lance.LanceTable
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    def lanceRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.analyzed.collect {
+        case r: DataSourceV2Relation if r.table.isInstanceOf[LanceTable] =>
+          r.table.asInstanceOf[LanceTable].root
+      }
+    val roots = Map(
+      "LanceOps.tmp" -> lanceRoots(SparkEntry.queries("lance_roundtrip")(spark, sf)),
+      "StreamingOps.tmp" -> lanceRoots(SparkEntry.queries("lance_stream_pipeline")(spark, sf)),
+      "knn_join_pq's index" -> lanceRoots(SparkEntry.queries("knn_join_pq")(spark, sf)),
+      "VectorIndex.buildKey" ->
+        Seq(VectorIndex.buildKey(spark, sf, VectorIndex.ivfKeys("ivf_flat_search")).root))
+    for ((site, rs) <- roots) {
+      assert(rs.nonEmpty, s"$site: no lance root in the plan")
+      rs.foreach(r => assert(FixtureMemo.reaps(r), s"$site root $r is not deleted at exit"))
+    }
+  }
 }

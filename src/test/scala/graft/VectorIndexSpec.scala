@@ -390,7 +390,7 @@ class VectorIndexSpec extends SparkSpec {
       .repartitionByRange(8, col("id"))
       .write.format("lance").save(root)
     val lk = graft.sources.lance.LanceProcedures.knnLookup(
-      spark, root, Map.empty, "key", Seq(5L, 17L), Seq("payload"))
+      spark.read.format("lance").load(root), "key", Seq(5L, 17L), Seq("payload"))
     val plan = lk.queryExecution.executedPlan.toString
     val mm = "fragments=(\\d+)/(\\d+)".r.findFirstMatchIn(plan).get
     val (scanned, total) = (mm.group(1).toInt, mm.group(2).toInt)
@@ -399,7 +399,7 @@ class VectorIndexSpec extends SparkSpec {
       Seq((5L, 5L), (17L, 17L)))
     // LONG ids keep the same pruning (the previously-working fast path)
     val lkLong = graft.sources.lance.LanceProcedures.knnLookup(
-      spark, root, Map.empty, "payload", Seq(5L, 17L), Seq("key"))
+      spark.read.format("lance").load(root), "payload", Seq(5L, 17L), Seq("key"))
     val mm2 = "fragments=(\\d+)/(\\d+)".r
       .findFirstMatchIn(lkLong.queryExecution.executedPlan.toString).get
     assert(mm2.group(1).toInt <= 1, s"LONG id lookup scanned ${mm2.group(1)}/8")

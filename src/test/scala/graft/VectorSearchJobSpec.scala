@@ -223,13 +223,11 @@ class VectorSearchJobSpec extends SparkSpec {
     val sidecars = log.collect {
       case ("open", p) if p.contains("/_index/") => p.split('/').last
     }
-    // one listing is the catalog's table-exists check, one is the call's
-    // single manifest resolution; the versionAsOf read lists nothing. The
-    // manifest is read once by the call and once by the pinned reader
-    // (whose table reuses the manifest its schema resolved), always at the
-    // pinned version.
-    assert(listings === 2, log.mkString("\n"))
-    assert(manifests === Seq.fill(2)(f"${latest.version}%020d.manifest.json"), log.mkString("\n"))
+    // the call's single manifest resolution is its one listing, which is
+    // also the table-exists check, and its one manifest read; the pinned
+    // reads plan from that parsed manifest
+    assert(listings === 1, log.mkString("\n"))
+    assert(manifests === Seq(f"${latest.version}%020d.manifest.json"), log.mkString("\n"))
     // the warm call parsed the pinned manifest's sidecar already: the
     // handle comes from the per-epoch cache, so no index file is opened
     assert(sidecars === Nil, log.mkString("\n"))
@@ -269,12 +267,59 @@ class VectorSearchJobSpec extends SparkSpec {
     val manifests = log.collect {
       case ("open", p) if p.endsWith(".manifest.json") => p.split('/').last
     }
-    // one listing is the catalog's table-exists check on vector_table, one
-    // is the call's single manifest resolution; the pinned store read
-    // lists nothing, and the manifest is read once by the call and once by
-    // the pinned reader, always at the pinned version
-    assert(listings === 2, log.mkString("\n"))
-    assert(manifests === Seq.fill(2)(f"${latest.version}%020d.manifest.json"), log.mkString("\n"))
+    // the call's single resolution of vector_table is its one listing,
+    // which is also the table-exists check, and its one manifest read; the
+    // pinned store read plans from that parsed manifest
+    assert(listings === 1, log.mkString("\n"))
+    assert(manifests === Seq(f"${latest.version}%020d.manifest.json"), log.mkString("\n"))
     assert(!log.exists(_._2.contains("/_index/")), log.mkString("\n"))
+  }
+
+  test("a warm CALL system.knn runs one job labelled graft:knn:rank, with no takeOrdered RDD") {
+    for ((name, refine) <- Seq("pq" -> Some(4), "flat" -> None)) {
+      val call = knnCall(name, 4, refine, None)
+      spark.sql(call).collect() // warm: compile the plan once
+      val sc = spark.sparkContext
+      val group = s"knn-rank-${java.util.UUID.randomUUID()}"
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.add((e.properties.getProperty("spark.job.description"),
+              e.stageInfos.flatMap(_.rddInfos).flatMap(_.scope).map(_.name)))
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "knn rank", interruptOnCancel = false)
+      try {
+        spark.sql(call).collect()
+        org.apache.spark.sql.graft.Shim.waitUntilEmpty(sc)
+        // the caller's job description is back after the call
+        assert(sc.getLocalProperty("spark.job.description") === "knn rank")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      import scala.jdk.CollectionConverters._
+      val seen = jobs.asScala.toSeq
+      assert(seen.map(_._1) === Seq("graft:knn:rank"), s"$name: $seen")
+      val scopes = seen.flatMap(_._2)
+      // the scan's RDDs carry their plan-node scopes; Spark's own
+      // `RDD.takeOrdered` would add a mapPartitions RDD scoped "takeOrdered"
+      assert(scopes.nonEmpty, s"$name: no RDD scopes recorded")
+      assert(!scopes.contains("takeOrdered"), s"$name: $scopes")
+    }
+  }
+
+  test("a vector CALL on a missing table fails with NoSuchTableException") {
+    import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+    assert(indexes.contains("flat")) // the catalog and db.flat exist
+    val knn = intercept[NoSuchTableException](spark.sql(
+      knnCall("missing", 4, None, None)).collect())
+    assert(knn.getMessage.contains("missing"), knn.getMessage)
+    val hybrid = intercept[NoSuchTableException](spark.sql(
+      "CALL lance_vsj.system.hybrid(table => 'db.flat', vector_table => 'db.missing', " +
+        s"terms => 'data', query_vec => array(${qv.map(d => s"${d}D").mkString(", ")}), k => 5)")
+      .collect())
+    assert(hybrid.getMessage.contains("missing"), hybrid.getMessage)
   }
 }
